@@ -46,7 +46,10 @@ def negative_arrival_count(df: DataFrame) -> DataFrame:
     """B3: rows whose request_time precedes the epoch (reference logs a
     warning per row, ``/root/reference/main.py:54-60``)."""
     return df.select(
-        F.sum(F.when(F.col("sim_arrival_time") < 0, 1).otherwise(0))
+        # coalesce: empty input → 0 rows, not a null sum
+        F.coalesce(
+            F.sum(F.when(F.col("sim_arrival_time") < 0, 1).otherwise(0)), F.lit(0)
+        )
         .cast("long")
         .alias("negative_arrival_rows"),
         F.count(F.lit(1)).alias("total_rows"),
@@ -70,14 +73,6 @@ def priority_class(
     (``/root/reference/src/queue_manager.py:105,137-155``)."""
     c = F.col(proc) if isinstance(proc, str) else proc
     return F.when(c < F.lit(threshold), F.lit("priority")).otherwise(F.lit("normal"))
-
-
-def with_priority_class(
-    df: DataFrame,
-    proc_col: str = "processing_time",
-    threshold: float = PRIORITY_THRESHOLD_SECONDS,
-) -> DataFrame:
-    return df.withColumn("queue_class", priority_class(proc_col, threshold))
 
 
 def hms(seconds: Column | str) -> Column:

@@ -135,12 +135,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view (for ``spark.sql`` queries)."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def events_as_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map the driver's ``events`` table onto the reference request log.
 

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from queue_system_simulator_spark.localframe import local_df
 from queue_system_simulator_spark.schema import REQUEST_SCHEMA
+from queue_system_simulator_spark.shipping import ensure_shipped
 
 REQUIRED_COLUMNS = ("user_id", "request_time", "processing_time")
 
@@ -84,6 +85,9 @@ def read_requests_csv(
     Extra columns beyond the required three are tolerated (the reference
     ignores them: it indexes rows by name, ``csv_parser.py:62-64``).
     """
+    # Ship the package so the kernel downstream unpickles on Python workers
+    # whatever the caller's cwd (as ``schema.load_table`` does).
+    ensure_shipped(spark)
     header = _read_header(spark, path)
     if not header:  # empty file → empty frame (reference returns [])
         return local_df(spark, [], REQUEST_SCHEMA)

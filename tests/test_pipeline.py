@@ -1,19 +1,25 @@
-"""End-to-end pipeline vs the reference's own shipped workload.
+"""End-to-end pipeline on a workload shaped like the reference's own.
 
-Runs the engine's CLI-equivalent on the reference repo's
-``sample_requests.csv`` (read-only input — 25 rows, 5 users) and asserts
+Runs the engine's CLI-equivalent on ``tests/data/sample_requests.csv``, a
+vendored request log in the shape of the reference's
+``sample_requests.csv`` (25 rows, 5 users, ISO-8601 µs ``Z`` timestamps
+from 2023-01-01, inter-arrival U(0.1, 1.0) s, processing
+round(U(1, 10), 1) s; written once by ``numpy.random.default_rng(2023)``
+in ``perfbench/datagen.write_requests_csv``'s order of draws), and asserts
 the same externally-observable outcomes the reference's e2e test pins
 (all 25 complete, none rejected; ``/root/reference/tests/test_simulator.py:136-213``),
-plus renderer and empty-input behavior.
+plus renderer, empty-input and pin-lifecycle behavior.
 """
 
 from __future__ import annotations
 
 import math
+import os
+from pathlib import Path
 
 from queue_system_simulator_spark.pipeline import render_report, run_pipeline
 
-SAMPLE_CSV = "/root/reference/sample_requests.csv"
+SAMPLE_CSV = os.path.join(os.path.dirname(__file__), "data", "sample_requests.csv")
 
 
 def test_sample_workload_completes(spark):
@@ -58,6 +64,8 @@ def test_empty_csv_short_circuits(spark, tmp_path):
     res = run_pipeline(spark, str(p))
     assert res.empty
     assert render_report(res) == ["no requests parsed — nothing to simulate"]
+    res.release()  # nothing pinned: a no-op, twice
+    res.release()
 
 
 def test_fifo_bounded_mode_rejects_and_renders_nan_safe(spark, tmp_path):
@@ -129,3 +137,65 @@ def test_duplicate_arrival_rows_get_stable_seq(spark, tmp_path):
     # per-row service times differ, so a deterministic seq fixes which row
     # starts first: the file's first row (proc=3.0) must be served first.
     assert timelines[0][0][1] == 3.0
+
+
+def _kernel_data_columns(df) -> list[str]:
+    """Columns the DES kernel receives as pandas data: the input of the
+    FlatMapGroupsInPandas node minus its leading grouping attributes."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "FlatMapGroupsInPandas":
+            out = node.child().output()
+            n_keys = node.groupingAttributes().size()
+            return [out.apply(i).name() for i in range(n_keys, out.size())]
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    raise AssertionError("no FlatMapGroupsInPandas in the plan")
+
+
+def test_run_col_user_id_reaches_kernel_once(spark, tmp_path):
+    p = tmp_path / "two_users.csv"
+    p.write_text(
+        "user_id,request_time,processing_time\n"
+        "user_a,2023-01-01T00:00:00Z,1.0\n"
+        "user_b,2023-01-01T00:00:01Z,2.0\n"
+    )
+    res = run_pipeline(spark, str(p), run_col="user_id")
+    cols = _kernel_data_columns(res.timeline)
+    assert len(cols) == len(set(cols)), cols
+    assert res.timeline.count() == 2
+
+
+def test_kernel_output_pinned_once_and_released(spark, tmp_path):
+    # a path no other test reads, so no earlier pin serves or is refreshed
+    p = tmp_path / "pinned.csv"
+    p.write_text(Path(SAMPLE_CSV).read_text())
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    res = run_pipeline(spark, str(p), num_workers=3)
+    report = render_report(res)
+    timeline = res.timeline.collect()
+    assert jsc.getPersistentRDDs().size() == before + 1
+    res.release()
+    assert jsc.getPersistentRDDs().size() == before
+    res.release()  # idempotent
+    assert jsc.getPersistentRDDs().size() == before
+    # after release every frame recomputes the kernel: same rows
+    assert render_report(res) == report
+    assert res.timeline.collect() == timeline
+
+
+def test_rewritten_csv_is_not_served_from_an_earlier_pin(spark, tmp_path):
+    p = tmp_path / "rewritten.csv"
+    rows = Path(SAMPLE_CSV).read_text().splitlines()
+    p.write_text("\n".join(rows) + "\n")
+    first = render_report(run_pipeline(spark, str(p)))  # pin left held
+    # same path and plan, every request now long enough for the normal queue
+    p.write_text(
+        "\n".join([rows[0]] + [r.rsplit(",", 1)[0] + ",30.0" for r in rows[1:]])
+        + "\n"
+    )
+    second = render_report(run_pipeline(spark, str(p)))
+    assert "priority queue enqueued: 25" in first
+    assert "normal queue enqueued: 25" in second

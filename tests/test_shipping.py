@@ -44,3 +44,35 @@ def test_pandas_udf_queries_survive_foreign_cwd():
         env={**os.environ, "PYSPARK_PYTHON": sys.executable},
     )
     assert "SHIPPED_OK" in proc.stdout, proc.stderr[-2000:]
+
+
+_PIPELINE_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from queue_system_simulator_spark.pipeline import render_report, run_pipeline
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false")
+         .getOrCreate())
+lines = render_report(run_pipeline(spark, sys.argv[2], num_workers=2))
+assert lines[:3] == ["total requests: 25",
+                     "requests with pre-epoch timestamps: 0",
+                     "processed: 25"], lines
+print("PIPELINE_OK")
+"""
+
+
+def test_run_pipeline_survives_foreign_cwd():
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    proc = subprocess.run(
+        [sys.executable, "-c", _PIPELINE_SCRIPT, os.path.dirname(tests_dir),
+         os.path.join(tests_dir, "data", "sample_requests.csv")],
+        cwd="/tmp",
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env={**os.environ, "PYSPARK_PYTHON": sys.executable},
+    )
+    assert "PIPELINE_OK" in proc.stdout, proc.stderr[-2000:]
