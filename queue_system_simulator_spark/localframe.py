@@ -54,9 +54,10 @@ def local_df(
     """Build a small local DataFrame JVM-side via one Arrow batch.
 
     ``schema`` is a DDL string (``"pid int, off long"``) or a
-    ``StructType``.  ``None`` values are preserved (Arrow nulls).
-    Unmapped field types (arrays, structs, timestamps) fall back to the
-    classic ``createDataFrame`` path unchanged.
+    ``StructType``.  ``None`` values are preserved (Arrow nulls), and so
+    is each field's nullability, as on the classic path.  Unmapped field
+    types (arrays, structs, timestamps) fall back to the classic
+    ``createDataFrame`` path unchanged.
     """
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
@@ -64,10 +65,13 @@ def local_df(
         type(f.dataType) not in _ARROW_TYPES for f in schema.fields
     ):
         return spark.createDataFrame(list(rows), schema)
+    fields = [
+        pa.field(f.name, _ARROW_TYPES[type(f.dataType)], f.nullable)
+        for f in schema.fields
+    ]
     arrays = [
-        pa.array([r[i] for r in rows], _ARROW_TYPES[type(f.dataType)])
-        for i, f in enumerate(schema.fields)
+        pa.array([r[i] for r in rows], fld.type) for i, fld in enumerate(fields)
     ]
     return spark.createDataFrame(
-        pa.Table.from_arrays(arrays, names=[f.name for f in schema.fields])
+        pa.Table.from_arrays(arrays, schema=pa.schema(fields))
     )

@@ -18,7 +18,7 @@ Clean-room reimplementation of the reference semantics:
   sentinel, row completes immediately (``simulator.py:213-215``,
   ``queue_manager.py:30-52``).
 * two-class priority queue: route ``processing_time < threshold`` → priority
-  else normal (null → normal); dequeue draws ONE ``rng.random()`` per
+  else normal; dequeue draws ONE ``rng.random()`` per
   attempt whenever any item exists, prefers the chosen class, falls back to
   the other (the reference's *corrected* dequeue,
   ``queue_manager.py:188-221``); ``is_full`` always False in priority mode
@@ -118,8 +118,7 @@ class _PriorityStrategy:
         return False  # quirk 1: unbounded regardless of queue_max_size
 
     def enqueue(self, item) -> bool:
-        proc = item["processing_time"]
-        if proc is not None and proc == proc and proc < self.threshold:
+        if item["processing_time"] < self.threshold:
             self.prio.append(item)
             self.priority_enqueued += 1
         else:
@@ -183,12 +182,18 @@ def simulate_events(
     ``processing_time`` + passthrough keys).  Pure Python; unit-testable
     without Spark.  Numeric type agnostic: feed integer microseconds for
     exact arithmetic or float seconds for reference parity.
+
+    A null or NaN arrival or processing time raises ``ValueError`` naming
+    the row's ``seq`` (the reference rejects such rows at parse time,
+    ``csv_parser.py:64,69-70``); a NaN would stop the clock advancing.
     """
     rng = random.Random(rng_seed if rng_seed is not None else params.seed)
-    pending = sorted(
-        (dict(r) for r in rows),
-        key=lambda r: (r["sim_arrival_time"], r.get("seq", 0)),
-    )
+    pending = [dict(r) for r in rows]
+    for r in pending:
+        for col in ("sim_arrival_time", "processing_time"):
+            if r[col] is None or r[col] != r[col]:  # NaN != NaN
+                raise ValueError(f"request seq={r.get('seq')}: {col} is null or NaN")
+    pending.sort(key=lambda r: (r["sim_arrival_time"], r.get("seq", 0)))
     if params.queue_mode == "fifo":
         queue: Any = _BoundedFifo(params.queue_max_size)
     else:

@@ -25,15 +25,11 @@ in-memory dimension — always broadcast.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from queue_system_simulator_spark.localframe import local_df
-from queue_system_simulator_spark.operators.transforms import (
-    REJECTED_SENTINEL,
-    valid_queuing_rows,
-    with_queuing_time,
-)
+from queue_system_simulator_spark.operators.transforms import REJECTED_SENTINEL
 
 #: Reference config defaults (``/root/reference/config/settings.py:2,5``).
 NUM_EXTERNAL_APIS = 5
@@ -79,24 +75,17 @@ def release_pinned() -> None:
 PERCENTILES = (0.5, 0.75, 0.9, 0.99)
 
 
-def queuing_time_stats(
-    df: DataFrame, group_cols: list[str] | None = None, nan_on_empty: bool = True
-) -> DataFrame:
-    """G1+G2+G3 over a sim-result frame.
-
-    Input needs ``arrival_time_in_queue / start_processing_time_by_worker /
-    finish_processing_time_by_worker``.  The queuing-time aggregates apply the
-    C2 validity predicate to processed rows only; the counts do not
-    (reference semantics, ``statistics.py:28-42,104-121``).
-    """
-    fin = F.col("finish_processing_time_by_worker")
-    is_proc = fin != REJECTED_SENTINEL
+def _queuing_time_aggs() -> list[Column]:
+    """G1–G3 aggregates: ``processed``, ``rejected``, the mean and the exact
+    percentile array ``pcts``.  The queuing-time aggregates apply the C2
+    validity predicate to processed rows only; the counts do not (reference
+    semantics, ``statistics.py:28-42,104-121``)."""
+    is_proc = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
     start = F.col("start_processing_time_by_worker")
     arr = F.col("arrival_time_in_queue")
     valid = is_proc & (start >= 0) & (arr >= 0) & (start >= arr)
     qt = F.when(valid, start - arr)  # null outside the valid set → ignored by aggs
-
-    aggs = [
+    return [
         # coalesce: empty input → 0 counts (reference returns 0, not null)
         F.coalesce(F.sum(F.when(is_proc, 1).otherwise(0)), F.lit(0))
         .cast("long")
@@ -105,34 +94,37 @@ def queuing_time_stats(
         .cast("long")
         .alias("rejected"),
         F.avg(qt).alias("avg_queuing_time"),
-        F.expr(
-            "percentile(IF(finish_processing_time_by_worker != -1.0 "
-            "AND start_processing_time_by_worker >= 0 "
-            "AND arrival_time_in_queue >= 0 "
-            "AND start_processing_time_by_worker >= arrival_time_in_queue, "
-            "start_processing_time_by_worker - arrival_time_in_queue, NULL), "
-            "array(0.5D, 0.75D, 0.9D, 0.99D))"
-        ).alias("pcts"),
+        F.percentile(qt, list(PERCENTILES)).alias("pcts"),
     ]
+
+
+def _queuing_time_columns(nan_on_empty: bool = True) -> list[Column]:
+    """The mean and p50–p99 out of :func:`_queuing_time_aggs`; NaN for an
+    empty valid set as the reference renders it (``statistics.py:64,118-121``)."""
+    cols = {"avg_queuing_time": F.col("avg_queuing_time")}
+    for i, q in enumerate(PERCENTILES):
+        cols[f"p{round(q * 100)}"] = F.col("pcts")[i]
+    nan = F.lit(float("nan"))
+    return [
+        (F.coalesce(c, nan) if nan_on_empty else c).alias(n) for n, c in cols.items()
+    ]
+
+
+def queuing_time_stats(
+    df: DataFrame, group_cols: list[str] | None = None, nan_on_empty: bool = True
+) -> DataFrame:
+    """G1+G2+G3 over a sim-result frame.
+
+    Input needs ``arrival_time_in_queue / start_processing_time_by_worker /
+    finish_processing_time_by_worker``.
+    """
     grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
-    out = grouped.agg(*aggs)
-    p = F.col("pcts")
-    out = out.select(
+    return grouped.agg(*_queuing_time_aggs()).select(
         *(group_cols or []),
         "processed",
         "rejected",
-        "avg_queuing_time",
-        p[0].alias("p50"),
-        p[1].alias("p75"),
-        p[2].alias("p90"),
-        p[3].alias("p99"),
+        *_queuing_time_columns(nan_on_empty),
     )
-    if nan_on_empty:
-        # reference renders NaN for empty inputs (statistics.py:64,118-121)
-        nan = F.lit(float("nan"))
-        for c in ("avg_queuing_time", "p50", "p75", "p90", "p99"):
-            out = out.withColumn(c, F.coalesce(F.col(c), nan))
-    return out
 
 
 def api_usage_counts(
@@ -167,6 +159,20 @@ def api_usage_counts(
     )
 
 
+def _enqueue_aggs(threshold: float = 20.0) -> list[Column]:
+    """G5 aggregate columns (see :func:`enqueue_totals`)."""
+    admitted = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
+    prio = F.coalesce(F.col("processing_time") < threshold, F.lit(False))
+    return [
+        F.sum(F.when(admitted & prio, 1).otherwise(0))
+        .cast("long")
+        .alias("priority_queue_enqueued_total"),
+        F.sum(F.when(admitted & ~prio, 1).otherwise(0))
+        .cast("long")
+        .alias("normal_queue_enqueued_total"),
+    ]
+
+
 def enqueue_totals(df: DataFrame, threshold: float = 20.0) -> DataFrame:
     """G5: per-class enqueue totals, derived relationally over admitted rows
     (reference carries mutable counters, ``queue_manager.py:121-123,140-154``;
@@ -175,47 +181,45 @@ def enqueue_totals(df: DataFrame, threshold: float = 20.0) -> DataFrame:
     enqueue, ``simulator.py:213-215``).
 
     Null ``processing_time`` routes to the normal class, matching the
-    reference's ``hasattr`` fallback (``queue_manager.py:137-155``) and the
-    kernel — a bare ``col < threshold`` would evaluate to NULL and count the
-    row in *neither* bucket."""
-    admitted = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
-    prio = F.coalesce(F.col("processing_time") < threshold, F.lit(False))
-    return df.select(
-        F.sum(F.when(admitted & prio, 1).otherwise(0))
-        .cast("long")
-        .alias("priority_queue_enqueued_total"),
-        F.sum(F.when(admitted & ~prio, 1).otherwise(0))
-        .cast("long")
-        .alias("normal_queue_enqueued_total"),
-    )
+    reference's ``hasattr`` fallback (``queue_manager.py:137-155``) — a bare
+    ``col < threshold`` would evaluate to NULL and count the row in *neither*
+    bucket."""
+    return df.select(*_enqueue_aggs(threshold))
 
 
 def simulation_statistics(
     df: DataFrame, spark: SparkSession, num_apis: int = NUM_EXTERNAL_APIS
-) -> tuple[DataFrame, DataFrame]:
-    """The full G1–G5 bundle: (one-row scalar stats, long-format api counts).
-
-    Long-format API counts instead of the reference's nested dict — map-shaped
-    output is hostile to SQL oracles (SURVEY §1.2).
-    """
-    scalar = queuing_time_stats(df)
-    totals = enqueue_totals(df)
-    scalar = scalar.crossJoin(totals)
-    return scalar, api_usage_counts(df, spark, num_apis)
-
-
-__all__ = [
-    "NUM_EXTERNAL_APIS",
-    "EXTERNAL_API_RPM_LIMIT",
-    "PERCENTILES",
-    "queuing_time_stats",
-    "api_usage_counts",
-    "enqueue_totals",
-    "simulation_statistics",
-    "with_queuing_time",
-    "valid_queuing_rows",
-    "exact_percentiles_distributed",
-]
+) -> tuple[int, int, DataFrame, DataFrame]:
+    """Input counts and the G1–G5 bundle in one aggregate, one action:
+    ``(input rows, pre-epoch input rows, one-row scalar stats, long-format
+    api counts)``.  ``df`` is kernel output, one row per input row.  The
+    frames are driver-local (no Spark job when read) and equal
+    ``queuing_time_stats ⨯ enqueue_totals`` and :func:`api_usage_counts`;
+    per-API conditional counts zero-fill the API domain without a join.
+    Long-format API counts: map-shaped output is hostile to SQL oracles
+    (SURVEY §1.2)."""
+    is_proc = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
+    keys = [f"api_{i}" for i in range(1, num_apis + 1)]
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n_input"),
+        F.count(F.when(F.col("sim_arrival_time") < 0, 1)).alias("n_negative"),
+        *(F.count(F.when(is_proc & (F.col("used_api_id") == i), 1)).alias(k)
+          for i, k in enumerate(keys, 1)),
+        *_queuing_time_aggs(),
+        *_enqueue_aggs(),
+    ).select(
+        "n_input", "n_negative", *keys, "processed", "rejected",
+        *_queuing_time_columns(),
+        "priority_queue_enqueued_total", "normal_queue_enqueued_total",
+    )
+    row, k = stats.first(), 2 + num_apis  # row[k:] is the scalar frame's row
+    scalar = local_df(spark, [tuple(row[k:])], stats.schema[k:])
+    api = local_df(
+        spark,
+        [(i, key, row[key]) for i, key in enumerate(keys, 1)],
+        "api_id int not null, api_key string not null, usage_count long not null",
+    )
+    return row.n_input, row.n_negative, scalar, api
 
 
 def exact_percentiles_distributed(

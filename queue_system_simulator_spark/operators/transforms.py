@@ -42,20 +42,6 @@ def with_sim_arrival_time(
     )
 
 
-def negative_arrival_count(df: DataFrame) -> DataFrame:
-    """B3: rows whose request_time precedes the epoch (reference logs a
-    warning per row, ``/root/reference/main.py:54-60``)."""
-    return df.select(
-        # coalesce: empty input → 0 rows, not a null sum
-        F.coalesce(
-            F.sum(F.when(F.col("sim_arrival_time") < 0, 1).otherwise(0)), F.lit(0)
-        )
-        .cast("long")
-        .alias("negative_arrival_rows"),
-        F.count(F.lit(1)).alias("total_rows"),
-    )
-
-
 def with_queuing_time(df: DataFrame) -> DataFrame:
     """B2: ``queuing_time = start − arrival-in-queue``
     (``/root/reference/src/statistics.py:34-36``)."""

@@ -1,10 +1,10 @@
 """End-to-end pipeline: the engine's equivalent of the reference CLI
 ``python main.py <csv> [-w N] [-q M]`` (``/root/reference/main.py:17-159``).
 
-Stages (SURVEY §3.1): scan/validate → empty guard → epoch-relative arrival
-derivation (+ pre-epoch warning count) → DES kernel → sentinel-aware result
-ordering → G1–G5 statistics → console rendering (NaN→"N/A", api counts
-key-sorted).
+Stages (SURVEY §3.1): scan/validate → epoch-relative arrival derivation →
+DES kernel → one aggregate for the input counts (total, pre-epoch) and
+G1–G5 statistics → empty guard → sentinel-aware result ordering → console
+rendering (NaN→"N/A", api counts key-sorted).
 
 A reference user switches by calling ``run_pipeline(spark, csv_path)`` —
 same semantics, but every stage before/after the kernel is a distributed
@@ -13,8 +13,13 @@ DataFrame op, and the kernel itself shards across independent runs when
 
 The kernel runs once per ``run_pipeline`` call: its output is persisted and
 every frame of the :class:`PipelineResult` reads that one execution.  The
-result owns the pin; :meth:`PipelineResult.release` frees the storage once
-the caller is done (results never depend on it being called).
+whole report is one Spark action inside ``run_pipeline``
+(:func:`~queue_system_simulator_spark.operators.statistics.simulation_statistics`):
+``scalar_stats`` and ``api_counts`` are driver-local frames built from its
+row, so :func:`render_report` fires no Spark job; only the sorted
+``timeline`` stays lazy.  The result owns the pin;
+:meth:`PipelineResult.release` frees the storage once the caller is done
+(results never depend on it being called).
 """
 
 from __future__ import annotations
@@ -31,7 +36,6 @@ from queue_system_simulator_spark.operators.statistics import (
     simulation_statistics,
 )
 from queue_system_simulator_spark.operators.transforms import (
-    negative_arrival_count,
     result_order,
     with_sim_arrival_time,
 )
@@ -88,12 +92,6 @@ def run_pipeline(
     # split encodes (partition, offset) and is stable for a given file.
     df = df.withColumn("__input_pos", F.monotonically_increasing_id())
     df = with_sim_arrival_time(df, epoch)
-    counts = negative_arrival_count(df).first()
-    n_input = counts.total_rows
-    if n_input == 0:  # header-only/empty file → exit path (main.py:45-49)
-        return PipelineResult(None, None, None, 0, 0)
-    n_negative = counts.negative_arrival_rows
-
     group_cols = [run_col] if run_col else ["__run"]
     if not run_col:
         df = df.withColumn("__run", F.lit(0))
@@ -116,15 +114,19 @@ def run_pipeline(
     timeline = simulate(df.select(*kernel_cols), params, group_cols=group_cols)
     if not run_col:
         timeline = timeline.drop("__run")
-    # Five readers share this one kernel execution: the two branches of the
-    # scalar crossJoin (queuing stats, enqueue totals), the API counts, the
-    # sort's range sample and the sorted timeline; without the pin each of
-    # them would re-run the whole simulation.  The cache matches plans, not
-    # file contents, so a pin still held from an earlier call on this path
-    # would serve a since-rewritten CSV: refresh such pins first.
+    # Three readers share this one kernel execution: the report's aggregate,
+    # the sort's range sample and the sorted timeline; without the pin each
+    # of them would re-run the whole simulation.  The cache matches plans,
+    # not file contents, so a pin still held from an earlier call on this
+    # path would serve a since-rewritten CSV: refresh such pins first.
     spark.catalog.refreshByPath(csv_path)
     timeline = timeline.persist()
-    scalar, api = simulation_statistics(timeline, spark, NUM_EXTERNAL_APIS)
+    n_input, n_negative, scalar, api = simulation_statistics(
+        timeline, spark, NUM_EXTERNAL_APIS
+    )
+    if n_input == 0:  # header-only/empty file → exit path (main.py:45-49)
+        timeline.unpersist()
+        return PipelineResult(None, None, None, 0, 0)
     return PipelineResult(
         result_order(timeline), scalar, api, n_negative, n_input, timeline
     )

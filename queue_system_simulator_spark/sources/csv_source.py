@@ -14,7 +14,8 @@ raise on any malformed row (reference parity), or ``PERMISSIVE`` with a
 ``_corrupt_record`` column when the caller wants to *report* bad rows and
 keep going (the scalable posture: at 100 TB you quarantine bad rows, you
 don't abort the job).  The missing-column check reads only the header line
-via a tiny text scan, so validation does not touch the data.
+via a tiny text scan, so validation does not touch the data, and that one
+line also names the scan's columns.
 """
 
 from __future__ import annotations
@@ -67,9 +68,7 @@ def validate_required_columns(header_cols: list[str]) -> None:
 
 def _read_header(spark: SparkSession, path: str) -> list[str]:
     first = spark.read.text(path).limit(1).collect()
-    if not first:
-        return []
-    return [c.strip() for c in first[0][0].split(",")]
+    return first[0][0].split(",") if first else []
 
 
 def read_requests_csv(
@@ -91,7 +90,7 @@ def read_requests_csv(
     header = _read_header(spark, path)
     if not header:  # empty file → empty frame (reference returns [])
         return local_df(spark, [], REQUEST_SCHEMA)
-    validate_required_columns(header)
+    validate_required_columns([c.strip() for c in header])
 
     schema = REQUEST_SCHEMA
     if mode.upper() == "PERMISSIVE":
@@ -106,9 +105,17 @@ def read_requests_csv(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
     )
     if extra_columns:
-        # project required columns only; unknown columns pruned at scan
-        df = reader.csv(path)
-        validate_required_columns(df.columns)
+        # every column a string, named from the header line already read,
+        # so the scan needs no schema pass of its own; unknown (and
+        # duplicated) names become positional and are pruned at scan
+        names = [
+            c if c in REQUIRED_COLUMNS and header.count(c) == 1 else f"_c{i}"
+            for i, c in enumerate(header)
+        ]
+        validate_required_columns(names)
+        df = reader.schema(
+            T.StructType([T.StructField(c, T.StringType()) for c in names])
+        ).csv(path)
         df = df.select(
             F.col("user_id").cast("string"),
             F.to_timestamp("request_time").alias("request_time"),

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file sits in, whatever the working directory
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from queue_system_simulator_spark.session import get_spark  # noqa: E402
 

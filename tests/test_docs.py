@@ -3,12 +3,15 @@
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 from queue_system_simulator_spark.plans import QUERIES, all_queries
 
+ROOT = Path(__file__).resolve().parent.parent
+
 
 def test_readme_counts_match_registry():
-    src = open("/root/repo/README.md").read()
+    src = (ROOT / "README.md").read_text()
     m = re.search(
         r"# (\d+) registered queries \((\d+) oracle-backed driver-facing "
         r"\+ (\d+) rows-only pytest-gated\)",
@@ -23,7 +26,7 @@ def test_readme_counts_match_registry():
 
 
 def test_queries_md_count_matches_registry():
-    src = open("/root/repo/QUERIES.md").read()
+    src = (ROOT / "QUERIES.md").read_text()
     m = re.search(r"(\d+) queries, (\d+) oracle-checked, (\d+) rows-only", src)
     assert m
     assert int(m.group(1)) == len(QUERIES)

@@ -7,6 +7,10 @@ limiter/fallback behavior (``/root/reference/tests/test_api_client.py``).
 
 from __future__ import annotations
 
+import signal
+
+import pytest
+
 from queue_system_simulator_spark.operators.kernel import (
     SimParams,
     _RateLimiter,
@@ -180,14 +184,33 @@ def test_enqueue_totals_priority_routing():
         req("p2", 0.1, 19.9, 1),  # priority
         req("n1", 0.2, 20.0, 2),  # >= 20 s → normal
         req("n2", 0.3, 30.0, 3),  # normal
-        req("n3", 0.4, None, 4),  # missing processing_time → normal class
+        req("n3", 0.4, 20.5, 4),  # normal
     ]
-    # None processing_time would break arithmetic at service start; route
-    # check only needs enqueue, so give the None row a worker-free path:
-    reqs[4]["processing_time"] = 20.5  # keep numeric for service; normal class
     out = simulate_events(reqs, SimParams(num_workers=2))
     assert out[0]["priority_enqueued_total"] == 2
     assert out[0]["normal_enqueued_total"] == 3
+
+
+def _alarm(_signum, _frame):
+    raise TimeoutError("simulate_events did not return")
+
+
+@pytest.mark.parametrize("col", ["processing_time", "sim_arrival_time"])
+@pytest.mark.parametrize("bad", [None, float("nan")])
+def test_null_or_nan_time_raises_instead_of_hanging(col, bad):
+    # a NaN busy_until makes the clock NaN and the event loop never exits;
+    # the alarm turns such a hang into a failure
+    reqs = [req("u0", 0.0, 1.0, 1), req("u1", 0.5, 2.0, 2)]
+    reqs[1][col] = bad
+    previous = signal.signal(signal.SIGALRM, _alarm)
+    signal.alarm(10)
+    try:
+        for rows in (reqs[1:], reqs):
+            with pytest.raises(ValueError, match=f"seq=2: {col}"):
+                simulate_events(rows, SimParams())
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, previous)
 
 
 class TestRateLimiter:

@@ -8,15 +8,26 @@ round(U(1, 10), 1) s; written once by ``numpy.random.default_rng(2023)``
 in ``perfbench/datagen.write_requests_csv``'s order of draws), and asserts
 the same externally-observable outcomes the reference's e2e test pins
 (all 25 complete, none rejected; ``/root/reference/tests/test_simulator.py:136-213``),
-plus renderer, empty-input and pin-lifecycle behavior.
+plus renderer, empty-input and pin-lifecycle behavior, and that the
+one-action report equals the separate statistics operators.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import subprocess
+import sys
 from pathlib import Path
 
+import pytest
+from pyspark.sql import functions as F
+
+from queue_system_simulator_spark.operators.statistics import (
+    api_usage_counts,
+    enqueue_totals,
+    queuing_time_stats,
+)
 from queue_system_simulator_spark.pipeline import render_report, run_pipeline
 
 SAMPLE_CSV = os.path.join(os.path.dirname(__file__), "data", "sample_requests.csv")
@@ -61,21 +72,29 @@ def test_render_report_shape(spark):
 def test_empty_csv_short_circuits(spark, tmp_path):
     p = tmp_path / "empty.csv"
     p.write_text("user_id,request_time,processing_time\n")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     res = run_pipeline(spark, str(p))
+    assert jsc.getPersistentRDDs().size() == before  # the empty pin is released
     assert res.empty
     assert render_report(res) == ["no requests parsed — nothing to simulate"]
     res.release()  # nothing pinned: a no-op, twice
     res.release()
 
 
-def test_fifo_bounded_mode_rejects_and_renders_nan_safe(spark, tmp_path):
-    # burst of simultaneous arrivals against a 1-slot queue, 1 worker
+def _write_burst(tmp_path) -> str:
+    """Six simultaneous arrivals: against a 1-slot FIFO and 1 worker, some
+    are rejected."""
     rows = ["user_id,request_time,processing_time"] + [
         f"user_a,2023-01-01T00:00:00Z,{5.0 + i}" for i in range(6)
     ]
     p = tmp_path / "burst.csv"
     p.write_text("\n".join(rows) + "\n")
-    res = run_pipeline(spark, str(p), queue_mode="fifo", queue_size=1)
+    return str(p)
+
+
+def test_fifo_bounded_mode_rejects_and_renders_nan_safe(spark, tmp_path):
+    res = run_pipeline(spark, _write_burst(tmp_path), queue_mode="fifo", queue_size=1)
     s = res.scalar_stats.collect()[0]
     assert s.rejected > 0 and s.processed + s.rejected == 6
     assert not math.isnan(s.avg_queuing_time)
@@ -199,3 +218,94 @@ def test_rewritten_csv_is_not_served_from_an_earlier_pin(spark, tmp_path):
     second = render_report(run_pipeline(spark, str(p)))
     assert "priority queue enqueued: 25" in first
     assert "normal queue enqueued: 25" in second
+
+
+def _write_saturating(tmp_path) -> str:
+    """Three pre-epoch rows, then 400 simultaneous 0.1 s requests: 8 workers
+    serve them in 5 s, past the 5 APIs' 300 calls a minute, so some calls
+    find every API saturated and leave ``used_api_id`` null."""
+    rows = ["user_id,request_time,processing_time"]
+    rows += [f"user_early,2022-12-31T23:59:5{i}Z,1.0" for i in range(3)]
+    rows += [f"user_{i % 7},2023-01-01T00:00:01Z,0.1" for i in range(400)]
+    p = tmp_path / "saturating.csv"
+    p.write_text("\n".join(rows) + "\n")
+    return str(p)
+
+
+@pytest.mark.parametrize(
+    "write, kwargs",
+    [
+        (lambda _tmp_path: SAMPLE_CSV, {}),
+        (_write_burst, {"queue_mode": "fifo", "queue_size": 1}),
+        (_write_saturating, {"num_workers": 8}),
+    ],
+    ids=["sample", "burst", "saturating"],
+)
+def test_fused_report_equals_separate_operators(spark, tmp_path, write, kwargs):
+    res = run_pipeline(spark, write(tmp_path), **kwargs)
+    tl = res.timeline
+    scalar = queuing_time_stats(tl).crossJoin(enqueue_totals(tl))
+    api = api_usage_counts(tl, spark)
+    assert res.scalar_stats.schema == scalar.schema
+    assert res.scalar_stats.collect() == scalar.collect()
+    assert res.api_counts.schema == api.schema
+    assert sorted(res.api_counts.collect()) == sorted(api.collect())
+    assert res.input_rows == tl.count()
+    assert res.negative_arrivals == tl.filter(F.col("sim_arrival_time") < 0).count()
+    # each input exercises what it is here for
+    if write is _write_burst:
+        assert res.scalar_stats.first().rejected > 0
+    if write is _write_saturating:
+        assert res.negative_arrivals == 3
+        assert tl.filter(F.col("used_api_id").isNull()).count() > 0
+
+
+def test_render_report_fires_no_spark_job(spark):
+    res = run_pipeline(spark, SAMPLE_CSV)
+    sc = spark.sparkContext
+    sc.setJobGroup("render_report_probe", "render_report")
+    try:
+        lines = render_report(res)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert lines[0] == "total requests: 25"
+    assert list(sc.statusTracker().getJobIdsForGroup("render_report_probe")) == []
+
+
+_NULL_TIME_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from queue_system_simulator_spark.pipeline import render_report, run_pipeline
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false")
+         .getOrCreate())
+try:
+    render_report(run_pipeline(spark, sys.argv[2]))
+except Exception as e:
+    print("RAISED", e)
+"""
+
+
+def test_null_processing_time_raises_instead_of_hanging(tmp_path):
+    # the CSV reader turns an empty field into null; the kernel must reject
+    # it, not spin forever in a Python worker (hence a subprocess + timeout)
+    p = tmp_path / "null_processing_time.csv"
+    p.write_text(
+        "user_id,request_time,processing_time\n"
+        "user_a,2023-01-01T00:00:00Z,\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _NULL_TIME_SCRIPT,
+         str(Path(__file__).resolve().parent.parent), str(p)],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=240,
+        env={**os.environ, "PYSPARK_PYTHON": sys.executable},
+    )
+    assert "RAISED" in proc.stdout, proc.stderr[-2000:]
+    assert "seq=1: processing_time is null or NaN" in proc.stdout, proc.stdout[-2000:]

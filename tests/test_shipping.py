@@ -4,7 +4,7 @@ The driver harness builds its own SparkSession and may run from any
 directory; sys.path edits on the driver do not reach Python workers, so
 without `shipping.ensure_shipped` every applyInPandas/mapInPandas closure
 defined in this package dies with ModuleNotFoundError on the worker.
-The in-process test session runs from /root/repo (where cwd inheritance
+The in-process test session runs from the checkout (where cwd inheritance
 masks the bug), so this spawns a subprocess with cwd=/tmp.
 """
 
@@ -16,7 +16,7 @@ import sys
 
 _SCRIPT = """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 import queue_system_simulator_spark.plans  # populate registry
 from queue_system_simulator_spark.plans.registry import QUERIES
@@ -33,7 +33,8 @@ print("SHIPPED_OK")
 
 def test_pandas_udf_queries_survive_foreign_cwd():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT,
+         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))],
         cwd="/tmp",
         capture_output=True,
         text=True,
