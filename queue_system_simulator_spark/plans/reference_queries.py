@@ -918,38 +918,24 @@ def _scratch_dir(tag: str, sf_dir: str) -> str:
     round-8-advice race class, fixed for the versioned lake table by its
     build-once stamp; round-trip queries rewrite by design — the write IS
     what the oracle grades — so isolation, not caching, is the fix here).
-    Stale siblings from finished processes are swept under the same 2h
-    mtime TTL the streaming drain GC uses, so the per-pid suffix does not
-    accumulate dirs.
+    Stale siblings from finished processes are swept by
+    ``fixtures.sweep_stale``, so the per-pid suffix does not accumulate
+    dirs.
     """
     import hashlib
     import os
-    import shutil
     import tempfile
-    import time
+    from pathlib import Path
+
+    from queue_system_simulator_spark.fixtures import sweep_stale
 
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    prefix = f"qss_{tag}_{h}_p"
-    tmp = tempfile.gettempdir()
-    d = os.path.join(tmp, f"{prefix}{os.getpid()}")
-    cutoff = time.time() - 7200
-    legacy = f"qss_{tag}_{h}"  # pre-pid layout from earlier rounds
-    try:
-        for name in os.listdir(tmp):
-            if (
-                not name.startswith(prefix) and name != legacy
-            ) or name == os.path.basename(d):
-                continue
-            sib = os.path.join(tmp, name)
-            try:
-                if os.path.isdir(sib) and os.stat(sib).st_mtime < cutoff:
-                    shutil.rmtree(sib, ignore_errors=True)
-            except OSError:  # raced with another sweeper / vanished
-                pass
-    except OSError:
-        pass
-    os.makedirs(d, exist_ok=True)
-    return d
+    prefix = f"qss_{tag}_{h}"  # also matches the pre-pid layout
+    d = Path(tempfile.gettempdir()) / f"{prefix}_p{os.getpid()}"
+    d.mkdir(parents=True, exist_ok=True)
+    os.utime(d)  # our own dir is young: the sweep never takes it
+    sweep_stale(d.parent, prefix)
+    return str(d)
 
 
 @register(

@@ -19,9 +19,12 @@ sums, bit-identical across engines).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from queue_system_simulator_spark.fixtures import build_once
 from queue_system_simulator_spark.localframe import local_df
 from queue_system_simulator_spark.plans.registry import register
 from queue_system_simulator_spark.schema import load_table
@@ -690,8 +693,6 @@ GROUP BY o.o_orderpriority
     "simply dropped; results are identical either way.",
 )
 def q_shuffle_hash_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pathlib import Path
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
@@ -1397,8 +1398,6 @@ TT_TOMBSTONE = "error"
 # search)
 TT_ASOF_NUM = 5
 TT_ASOF_DEN = 8
-#: bump to invalidate cached builds when the stored layout changes
-_TT_BUILD_FORMAT = 1
 
 
 def _tt_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1414,102 +1413,35 @@ def _tt_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def versioned_table_base(sf_dir: str) -> str:
-    """Deterministic build dir for the versioned lake table under tempdir,
-    keyed on a hash of the ABSOLUTE sf_dir (basename kept for readability):
-    two different sf_dirs that happen to share a basename get distinct
-    trees instead of thrashing one directory."""
-    import hashlib
-    import tempfile
-    from pathlib import Path
-
-    p = Path(sf_dir.rstrip("/")).resolve()
-    tag = hashlib.sha1(str(p).encode()).hexdigest()[:10]
-    return str(
-        Path(tempfile.gettempdir())
-        / "qss_spark_versioned_lake"
-        / f"{p.name}_{tag}"
-    )
-
-
-def _tt_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of a build: source-file identity (mtime_ns +
-    size of every data file under events.parquet — testdata is regenerated
-    between rounds, so a path-only key could serve a stale table while the
-    oracle reads the fresh one) plus every build parameter."""
-    import hashlib
-    from pathlib import Path
-
-    src = Path(sf_dir) / "events.parquet"
-    stats = sorted(
-        (q.name, st.st_mtime_ns, st.st_size)
-        for q in (src.rglob("*") if src.is_dir() else [src])
-        if q.is_file()
-        for st in [q.stat()]
-    )
-    key = (
-        _TT_BUILD_FORMAT,
-        TT_N_VERSIONS,
-        TT_TOMBSTONE,
-        str(Path(sf_dir.rstrip("/")).resolve()),
-        stats,
-    )
-    return hashlib.md5(repr(key).encode()).hexdigest()
-
-
-def ensure_versioned_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once guard for the shared versioned lake table: returns the
-    table base, building the ``TT_N_VERSIONS``-commit tree only when no
-    build with the current fingerprint exists.
-
-    This is what makes the shared deterministic path SAFE across
-    processes: a driver grading run and a concurrent bench sample used to
-    race a non-atomic ``mode=overwrite`` rewrite against the other's lazy
-    ``read_version`` scan.  Now the first builder takes an exclusive
-    ``flock`` on ``<base>.lock``, writes, and stamps ``_BUILT`` with the
-    fingerprint; everyone after that (any process) sees a matching stamp
-    and never writes again — the same data never triggers a second
-    rewrite, so there is nothing left to race.  A rebuild happens only
-    when the SOURCE changed (fresh testdata), in which case the stamp is
-    removed before the rewrite so a crashed build can never masquerade as
-    complete.  Also the bench-honest shape of a lake table: built once,
-    read many — repeat invocations time the read path, not the build."""
-    import fcntl
-    from pathlib import Path
-
+def _write_tt_chain(spark: SparkSession, sf_dir: str, base: Path) -> None:
+    """Write the ``TT_N_VERSIONS``-commit chain of the events log into
+    ``base``."""
     from queue_system_simulator_spark.sources.sink import (
         write_versioned_snapshots,
     )
 
-    base = versioned_table_base(sf_dir)
-    fp = _tt_fingerprint(sf_dir)
-    marker = Path(base) / "_BUILT"
-    try:
-        if marker.read_text() == fp:
-            return base
-    except OSError:
-        pass  # no build yet (or stamp vanished mid-read): take the lock
-    Path(base).parent.mkdir(parents=True, exist_ok=True)
-    with open(base + ".lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            try:
-                if marker.read_text() == fp:  # raced: other builder won
-                    return base
-            except OSError:
-                pass
-            marker.unlink(missing_ok=True)  # invalidate BEFORE rewriting
-            write_versioned_snapshots(
-                _tt_events(spark, sf_dir),
-                base,
-                n_versions=TT_N_VERSIONS,
-                tombstone=TT_TOMBSTONE,
-                shuffle_partitions="auto",
-            )
-            marker.write_text(fp)
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
-    return base
+    write_versioned_snapshots(
+        _tt_events(spark, sf_dir),
+        str(base),
+        n_versions=TT_N_VERSIONS,
+        tombstone=TT_TOMBSTONE,
+        shuffle_partitions="auto",
+    )
+
+
+def ensure_versioned_table(spark: SparkSession, sf_dir: str) -> str:
+    """The shared versioned lake table: the ``TT_N_VERSIONS``-commit chain
+    of the events log that the time-travel and CDC queries read.  Built
+    once per source and parameters (``fixtures.build_once``), so repeat
+    invocations time the read path, not the build."""
+    return str(
+        build_once(
+            "lake_versioned",
+            Path(sf_dir) / "events.parquet",
+            (TT_N_VERSIONS, TT_TOMBSTONE),
+            lambda base: _write_tt_chain(spark, sf_dir, base),
+        )
+    )
 
 
 @register(
@@ -1853,69 +1785,29 @@ def q_time_travel_as_of_timestamp(
 # --------------------------------------------------------------------------
 #: newest versions kept by the vacuum query's retention policy
 VACUUM_KEEP = 2
-#: bump to invalidate cached vacuum builds when the layout changes
-_VAC_BUILD_FORMAT = 1
-
-
-def _vac_fingerprint(sf_dir: str) -> str:
-    import hashlib
-
-    key = (_VAC_BUILD_FORMAT, VACUUM_KEEP, _tt_fingerprint(sf_dir))
-    return hashlib.md5(repr(key).encode()).hexdigest()
 
 
 def ensure_vacuumed_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once guard for the VACUUMED twin of the versioned lake table.
+    """The VACUUMED twin of the versioned lake table: the same commit
+    chain, then a vacuum that keeps only the newest ``VACUUM_KEEP``
+    versions.  A separate tree from :func:`ensure_versioned_table`'s,
+    which must keep every version readable (time_travel_version_diff
+    reads v2; the CDC feed walks v1..vN).  Built once per source and
+    parameters (``fixtures.build_once``)."""
+    from queue_system_simulator_spark.sources.sink import vacuum_versions
 
-    A separate tree from :func:`ensure_versioned_table`'s: the shared
-    build must keep every version readable (time_travel_version_diff
-    reads v2; the CDC feed walks v1..vN), while this one exists to
-    DELETE old versions — same flock + fingerprint-stamp protocol, so
-    concurrent graders never race the build and the expensive part runs
-    once per source fingerprint."""
-    import fcntl
-    from pathlib import Path
+    def build(base: Path) -> None:
+        _write_tt_chain(spark, sf_dir, base)
+        vacuum_versions(spark, str(base), keep_last=VACUUM_KEEP)
 
-    from queue_system_simulator_spark.sources.sink import (
-        vacuum_versions,
-        write_versioned_snapshots,
+    return str(
+        build_once(
+            "lake_vacuumed",
+            Path(sf_dir) / "events.parquet",
+            (TT_N_VERSIONS, TT_TOMBSTONE, VACUUM_KEEP),
+            build,
+        )
     )
-
-    base = versioned_table_base(sf_dir) + "_vac"
-    fp = _vac_fingerprint(sf_dir)
-    marker = Path(base) / "_BUILT"
-    try:
-        if marker.read_text() == fp:
-            return base
-    except OSError:
-        pass  # no build yet (or stamp vanished mid-read): take the lock
-    Path(base).parent.mkdir(parents=True, exist_ok=True)
-    with open(base + ".lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            try:
-                if marker.read_text() == fp:  # raced: other builder won
-                    return base
-            except OSError:
-                pass
-            marker.unlink(missing_ok=True)  # invalidate BEFORE rewriting
-            import shutil
-
-            # a stale _vacuum_log from a prior-format build would leak
-            # append-mode rows into the fresh history — rebuild clean
-            shutil.rmtree(base, ignore_errors=True)
-            write_versioned_snapshots(
-                _tt_events(spark, sf_dir),
-                base,
-                n_versions=TT_N_VERSIONS,
-                tombstone=TT_TOMBSTONE,
-                shuffle_partitions="auto",
-            )
-            vacuum_versions(spark, base, keep_last=VACUUM_KEEP)
-            marker.write_text(fp)
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
-    return base
 
 
 def _vac_commit_sql(k: int) -> str:
@@ -2021,74 +1913,36 @@ def q_versioned_retention_vacuum(
 # --------------------------------------------------------------------------
 #: file-count ceiling the compaction query's OPTIMIZE bin-packs to
 COMPACT_TARGET_FILES = 2
-#: bump to invalidate cached optimize builds when the layout changes
-_OPT_BUILD_FORMAT = 1
-
-
-def _opt_fingerprint(sf_dir: str) -> str:
-    import hashlib
-
-    key = (_OPT_BUILD_FORMAT, COMPACT_TARGET_FILES, _tt_fingerprint(sf_dir))
-    return hashlib.md5(repr(key).encode()).hexdigest()
 
 
 def ensure_optimized_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once guard for the OPTIMIZED twin of the versioned lake
-    table: the full commit chain plus one forced compaction commit
-    (``force=True`` so the compacted version exists at every fixture
-    scale — a tiny snapshot AQE already packed into <= target files
-    would otherwise no-op and leave nothing for the query to grade).
-    Separate tree from the shared and vacuumed builds (those must keep
-    their version chains unextended); same flock + fingerprint-stamp
-    protocol, so the expensive part runs once per source fingerprint."""
-    import fcntl
-    import shutil
-    from pathlib import Path
+    """The OPTIMIZED twin of the versioned lake table: the full commit
+    chain plus one forced compaction commit (``force=True`` so the
+    compacted version exists at every fixture scale — a tiny snapshot AQE
+    already packed into <= target files would otherwise no-op and leave
+    nothing for the query to grade).  A separate tree from the shared and
+    vacuumed builds, whose version chains must stay unextended.  Built
+    once per source and parameters (``fixtures.build_once``)."""
+    from queue_system_simulator_spark.sources.sink import optimize_compact
 
-    from queue_system_simulator_spark.sources.sink import (
-        optimize_compact,
-        write_versioned_snapshots,
+    def build(base: Path) -> None:
+        _write_tt_chain(spark, sf_dir, base)
+        optimize_compact(
+            spark,
+            str(base),
+            target_files=COMPACT_TARGET_FILES,
+            sort_within=["user_id", "tus"],
+            force=True,
+        )
+
+    return str(
+        build_once(
+            "lake_optimized",
+            Path(sf_dir) / "events.parquet",
+            (TT_N_VERSIONS, TT_TOMBSTONE, COMPACT_TARGET_FILES),
+            build,
+        )
     )
-
-    base = versioned_table_base(sf_dir) + "_opt"
-    fp = _opt_fingerprint(sf_dir)
-    marker = Path(base) / "_BUILT"
-    try:
-        if marker.read_text() == fp:
-            return base
-    except OSError:
-        pass  # no build yet (or stamp vanished mid-read): take the lock
-    Path(base).parent.mkdir(parents=True, exist_ok=True)
-    with open(base + ".lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            try:
-                if marker.read_text() == fp:  # raced: other builder won
-                    return base
-            except OSError:
-                pass
-            marker.unlink(missing_ok=True)  # invalidate BEFORE rewriting
-            # a stale v5 from a prior-format build must not survive into
-            # a fresh chain — rebuild clean
-            shutil.rmtree(base, ignore_errors=True)
-            write_versioned_snapshots(
-                _tt_events(spark, sf_dir),
-                base,
-                n_versions=TT_N_VERSIONS,
-                tombstone=TT_TOMBSTONE,
-                shuffle_partitions="auto",
-            )
-            optimize_compact(
-                spark,
-                base,
-                target_files=COMPACT_TARGET_FILES,
-                sort_within=["user_id", "tus"],
-                force=True,
-            )
-            marker.write_text(fp)
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
-    return base
 
 
 def _opt_commit_sql(k: int) -> str:
@@ -2156,8 +2010,6 @@ _OPTIMIZE_ORACLE = (
 def q_versioned_compaction_optimize(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pathlib import Path
-
     from queue_system_simulator_spark.sources.sink import (
         read_manifest,
         read_version,

@@ -8,16 +8,21 @@ stream and batch paths agree (Spark's unified-engine contract).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 
+from queue_system_simulator_spark.fixtures import build_once
 from queue_system_simulator_spark.operators.fifo import fifo_k1_timeline_sql
 from queue_system_simulator_spark.plans.registry import register
 from queue_system_simulator_spark.streaming.stream import (
     interval_join_purchase_clicks,
     run_available_now,
+    run_streaming_versioned_commits,
     session_counts,
     sliding_api_load,
     stream_events,
+    stream_events_timesliced,
     streaming_fifo_k1,
     streaming_rate_limiter,
     tumbling_counts,
@@ -772,104 +777,30 @@ def q_streaming_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Streaming writer INTO the versioned lake (the Delta streaming-sink shape)
 # --------------------------------------------------------------------------
-#: bump to invalidate cached streamed-table builds when the layout changes
-_SVS_BUILD_FORMAT = 1
-
-
-def streamed_versioned_base(sf_dir: str) -> str:
-    """Deterministic build dir for the STREAM-written versioned lake table
-    (separate tree from the batch-written ``versioned_table_base`` — the
-    two writers must never race one directory)."""
-    import hashlib
-    import tempfile
-    from pathlib import Path
-
-    p = Path(sf_dir.rstrip("/")).resolve()
-    tag = hashlib.sha1(str(p).encode()).hexdigest()[:10]
-    return str(
-        Path(tempfile.gettempdir())
-        / "qss_spark_stream_versioned"
-        / f"{p.name}_{tag}"
-    )
-
-
-def _svs_fingerprint(sf_dir: str) -> str:
-    """Source-content fingerprint + every build parameter (same discipline
-    as ``relational_queries._tt_fingerprint``: testdata is regenerated
-    between rounds, so path-only keys can serve a stale table)."""
-    import hashlib
-    from pathlib import Path
-
-    from queue_system_simulator_spark.plans.relational_queries import (
-        TT_N_VERSIONS,
-        TT_TOMBSTONE,
-    )
-
-    src = Path(sf_dir) / "events.parquet"
-    stats = sorted(
-        (q.name, st.st_mtime_ns, st.st_size)
-        for q in (src.rglob("*") if src.is_dir() else [src])
-        if q.is_file()
-        for st in [q.stat()]
-    )
-    key = (
-        _SVS_BUILD_FORMAT,
-        TT_N_VERSIONS,
-        TT_TOMBSTONE,
-        str(Path(sf_dir.rstrip("/")).resolve()),
-        stats,
-    )
-    return hashlib.md5(repr(key).encode()).hexdigest()
-
-
 def ensure_streamed_versioned_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once guard for the stream-written versioned lake: drain the
-    time-sliced events stream through the foreachBatch versioned sink
-    only when no build with the current fingerprint exists (flock +
-    fingerprint stamp — the ``ensure_versioned_table`` protocol)."""
-    import fcntl
-    import shutil
-    from pathlib import Path
-
+    """The STREAM-written versioned lake table: the time-sliced events
+    stream drained through the foreachBatch versioned sink, one commit per
+    slice.  A separate tree from the batch-written
+    ``relational_queries.ensure_versioned_table`` (the two writers never
+    share a directory).  Built once per source and parameters
+    (``fixtures.build_once``)."""
     from queue_system_simulator_spark.plans.relational_queries import (
         TT_N_VERSIONS,
         TT_TOMBSTONE,
     )
-    from queue_system_simulator_spark.streaming.stream import (
-        run_streaming_versioned_commits,
-        stream_events_timesliced,
-    )
 
-    base = streamed_versioned_base(sf_dir)
-    fp = _svs_fingerprint(sf_dir)
-    marker = Path(base) / "_BUILT"
-    try:
-        if marker.read_text() == fp:
-            return base
-    except OSError:
-        pass  # no build yet: take the lock
-    Path(base).parent.mkdir(parents=True, exist_ok=True)
-    with open(base + ".lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            try:
-                if marker.read_text() == fp:  # raced: other builder won
-                    return base
-            except OSError:
-                pass
-            # a stale chain (or its checkpoint) from a prior-format build
-            # must not leak into a fresh drain — rebuild clean
-            shutil.rmtree(base, ignore_errors=True)
-            keyed = stream_events_timesliced(
-                spark, sf_dir, n_slices=TT_N_VERSIONS
-            )
-            run_streaming_versioned_commits(
-                keyed, base, tombstone=TT_TOMBSTONE
-            )
-            marker.write_text(fp)
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
-    return base
+    def build(base: Path) -> None:
+        keyed = stream_events_timesliced(spark, sf_dir, n_slices=TT_N_VERSIONS)
+        run_streaming_versioned_commits(keyed, str(base), tombstone=TT_TOMBSTONE)
+
+    return str(
+        build_once(
+            "lake_streamed",
+            Path(sf_dir) / "events.parquet",
+            (TT_N_VERSIONS, TT_TOMBSTONE),
+            build,
+        )
+    )
 
 
 def _svs_version_sql(k: int) -> str:

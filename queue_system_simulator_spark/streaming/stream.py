@@ -23,7 +23,6 @@ kernel contract it must match).
 
 from __future__ import annotations
 
-import hashlib
 import tempfile
 import uuid
 from pathlib import Path
@@ -31,34 +30,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from queue_system_simulator_spark.fixtures import build_once, sweep_stale
 from queue_system_simulator_spark.localframe import local_df
 from queue_system_simulator_spark.schema import load_table
-
-
-def _sweep_stale_drains(root: Path, ttl_s: int = 7200) -> None:
-    """Best-effort GC of per-invocation drain/merge dirs from FINISHED
-    runs.  An append-mode streaming sink cannot overwrite a reused
-    directory (the retained checkpoint would resume past the source and
-    emit nothing), so every drain writes a fresh uuid dir — and without
-    GC the root grows without bound across bench samples, pytest
-    sessions, and oracle sweeps (the repo's round-6 disk-exhaustion
-    lesson; measured: 873 dirs / 2.1 GB accumulated over rounds 4-8).
-    Only dirs untouched for ``ttl_s`` are removed — far past any live
-    drain's read-back window (drains materialize in seconds) — so a
-    concurrent process's active drain is never touched.  Errors are
-    swallowed: two sweepers racing on the same stale dir is fine."""
-    import shutil
-    import time
-
-    if not root.is_dir():
-        return
-    cutoff = time.time() - ttl_s
-    for d in root.iterdir():
-        try:
-            if d.is_dir() and d.stat().st_mtime < cutoff:
-                shutil.rmtree(d, ignore_errors=True)
-        except OSError:  # raced with another sweeper / vanished entry
-            pass
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,7 +47,11 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FileStreamSource needs a directory; expose the single parquet file
     # through a stable symlink dir (stands in for the S3 prefix a real
     # deployment would stream from)
-    link_dir = Path("/tmp/qss_spark_stream") / sf_dir.strip("/").replace("/", "_")
+    link_dir = (
+        Path(tempfile.gettempdir())
+        / "qss_spark_stream"
+        / sf_dir.strip("/").replace("/", "_")
+    )
     link_dir.mkdir(parents=True, exist_ok=True)
     link = link_dir / "events.parquet"
     # resolve() the target: a RELATIVE sf_dir would be stored relative to
@@ -469,10 +447,13 @@ def run_available_now(
             "RocksDBStateStoreProvider",
         )
     try:
+        # a fresh dir per drain: an append-mode sink reusing one would
+        # resume from its retained checkpoint, past the source, and emit
+        # nothing; sweep_stale collects the dirs of finished drains
         name = f"stream_out_{uuid.uuid4().hex[:12]}"
         if output_mode == "complete" and distributed_complete:
             root = Path(tempfile.gettempdir()) / "qss_spark_stream_out"
-            _sweep_stale_drains(root)
+            sweep_stale(root)
             out_dir = root / name
 
             def overwrite_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -491,7 +472,7 @@ def run_available_now(
             )
         if output_mode == "append":
             root = Path(tempfile.gettempdir()) / "qss_spark_stream_out"
-            _sweep_stale_drains(root)
+            sweep_stale(root)
             out_dir = root / name
             q = (
                 result.writeStream.format("parquet")
@@ -661,37 +642,6 @@ def streaming_latest_upsert(events: DataFrame) -> DataFrame:
     )
 
 
-def _gc_dead_fingerprint_splits(src: Path, prefix: str) -> None:
-    """A cache miss means the source changed (testdata is regenerated
-    between rounds), so sibling dirs holding OLD fingerprints of this
-    same split (``{prefix}_{fingerprint}`` names) are dead for THIS
-    process — but a concurrent session that checked the built marker on
-    an older fingerprint may still be streaming from it, so apply the
-    same mtime TTL gate ``_sweep_stale_drains`` uses instead of deleting
-    immediately (a stale split lingers <=2h, it does not accumulate)."""
-    import shutil
-    import time
-
-    cutoff = time.time() - 7200
-    if not src.parent.is_dir():
-        return
-    for d in src.parent.iterdir():
-        try:
-            if d == src or not (
-                d.name == prefix  # pre-fingerprint legacy
-                or d.name.startswith(f"{prefix}_")
-            ):
-                continue
-            if d.stat().st_mtime >= cutoff:
-                continue
-            if d.is_dir():
-                shutil.rmtree(d, ignore_errors=True)
-            elif d.suffix == ".lock" and d.name != f"{src.name}.lock":
-                d.unlink()  # dead fingerprint's build lock
-        except OSError:  # raced with another sweeper
-            pass
-
-
 def stream_events_multibatch(
     spark: SparkSession, sf_dir: str, n_files: int = 4
 ) -> DataFrame:
@@ -707,52 +657,21 @@ def stream_events_multibatch(
     which rows land in which batch, which is exactly the property the
     caller's oracle then proves.
 
-    The split is cached under tempdir, keyed by a FINGERPRINT of the
-    source (mtime_ns + size of every data file under events.parquet),
-    not just the sf_dir path: fixture data is regenerated between
-    rounds, and a path-only key would keep streaming a stale copy while
-    the oracle reads the fresh table — a silent divergence."""
+    The split is built once per source (``fixtures.build_once``)."""
     from queue_system_simulator_spark.schema import tune_foreign_session
     from queue_system_simulator_spark.shipping import ensure_shipped
 
     tune_foreign_session(spark)
     ensure_shipped(spark)
-    src_path = Path(sf_dir) / "events.parquet"
-    stats = sorted(
-        (p.name, st.st_mtime_ns, st.st_size)
-        for p in (
-            src_path.rglob("*") if src_path.is_dir() else [src_path]
-        )
-        if p.is_file()
-        for st in [p.stat()]
-    )
-    fingerprint = hashlib.md5(repr(stats).encode()).hexdigest()[:12]
-    src = (
-        Path(tempfile.gettempdir())
-        / "qss_spark_stream_multi"
-        / sf_dir.strip("/").replace("/", "_")
-        / f"n{n_files}_{fingerprint}"
-    )
-    if not (src / "_SUCCESS").exists():
-        # first build for this fingerprint: take an exclusive flock so
-        # two processes missing the cache together (driver grading +
-        # a concurrent bench sample) serialize instead of racing one
-        # overwrite write into the same dir; the loser re-checks
-        # _SUCCESS and reads the winner's split (same guard as
-        # ensure_versioned_table — the split is immutable once built)
-        import fcntl
 
-        src.parent.mkdir(parents=True, exist_ok=True)
-        with open(f"{src}.lock", "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                if not (src / "_SUCCESS").exists():
-                    _gc_dead_fingerprint_splits(src, f"n{n_files}")
-                    load_table(spark, sf_dir, "events").repartition(
-                        n_files
-                    ).write.mode("overwrite").parquet(str(src))
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
+    def build(split: Path) -> None:
+        load_table(spark, sf_dir, "events").repartition(n_files).write.mode(
+            "overwrite"
+        ).parquet(str(split))
+
+    src = build_once(
+        f"split_multibatch_n{n_files}", Path(sf_dir) / "events.parquet", (), build
+    )
     schema = spark.read.parquet(str(src)).schema
     return (
         spark.readStream.schema(schema)
@@ -785,7 +704,7 @@ def run_foreachbatch_merge(keyed: DataFrame) -> DataFrame:
 
     spark = keyed.sparkSession
     fb_root = Path(tempfile.gettempdir()) / "qss_spark_fb_merge"
-    _sweep_stale_drains(fb_root)
+    sweep_stale(fb_root)
     base = fb_root / f"m_{uuid.uuid4().hex[:12]}"
     base.mkdir(parents=True, exist_ok=True)
     state = {"v": 0}
@@ -860,87 +779,49 @@ def stream_events_timesliced(
     sub-millisecond write completions could otherwise tie at the file
     source's millisecond granularity).  Rows carry the keyed lake
     projection (user_id, tus, event_id, event_type, value_centi —
-    parity: ``relational_queries._tt_events``).  The split is cached
-    under tempdir keyed by a source fingerprint + flock, same protocol
-    as ``stream_events_multibatch``.  At 100 TB the slicing is fixture
-    plumbing only — a real deployment's Kafka/file source already
+    parity: ``relational_queries._tt_events``).  The split is built once
+    per source (``fixtures.build_once``).  At 100 TB the slicing is
+    fixture plumbing only — a real deployment's Kafka/file source already
     arrives in event-time order; the sink is the scale path."""
-    import fcntl
     import os
     import shutil
 
     from queue_system_simulator_spark.schema import tune_foreign_session
 
     tune_foreign_session(spark)
-    src_path = Path(sf_dir) / "events.parquet"
-    stats = sorted(
-        (p.name, st.st_mtime_ns, st.st_size)
-        for p in (src_path.rglob("*") if src_path.is_dir() else [src_path])
-        if p.is_file()
-        for st in [p.stat()]
+
+    def build(split: Path) -> None:
+        keyed = load_table(spark, sf_dir, "events").select(
+            "user_id",
+            F.unix_micros("ts").alias("tus"),
+            "event_id",
+            "event_type",
+            F.round(F.col("value") * 100).cast("long").alias("value_centi"),
+        )
+        keyed.persist()
+        try:
+            lo, hi = keyed.agg(F.min("tus"), F.max("tus")).first()
+            span = int(hi) - int(lo) + 1
+            cuts = [int(lo) + (span * k) // n_slices for k in range(1, n_slices + 1)]
+            t0 = int(split.stat().st_mtime)
+            prev = int(lo)
+            for k, cut in enumerate(cuts, start=1):
+                part = split / f"_stage_{k}"
+                keyed.filter(
+                    (F.col("tus") >= prev) & (F.col("tus") < cut)
+                ).coalesce(1).write.mode("overwrite").parquet(str(part))
+                (data,) = [f for f in part.glob("part-*") if f.is_file()]
+                dst = split / f"slice-{k:02d}.parquet"
+                os.rename(data, dst)
+                shutil.rmtree(part, ignore_errors=True)
+                os.utime(dst, (t0 + k, t0 + k))
+                prev = cut
+        finally:
+            keyed.unpersist()
+
+    src = build_once(
+        f"split_timesliced_n{n_slices}", Path(sf_dir) / "events.parquet", (), build
     )
-    fingerprint = hashlib.md5(
-        repr((1, n_slices, stats)).encode()
-    ).hexdigest()[:12]
-    src = (
-        Path(tempfile.gettempdir())
-        / "qss_spark_stream_tslice"
-        / sf_dir.strip("/").replace("/", "_")
-        / f"ts{n_slices}_{fingerprint}"
-    )
-    marker = src / "_BUILT"  # _-prefixed: hidden from the file source
-    if not marker.exists():
-        src.parent.mkdir(parents=True, exist_ok=True)
-        with open(f"{src}.lock", "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                if not marker.exists():
-                    _gc_dead_fingerprint_splits(src, f"ts{n_slices}")
-                    shutil.rmtree(src, ignore_errors=True)
-                    keyed = load_table(spark, sf_dir, "events").select(
-                        "user_id",
-                        F.unix_micros("ts").alias("tus"),
-                        "event_id",
-                        "event_type",
-                        F.round(F.col("value") * 100)
-                        .cast("long")
-                        .alias("value_centi"),
-                    )
-                    keyed.persist()
-                    try:
-                        lo, hi = keyed.agg(
-                            F.min("tus"), F.max("tus")
-                        ).first()
-                        span = int(hi) - int(lo) + 1
-                        cuts = [
-                            int(lo) + (span * k) // n_slices
-                            for k in range(1, n_slices + 1)
-                        ]
-                        src.mkdir(parents=True, exist_ok=True)
-                        t0 = int(Path(src).stat().st_mtime)
-                        prev = int(lo)
-                        for k, cut in enumerate(cuts, start=1):
-                            part = src / f"_stage_{k}"
-                            keyed.filter(
-                                (F.col("tus") >= prev) & (F.col("tus") < cut)
-                            ).coalesce(1).write.mode("overwrite").parquet(
-                                str(part)
-                            )
-                            (data,) = [
-                                f
-                                for f in part.glob("part-*")
-                                if f.is_file()
-                            ]
-                            dst = src / f"slice-{k:02d}.parquet"
-                            os.rename(data, dst)
-                            shutil.rmtree(part, ignore_errors=True)
-                            os.utime(dst, (t0 + k, t0 + k))
-                            prev = cut
-                    finally:
-                        keyed.unpersist()
-                    marker.write_text(fingerprint)
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
     schema = spark.read.parquet(str(src / "slice-01.parquet")).schema
     return (
         spark.readStream.schema(schema)

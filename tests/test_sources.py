@@ -565,10 +565,10 @@ def test_versioned_cdc_feed_replays_to_final_version(spark, sf_dir):
     # under test, not break it silently
     from queue_system_simulator_spark.plans.relational_queries import (
         TT_N_VERSIONS,
-        versioned_table_base,
+        ensure_versioned_table,
     )
 
-    base = versioned_table_base(sf_dir)
+    base = ensure_versioned_table(spark, sf_dir)
     final = {
         r.user_id: r.value_centi
         for r in read_version(spark, base, TT_N_VERSIONS)
@@ -581,10 +581,12 @@ def test_versioned_cdc_feed_replays_to_final_version(spark, sf_dir):
 
 
 def test_ensure_versioned_table_rebuilds_on_source_change(spark, tmp_path):
-    """The build-once stamp is a SOURCE fingerprint, not a path check:
+    """The build-once key is a SOURCE fingerprint, not a path check:
     regenerating the fixture at the same path must rebuild the table
     (a stale cached build would hash-mismatch against the oracle, which
-    reads the fresh log), and the fresh build must reflect the new data."""
+    reads the fresh log), and the fresh build must reflect the new data.
+    The rebuild goes to a new directory, so a reader planned against the
+    old build still collects it."""
     import shutil
     from pathlib import Path
 
@@ -600,10 +602,8 @@ def test_ensure_versioned_table_rebuilds_on_source_change(spark, tmp_path):
         "/root/testdata/sf0.001/events.parquet", src_dir / "events.parquet"
     )
     base = ensure_versioned_table(spark, str(src_dir))
-    before = {
-        (r.user_id, r.event_id)
-        for r in read_version(spark, base, TT_N_VERSIONS).collect()
-    }
+    planned = read_version(spark, base, TT_N_VERSIONS)
+    before = {(r.user_id, r.event_id) for r in planned.collect()}
     assert before
     # regenerate in place with a strictly smaller slice (new mtime_ns +
     # size -> new fingerprint)
@@ -622,10 +622,12 @@ def test_ensure_versioned_table_rebuilds_on_source_change(spark, tmp_path):
         src_dir / "events.parquet",
     )
     base2 = ensure_versioned_table(spark, str(src_dir))
-    assert base2 == base  # same path, rebuilt in place
+    assert base2 != base  # new source -> new build dir
+    # the old build survives the rebuild for a reader planned against it
+    assert {(r.user_id, r.event_id) for r in planned.collect()} == before
     after = {
         (r.user_id, r.event_id)
-        for r in read_version(spark, base, TT_N_VERSIONS).collect()
+        for r in read_version(spark, base2, TT_N_VERSIONS).collect()
     }
     assert after and after != before  # rebuilt, not served stale
     # every stored row comes from the regenerated slice (the per-user
@@ -641,7 +643,7 @@ def test_as_of_timestamp_resolves_between_cuts(spark, sf_dir):
     before T), and the returned rows must equal that stored snapshot."""
     from queue_system_simulator_spark.plans import QUERIES
     from queue_system_simulator_spark.plans.relational_queries import (
-        versioned_table_base,
+        ensure_versioned_table,
     )
     from queue_system_simulator_spark.sources.sink import read_version
 
@@ -649,7 +651,7 @@ def test_as_of_timestamp_resolves_between_cuts(spark, sf_dir):
     rows = out.collect()
     assert rows
     assert {r.version for r in rows} == {2}
-    base = versioned_table_base(sf_dir)
+    base = ensure_versioned_table(spark, sf_dir)
     stored = {
         (r.user_id, r.event_id, r.value_centi)
         for r in read_version(spark, base, 2)

@@ -610,22 +610,18 @@ def test_multibatch_split_invalidates_on_source_change(spark, tmp_path):
     assert n2 == n1 // 2  # stale path-keyed cache would return n1 again
     # the miss GCs dead-fingerprint siblings under the SAME mtime TTL the
     # drain sweeper uses: a young dir survives (a concurrent session that
-    # already checked _SUCCESS may still be streaming from it), an aged
-    # one is swept on the next miss
+    # already found the build stamp may still be streaming from it), an
+    # aged one is swept on the next miss
     import os
-    import tempfile
     import time
-    from pathlib import Path
 
-    cache_root = (
-        Path(tempfile.gettempdir())
-        / "qss_spark_stream_multi"
-        / str(src_dir).strip("/").replace("/", "_")
-    )
+    from queue_system_simulator_spark.fixtures import fixture_root
+
+    cache_root = fixture_root(src_dir / "events.parquet")
     splits = [
         d.name
         for d in cache_root.iterdir()
-        if d.is_dir() and d.name.startswith("n2")
+        if d.is_dir() and d.name.startswith("split_multibatch_n2_")
     ]
     assert len(splits) == 2, splits  # old fingerprint is young -> kept
     # age every split past the TTL, regenerate once more (rewrite bumps
@@ -643,7 +639,7 @@ def test_multibatch_split_invalidates_on_source_change(spark, tmp_path):
     splits = [
         d.name
         for d in cache_root.iterdir()
-        if d.is_dir() and d.name.startswith("n2")
+        if d.is_dir() and d.name.startswith("split_multibatch_n2_")
     ]
     assert len(splits) == 1, splits
 
@@ -654,9 +650,7 @@ def test_sweep_stale_drains_is_age_gated(tmp_path):
     import os
     import time
 
-    from queue_system_simulator_spark.streaming.stream import (
-        _sweep_stale_drains,
-    )
+    from queue_system_simulator_spark.fixtures import sweep_stale
 
     old = tmp_path / "stream_out_old"
     (old / "data").mkdir(parents=True)
@@ -666,11 +660,25 @@ def test_sweep_stale_drains_is_age_gated(tmp_path):
     live = tmp_path / "stream_out_live"
     (live / "data").mkdir(parents=True)
 
-    _sweep_stale_drains(tmp_path, ttl_s=7200)
+    sweep_stale(tmp_path, ttl_s=7200)
     assert not old.exists()
     assert live.exists()
     # missing root is a no-op, not an error
-    _sweep_stale_drains(tmp_path / "nonexistent")
+    sweep_stale(tmp_path / "nonexistent")
+
+
+def test_stream_events_link_dir_honours_tmpdir(spark, sf_dir, tmp_path, monkeypatch):
+    """The symlink dir the file source streams from lives under the
+    process's temp dir (``TMPDIR``), not a hard-coded ``/tmp``: a run
+    pointed at its own temp dir must leave nothing outside it."""
+    import tempfile
+
+    from queue_system_simulator_spark.streaming.stream import stream_events
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stream_events(spark, sf_dir)
+    links = list(tmp_path.rglob("events.parquet"))
+    assert links and all(p.is_symlink() for p in links), links
 
 
 def _svs_chain(spark, base):
