@@ -17,9 +17,10 @@ partition key (source / label / LSH band).
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from queue_system_simulator_spark.localframe import local_df
@@ -231,6 +232,35 @@ FROM (
 """
 
 
+def _shingle_expr() -> Column:
+    """The 3-gram word shingle array (repeats kept) of the ``toks`` column."""
+    return F.expr(
+        f"transform({sliding_index_sql('toks', 3)}, "
+        "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', "
+        "element_at(toks, i + 2)))"
+    )
+
+
+def _doc_tokens(
+    spark: SparkSession, sf_dir: str, only_docs: DataFrame | None
+) -> DataFrame:
+    """``(doc_id, source, toks)``: each document's space-split tokens.
+
+    ``only_docs`` (a one-column ``doc_id`` frame) restricts shingling to a
+    document subset BEFORE the tokenize work — the verify stage of
+    candidate-then-verify pipelines re-shingles only candidate docs, so
+    its cost scales with the candidate set, not the corpus.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    if only_docs is not None:
+        docs = docs.join(F.broadcast(only_docs), "doc_id", "left_semi")
+    # documents arrive as few fat parquet partitions; spread the tokenize +
+    # fan-out across the cluster
+    return spread(docs).select(
+        "doc_id", "source", F.split("text", " ").alias("toks")
+    )
+
+
 def _shingle_arrays(
     spark: SparkSession, sf_dir: str, only_docs: DataFrame | None = None
 ) -> DataFrame:
@@ -245,31 +275,13 @@ def _shingle_arrays(
     where the exploded form paid a full shuffle of every shingle string
     (guide §2.4: remove shuffles outright; the distinct's hash partitioning
     was useless downstream anyway — consumers re-key by doc or by shingle).
-
-    ``only_docs`` (a one-column ``doc_id`` frame) restricts shingling to a
-    document subset BEFORE the tokenize work — the verify stage of
-    candidate-then-verify pipelines re-shingles only candidate docs, so
-    its cost scales with the candidate set, not the corpus.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    if only_docs is not None:
-        docs = docs.join(F.broadcast(only_docs), "doc_id", "left_semi")
-    # documents arrive as few fat parquet partitions; spread the tokenize +
-    # fan-out across the cluster
-    toked = spread(docs).select(
-        "doc_id", "source", F.split("text", " ").alias("toks")
+    return _doc_tokens(spark, sf_dir, only_docs).select(
+        "doc_id", "source", F.array_distinct(_shingle_expr()).alias("shings")
     )
-    shingles = F.expr(
-        f"array_distinct(transform({sliding_index_sql('toks', 3)}, "
-        "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', "
-        "element_at(toks, i + 2))))"
-    )
-    return toked.select("doc_id", "source", shingles.alias("shings"))
 
 
-def _shingles(
-    spark: SparkSession, sf_dir: str, only_docs: DataFrame | None = None
-) -> DataFrame:
+def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct 3-gram word shingles per document, exploded form
     ``(doc_id, source, shingle)`` — per-doc dedup happens map-side inside
     the generator (``explode(array_distinct(...))``), so NO distinct
@@ -283,19 +295,78 @@ def _shingles(
     on the UN-spread scan partitions (measured 0.14 s → 3.2 s at sf0.1).
     Callers that need the array form use :func:`_shingle_arrays` and must
     materialize it before fanning out."""
-    docs = load_table(spark, sf_dir, "documents")
-    if only_docs is not None:
-        docs = docs.join(F.broadcast(only_docs), "doc_id", "left_semi")
-    toked = spread(docs).select(
-        "doc_id", "source", F.split("text", " ").alias("toks")
+    return _doc_tokens(spark, sf_dir, None).select(
+        "doc_id",
+        "source",
+        F.explode(F.array_distinct(_shingle_expr())).alias("shingle"),
     )
-    shingles = F.expr(
-        f"array_distinct(transform({sliding_index_sql('toks', 3)}, "
-        "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', "
-        "element_at(toks, i + 2))))"
+
+
+def _posting_pairs(arrs: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b, n_inter)``: every same-source pair sharing at least
+    one shingle, with its shingle-overlap count, from the per-document
+    shingle arrays ``(doc_id, source, shings)``.
+
+    Inverted-index pair generation: one groupBy builds the posting list
+    per (source, shingle), then C(k,2) ordered pairs are emitted from the
+    sorted list JVM-side.  Same pair multiset as the equi-self-join the
+    oracles run, but the shingle table crosses the shuffle ONCE instead of
+    twice and there is no join.  At 100 TB a stop-shingle with a huge
+    posting list would make one quadratic row — cap/salt hot shingles
+    there; the candidate semantics (pairs sharing a rare shingle) are
+    unchanged.
+    """
+    sh = arrs.select("doc_id", "source", F.explode("shings").alias("shingle"))
+    posting = sh.groupBy("source", "shingle").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("docs")
     )
-    return toked.select(
-        "doc_id", "source", F.explode(shingles).alias("shingle")
+    pair_expr = F.expr(
+        "flatten(transform(docs, (x, i) -> "
+        "transform(slice(docs, i + 2, size(docs)), "
+        "y -> struct(x AS doc_a, y AS doc_b))))"
+    )
+    return (
+        posting.select(F.explode(pair_expr).alias("p"))
+        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+
+
+def _exact_overlap(pairs: DataFrame, arrs: DataFrame) -> DataFrame:
+    """``pairs`` (keyed ``doc_a``/``doc_b``) plus both sides' distinct
+    shingle counts ``sa``/``sb`` and their exact overlap ``n_inter``.
+
+    The verify stage of candidate-then-verify: two joins attach each
+    candidate's per-doc shingle arrays (only candidate docs' rows are
+    pulled; AQE broadcasts the array side when it fits, at scale they are
+    plain keyed joins), and the size of the two arrays' intersection is
+    the exact |A ∩ B|, computed MAP-SIDE — it replaces explode → two
+    shingle equi-joins → count groupBy, which re-shuffled candidate ×
+    shingle mass and aggregated it back down.  A zero-overlap candidate
+    gets ``n_inter = 0`` directly, no left join needed.  Cost stays ∝
+    candidate shingle mass, never the corpus square.
+    """
+    sh_a = arrs.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("shings").alias("sh_a"),
+        F.size("shings").alias("sa"),
+    )
+    sh_b = arrs.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("shings").alias("sh_b"),
+        F.size("shings").alias("sb"),
+    )
+    return (
+        pairs.join(sh_a, "doc_a")
+        .join(sh_b, "doc_b")
+        .select(
+            *pairs.columns,
+            "sa",
+            "sb",
+            F.size(F.array_intersect("sh_a", "sh_b"))
+            .cast("long")
+            .alias("n_inter"),
+        )
     )
 
 
@@ -325,30 +396,10 @@ WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.05
 )
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = materialize(_shingle_arrays(spark, sf_dir))
-    sh = arrs.select("doc_id", "source", F.explode("shings").alias("shingle"))
     # distinct-shingle counts straight off the per-doc array — no groupBy
     # pass over the exploded frame
     sizes = arrs.select("doc_id", F.size("shings").alias("n_sh"))
-    # inverted-index pair generation: one groupBy to build the posting list
-    # per (source, shingle), then emit C(k,2) ordered pairs from the sorted
-    # list JVM-side.  Same pair multiset as the equi-self-join the oracle
-    # runs, but the shingle table crosses the shuffle ONCE instead of twice
-    # and there is no join.  At 100 TB a stop-shingle with a huge posting
-    # list would make one quadratic row — cap/salt hot shingles there; the
-    # candidate semantics (pairs sharing a rare shingle) are unchanged.
-    posting = sh.groupBy("source", "shingle").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("docs")
-    )
-    pair_expr = F.expr(
-        "flatten(transform(docs, (x, i) -> "
-        "transform(slice(docs, i + 2, size(docs)), "
-        "y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-    inter = (
-        posting.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = _posting_pairs(arrs)
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("sa"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("sb"))
     out = (
@@ -382,12 +433,7 @@ GROUP BY sh.doc_id, s.seed
     "(doc_id, seed); fan-out 16× shingles, still O(doc length).",
 )
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wide = _minhash_wide(spark, sf_dir)
-    stack = ", ".join(f"{s}L, mh_{s}" for s in range(NUM_MINHASH))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({NUM_MINHASH}, {stack}) AS (seed, minhash)"),
-    ).select("doc_id", "seed", "minhash")
+    return _minhash_long(_minhash_wide(spark, sf_dir))
 
 
 def _minhash_wide(
@@ -421,42 +467,83 @@ def _minhash_wide(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _lsh_candidates(wide: DataFrame) -> DataFrame:
-    """LSH candidate pairs ``(doc_a, doc_b)`` from the wide signature frame.
-
-    Band keys are md5 over the 4 member columns in seed order (== the
-    oracle's string_agg ORDER BY seed); candidates come from a bucket
-    equi-join on (band, band_key) — never all-pairs.
-    """
-    n_bands = NUM_MINHASH // BAND_SIZE
-
-    def band_key(b: int):
-        cols = [F.col(f"mh_{s}") for s in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)]
-        return F.md5(F.concat_ws(",", *cols))
-
-    bands = wide.select(
+def _minhash_long(wide: DataFrame) -> DataFrame:
+    """Long signature rows ``(doc_id, seed, minhash)`` of the wide frame."""
+    stack = ", ".join(f"{s}L, mh_{s}" for s in range(NUM_MINHASH))
+    return wide.select(
         "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_key(b).alias("band_key"))
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.band_key")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        F.expr(f"stack({NUM_MINHASH}, {stack}) AS (seed, minhash)"),
+    ).select("doc_id", "seed", "minhash")
+
+
+def _minhash_band_keys(rows: int = BAND_SIZE) -> list[Column]:
+    """One band key per ``rows`` consecutive signature columns of the wide
+    frame: md5 over the members in seed order (== the oracles'
+    ``string_agg(minhash, ',' ORDER BY seed)``)."""
+    return [
+        F.md5(F.concat_ws(",", *[F.col(f"mh_{s}") for s in range(b, b + rows)]))
+        for b in range(0, NUM_MINHASH, rows)
+    ]
+
+
+def _lsh_bands(
+    frame: DataFrame, band_keys: list[Column], carry: Sequence[str] = ()
+) -> DataFrame:
+    """``(doc_id, *carry, band, band_key)``: one row per document and band,
+    ``band`` being the key's position in ``band_keys``.  The ``carry``
+    columns ride along unchanged, so a scorer after :func:`_band_join`
+    reads them without re-joining the signature frame."""
+    bk = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(b).alias("band"), key.alias("band_key"))
+                for b, key in enumerate(band_keys)
+            ]
         )
+    ).alias("bk")
+    return frame.select("doc_id", *carry, bk).select(
+        "doc_id", *carry, "bk.band", "bk.band_key"
+    )
+
+
+def _band_join(bands: DataFrame) -> DataFrame:
+    """Bucket self-join of an :func:`_lsh_bands` frame on (band, band_key)
+    with ``a.doc_id < b.doc_id``; the two sides are aliased ``a`` and ``b``.
+    Candidates come from colliding buckets only — never all-pairs.
+
+    Self-join economics: at bench scale AQE broadcasts one band side, so
+    the signature lineage computes twice — measured cheaper than an eager
+    cache fill, a driver barrier the r12 driver bench and the r13
+    same-window A/B both measured as a standalone regression; at cluster
+    scale the join is sort-merge, both sides are the identical canonical
+    shuffle, and ReuseExchange computes the lineage once.
+    """
+    a, b = bands.alias("a"), bands.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    )
+
+
+def _n_match(a: str, b: str) -> Column:
+    """Signature agreement: how many of the ``NUM_MINHASH`` column pairs
+    ``{a}{s}`` / ``{b}{s}`` are equal (the MinHash Jaccard numerator)."""
+    return sum(
+        F.when(F.col(f"{a}{s}") == F.col(f"{b}{s}"), 1).otherwise(0)
+        for s in range(NUM_MINHASH)
+    )
+
+
+def _lsh_candidates(wide: DataFrame) -> DataFrame:
+    """LSH candidate pairs ``(doc_a, doc_b)`` from the wide signature frame
+    (4 bands × 4 rows), DISTINCT over the bands they collide in."""
+    return (
+        _band_join(_lsh_bands(wide, _minhash_band_keys()))
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-
 
 
 @register(
@@ -497,56 +584,18 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (n_match is computed map-side right after it) instead of being
     # re-attached by two post-candidate joins: n_match is a function of
     # the pair, so moving the distinct AFTER the per-band n_match
-    # projection yields the identical one row per pair.  wide now has
-    # exactly one consumer — the band generator — so the eager cache fill
-    # (a driver barrier the r12 driver bench measured as a standalone
-    # regression) is gone.  Self-join economics: at bench scale AQE
-    # broadcasts one band side, so the signature lineage computes twice —
-    # measured cheaper than the fill barrier (r13 paired A/B); at cluster
-    # scale the join is sort-merge, both sides are the identical canonical
-    # shuffle, and ReuseExchange computes it once.  (Guide §2.4: two joins
+    # projection yields the identical one row per pair.  wide has exactly
+    # one consumer — the band generator — so there is no eager cache fill
+    # (see _band_join on the self-join economics).  (Guide §2.4: two joins
     # + a cache fill removed; §2.5: candidates stay join-on-bucket, never
     # all-pairs.)
-    wide = _minhash_wide(spark, sf_dir)
-    n_bands = NUM_MINHASH // BAND_SIZE
-
-    def band_key(b: int):
-        cols = [
-            F.col(f"mh_{s}") for s in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)
-        ]
-        return F.md5(F.concat_ws(",", *cols))
-
-    bands = wide.select(
-        "doc_id",
-        *[F.col(f"mh_{s}") for s in range(NUM_MINHASH)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_key(b).alias("band_key")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id",
-        *[F.col(f"mh_{s}") for s in range(NUM_MINHASH)],
-        "bk.band",
-        "bk.band_key",
+    mh_cols = [f"mh_{s}" for s in range(NUM_MINHASH)]
+    bands = _lsh_bands(
+        _minhash_wide(spark, sf_dir), _minhash_band_keys(), carry=mh_cols
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    n_match = sum(
-        F.when(F.col(f"a.mh_{s}") == F.col(f"b.mh_{s}"), 1).otherwise(0)
-        for s in range(NUM_MINHASH)
-    )
+    n_match = _n_match("a.mh_", "b.mh_")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_join(bands)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -845,45 +894,26 @@ def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-side bit_count right after the join, the qualifying filter runs
     # BEFORE the pair distinct (fewer rows into that exchange — hamming is
     # a function of the pair, so the distinct result is unchanged), and
-    # sig now has exactly ONE consumer — the band generator — so the eager
-    # cache fill (a driver barrier the r12 driver bench and the r13
-    # same-window A/B both measured as a standalone regression) is gone.
-    # Self-join economics: at bench scale AQE broadcasts one band side, so
-    # the signature groupBy computes twice — measured cheaper than the
-    # fill barrier (r13 paired A/B); at cluster scale the join is
-    # sort-merge, both sides are the identical canonical shuffle, and
-    # ReuseExchange computes the lineage once.  (Guide §2.4 remove
-    # shuffles/joins outright; §2.3 the carried payload is 8 bytes/row,
-    # cheaper than re-attaching it by key at any scale.)
-    bands = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(
-                            f"shiftrightunsigned(sig, "
-                            f"{64 - (b + 1) * SIMHASH_BAND_BITS}) & {band_mask}"
-                        ).alias("band_key"),
-                    )
-                    for b in range(n_bands)
-                ]
+    # sig has exactly ONE consumer — the band generator — so there is no
+    # eager cache fill (see _band_join on the self-join economics).
+    # (Guide §2.4 remove shuffles/joins outright; §2.3 the carried payload
+    # is 8 bytes/row, cheaper than re-attaching it by key at any scale.)
+    bands = _lsh_bands(
+        sig,
+        [
+            F.expr(
+                f"shiftrightunsigned(sig, "
+                f"{64 - (b + 1) * SIMHASH_BAND_BITS}) & {band_mask}"
             )
-        ).alias("bk"),
-    ).select("doc_id", "sig", "bk.band", "bk.band_key")
-    a, b = bands.alias("a"), bands.alias("b")
+            for b in range(n_bands)
+        ],
+        carry=("sig",),
+    )
     hamming = (
         F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).cast("long")
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_join(bands)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -953,8 +983,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs-only consumer: _lsh_candidates emits the same DISTINCT
     # (doc_a, doc_b) set as minhash_lsh_pairs without computing/carrying
     # the n_match signature columns through the band join (guide §2.3 —
-    # project before the exchange; no cache/fill barrier — see
-    # q_minhash_lsh_pairs on the self-join economics)
+    # project before the exchange; no cache/fill barrier — see _band_join
+    # on the self-join economics)
     pairs = _lsh_candidates(_minhash_wide(spark, sf_dir))
     # canonical direction big → small: (a, b) with a > b.  localCheckpoint
     # (not cache): caching keeps the full logical plan, so every round's
@@ -1891,9 +1921,10 @@ JOIN sizes sb ON c.doc_b = sb.doc_id
     "pipeline): MinHash-LSH band collisions generate candidate pairs, then "
     "each candidate is re-scored with EXACT shingle Jaccard — the sketch "
     "narrows the corpus to candidate pairs, exact verification touches "
-    "only those. The verify stage is two shuffle joins on (doc, shingle) "
-    "whose cost is proportional to candidate shingle mass, never the "
-    "corpus square; zero-overlap candidates (band false positives) "
+    "only those. The verify stage attaches each candidate's per-doc "
+    "shingle arrays by doc and intersects them map-side, so its cost is "
+    "proportional to candidate shingle mass, never the corpus square; "
+    "zero-overlap candidates (band false positives) "
     "survive with jaccard 0 so sketch precision is itself observable.",
 )
 def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1905,8 +1936,8 @@ def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier instead of two.  The multi-consumer race the eager fill
     # guards against (profiled in session 2: a lazy cache filled 3×
     # concurrently, ~30 s duplicated executor time) cannot occur here
-    # because the racing consumers (sh_a/sh_b below) only run in the
-    # FINAL action, after wide's fill has populated the cache.
+    # because the racing consumers (the verify join's two array sides) only
+    # run in the FINAL action, after wide's fill has populated the cache.
     arrs = _shingle_arrays(spark, sf_dir).cache()
     sh_full = arrs.select("doc_id", F.explode("shings").alias("shingle"))
     # wide feeds the band self-join's two sides: materialize, or the
@@ -1914,37 +1945,15 @@ def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stages for one logical build).  This fill also fills arrs (above).
     wide = materialize(_minhash_wide(spark, sf_dir, sh=sh_full))
     cand = _lsh_candidates(wide)
-    # verify: exact |A ∩ B| as a MAP-SIDE set intersection on the per-doc
-    # shingle arrays — two joins attach each candidate's (still-pruned:
-    # only candidate docs' rows are pulled by the join) arrays, and
-    # ``size(array_intersect(...))`` + ``size(shings)`` replace the old
-    # explode → two shingle equi-joins → count groupBy → three re-joins
-    # of cand/sizes.  Zero-overlap candidates (band false positives) get
-    # n_inter = 0 from the intersect directly — no left join needed.
-    # Verify cost stays ∝ candidate shingle mass, never the corpus square.
-    sh_a = arrs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shings").alias("sh_a"),
-        F.size("shings").alias("sa"),
-    )
-    sh_b = arrs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shings").alias("sh_b"),
-        F.size("shings").alias("sb"),
-    )
-    n_inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-    return (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            n_inter.alias("n_inter"),
-            (F.col("sa") + F.col("sb") - n_inter).cast("long").alias("n_union"),
-            F.round(
-                n_inter.cast("double") / (F.col("sa") + F.col("sb") - n_inter), 6
-            ).alias("jaccard_exact"),
-        )
+    # verify: |A ∩ B| and both set sizes straight off the per-doc arrays
+    # (zero-overlap band false positives keep n_inter = 0)
+    uni = F.col("sa") + F.col("sb") - F.col("n_inter")
+    return _exact_overlap(cand, arrs).select(
+        "doc_a",
+        "doc_b",
+        "n_inter",
+        uni.cast("long").alias("n_union"),
+        F.round(F.col("n_inter").cast("double") / uni, 6).alias("jaccard_exact"),
     )
 
 
@@ -3770,28 +3779,7 @@ def q_incremental_minhash_candidates(
 ) -> DataFrame:
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     wide = _minhash_wide(spark, sf_dir).join(src, "doc_id").cache()
-    n_bands = NUM_MINHASH // BAND_SIZE
-
-    def band_key(b: int):
-        cols = [
-            F.col(f"mh_{s}") for s in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)
-        ]
-        return F.md5(F.concat_ws(",", *cols))
-
-    bands = wide.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_key(b).alias("band_key")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "source", "bk.band", "bk.band_key")
+    bands = _lsh_bands(wide, _minhash_band_keys(), carry=("source",))
     new_b = bands.filter(F.col("source") == "src0")
     corp_b = bands.filter(F.col("source") != "src0")
     cand = (
@@ -3815,10 +3803,7 @@ def q_incremental_minhash_candidates(
         F.col("doc_id").alias("corpus_doc"),
         *[F.col(f"mh_{s}").alias(f"b_{s}") for s in range(NUM_MINHASH)],
     )
-    n_match = sum(
-        F.when(F.col(f"a_{s}") == F.col(f"b_{s}"), 1).otherwise(0)
-        for s in range(NUM_MINHASH)
-    ).cast("long")
+    n_match = _n_match("a_", "b_").cast("long")
     return (
         cand.join(F.broadcast(sa), "new_doc")
         .join(F.broadcast(sb), "corpus_doc")
@@ -3981,9 +3966,11 @@ SELECT (SELECT count(*) FROM truth) AS n_true,
     "the MinHash-LSH candidate set against exact shingle-Jaccard truth at "
     f"tau={LSH_EVAL_TAU} — the measured tradeoff (16 hashes, 4 bands x 4 "
     "rows: theory gives P(candidate)=1-(1-s^4)^4) that sizes bands/rows "
-    "before running dedup on 100 TB. Composes the engine's own "
-    "ngram_jaccard_pairs and minhash_lsh_pairs plans; the comparison "
-    "itself is set algebra over two tiny pair lists. The same harness "
+    "before running dedup on 100 TB. Truth is the engine's own "
+    "ngram_jaccard_pairs plan; candidates are the same MinHash band "
+    "collisions as minhash_lsh_pairs, taken pairs-only (no signature "
+    "columns carried through the band join); the comparison itself is "
+    "set algebra over two tiny pair lists. The same harness "
     "re-runs per (bands, rows) configuration to pick the operating point.",
 )
 def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4833,21 +4820,8 @@ WHERE greatest(CAST(i.n_inter AS DOUBLE) / sa.n_sh,
 )
 def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = materialize(_shingle_arrays(spark, sf_dir))
-    sh = arrs.select("doc_id", "source", F.explode("shings").alias("shingle"))
     sizes = arrs.select("doc_id", F.size("shings").alias("n_sh"))
-    posting = sh.groupBy("source", "shingle").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("docs")
-    )
-    pair_expr = F.expr(
-        "flatten(transform(docs, (x, i) -> "
-        "transform(slice(docs, i + 2, size(docs)), "
-        "y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-    inter = (
-        posting.select(F.explode(pair_expr).alias("p"))
-        .groupBy("p.doc_a", "p.doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = _posting_pairs(arrs)
     sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
         "n_sh", "na"
     )
@@ -5099,9 +5073,11 @@ GROUP BY 1, 2
     "(mirror sites, syndication, scraper overlap). The actionable "
     "summary on top of pair-level dedup: a hot off-diagonal cell means "
     "one source is largely derivable from another and can be dropped "
-    "wholesale before any per-document work. Composes the registered "
-    "MinHash-LSH pair plan verbatim; the rollup joins two broadcast "
-    "doc->source lookups and aggregates a frame that is already tiny.",
+    "wholesale before any per-document work. The pairs are the same "
+    "MinHash band collisions as minhash_lsh_pairs, taken pairs-only (no "
+    "signature columns carried through the band join); the rollup joins "
+    "two broadcast doc->source lookups and aggregates a frame that is "
+    "already tiny.",
 )
 def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs-only consumer (the rollup only counts pairs): the candidate
@@ -5889,51 +5865,28 @@ FROM cfgs c CROSS JOIN nt
     description="LSH (bands x rows) sweep — the OTHER calibration axis "
     "(lsh_threshold_sweep fixes the banding and sweeps tau; this fixes "
     "tau=0.5 and re-bands the SAME 16-hash signatures as 2x8 / 4x4 / 8x2): "
-    "band keys for all three configurations are derived in one grouped "
-    "pass over the long signature frame, the candidate join stays blocked "
-    "on (config, band, key) — never all-pairs — and recall against exact-"
+    "the 2 + 4 + 8 band keys of all three configurations come from one "
+    "projection of the wide signature frame, numbered in one band space so "
+    "a single bucket self-join on (band, key) blocks by configuration — "
+    "never all-pairs — and recall against exact-"
     "Jaccard truth quantifies the s-curve trade (more bands = higher "
     "recall AND more candidates to verify). One signature build, three "
     "operating points.",
 )
 def q_lsh_bands_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = q_minhash_signatures(spark, sf_dir)
     cfgs = [2, 4, 8]
-    bands = None
-    for nb in cfgs:
-        rows = NUM_MINHASH // nb
-        b = (
-            sig.groupBy(
-                "doc_id", (F.col("seed") / rows).cast("long").alias("band")
-            )
-            .agg(
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(F.struct("seed", "minhash"))
-                            ),
-                            lambda s: s["minhash"],
-                        ),
-                    )
-                ).alias("band_key")
-            )
-            .select(F.lit(nb).alias("n_bands"), "doc_id", "band", "band_key")
-        )
-        bands = b if bands is None else bands.unionByName(b)
-    a = bands.alias("a")
-    bb = bands.alias("b")
+    # bands of all configurations share one index space (0-1 for 2x8,
+    # 2-5 for 4x4, 6-13 for 8x2), so a (band, band_key) collision is
+    # always within one configuration; band_cfg maps a band back to it
+    bands = _lsh_bands(
+        _minhash_wide(spark, sf_dir),
+        [key for nb in cfgs for key in _minhash_band_keys(NUM_MINHASH // nb)],
+    )
+    band_cfg = F.array(*[F.lit(nb) for nb in cfgs for _ in range(nb)])
     cand = (
-        a.join(
-            bb,
-            (F.col("a.n_bands") == F.col("b.n_bands"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_join(bands)
         .select(
-            F.col("a.n_bands").alias("n_bands"),
+            F.element_at(band_cfg, F.col("a.band") + 1).alias("n_bands"),
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
         )
@@ -5979,6 +5932,30 @@ def q_lsh_bands_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Prefix-filtered exact similarity join (AllPairs / PPJoin family)
 # --------------------------------------------------------------------------
 PF_TAU = 0.5  # same near-dup bar as LSH_EVAL_TAU — the two paths compare
+
+
+def _prefix_tokens(tok: DataFrame) -> DataFrame:
+    """Rarest-first prefix rows ``(doc_id, shingle, n)`` of ``tok`` =
+    ``(doc_id, shingle, n)``, ``n`` being the doc's distinct-shingle count.
+
+    Each doc's shingles are ordered by (corpus document frequency,
+    shingle) — one doc-partitioned window, no global rank — and the first
+    n − ⌈τ·n⌉ + 1 are kept: two docs can reach Jaccard ≥ ``PF_TAU`` only
+    if their prefixes share a shingle.
+    """
+    from pyspark.sql import Window
+
+    df = tok.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    w = Window.partitionBy("doc_id").orderBy("df", "shingle")
+    return (
+        tok.join(df, "shingle")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(
+            F.col("rn")
+            <= F.col("n") - F.ceil(F.lit(PF_TAU) * F.col("n")) + 1
+        )
+        .select("doc_id", "shingle", "n")
+    )
 
 
 @register(
@@ -6031,8 +6008,6 @@ WHERE CAST(i.n_inter AS DOUBLE) / (na.n + nb.n - i.n_inter) >= {PF_TAU}
 def q_prefix_filter_jaccard_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import Window
-
     arrs = materialize(_shingle_arrays(spark, sf_dir))
     # per-doc size comes off the array map-side; the exploded frame then
     # carries it along, so the doc-partitioned window only computes the
@@ -6040,23 +6015,13 @@ def q_prefix_filter_jaccard_pairs(
     tok = arrs.select(
         "doc_id", F.size("shings").alias("n"), F.explode("shings").alias("shingle")
     )
-    df = tok.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # one shuffle on doc_id produces the rarest-first rank; the size rides
     # along through the candidate join so the verify stage needs no re-join
     # with a doc-size frame.  Materialized: the candidate pass below and
     # the downstream lineage would otherwise each recompute the df-join +
     # window (profiled: two identical 7 MB → 4 MB stages, 17.7 + 11.1 s
     # executor, for one logical pref build).
-    w = Window.partitionBy("doc_id").orderBy("df", "shingle")
-    pref = materialize(
-        tok.join(df, "shingle")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(
-            F.col("rn")
-            <= F.col("n") - F.ceil(F.lit(PF_TAU) * F.col("n")) + 1
-        )
-        .select("doc_id", "shingle", "n")
-    )
+    pref = materialize(_prefix_tokens(tok))
     # candidate generation: equi-join of the MATERIALIZED pref with itself
     # on the prefix shingle (doc_a < doc_b) — both sides read the cache, so
     # the old duplicated-lineage cost of the self-join is gone, and the
@@ -6087,32 +6052,7 @@ def q_prefix_filter_jaccard_pairs(
         .repartition(slots, "doc_a", "doc_b")
         .dropDuplicates()
     )
-    # verify: exact |A ∩ B| as a MAP-SIDE set intersection on the per-doc
-    # shingle arrays — two joins attach each candidate's arrays (AQE
-    # broadcasts the doc-array side when it fits; at scale they are plain
-    # keyed joins) and ``size(array_intersect(...))`` replaces the old
-    # explode → two shingle equi-joins → count groupBy (which re-shuffled
-    # candidate×shingle mass and then aggregated it back down).  The
-    # intersect count over the distinct arrays is the same integer.
-    sh_a = arrs.select(
-        F.col("doc_id").alias("doc_a"), F.col("shings").alias("sh_a")
-    )
-    sh_b = arrs.select(
-        F.col("doc_id").alias("doc_b"), F.col("shings").alias("sh_b")
-    )
-    inter = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "na",
-            "nb",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            .cast("long")
-            .alias("n_inter"),
-        )
-    )
+    inter = _exact_overlap(cand, arrs)
     uni = F.col("na") + F.col("nb") - F.col("n_inter")
     jac = F.col("n_inter").cast("double") / uni
     return (
@@ -6470,8 +6410,6 @@ FROM m
     "funnel; below the caps (sf0.01) every doc and pair is kept.",
 )
 def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     sdocs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id")
@@ -6490,33 +6428,19 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "shings"
         )
     )
-    tok = arrs_s.select("doc_id", F.explode("shings").alias("shingle"))
-    dfreq = tok.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    wd = Window.partitionBy("doc_id")
-    w = wd.orderBy("df", "shingle")
+    tok = arrs_s.select(
+        "doc_id", F.size("shings").alias("n"), F.explode("shings").alias("shingle")
+    )
     # materialized: the candidate self-join reads pref TWICE and the
     # sampled / verify lineage a third time — without the eager fill the
-    # df-join + two windows re-execute per consumer (sample-bounded, tiny).
+    # df-join + window re-execute per consumer (sample-bounded, tiny).
     # pref and the minhash signature frame below both derive from the
     # cached tok and are independent of EACH OTHER, so their fill jobs run
     # concurrently from a driver thread pool (guide §2.6): the signature
     # job's tasks back-fill executors freed by the pref job's tail instead
     # of waiting behind a serial barrier.
-    pref_lazy = (
-        tok.join(dfreq, "shingle")
-        .withColumn("n", F.count(F.lit(1)).over(wd))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(
-            F.col("rn")
-            <= F.col("n") - F.ceil(F.lit(PF_TAU) * F.col("n")) + 1
-        )
-        .select("doc_id", "shingle", "n")
-    )
-    # signature build moved up from the estimate step: same frame, same
-    # consumers — materialized here so the fill overlaps pref's (the two
-    # jobs share no lineage beyond the already-cached arrs_s/tok)
     pref, mh_wide = materialize_many(
-        pref_lazy, _minhash_wide(spark, sf_dir, sh=tok)
+        _prefix_tokens(tok), _minhash_wide(spark, sf_dir, sh=tok)
     )
     cand = (
         pref.alias("a")
@@ -6548,29 +6472,8 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_b",
     ).limit(MH_EVAL_PAIRS)
     # exact verify over the BROADCAST ≤MH_EVAL_PAIRS sample (2k pairs
-    # ≈ 64 kB): map-side ``size(array_intersect(...))`` on the per-doc
-    # shingle arrays — two joins against the sampled-array frame replace
-    # the old shingle equi-join + count groupBy (profiled at 10 s executor)
-    sh_a = arrs_s.select(
-        F.col("doc_id").alias("doc_a"), F.col("shings").alias("sh_a")
-    )
-    sh_b = arrs_s.select(
-        F.col("doc_id").alias("doc_b"), F.col("shings").alias("sh_b")
-    )
-    inter = (
-        F.broadcast(sampled)
-        .join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "na",
-            "nb",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            .cast("long")
-            .alias("n_inter"),
-        )
-    )
+    # ≈ 64 kB) against the sampled-array frame
+    inter = _exact_overlap(F.broadcast(sampled), arrs_s)
     uni = F.col("na") + F.col("nb") - F.col("n_inter")
     jacc = F.col("n_inter").cast("double") / uni
     pairs = inter.filter(jacc >= PF_TAU).select(
@@ -6582,19 +6485,11 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sample is value-identical to the full-corpus pass (the oracle keeps
     # the full-corpus mh CTE — the pair join filters it to the same rows)
     # while skipping a second corpus-wide tokenize+explode.
-    stack = ", ".join(f"{s}L, mh_{s}" for s in range(NUM_MINHASH))
     # materialized (fill overlapped with pref above): the a/b pair sides
     # below both consume mh — lazily the 16-md5 signature groupBy re-ran
     # once per side (profiled: three near-identical 11–18 s stages over
     # the cached tok frame)
-    mh = (
-        mh_wide
-        .select(
-            "doc_id",
-            F.expr(f"stack({NUM_MINHASH}, {stack}) AS (seed, minhash)"),
-        )
-        .select("doc_id", "seed", "minhash")
-    )
+    mh = _minhash_long(mh_wide)
     a = mh.select(
         F.col("doc_id").alias("doc_a"),
         F.col("seed").alias("seed"),
@@ -6949,8 +6844,6 @@ SELECT 'lsh_bands',
     "cap every doc is kept.",
 )
 def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     sdocs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id")
@@ -6960,12 +6853,16 @@ def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(BSE_DOC_SAMPLE)
     )
-    tok = (
-        _shingles(spark, sf_dir, only_docs=sdocs)
-        .select("doc_id", "shingle")
-        .cache()
+    # materialized ARRAY frame: the truth self-join, the prefix filter and
+    # the signature build all read it (see q_minhash_estimate_error)
+    arrs_s = materialize(
+        _shingle_arrays(spark, sf_dir, only_docs=sdocs).select(
+            "doc_id", "shings"
+        )
     )
-    n = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    tok = arrs_s.select(
+        "doc_id", F.size("shings").alias("n"), F.explode("shings").alias("shingle")
+    )
     inter = (
         tok.alias("a")
         .join(
@@ -6974,16 +6871,15 @@ def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n").alias("na"),
+            F.col("b.n").alias("nb"),
         )
         .agg(F.count(F.lit(1)).alias("i"))
     )
-    na = n.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = n.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     truth = (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .filter(
+        inter.filter(
             F.col("i").cast("double")
             / (F.col("na") + F.col("nb") - F.col("i"))
             >= PF_TAU
@@ -6991,17 +6887,7 @@ def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .cache()
     )
-    df_counts = tok.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "shingle")
-    pref = (
-        tok.join(df_counts, "shingle")
-        .join(n, "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(
-            F.col("rn") <= F.col("n") - F.ceil(F.lit(PF_TAU) * F.col("n")) + 1
-        )
-        .select("doc_id", "shingle")
-    )
+    pref = _prefix_tokens(tok)
     cand_prefix = (
         pref.alias("a")
         .join(
@@ -7129,12 +7015,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
-    sh = F.expr(
-        f"transform({sliding_index_sql('toks', 3)}, "
-        "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', "
-        "element_at(toks, i + 2)))"
-    )
-    tokm = docs.select("doc_id", F.explode(sh).alias("shingle"))
+    tokm = docs.select("doc_id", F.explode(_shingle_expr()).alias("shingle"))
     tf = tokm.groupBy("doc_id", "shingle").agg(F.count(F.lit(1)).alias("tf"))
     nd = tf.select("doc_id").distinct().count()
     df = tf.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
@@ -7241,13 +7122,8 @@ def q_zipf_exponent_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
-    sh = F.expr(
-        f"transform({sliding_index_sql('toks', 3)}, "
-        "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', "
-        "element_at(toks, i + 2)))"
-    )
     freq = (
-        docs.select(F.explode(sh).alias("shingle"))
+        docs.select(F.explode(_shingle_expr()).alias("shingle"))
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("f"))
     )

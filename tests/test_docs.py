@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import importlib.util
 import re
 from pathlib import Path
 
@@ -33,6 +34,16 @@ def test_queries_md_count_matches_registry():
     n_oracle = sum(1 for s in QUERIES.values() if s.oracle is not None)
     assert int(m.group(2)) == n_oracle
     assert int(m.group(3)) == len(QUERIES) - n_oracle
+
+
+def test_queries_md_is_the_generated_catalog():
+    path = ROOT / "tools" / "gen_query_docs.py"
+    spec = importlib.util.spec_from_file_location("gen_query_docs", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert (ROOT / "QUERIES.md").read_text() == mod.render(), (
+        "QUERIES.md is stale: run python tools/gen_query_docs.py"
+    )
 
 
 def test_driver_window_is_exactly_fifty_and_oracled():

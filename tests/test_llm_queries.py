@@ -1,8 +1,8 @@
 """LLM-pipeline operator tests (dedup / similarity / text analysis).
 
-Value-level parity with DuckDB is covered by tools/check_oracle.py; these
-tests pin structural invariants at sf0.001 so regressions surface in the
-fast suite.
+Value-level parity with DuckDB is covered by tools/check_oracle.py, and for
+the near-dup pair family by tests/test_pair_oracles.py; these tests pin
+structural invariants at sf0.001 so regressions surface in the fast suite.
 """
 
 from __future__ import annotations

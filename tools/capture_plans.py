@@ -10,8 +10,11 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file sits in, whatever the working directory
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from queue_system_simulator_spark.plans import QUERIES  # noqa: E402
 from queue_system_simulator_spark.session import get_spark  # noqa: E402

@@ -6,8 +6,11 @@ Usage: python tools/gen_query_docs.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file sits in, whatever the working directory
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from queue_system_simulator_spark.plans import QUERIES, all_oracles  # noqa: E402
 
@@ -29,7 +32,8 @@ because the driver records oracle-less entries as err:"no_oracle"
 """
 
 
-def main() -> None:
+def render() -> str:
+    """The catalog text, one row per registered query."""
     oracles = all_oracles()
     lines = [HEADER]
     for i, (name, spec) in enumerate(QUERIES.items(), 1):
@@ -41,8 +45,11 @@ def main() -> None:
         f"{len(QUERIES) - len(oracles)} rows-only "
         f"(pytest-gated, not driver-exposed).\n"
     )
-    with open("/root/repo/QUERIES.md", "w") as f:
-        f.writelines(lines)
+    return "".join(lines)
+
+
+def main() -> None:
+    (ROOT / "QUERIES.md").write_text(render())
     print(f"wrote QUERIES.md: {len(QUERIES)} queries")
 
 

@@ -23,8 +23,11 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file sits in, whatever the working directory
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from queue_system_simulator_spark.plans import QUERIES  # noqa: E402
 from queue_system_simulator_spark.session import get_spark  # noqa: E402
@@ -96,7 +99,7 @@ def main() -> None:
             )
     lines.append("")
     lines.append(NOTES)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md: {len(rows)} queries audited")
 

@@ -16,8 +16,11 @@ import json
 import sys
 import time
 import urllib.request
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file sits in, whatever the working directory
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from queue_system_simulator_spark.plans import QUERIES  # noqa: E402
 from queue_system_simulator_spark.session import get_spark  # noqa: E402
