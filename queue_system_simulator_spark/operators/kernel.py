@@ -207,6 +207,7 @@ def simulate_events(
     current: list[dict | None] = [None] * k
     completed: list[dict] = []
 
+    head, n_rows = 0, len(pending)
     now = 0.0
     if pending and pending[0]["sim_arrival_time"] >= 0:
         now = pending[0]["sim_arrival_time"]
@@ -214,20 +215,18 @@ def simulate_events(
     def workers_busy() -> bool:
         return any(t is not None for t in current)
 
-    while pending or not queue.is_empty() or workers_busy():
+    while head < n_rows or not queue.is_empty() or workers_busy():
         acted = True
         while acted:
             acted = False
-            # drain arrivals with t <= now
-            n_arrived = 0
-            for req in pending:
-                if req["sim_arrival_time"] <= now:
-                    n_arrived += 1
-                else:
-                    break
-            if n_arrived:
+            # drain arrivals with t <= now; ``head`` is a read index, so the
+            # drain costs O(arrivals), not O(rows left)
+            start = head
+            while head < n_rows and pending[head]["sim_arrival_time"] <= now:
+                head += 1
+            if head > start:
                 acted = True
-                for req in pending[:n_arrived]:
+                for req in pending[start:head]:
                     req["arrival_time_in_queue"] = now
                     if queue.is_full():
                         req["finish_processing_time_by_worker"] = REJECTED
@@ -237,7 +236,6 @@ def simulate_events(
                         completed.append(req)
                     else:
                         queue.enqueue(req)
-                del pending[:n_arrived]
             # step workers in id order; completion and next-start happen on
             # separate fixed-point passes (reference worker.py:69-88)
             for w in range(k):
@@ -262,8 +260,8 @@ def simulate_events(
                     acted = True
         # advance the clock to the next event
         nxt = None
-        if pending:
-            nxt = pending[0]["sim_arrival_time"]
+        if head < n_rows:
+            nxt = pending[head]["sim_arrival_time"]
         for w in range(k):
             if current[w] is not None and (nxt is None or busy_until[w] < nxt):
                 nxt = busy_until[w]
@@ -289,6 +287,21 @@ def simulate_events(
             r["priority_enqueued_total"] = 0
             r["normal_enqueued_total"] = pe
     return completed
+
+
+#: The column a caller passes instead of ``seq`` to have the kernel number
+#: each group's rows itself, and the order it numbers them in.
+INPUT_POS = "__input_pos"
+_SEQ_ORDER = ["sim_arrival_time", "user_id", INPUT_POS]
+
+
+def _number_seq(pdf: pd.DataFrame) -> pd.DataFrame:
+    """``seq = row_number() OVER (ORDER BY sim_arrival_time, user_id,
+    __input_pos)`` over one group's rows: a sort with nulls first, as
+    Spark's ``ASC NULLS FIRST``, then ``seq = 1..n`` in place of the
+    position column, which makes the order total."""
+    pdf = pdf.sort_values(_SEQ_ORDER, na_position="first")
+    return pdf.drop(columns=INPUT_POS).assign(seq=range(1, len(pdf) + 1))
 
 
 KERNEL_RESULT_FIELDS = [
@@ -327,7 +340,10 @@ def simulate(
 
     ``df`` needs ``user_id, seq, sim_arrival_time, processing_time`` plus the
     group columns.  Returns the enriched timeline (SIM_RESULT shape + status
-    and per-class enqueue totals).
+    and per-class enqueue totals).  A frame that carries ``__input_pos``
+    (:data:`INPUT_POS`, the row's position in its source) instead of ``seq``
+    gets ``seq`` numbered inside each group by :func:`_number_seq`, so no
+    window or shuffle is needed before the kernel's own exchange.
 
     ``shards``: when the grouping is fine (thousands of small independent
     runs), per-group ``applyInPandas`` overhead (Arrow batch + pandas
@@ -336,15 +352,21 @@ def simulate(
     the per-group simulations inside each batch — identical results (the
     per-group seed still derives from the GROUP key, so timelines and task
     retries are unaffected), ~order-of-magnitude less per-call overhead.
-    At 100 TB pick N ≈ a few × total cores.
+    At 100 TB pick N ≈ a few × total cores.  ``shards=1`` runs every group
+    in one task behind a single-partition exchange, whose partitioning a
+    downstream global aggregate or sort then reuses without a shuffle
+    (``run_pipeline``'s one run).
     """
     group_cols = group_cols or ["run_id"]
     in_schema = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
     out_schema = kernel_result_schema(group_cols, [in_schema[c] for c in group_cols])
     result_cols = [c for c, _ in KERNEL_RESULT_FIELDS]
+    numbered = INPUT_POS in in_schema
 
     def run_one(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         keys = tuple(k.item() if hasattr(k, "item") else k for k in keys)
+        if numbered:
+            pdf = _number_seq(pdf)
         rows = pdf.to_dict("records")
         # stable derived seed: identical on Spark task retry (quirk 3)
         seed_str = f"{params.seed}|" + "|".join(repr(k) for k in keys)

@@ -25,7 +25,7 @@ in-memory dimension — always broadcast.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from queue_system_simulator_spark.localframe import local_df
@@ -74,40 +74,52 @@ def release_pinned() -> None:
 
 PERCENTILES = (0.5, 0.75, 0.9, 0.99)
 
+# The report's aggregates are SQL text: one ``selectExpr`` parses a whole
+# frame JVM-side, where the Column API would pay several driver↔JVM round
+# trips for every function call (~1,100 of them for the fused report).
+#: a kernel row that was processed, not rejected (C1)
+_PROCESSED = f"finish_processing_time_by_worker != {REJECTED_SENTINEL!r}D"
+#: G2/G3 input: the queuing time of rows passing the C2 validity predicate,
+#: null outside it (ignored by the aggregates)
+_QUEUING_TIME = (
+    f"CASE WHEN {_PROCESSED} AND start_processing_time_by_worker >= 0"
+    " AND arrival_time_in_queue >= 0"
+    " AND start_processing_time_by_worker >= arrival_time_in_queue"
+    " THEN start_processing_time_by_worker - arrival_time_in_queue END"
+)
+_PERCENTILE_COLUMNS = [f"p{round(q * 100)}" for q in PERCENTILES]
 
-def _queuing_time_aggs() -> list[Column]:
+
+def _queuing_time_aggs() -> list[str]:
     """G1–G3 aggregates: ``processed``, ``rejected``, the mean and the exact
     percentile array ``pcts``.  The queuing-time aggregates apply the C2
     validity predicate to processed rows only; the counts do not (reference
     semantics, ``statistics.py:28-42,104-121``)."""
-    is_proc = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
-    start = F.col("start_processing_time_by_worker")
-    arr = F.col("arrival_time_in_queue")
-    valid = is_proc & (start >= 0) & (arr >= 0) & (start >= arr)
-    qt = F.when(valid, start - arr)  # null outside the valid set → ignored by aggs
+    pcts = ", ".join(f"{q!r}D" for q in PERCENTILES)
     return [
         # coalesce: empty input → 0 counts (reference returns 0, not null)
-        F.coalesce(F.sum(F.when(is_proc, 1).otherwise(0)), F.lit(0))
-        .cast("long")
-        .alias("processed"),
-        F.coalesce(F.sum(F.when(~is_proc, 1).otherwise(0)), F.lit(0))
-        .cast("long")
-        .alias("rejected"),
-        F.avg(qt).alias("avg_queuing_time"),
-        F.percentile(qt, list(PERCENTILES)).alias("pcts"),
+        f"CAST(coalesce(sum(CASE WHEN {_PROCESSED} THEN 1 ELSE 0 END), 0) AS BIGINT)"
+        " AS processed",
+        f"CAST(coalesce(sum(CASE WHEN NOT ({_PROCESSED}) THEN 1 ELSE 0 END), 0)"
+        " AS BIGINT) AS rejected",
+        f"avg({_QUEUING_TIME}) AS avg_queuing_time",
+        f"percentile({_QUEUING_TIME}, array({pcts})) AS pcts",
     ]
 
 
-def _queuing_time_columns(nan_on_empty: bool = True) -> list[Column]:
-    """The mean and p50–p99 out of :func:`_queuing_time_aggs`; NaN for an
-    empty valid set as the reference renders it (``statistics.py:64,118-121``)."""
-    cols = {"avg_queuing_time": F.col("avg_queuing_time")}
-    for i, q in enumerate(PERCENTILES):
-        cols[f"p{round(q * 100)}"] = F.col("pcts")[i]
-    nan = F.lit(float("nan"))
-    return [
-        (F.coalesce(c, nan) if nan_on_empty else c).alias(n) for n, c in cols.items()
+def _queuing_time_columns() -> list[str]:
+    """The mean and p50–p99 out of :func:`_queuing_time_aggs`."""
+    return ["avg_queuing_time"] + [
+        f"pcts[{i}] AS {name}" for i, name in enumerate(_PERCENTILE_COLUMNS)
     ]
+
+
+def _nan_on_empty(df: DataFrame) -> DataFrame:
+    """The mean and p50–p99 read NaN for an empty valid set, as the reference
+    renders it (``statistics.py:64,118-121``).  ``na.fill`` keeps the columns
+    non-nullable, which SQL text cannot: it has no NaN literal, and
+    ``CAST('NaN' AS DOUBLE)`` is nullable."""
+    return df.na.fill(float("nan"), ["avg_queuing_time", *_PERCENTILE_COLUMNS])
 
 
 def queuing_time_stats(
@@ -118,13 +130,18 @@ def queuing_time_stats(
     Input needs ``arrival_time_in_queue / start_processing_time_by_worker /
     finish_processing_time_by_worker``.
     """
-    grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
-    return grouped.agg(*_queuing_time_aggs()).select(
-        *(group_cols or []),
-        "processed",
-        "rejected",
-        *_queuing_time_columns(nan_on_empty),
+    group_cols = group_cols or []
+    out = (
+        df.groupBy(*group_cols)
+        .agg(*map(F.expr, _queuing_time_aggs()))
+        .selectExpr(
+            *(f"`{c}`" for c in group_cols),
+            "processed",
+            "rejected",
+            *_queuing_time_columns(),
+        )
     )
+    return _nan_on_empty(out) if nan_on_empty else out
 
 
 def api_usage_counts(
@@ -159,17 +176,14 @@ def api_usage_counts(
     )
 
 
-def _enqueue_aggs(threshold: float = 20.0) -> list[Column]:
+def _enqueue_aggs(threshold: float = 20.0) -> list[str]:
     """G5 aggregate columns (see :func:`enqueue_totals`)."""
-    admitted = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
-    prio = F.coalesce(F.col("processing_time") < threshold, F.lit(False))
+    prio = f"coalesce(processing_time < {float(threshold)!r}D, false)"
     return [
-        F.sum(F.when(admitted & prio, 1).otherwise(0))
-        .cast("long")
-        .alias("priority_queue_enqueued_total"),
-        F.sum(F.when(admitted & ~prio, 1).otherwise(0))
-        .cast("long")
-        .alias("normal_queue_enqueued_total"),
+        f"CAST(sum(CASE WHEN {_PROCESSED} AND {prio} THEN 1 ELSE 0 END) AS BIGINT)"
+        " AS priority_queue_enqueued_total",
+        f"CAST(sum(CASE WHEN {_PROCESSED} AND NOT {prio} THEN 1 ELSE 0 END)"
+        " AS BIGINT) AS normal_queue_enqueued_total",
     ]
 
 
@@ -184,7 +198,7 @@ def enqueue_totals(df: DataFrame, threshold: float = 20.0) -> DataFrame:
     reference's ``hasattr`` fallback (``queue_manager.py:137-155``) — a bare
     ``col < threshold`` would evaluate to NULL and count the row in *neither*
     bucket."""
-    return df.select(*_enqueue_aggs(threshold))
+    return df.selectExpr(*_enqueue_aggs(threshold))
 
 
 def simulation_statistics(
@@ -198,20 +212,20 @@ def simulation_statistics(
     per-API conditional counts zero-fill the API domain without a join.
     Long-format API counts: map-shaped output is hostile to SQL oracles
     (SURVEY §1.2)."""
-    is_proc = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
     keys = [f"api_{i}" for i in range(1, num_apis + 1)]
-    stats = df.agg(
-        F.count(F.lit(1)).alias("n_input"),
-        F.count(F.when(F.col("sim_arrival_time") < 0, 1)).alias("n_negative"),
-        *(F.count(F.when(is_proc & (F.col("used_api_id") == i), 1)).alias(k)
+    stats = df.selectExpr(
+        "count(1) AS n_input",
+        "count(CASE WHEN sim_arrival_time < 0 THEN 1 END) AS n_negative",
+        *(f"count(CASE WHEN {_PROCESSED} AND used_api_id = {i} THEN 1 END) AS {k}"
           for i, k in enumerate(keys, 1)),
         *_queuing_time_aggs(),
         *_enqueue_aggs(),
-    ).select(
+    ).selectExpr(
         "n_input", "n_negative", *keys, "processed", "rejected",
         *_queuing_time_columns(),
         "priority_queue_enqueued_total", "normal_queue_enqueued_total",
     )
+    stats = _nan_on_empty(stats)
     row, k = stats.first(), 2 + num_apis  # row[k:] is the scalar frame's row
     scalar = local_df(spark, [tuple(row[k:])], stats.schema[k:])
     api = local_df(

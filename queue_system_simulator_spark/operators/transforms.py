@@ -19,13 +19,9 @@ PRIORITY_BIAS = 0.8
 REJECTED_SENTINEL = -1.0
 
 
-def epoch_seconds(ts: Column | str) -> Column:
-    """Timestamp → fractional epoch seconds as DOUBLE.
-
-    ``unix_timestamp`` truncates sub-second precision; a double cast keeps the
-    microseconds (SURVEY §2 B1 note).
-    """
-    return F.col(ts).cast("double") if isinstance(ts, str) else ts.cast("double")
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def with_sim_arrival_time(
@@ -35,10 +31,15 @@ def with_sim_arrival_time(
 
     Reference: ``(request_time − SIMULATION_START_TIME).total_seconds()``
     (``/root/reference/main.py:13,51-65``).
+    Timestamps cast to DOUBLE keep their microseconds; ``unix_timestamp``
+    would truncate them (SURVEY §2 B1 note).
     """
     return df.withColumn(
         "sim_arrival_time",
-        epoch_seconds(F.col(ts_col)) - F.lit(epoch).cast("timestamp").cast("double"),
+        F.expr(
+            f"CAST(`{ts_col}` AS DOUBLE)"
+            f" - CAST(CAST({_sql_string(epoch)} AS TIMESTAMP) AS DOUBLE)"
+        ),
     )
 
 
@@ -96,9 +97,11 @@ def result_order(df: DataFrame) -> DataFrame:
     """D2: result ordering with sentinel-last — rejected rows (finish = −1)
     sort as +inf, ties broken by arrival time
     (``/root/reference/src/simulator.py:260-265``)."""
-    fin = F.col("finish_processing_time_by_worker")
-    sort_key = F.when(fin == REJECTED_SENTINEL, F.lit(float("inf"))).otherwise(fin)
-    return df.orderBy(sort_key, F.col("arrival_time_in_queue"))
+    sort_key = F.expr(
+        f"CASE WHEN finish_processing_time_by_worker = {REJECTED_SENTINEL!r}D"
+        " THEN CAST('Infinity' AS DOUBLE) ELSE finish_processing_time_by_worker END"
+    )
+    return df.orderBy(sort_key, "arrival_time_in_queue")
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:

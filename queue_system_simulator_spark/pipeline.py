@@ -6,6 +6,12 @@ DES kernel → one aggregate for the input counts (total, pre-epoch) and
 G1–G5 statistics → empty guard → sentinel-aware result ordering → console
 rendering (NaN→"N/A", api counts key-sorted).
 
+The scan feeds the kernel's one shuffle directly: each row carries its file
+position, and the kernel sorts its group by (arrival, user, position) and
+numbers ``seq`` itself, so no window and no second exchange run before it.
+The report aggregate is built from SQL text, one parse JVM-side, rather than
+from per-call Column-API round trips.
+
 A reference user switches by calling ``run_pipeline(spark, csv_path)`` —
 same semantics, but every stage before/after the kernel is a distributed
 DataFrame op, and the kernel itself shards across independent runs when
@@ -27,10 +33,9 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from queue_system_simulator_spark.operators.kernel import SimParams, simulate
+from queue_system_simulator_spark.operators.kernel import INPUT_POS, SimParams, simulate
 from queue_system_simulator_spark.operators.statistics import (
     NUM_EXTERNAL_APIS,
     simulation_statistics,
@@ -83,40 +88,41 @@ def run_pipeline(
     ``run_col`` names a column that partitions the input into independent
     simulations (scenario sweep); None = one global run like the CLI.
     """
-    df = read_requests_csv(spark, csv_path)
+    df = with_sim_arrival_time(read_requests_csv(spark, csv_path), epoch)
+    group_cols = [run_col] if run_col else ["__run"]
     # Capture file position at scan time: the reference preserves CSV input
     # order via a *stable* arrival sort (/root/reference/src/simulator.py:41),
     # so duplicate (arrival, user) rows need a deterministic tiebreaker or
     # ``seq`` — and with it the simulated timeline — changes across runs and
     # task retries.  monotonically_increasing_id() over a deterministic scan
-    # split encodes (partition, offset) and is stable for a given file.
-    df = df.withColumn("__input_pos", F.monotonically_increasing_id())
-    df = with_sim_arrival_time(df, epoch)
-    group_cols = [run_col] if run_col else ["__run"]
-    if not run_col:
-        df = df.withColumn("__run", F.lit(0))
-    df = df.withColumn(
-        "seq",
-        F.row_number().over(
-            Window.partitionBy(*group_cols).orderBy(
-                "sim_arrival_time", "user_id", "__input_pos"
-            )
-        ),
-    )
+    # split encodes (partition, offset) and is stable for a given file.  The
+    # kernel numbers ``seq`` from it inside each group, so the scan feeds the
+    # kernel's one exchange directly.
+    # dict.fromkeys: run_col="user_id" must reach the kernel once, not twice
+    kernel_cols = dict.fromkeys([
+        run_col or "0 AS __run",
+        "user_id",
+        f"monotonically_increasing_id() AS {INPUT_POS}",
+        "sim_arrival_time",
+        "processing_time",
+    ])
     params = SimParams(
         num_workers=num_workers, queue_mode=queue_mode, queue_max_size=queue_size,
         seed=seed,
     )
-    # dict.fromkeys: run_col="user_id" must reach the kernel once, not twice
-    kernel_cols = dict.fromkeys(
-        [*group_cols, "user_id", "seq", "sim_arrival_time", "processing_time"]
+    # One run is one group, simulated in one task whatever the exchange's
+    # width: shards=1 makes that exchange a single partition, which the
+    # report's aggregate and the timeline's sort then read without a
+    # shuffle of their own.
+    timeline = simulate(
+        df.selectExpr(*kernel_cols), params, group_cols=group_cols,
+        shards=None if run_col else 1,
     )
-    timeline = simulate(df.select(*kernel_cols), params, group_cols=group_cols)
     if not run_col:
         timeline = timeline.drop("__run")
-    # Three readers share this one kernel execution: the report's aggregate,
-    # the sort's range sample and the sorted timeline; without the pin each
-    # of them would re-run the whole simulation.  The cache matches plans,
+    # Every reader shares this one kernel execution: the report's aggregate,
+    # the sorted timeline and, for a run_col sweep, the sort's range sample;
+    # without the pin each of them would re-run the whole simulation.  The cache matches plans,
     # not file contents, so a pin still held from an earlier call on this
     # path would serve a since-rewritten CSV: refresh such pins first.
     spark.catalog.refreshByPath(csv_path)

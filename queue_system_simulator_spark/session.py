@@ -16,7 +16,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+#: local-mode cores and shuffle partitions: ``SPARK_GRAFT_CPUS``, else this
+#: machine's core count
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 
 def get_spark(

@@ -116,10 +116,10 @@ def read_requests_csv(
         df = reader.schema(
             T.StructType([T.StructField(c, T.StringType()) for c in names])
         ).csv(path)
-        df = df.select(
-            F.col("user_id").cast("string"),
-            F.to_timestamp("request_time").alias("request_time"),
-            F.col("processing_time").cast("double"),
+        df = df.selectExpr(
+            "CAST(user_id AS STRING) AS user_id",
+            "to_timestamp(request_time) AS request_time",
+            "CAST(processing_time AS DOUBLE) AS processing_time",
         )
     else:
         df = reader.schema(schema).csv(path)

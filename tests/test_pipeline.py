@@ -8,8 +8,10 @@ round(U(1, 10), 1) s; written once by ``numpy.random.default_rng(2023)``
 in ``perfbench/datagen.write_requests_csv``'s order of draws), and asserts
 the same externally-observable outcomes the reference's e2e test pins
 (all 25 complete, none rejected; ``/root/reference/tests/test_simulator.py:136-213``),
-plus renderer, empty-input and pin-lifecycle behavior, and that the
-one-action report equals the separate statistics operators.
+plus renderer, empty-input and pin-lifecycle behavior, that the
+one-action report equals the separate statistics operators, the order the
+kernel numbers tied rows in, the kernel input's plan shape (one exchange,
+no window) and the driver↔JVM round-trip budget of a warm run.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import math
 import os
 import subprocess
 import sys
+import threading
 from pathlib import Path
 
 import pytest
@@ -158,18 +161,119 @@ def test_duplicate_arrival_rows_get_stable_seq(spark, tmp_path):
     assert timelines[0][0][1] == 3.0
 
 
+def _write_ties(tmp_path) -> str:
+    """Six requests at one instant, users out of order, a repeated
+    ``(time, user)`` pair per user and an empty ``user_id`` (read as null),
+    then one earlier request last in the file."""
+    p = tmp_path / "ties.csv"
+    p.write_text(
+        "user_id,request_time,processing_time\n"
+        "user_c,2023-01-01T00:00:05Z,1.0\n"
+        "user_a,2023-01-01T00:00:05Z,2.0\n"
+        ",2023-01-01T00:00:05Z,3.0\n"
+        "user_b,2023-01-01T00:00:05Z,4.0\n"
+        "user_a,2023-01-01T00:00:05Z,5.0\n"
+        "user_c,2023-01-01T00:00:05Z,6.0\n"
+        "user_z,2023-01-01T00:00:01Z,7.0\n"
+    )
+    return str(p)
+
+
+@pytest.mark.parametrize(
+    "run_col, expected",
+    [
+        # one run: arrival time, then user_id with the null first, then
+        # file position
+        (None, [(1, "user_z", 7.0), (2, None, 3.0), (3, "user_a", 2.0),
+                (4, "user_a", 5.0), (5, "user_b", 4.0), (6, "user_c", 1.0),
+                (7, "user_c", 6.0)]),
+        # one run per user: each numbered from 1 in file order
+        ("user_id", [(1, None, 3.0), (1, "user_a", 2.0), (2, "user_a", 5.0),
+                     (1, "user_b", 4.0), (1, "user_c", 1.0), (2, "user_c", 6.0),
+                     (1, "user_z", 7.0)]),
+    ],
+    ids=["one_run", "run_col_user_id"],
+)
+def test_seq_ties_follow_arrival_user_then_file_order(
+    spark, tmp_path, run_col, expected
+):
+    res = run_pipeline(spark, _write_ties(tmp_path), run_col=run_col)
+    got = [(r.seq, r.user_id, r.processing_time) for r in res.timeline.collect()]
+    got.sort(key=lambda t: (t[1] is not None, t[1] or "", t[0]) if run_col else t[0])
+    assert got == expected
+    res.release()
+
+
+def _plan_nodes(jplan):
+    """Every node of a JVM query plan, inner plans included: an adaptive
+    plan's current plan, a query stage's plan, the cached plan under an
+    in-memory scan."""
+    stack = [jplan]
+    while stack:
+        node = stack.pop()
+        yield node
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        elif name == "InMemoryTableScan":
+            stack.append(node.relation().cachedPlan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def _exchanges_below_kernel(jplan) -> list[int]:
+    """The number of Exchange nodes under each FlatMapGroupsInPandas."""
+    return [
+        sum(n.nodeName() == "Exchange" for n in _plan_nodes(k))
+        for k in _plan_nodes(jplan)
+        if k.nodeName() == "FlatMapGroupsInPandas"
+    ]
+
+
+@pytest.mark.parametrize("run_col", [None, "user_id"])
+def test_kernel_input_is_one_exchange_and_no_window(spark, run_col):
+    res = run_pipeline(spark, SAMPLE_CSV, run_col=run_col)
+    res.timeline.collect()  # the adaptive plan is final once executed
+    qe = res.timeline._jdf.queryExecution()
+    for plan in (qe.analyzed(), qe.executedPlan()):
+        assert not [n for n in _plan_nodes(plan) if n.nodeName() == "Window"]
+    assert _exchanges_below_kernel(qe.executedPlan()) == [1]
+    res.release()
+
+
+def test_warm_run_stays_within_round_trip_budget(spark, monkeypatch):
+    """Each PySpark Column/functions call costs several driver↔JVM round
+    trips; the report's plan is SQL text so a run makes few of them."""
+    from py4j.clientserver import ClientServerConnection
+
+    run_pipeline(spark, SAMPLE_CSV).release()  # warm: shipping, schemas
+    me = threading.get_ident()
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    res = run_pipeline(spark, SAMPLE_CSV)
+    render_report(res)
+    monkeypatch.undo()
+    res.release()
+    assert 0 < len(calls) < 500, len(calls)
+
+
 def _kernel_data_columns(df) -> list[str]:
     """Columns the DES kernel receives as pandas data: the input of the
     FlatMapGroupsInPandas node minus its leading grouping attributes."""
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
+    for node in _plan_nodes(df._jdf.queryExecution().analyzed()):
         if node.nodeName() == "FlatMapGroupsInPandas":
             out = node.child().output()
             n_keys = node.groupingAttributes().size()
             return [out.apply(i).name() for i in range(n_keys, out.size())]
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
     raise AssertionError("no FlatMapGroupsInPandas in the plan")
 
 
