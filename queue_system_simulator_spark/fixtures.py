@@ -52,6 +52,21 @@ def sweep_stale(root: Path, prefix: str = "", ttl_s: int = STALE_TTL_S) -> None:
             pass
 
 
+def file_stats(src: Path) -> tuple[tuple[str, int, int], ...]:
+    """The sorted ``(file name, mtime_ns, size)`` of every file under
+    ``src`` (or of ``src`` itself when it is a file): the identity of one
+    version of a table, which a rewrite at the same path changes."""
+    files = src.rglob("*") if src.is_dir() else [src]
+    return tuple(
+        sorted(
+            (p.name, st.st_mtime_ns, st.st_size)
+            for p in files
+            if p.is_file()
+            for st in [p.stat()]
+        )
+    )
+
+
 def fixture_root(src: str | Path) -> Path:
     """The directory holding every fixture derived from ``src``.  The
     hash of the resolved path keeps two sources that share a directory
@@ -116,14 +131,7 @@ def build_once(
     never mistaken for a complete one.  No ``name`` may be a
     prefix of another's ``<name>_``: the sweep matches on it."""
     src = Path(src).resolve()
-    files = src.rglob("*") if src.is_dir() else [src]
-    stats = sorted(
-        (p.name, st.st_mtime_ns, st.st_size)
-        for p in files
-        if p.is_file()
-        for st in [p.stat()]
-    )
-    key = hashlib.md5(repr((name, params, str(src), stats)).encode())
+    key = hashlib.md5(repr((name, params, str(src), file_stats(src))).encode())
     out = fixture_root(src) / f"{name}_{key.hexdigest()[:12]}"
     stamp = out / _STAMP
     if stamp.exists():

@@ -395,10 +395,14 @@ def simulate(
     )
 
     def run_shard(_keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        # dropna=False: a null key is a group, as in Spark's groupBy.
+        # pandas names that group nan, so the key passed on is the
+        # group's first row, as applyInPandas builds it: the seed string
+        # and the emitted key then match the unsharded path.
         pdf = pdf.drop(columns=[shard_col])
         outs = [
-            run_one(gk if isinstance(gk, tuple) else (gk,), gpdf)
-            for gk, gpdf in pdf.groupby(group_cols, sort=True)
+            run_one(tuple(gpdf[c].iloc[0] for c in group_cols), gpdf)
+            for _, gpdf in pdf.groupby(group_cols, sort=True, dropna=False)
         ]
         return pd.concat(outs, ignore_index=True)
 

@@ -154,8 +154,9 @@ def api_usage_counts(
 
     Reference: init ``api_1..api_N → 0``, count over *processed* rows,
     skip null, warn+skip out-of-range (``statistics.py:126-141``).  Engine:
-    count → right-outer join onto ``spark.range(1, N+1)`` (broadcast — the
-    dimension is tiny), ``coalesce(count, 0)``.
+    count → left-outer join of ``spark.range(1, N+1)`` onto it (the
+    counts, at most N rows, are broadcast: the right side is the one a
+    left outer join can build), ``coalesce(count, 0)``.
     """
     counts = (
         df.filter(F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL)
@@ -166,8 +167,7 @@ def api_usage_counts(
     )
     dim = spark.range(1, num_apis + 1).select(F.col("id").cast("int").alias("api_id"))
     return (
-        F.broadcast(dim)
-        .join(counts, "api_id", "left")
+        dim.join(F.broadcast(counts), "api_id", "left")
         .select(
             "api_id",
             F.concat(F.lit("api_"), F.col("api_id")).alias("api_key"),

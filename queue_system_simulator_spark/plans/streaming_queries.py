@@ -653,17 +653,18 @@ SELECT user_id, tus AS last_tus, event_id AS last_event_id,
        event_type AS last_event_type, value_centi AS last_value_centi
 FROM r WHERE rn = 1
 """,
-    description="foreachBatch MERGE into a versioned lake table — the "
+    description="foreachBatch MERGE into a merge-on-read lake table — the "
     "canonical streaming-upsert-to-lakehouse sink (Delta/Iceberg MERGE "
     "inside foreachBatch), against plain parquet here: the events stream "
     "drains in FOUR real microbatches (multi-file source, "
-    "maxFilesPerTrigger=1), each batch copy-on-write-merges its per-user "
-    "latest into a new table version, and the final snapshot must equal "
-    "the batch latest-per-user oracle — provable because the merge is an "
-    "argmax fold over a total order (associative + commutative), so batch "
-    "boundaries cannot change the result. Complements "
-    "streaming_compacted_latest: same semantics, the SINK-side mechanism "
-    "(driver-coordinated versioned commits + distributed per-batch merge) "
+    "maxFilesPerTrigger=1), each batch commits only its per-user latest "
+    "as one delta, the reader folds the committed deltas, and the final "
+    "snapshot must equal the batch latest-per-user oracle — provable "
+    "because the merge is an argmax fold over a total order (associative "
+    "+ commutative), so batch boundaries cannot change the result. "
+    "Complements streaming_compacted_latest: same semantics, the "
+    "SINK-side mechanism (driver-coordinated delta commits + distributed "
+    "per-batch latest and read-side fold) "
     "instead of operator state.",
 )
 def q_streaming_foreachbatch_merge(

@@ -13,9 +13,15 @@ reference's request log (``ts -> request_time``, ``value -> processing_time``,
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from queue_system_simulator_spark.fixtures import file_stats
 
 #: Simulation epoch: the reference derives relative arrival seconds against a
 #: fixed epoch 2023-01-01T00:00:00Z (``/root/reference/main.py:13``).  The
@@ -94,6 +100,51 @@ def tune_foreign_session(spark: SparkSession) -> None:
         pass
 
 
+#: session confs whose values change the schema Spark infers from a
+#: parquet footer (the same file can surface ``ts`` as bigint, timestamp,
+#: or timestamp_ntz, and a binary column as binary or string)
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+#: bound on the memo: each entry is one small StructType
+_SCHEMA_MEMO_SIZE = 128
+_schemas: OrderedDict[tuple, T.StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def parquet_schema(spark: SparkSession, path: str | Path) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    table version.
+
+    Inference runs a Spark job over the footers on every read; passing the
+    result to ``.schema(...)`` skips it.  The memo key is the resolved
+    path, the ``(file name, mtime_ns, size)`` of every file under it
+    (``fixtures.file_stats``: a table rewritten in place is a new key) and
+    the session's values of :data:`_INFERENCE_CONFS`, so sessions that
+    infer differently never share an entry.  Least recently used entries
+    past :data:`_SCHEMA_MEMO_SIZE` are dropped."""
+    resolved = Path(path).resolve()
+    key = (
+        str(resolved),
+        file_stats(resolved),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    with _schemas_lock:
+        if key in _schemas:
+            _schemas.move_to_end(key)
+            return _schemas[key]
+    schema = spark.read.parquet(str(resolved)).schema
+    with _schemas_lock:
+        _schemas[key] = schema
+        while len(_schemas) > _SCHEMA_MEMO_SIZE:
+            _schemas.popitem(last=False)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver parquet table.
 
@@ -105,6 +156,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     timestamp (`ts div 1000`, integer division: ns epoch values exceed
     2^53 so float division would corrupt them).  Lossless for this data
     (ns remainder is always 0) and identical to DuckDB's ns→µs cast.
+
+    The scan is given its schema (:func:`parquet_schema`), so only the
+    first load of a table version pays the footer-inference job.
     """
     # The conf must be set on *this* session, not just the package's own
     # builder (session.py): callers such as the driver harness construct
@@ -118,7 +172,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from queue_system_simulator_spark.shipping import ensure_shipped
 
     ensure_shipped(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         # Normalize ts to TIMESTAMP (session-tz) whatever the parquet file
         # stored: INT64 TIMESTAMP(NANOS) surfaces as bigint under

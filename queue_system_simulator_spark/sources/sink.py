@@ -74,8 +74,9 @@ def write_versioned_snapshots(
     RETENTION: every commit writes a new full snapshot ``v1..vN`` and no
     version is ever garbage-collected, so any historical version stays
     time-travel readable (:func:`read_version`) — the property
-    ``run_foreachbatch_merge`` deliberately trades away (it keeps only
-    the latest version, vacuum-style).
+    ``run_foreachbatch_merge`` deliberately trades away (its versions are
+    per-batch deltas, readable only as their fold, never as a snapshot
+    as of one batch).
 
     Commit boundaries are event-time quantiles of the input (version k
     covers ``tus < tmin + span*k/N`` in integer microseconds), so the

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from queue_system_simulator_spark.fixtures import build_once, sweep_stale
 from queue_system_simulator_spark.localframe import local_df
-from queue_system_simulator_spark.schema import load_table
+from queue_system_simulator_spark.schema import load_table, parquet_schema
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -71,7 +71,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # winner's link if it points where ours would have
         if not (link.is_symlink() and link.resolve() == target):
             raise
-    raw_schema = spark.read.parquet(path).schema  # pre-conversion (ts may be ns-long)
+    raw_schema = parquet_schema(spark, path)  # pre-conversion (ts may be ns-long)
     stream = spark.readStream.schema(raw_schema).format("parquet").load(str(link_dir))
     ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":
@@ -672,7 +672,7 @@ def stream_events_multibatch(
     src = build_once(
         f"split_multibatch_n{n_files}", Path(sf_dir) / "events.parquet", (), build
     )
-    schema = spark.read.parquet(str(src)).schema
+    schema = parquet_schema(spark, src)
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -687,19 +687,25 @@ def run_foreachbatch_merge(keyed: DataFrame) -> DataFrame:
     streaming-upsert-into-lakehouse pattern (Delta/Iceberg MERGE inside
     foreachBatch), expressed against plain parquet.
 
-    Each batch writes a NEW table version v{k} (read v{k-1} → union the
-    batch's per-user latest → re-take latest → write v{k}): copy-on-write
-    versioning, so a crashed batch never corrupts the readable version —
-    the same atomicity contract a table format's commit protocol gives.
-    The fold is associative and commutative (argmax over a total order),
-    so the final snapshot is independent of batch boundaries; callers
-    grade it against the batch latest-per-user oracle.  ``foreachBatch``
-    runs on the driver; the per-batch work it launches (window + write) is
-    fully distributed, and table-format MERGE would replace the
-    read-union-rewrite with a keyed merge at scale.
+    Merge-on-read: batch k writes only its own per-user latest as delta
+    ``v{k}``, with no read of earlier deltas, no union and no rewrite, and
+    the reader takes the per-user latest over ``v1..v{n}``.  The fold is
+    an argmax over a total order: associative and commutative, so the
+    snapshot is independent of batch boundaries and of where the fold
+    runs, and idempotent, so a replayed batch's second delta changes
+    nothing.  Callers grade it against the batch latest-per-user oracle.
+    Each batch costs its own rows, not the size of the table so far.
+
+    Commit-then-advance: the committed count moves only after ``v{k}`` is
+    fully written, and the reader names ``v1..v{n}`` explicitly, so a
+    partial ``v{n+1}`` left by a failed batch is never read (partial
+    parquet dirs are readable without ``_SUCCESS``) — the atomicity a
+    table format's commit log gives.  ``foreachBatch`` runs on the
+    driver; the per-batch work it launches (window + write) is fully
+    distributed, and a table format would compact the deltas at scale.
 
     Expects columns ``user_id, tus, event_id, ...`` and returns the final
-    snapshot DataFrame (lazy, reading the last version)."""
+    snapshot DataFrame (lazy, reading the committed deltas)."""
     from pyspark.sql import Window
 
     spark = keyed.sparkSession
@@ -720,29 +726,9 @@ def run_foreachbatch_merge(keyed: DataFrame) -> DataFrame:
         )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        s = batch_df.sparkSession
-        cur = latest(batch_df)
-        if state["v"] > 0:
-            prev = s.read.schema(batch_df.schema).parquet(
-                str(base / f"v{state['v']}")
-            )
-            cur = latest(prev.unionByName(cur))
-        # Commit-then-advance: write the new version BEFORE bumping
-        # state['v'].  If the write throws and Structured Streaming
-        # retries the batch, state['v'] still names the last fully
-        # written version, so the retry merges from a clean base rather
-        # than a partially-written v{k+1} (partial parquet dirs are
-        # readable without _SUCCESS).  Then GC the superseded version
-        # only AFTER the advance — the commit-then-expire order a table
-        # format's vacuum follows, so a crash mid-batch always leaves a
-        # readable version.
         nxt = state["v"] + 1
-        cur.write.mode("overwrite").parquet(str(base / f"v{nxt}"))
+        latest(batch_df).write.mode("overwrite").parquet(str(base / f"v{nxt}"))
         state["v"] = nxt
-        if nxt > 1:
-            shutil.rmtree(base / f"v{nxt - 1}", ignore_errors=True)
 
     q = (
         keyed.writeStream.foreachBatch(merge)
@@ -753,7 +739,8 @@ def run_foreachbatch_merge(keyed: DataFrame) -> DataFrame:
     q.awaitTermination()
     if state["v"] == 0:  # empty source: no batch ever fired
         return local_df(spark, [], keyed.schema)
-    return spark.read.schema(keyed.schema).parquet(str(base / f"v{state['v']}"))
+    deltas = [str(base / f"v{k}") for k in range(1, state["v"] + 1)]
+    return latest(spark.read.schema(keyed.schema).parquet(*deltas))
 
 
 def stream_events_timesliced(
@@ -822,7 +809,7 @@ def stream_events_timesliced(
     src = build_once(
         f"split_timesliced_n{n_slices}", Path(sf_dir) / "events.parquet", (), build
     )
-    schema = spark.read.parquet(str(src / "slice-01.parquet")).schema
+    schema = parquet_schema(spark, src / "slice-01.parquet")
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -311,3 +311,31 @@ def test_priority_bias_dequeue_frequency():
         item = strat.dequeue()
         prio_hits += item["processing_time"] == 1.0
     assert abs(prio_hits / n - 0.8) < 0.02
+
+
+def test_sharded_run_keeps_the_null_group(spark):
+    """``shards=N`` simulates a null group key as Spark's groupBy does:
+    same rows, same per-group seed (priority dequeues draw from it), and
+    a null key in the output."""
+    from queue_system_simulator_spark.operators.kernel import simulate
+
+    rows = [
+        (user, seq, float(seq // 3), 5.0 + 10.0 * (seq % 4))
+        for user in ("a", None, "b")
+        for seq in range(12)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "user_id string, seq long, sim_arrival_time double, processing_time double",
+    )
+    params = SimParams(
+        num_workers=1, queue_mode="priority", priority_bias=0.5, rpm_limit=5
+    )
+
+    def run(shards):
+        out = simulate(df, params, group_cols=["user_id"], shards=shards).collect()
+        return sorted((tuple(r) for r in out), key=repr)
+
+    plain = run(None)
+    assert sum(r[0] is None for r in plain) == 12
+    assert run(4) == plain

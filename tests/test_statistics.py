@@ -114,6 +114,29 @@ def test_api_usage_all_zero(spark):
     assert {r["api_key"]: r["usage_count"] for r in out} == {"api_1": 0, "api_2": 0}
 
 
+def test_api_usage_broadcast_hint_is_honoured(spark):
+    """The counts are broadcast, the side a left outer join can build: the
+    hint is not dropped (Spark logs ``build left for left outer join``
+    when it is) and the schema and rows stay as they were."""
+    rows = [sim_row(api=1), sim_row(api=1), sim_row(api=2)]
+    out = api_usage_counts(make_df(spark, rows), spark, num_apis=3)
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema] == [
+        ("api_id", "int", False),
+        ("api_key", "string", False),
+        ("usage_count", "bigint", False),
+    ]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "api_1", 2),
+        (2, "api_2", 1),
+        (3, "api_3", 0),
+    ]
+    qe = out._jdf.queryExecution()
+    (join,) = [ln for ln in qe.optimizedPlan().toString().splitlines() if "Join " in ln]
+    assert "LeftOuter" in join and "rightHint=(strategy=broadcast)" in join
+    assert "leftHint" not in join
+    assert "LeftOuter, BuildRight" in qe.executedPlan().toString()
+
+
 def test_enqueue_totals(spark):
     rows = [
         sim_row(proc=5.0),

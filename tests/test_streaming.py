@@ -2,6 +2,14 @@
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import uuid
+from pathlib import Path
+from types import SimpleNamespace
+from urllib.parse import urlparse
+
+import pytest
 from pyspark.sql import functions as F
 
 from queue_system_simulator_spark.schema import load_table
@@ -478,14 +486,36 @@ def test_streaming_compaction_matches_batch_latest(spark, sf_dir):
     assert got == want
 
 
+def _merge_keyed(stream):
+    """The keyed projection ``streaming_foreachbatch_merge`` folds."""
+    return stream.select(
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("tus"),
+        "event_id",
+        "event_type",
+        F.round(F.col("value") * 100).cast("long").alias("value_centi"),
+    )
+
+
+def _batch_latest(spark, sf_dir):
+    """user_id -> (tus, event_id) of the user's latest event, in batch."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(F.desc("tus"), F.desc("event_id"))
+    return {
+        r["user_id"]: (r["tus"], r["event_id"])
+        for r in load_table(spark, sf_dir, "events")
+        .select("user_id", F.unix_micros("ts").alias("tus"), "event_id")
+        .withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .collect()
+    }
+
+
 def test_foreachbatch_merge_is_batching_independent(spark, sf_dir):
     """The foreachBatch MERGE fold must equal the batch latest-per-user
     result, and the multi-file source must actually produce multiple
     microbatches (otherwise the fold is never exercised)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from queue_system_simulator_spark.schema import load_table
     from queue_system_simulator_spark.streaming.stream import (
         run_foreachbatch_merge,
         stream_events_multibatch,
@@ -498,33 +528,83 @@ def test_foreachbatch_merge_is_batching_independent(spark, sf_dir):
     ).trigger(availableNow=True).start().awaitTermination()
     assert len(batches) == 4 and all(n > 0 for n in batches)
 
-    keyed = stream.select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("tus"),
-        "event_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("value_centi"),
-    )
     snap = {
         r["user_id"]: (r["tus"], r["event_id"])
-        for r in run_foreachbatch_merge(keyed).collect()
+        for r in run_foreachbatch_merge(_merge_keyed(stream)).collect()
     }
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("tus"), F.desc("event_id")
+    assert snap == _batch_latest(spark, sf_dir)
+
+
+@pytest.mark.parametrize("n_files", [1, 2, 4])
+def test_foreachbatch_merge_reads_one_delta_per_batch(spark, sf_dir, n_files):
+    """Batch k commits only its own per-user latest as delta v{k}; the
+    snapshot folds every committed delta to the batch latest-per-user."""
+    from queue_system_simulator_spark.streaming.stream import (
+        run_foreachbatch_merge,
+        stream_events_multibatch,
     )
-    expect = {
-        r["user_id"]: (r["tus"], r["event_id"])
-        for r in load_table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.unix_micros("ts").alias("tus"),
-            "event_id",
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .collect()
-    }
-    assert snap == expect
+
+    snap = run_foreachbatch_merge(
+        _merge_keyed(stream_events_multibatch(spark, sf_dir, n_files=n_files))
+    )
+    got = {r["user_id"]: (r["tus"], r["event_id"]) for r in snap.collect()}
+    assert got == _batch_latest(spark, sf_dir)
+    deltas = {Path(urlparse(f).path).parent for f in snap.inputFiles()}
+    assert sorted(d.name for d in deltas) == [f"v{k}" for k in range(1, n_files + 1)]
+    for d in deltas:
+        users = [r[0] for r in spark.read.parquet(str(d)).select("user_id").collect()]
+        assert users and len(users) == len(set(users)), d.name
+
+
+@pytest.mark.parametrize("source", ["no_files", "empty_batches"])
+def test_foreachbatch_merge_of_an_empty_source(spark, sf_dir, tmp_path, source):
+    from queue_system_simulator_spark.streaming.stream import (
+        run_foreachbatch_merge,
+        stream_events_multibatch,
+    )
+
+    stream = stream_events_multibatch(spark, sf_dir, n_files=2)
+    if source == "no_files":
+        (tmp_path / "src").mkdir()
+        stream = spark.readStream.schema(stream.schema).parquet(str(tmp_path / "src"))
+    keyed = _merge_keyed(stream)
+    if source == "empty_batches":
+        keyed = keyed.filter(F.col("event_id") < 0)
+    snap = run_foreachbatch_merge(keyed)
+    assert [(f.name, f.dataType) for f in snap.schema] == [
+        (f.name, f.dataType) for f in keyed.schema
+    ]
+    assert snap.collect() == []
+
+
+def test_foreachbatch_merge_never_reads_past_the_committed_deltas(
+    spark, sf_dir, monkeypatch
+):
+    """A stray v{n+1} beside the n committed deltas, as a batch that
+    failed mid-write leaves it, holds a row that outranks every user's
+    latest; the snapshot must not see it."""
+    import queue_system_simulator_spark.streaming.stream as stream_mod
+
+    tag = uuid.uuid4().hex
+    monkeypatch.setattr(
+        stream_mod, "uuid", SimpleNamespace(uuid4=lambda: SimpleNamespace(hex=tag))
+    )
+    base = Path(tempfile.gettempdir()) / "qss_spark_fb_merge" / f"m_{tag[:12]}"
+    keyed = _merge_keyed(stream_mod.stream_events_multibatch(spark, sf_dir, n_files=4))
+    want = _batch_latest(spark, sf_dir)
+    user = next(iter(want))
+    spark.createDataFrame(
+        [(user, 2**62, 2**62, "stray", 0)],
+        "user_id bigint, tus bigint, event_id bigint, event_type string, "
+        "value_centi bigint",
+    ).write.parquet(str(base / "v5"))
+    (base / "v5" / "_SUCCESS").unlink()
+    try:
+        snap = stream_mod.run_foreachbatch_merge(keyed)
+        got = {r["user_id"]: (r["tus"], r["event_id"]) for r in snap.collect()}
+        assert got == want
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def test_streaming_rate_anomalies_prequential(spark, sf_dir):
