@@ -3,10 +3,10 @@ ordered, stateful Pandas UDF.
 
 One simulation run (queue + k servers + sliding-window rate limiter) is a
 single coupled feedback system and inherently sequential — so the engine
-runs it as plain Python *inside* ``groupBy(run cols).applyInPandas``:
-parallelism comes from many independent groups (scenario sweeps, tenants),
-which is exactly the 100 TB posture (SURVEY §4).  Each group's event list
-must fit one task; the per-group state is O(k + N·RPM).
+runs it as plain Python *inside* ``applyInPandas`` over hash shards of the
+run columns: parallelism comes from many independent groups (scenario
+sweeps, tenants), which is exactly the 100 TB posture (SURVEY §4).  Each
+group's event list must fit one task; the per-group state is O(k + N·RPM).
 
 Clean-room reimplementation of the reference semantics:
 
@@ -335,6 +335,7 @@ def simulate(
     params: SimParams,
     group_cols: list[str] | None = None,
     shards: int | None = None,
+    param_cols: dict[str, str] | None = None,
 ) -> DataFrame:
     """Distributed DES: one independent simulation per distinct group.
 
@@ -345,66 +346,66 @@ def simulate(
     gets ``seq`` numbered inside each group by :func:`_number_seq`, so no
     window or shuffle is needed before the kernel's own exchange.
 
-    ``shards``: when the grouping is fine (thousands of small independent
-    runs), per-group ``applyInPandas`` overhead (Arrow batch + pandas
-    construction per group) dominates the actual DES work.  Setting
-    ``shards=N`` hash-buckets groups into N coarse Arrow batches and runs
-    the per-group simulations inside each batch — identical results (the
-    per-group seed still derives from the GROUP key, so timelines and task
-    retries are unaffected), ~order-of-magnitude less per-call overhead.
-    At 100 TB pick N ≈ a few × total cores.  ``shards=1`` runs every group
-    in one task behind a single-partition exchange, whose partitioning a
+    The groups are hash-bucketed into ``shards`` coarse Arrow batches, and
+    one pandas call per shard simulates its groups one after another: a
+    pandas call per group would pay an Arrow batch and a frame per group,
+    which outweighs the DES work of thousands of small runs.  The default
+    is ``2 × defaultParallelism``, the slot rule of
+    ``transforms.spread(factor=2)``.  ``shards=1`` runs every group in one
+    task behind a single-partition exchange, whose partitioning a
     downstream global aggregate or sort then reuses without a shuffle
-    (``run_pipeline``'s one run).
+    (``run_pipeline``'s one run).  The shard count never changes a result:
+    each group gets the key, and so the seed, that a per-group
+    ``groupBy(group_cols).applyInPandas`` would hand it, a null key
+    included, and task retries replay the same timelines.
+
+    ``param_cols`` maps a SimParams field to the column holding the group's
+    value for it (constant within the group), e.g. ``{"num_workers": "k",
+    "rpm_limit": "rpm"}``; the other fields come from ``params``.  A
+    parameter sweep is then just more groups: a million-cell sweep is a
+    million groups in one job.
     """
     group_cols = group_cols or ["run_id"]
-    in_schema = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
+    param_cols = param_cols or {}
+    if shards is None:
+        shards = max(int(df.sparkSession.sparkContext.defaultParallelism) * 2, 1)
+    in_schema = {f.name: f.dataType for f in df.schema.fields}
     out_schema = kernel_result_schema(group_cols, [in_schema[c] for c in group_cols])
     result_cols = [c for c, _ in KERNEL_RESULT_FIELDS]
     numbered = INPUT_POS in in_schema
+    integral = {c for c, t in in_schema.items() if isinstance(t, T.IntegralType)}
 
-    def run_one(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = tuple(k.item() if hasattr(k, "item") else k for k in keys)
+    def value(col: str, v: Any) -> Any:
+        """``v`` as a per-group ``applyInPandas`` hands it over.  Arrow
+        gives pandas a shard's integral column as float64 when any row in
+        the shard is null, so a key 1 would read 1.0 and change the seed:
+        a non-null integral value is an ``int`` again.  A null stays as
+        Arrow hands it: nan for an integral column, None for a string."""
+        v = v.item() if hasattr(v, "item") else v
+        return int(v) if col in integral and v == v else v
+
+    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        keys = tuple(value(c, pdf[c].iloc[0]) for c in group_cols)
+        run_params = replace(
+            params, **{f: value(c, pdf[c].iloc[0]) for f, c in param_cols.items()}
+        )
         if numbered:
             pdf = _number_seq(pdf)
-        rows = pdf.to_dict("records")
         # stable derived seed: identical on Spark task retry (quirk 3)
-        seed_str = f"{params.seed}|" + "|".join(repr(k) for k in keys)
-        out = simulate_events(rows, params, rng_seed=seed_str)
+        seed_str = f"{run_params.seed}|" + "|".join(repr(k) for k in keys)
+        out = simulate_events(pdf.to_dict("records"), run_params, rng_seed=seed_str)
         res = pd.DataFrame(out, columns=result_cols)
         res["used_api_id"] = res["used_api_id"].astype("Int32")
-        for c, v in zip(group_cols, keys):
-            if c in res.columns:
-                res[c] = v
-            else:
-                res.insert(0, c, v)
-        return res[[c for c in out_schema.names]]
-
-    if shards is None:
-        # pin the Python stage's partition count (see below for why)
-        slots = max(int(df.sparkSession.sparkContext.defaultParallelism), 1)
-        return (
-            df.repartition(slots, *group_cols)
-            .groupBy(*group_cols)
-            .applyInPandas(run_one, out_schema)
-        )
+        return res.assign(**dict(zip(group_cols, keys)))[out_schema.names]
 
     shard_col = "__kernel_shard"
-    sharded = df.withColumn(
-        shard_col, F.pmod(F.xxhash64(*group_cols), F.lit(shards))
-    )
 
-    def run_shard(_keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        # dropna=False: a null key is a group, as in Spark's groupBy.
-        # pandas names that group nan, so the key passed on is the
-        # group's first row, as applyInPandas builds it: the seed string
-        # and the emitted key then match the unsharded path.
-        pdf = pdf.drop(columns=[shard_col])
-        outs = [
-            run_one(tuple(gpdf[c].iloc[0] for c in group_cols), gpdf)
-            for _, gpdf in pdf.groupby(group_cols, sort=True, dropna=False)
-        ]
-        return pd.concat(outs, ignore_index=True)
+    def run_shard(_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        # dropna=False: a null key is a group, as in Spark's groupBy
+        groups = pdf.drop(columns=[shard_col]).groupby(
+            group_cols, sort=True, dropna=False
+        )
+        return pd.concat([run_group(g) for _, g in groups], ignore_index=True)
 
     # Explicit repartition(shards, shard_col) pins the Python stage's
     # partition count: a bare groupBy's exchange is AQE-coalesced by BYTES
@@ -412,65 +413,12 @@ def simulate(
     # CPU-bound DES work behind it — measured at sf0.1: the 2.6 MB kernel
     # shuffle coalesced to 2 post-shuffle partitions, serializing 64
     # shards' simulations onto 2 cores (guide §2: partitioning must match
-    # the compute distribution, not the byte distribution).  The count is
-    # the shards parameter itself — already scale-adaptive (callers size
-    # it ~2x cores) — and hashpartitioning(shard_col, shards) satisfies
-    # the groupBy's clustering requirement, so no second exchange.
+    # the compute distribution, not the byte distribution).
+    # hashpartitioning(shard_col, shards) satisfies the groupBy's
+    # clustering requirement, so there is no second exchange.
     return (
-        sharded.repartition(shards, shard_col)
+        df.withColumn(shard_col, F.pmod(F.xxhash64(*group_cols), F.lit(shards)))
+        .repartition(shards, shard_col)
         .groupBy(shard_col)
         .applyInPandas(run_shard, out_schema)
-    )
-
-
-def simulate_sweep(
-    df: DataFrame,
-    base_params: SimParams,
-    group_cols: list[str],
-    param_cols: dict[str, str] | None = None,
-) -> DataFrame:
-    """Parameter-sweep DES: each group carries its OWN scenario parameters
-    in columns (constant within the group) — one Spark job simulates every
-    (scenario × tenant) combination concurrently.
-
-    ``param_cols`` maps SimParams field → column name, e.g.
-    ``{"num_workers": "k", "rpm_limit": "rpm"}``.  This is the 100 TB
-    posture made literal: a million-cell sweep is just a million groups.
-    """
-    param_cols = param_cols or {}
-    group_cols = list(group_cols)
-    in_schema = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
-    out_schema = kernel_result_schema(group_cols, [in_schema[c] for c in group_cols])
-    result_cols = [c for c, _ in KERNEL_RESULT_FIELDS]
-
-    def run_group(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = tuple(k.item() if hasattr(k, "item") else k for k in keys)
-        overrides = {
-            field: pdf[col].iloc[0].item()
-            if hasattr(pdf[col].iloc[0], "item")
-            else pdf[col].iloc[0]
-            for field, col in param_cols.items()
-        }
-
-        params = replace(base_params, **overrides)
-        rows = pdf.drop(columns=list(param_cols.values())).to_dict("records")
-        seed_str = f"{params.seed}|" + "|".join(repr(k) for k in keys)
-        out = simulate_events(rows, params, rng_seed=seed_str)
-        res = pd.DataFrame(out, columns=result_cols)
-        res["used_api_id"] = res["used_api_id"].astype("Int32")
-        for c, v in zip(group_cols, keys):
-            if c in res.columns:
-                res[c] = v
-            else:
-                res.insert(0, c, v)
-        return res[[c for c in out_schema.names]]
-
-    # same Python-stage partition pinning as simulate(): the sweep's groups
-    # ARE the parallelism axis — never let byte-based AQE coalescing pack
-    # them onto a couple of cores
-    slots = max(int(df.sparkSession.sparkContext.defaultParallelism), 1)
-    return (
-        df.repartition(slots, *group_cols)
-        .groupBy(*group_cols)
-        .applyInPandas(run_group, out_schema)
     )

@@ -54,7 +54,7 @@ def _events_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kernel_fifo_k1(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _events_micro(spark, sf_dir)
     params = SimParams(num_workers=1, queue_mode="fifo", queue_max_size=None)
-    res = simulate(df, params, group_cols=["user_id"], shards=64)
+    res = simulate(df, params, group_cols=["user_id"])
     m = 1_000_000
     return res.select(
         "user_id",
@@ -156,7 +156,7 @@ def q_kernel_fifo_bounded_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_apis=1,
         rpm_limit=1_000_000_000,
     )
-    res = simulate(df, params, group_cols=["user_id"], shards=64)
+    res = simulate(df, params, group_cols=["user_id"])
     m = 1_000_000
     rejected = F.col("finish_processing_time_by_worker") == -1.0
     return res.select(
@@ -187,7 +187,7 @@ def q_kernel_fifo_bounded_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kernel_fifo_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _events_micro(spark, sf_dir)
     params = SimParams(num_workers=2, queue_mode="fifo", queue_max_size=3)
-    res = simulate(df, params, group_cols=["user_id"], shards=64)
+    res = simulate(df, params, group_cols=["user_id"])
     m = 1_000_000
     rejected = F.col("finish_processing_time_by_worker") == -1.0
     return res.select(
@@ -216,8 +216,8 @@ def q_kernel_fifo_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kernel_priority_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     df = ev.select(
-        # one independent scenario per user-shard; 32 shards = one per core
-        # locally, and the axis that scales to millions of runs on a cluster
+        # one independent scenario per user-shard: 32 runs here, and the
+        # axis that scales to millions of runs on a cluster
         (F.col("user_id") % 32).alias("run_id"),
         F.col("user_id").cast("string").alias("user_id"),
         F.col("event_id").alias("seq"),
@@ -258,13 +258,12 @@ def q_kernel_priority_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Scenario-sweep: ONE job simulates a 6-cell parameter grid "
     "(workers 1/2/4 x RPM 30/60) x 8 user-shards = 48 independent DES "
     "groups, each group reading its own params from columns "
-    "(simulate_sweep); output is per-scenario aggregate stats. This is the "
+    "(simulate's param_cols, on the kernel's one sharded path); output is "
+    "per-scenario aggregate stats. This is the "
     "100 TB posture made literal - a million-cell sweep is just a million "
     "groups.",
 )
 def q_kernel_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from queue_system_simulator_spark.operators.kernel import simulate_sweep
-
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         (F.col("user_id") % 8).alias("tenant"),
@@ -280,7 +279,7 @@ def q_kernel_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     swept = base.crossJoin(F.broadcast(grid))
     params = SimParams(queue_mode="priority", seed=42)
-    res = simulate_sweep(
+    res = simulate(
         swept,
         params,
         group_cols=["k", "rpm", "tenant"],
@@ -390,7 +389,7 @@ def q_kernel_priority_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_apis=1,
         rpm_limit=1_000_000_000,
     )
-    res = simulate(df, params, group_cols=["user_id"], shards=64)
+    res = simulate(df, params, group_cols=["user_id"])
     m = 1_000_000
     # service_order tie-break mirrors the oracle's struct-min serve order:
     # when processing_time rounds to 0 several serves can share one start
@@ -485,7 +484,7 @@ def q_kernel_fifo_k2_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_apis=1,
         rpm_limit=1_000_000_000,
     )
-    res = simulate(df, params, group_cols=["user_id"], shards=64)
+    res = simulate(df, params, group_cols=["user_id"])
     m = 1_000_000
     return res.select(
         "user_id",

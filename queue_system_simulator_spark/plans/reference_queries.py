@@ -457,31 +457,18 @@ LEFT JOIN (
 ) c USING (api_id)
 """,
     description="G4: per-API usage counts zero-filled against the configured "
-    "API domain (N=5), null skipped, out-of-range skipped (C4); broadcast "
-    "outer join against a range dimension (reference "
+    "API domain (N=5), null skipped, out-of-range skipped (C4); the "
+    "run_pipeline report's own operator (statistics.api_usage_counts: a "
+    "range dimension left-joined to the broadcast counts) (reference "
     "/root/reference/src/statistics.py:126-141).",
 )
 def q_api_usage_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _synthetic_sim_results(spark, sf_dir)
-    counts = (
-        df.filter((F.col("finish_us") != -1) & F.col("used_api_id").isNotNull())
-        .filter(F.col("used_api_id").between(1, 5))
-        .groupBy(F.col("used_api_id").alias("api_id"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    from queue_system_simulator_spark.operators.statistics import api_usage_counts
+
+    df = _synthetic_sim_results(spark, sf_dir).withColumnRenamed(
+        "finish_us", "finish_processing_time_by_worker"
     )
-    dim = (
-        df.sparkSession.range(1, 6)
-        .select(F.col("id").cast("int").alias("api_id"))
-    )
-    return (
-        F.broadcast(dim)
-        .join(counts, "api_id", "left")
-        .select(
-            "api_id",
-            F.concat(F.lit("api_"), F.col("api_id")).alias("api_key"),
-            F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("usage_count"),
-        )
-    )
+    return api_usage_counts(df, spark)
 
 
 @register(

@@ -1547,14 +1547,15 @@ def q_time_travel_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("added",), ("removed",), ("changed",), ("unchanged",)],
         "change_type STRING",
     )
-    return (
-        F.broadcast(cats)
-        .join(d, "change_type", "left")
-        .groupBy("change_type")
-        .agg(
-            F.count("delta").alias("n_users"),
-            F.coalesce(F.sum("delta"), F.lit(0)).alias("value_centi_delta"),
-        )
+    # aggregate first, then zero-fill the four categories: the left outer
+    # join can build (broadcast) only its right side, the per-type totals
+    agg = d.groupBy("change_type").agg(
+        F.count("delta").alias("n_users"), F.sum("delta").alias("value_centi_delta")
+    )
+    return cats.join(F.broadcast(agg), "change_type", "left").select(
+        "change_type",
+        F.coalesce(F.col("n_users"), F.lit(0)).alias("n_users"),
+        F.coalesce(F.col("value_centi_delta"), F.lit(0)).alias("value_centi_delta"),
     )
 
 

@@ -238,88 +238,6 @@ def streaming_fifo_k1(events: DataFrame, shards: int = FIFO_STATE_SHARDS) -> Dat
     )
 
 
-def streaming_fifo_tws(events: DataFrame) -> DataFrame:
-    """The online FIFO kernel on the MODERN stateful API
-    (``transformWithStateInPandas``, Spark 4): canonical per-user keying
-    with a typed ValueState — the state-store-native shape (RocksDB
-    locality, per-key TTL/timers available), vs the hash-shard batching of
-    :func:`streaming_fifo_k1`.  Same recurrence, same closed-form oracle.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # Runtime gate: the TWS state protocol needs protobuf, which this
-    # container does not ship — surface a clear error instead of a worker
-    # crash.  (applyInPandasWithState — streaming_fifo_k1 — has no such
-    # dependency and is the path the registered query uses.)
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:  # pragma: no cover - environment-dependent
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package for "
-            "its state-server protocol; install protobuf to enable this "
-            "path (streaming_fifo_k1 provides the same semantics via "
-            "applyInPandasWithState)"
-        ) from e
-
-    class FifoProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_finish", "v long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            batch = pd.concat(list(rows))
-            if batch.empty:
-                return
-            last = self._last.get()[0] if self._last.exists() else 0
-            batch = batch.sort_values(["arrival_us", "seq"])
-            out = []
-            for r in batch.itertuples():
-                start = max(int(r.arrival_us), last)
-                last = start + int(r.processing_us)
-                out.append(
-                    (
-                        key[0],
-                        r.seq,
-                        r.arrival_us / 1e6,
-                        start / 1e6,
-                        last / 1e6,
-                        (start - r.arrival_us) / 1e6,
-                    )
-                )
-            self._last.update((last,))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "user_id",
-                    "seq",
-                    "arrival_s",
-                    "start_s",
-                    "finish_s",
-                    "queuing_s",
-                ],
-            )
-
-        def close(self) -> None:
-            pass
-
-    keyed = events.select(
-        F.col("user_id").cast("string").alias("user_id"),
-        F.col("event_id").alias("seq"),
-        F.unix_micros("ts").alias("arrival_us"),
-        (F.round(F.col("value") * 100).cast("long") * 10_000).alias("processing_us"),
-    )
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=FifoProcessor(),
-        outputStructType=FIFO_STATE_OUTPUT,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def interval_join_purchase_clicks(
     events: DataFrame, lookback: str = "10 minutes", watermark: str = "10 minutes"
 ) -> DataFrame:

@@ -313,29 +313,94 @@ def test_priority_bias_dequeue_frequency():
     assert abs(prio_hits / n - 0.8) < 0.02
 
 
-def test_sharded_run_keeps_the_null_group(spark):
-    """``shards=N`` simulates a null group key as Spark's groupBy does:
-    same rows, same per-group seed (priority dequeues draw from it), and
-    a null key in the output."""
+def _per_group_reference(df, params, group_cols, param_cols):
+    """The kernel as one ``applyInPandas`` call per group, frozen: the key
+    Spark hands each group seeds its RNG as ``"<seed>|<repr(key)>..."``."""
+    from dataclasses import replace
+
+    import pandas as pd
+
+    from queue_system_simulator_spark.operators.kernel import (
+        KERNEL_RESULT_FIELDS,
+        kernel_result_schema,
+    )
+
+    types = {f.name: f.dataType for f in df.schema.fields}
+    schema = kernel_result_schema(group_cols, [types[c] for c in group_cols])
+
+    def run(keys, pdf):
+        keys = tuple(k.item() if hasattr(k, "item") else k for k in keys)
+        p = replace(
+            params, **{f: pdf[c].iloc[0].item() for f, c in param_cols.items()}
+        )
+        seed = f"{p.seed}|" + "|".join(repr(k) for k in keys)
+        out = simulate_events(pdf.to_dict("records"), p, rng_seed=seed)
+        res = pd.DataFrame(out, columns=[c for c, _ in KERNEL_RESULT_FIELDS])
+        res["used_api_id"] = res["used_api_id"].astype("Int32")
+        return res.assign(**dict(zip(group_cols, keys)))[schema.names]
+
+    return df.groupBy(*group_cols).applyInPandas(run, schema)
+
+
+def _request(seq):
+    # processing alternates between the priority (3 s) and the normal
+    # (30 s) class, so the seeded dequeue decides the order
+    return (seq, float(seq // 3), 3.0 if seq % 2 else 30.0)
+
+
+_REQUEST_COLS = "seq long, sim_arrival_time double, processing_time double"
+
+_KEYED_RUNS = {
+    "string-key": (
+        ["user_id"],
+        {},
+        [(u, *_request(s)) for u in ("a", None, "b") for s in range(12)],
+        "user_id string, " + _REQUEST_COLS,
+    ),
+    "long-key": (
+        ["run_id"],
+        {},
+        [(r, "u", *_request(s)) for r in (1, None, 2) for s in range(13)],
+        "run_id long, user_id string, " + _REQUEST_COLS,
+    ),
+    "sweep-key": (
+        ["k", "rpm", "tenant"],
+        {"num_workers": "k", "rpm_limit": "rpm"},
+        [
+            (k, rpm, t, "u", *_request(s))
+            for k in (1, 2)
+            for rpm in (2, 5)
+            for t in (0, 1)
+            for s in range(10)
+        ],
+        "k int, rpm int, tenant long, user_id string, " + _REQUEST_COLS,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_KEYED_RUNS))
+def test_sharded_run_keeps_the_null_group(spark, case):
+    """Whatever the shard count, every group is simulated as a per-group
+    ``applyInPandas`` would: same rows, same seed (priority dequeues draw
+    from it), a null key kept as its own group.  Inside a shard, Arrow
+    gives pandas an integral key as float64 once any key there is null,
+    so the long key must not seed its RNG from ``1.0``."""
     from queue_system_simulator_spark.operators.kernel import simulate
 
-    rows = [
-        (user, seq, float(seq // 3), 5.0 + 10.0 * (seq % 4))
-        for user in ("a", None, "b")
-        for seq in range(12)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "user_id string, seq long, sim_arrival_time double, processing_time double",
-    )
+    group_cols, param_cols, rows, ddl = _KEYED_RUNS[case]
+    df = spark.createDataFrame(rows, ddl)
     params = SimParams(
         num_workers=1, queue_mode="priority", priority_bias=0.5, rpm_limit=5
     )
 
-    def run(shards):
-        out = simulate(df, params, group_cols=["user_id"], shards=shards).collect()
-        return sorted((tuple(r) for r in out), key=repr)
+    def collected(frame):
+        return sorted((tuple(r) for r in frame.collect()), key=repr)
 
-    plain = run(None)
-    assert sum(r[0] is None for r in plain) == 12
-    assert run(4) == plain
+    expected = collected(_per_group_reference(df, params, group_cols, param_cols))
+    assert len(expected) == len(rows)
+    assert sum(r[0] is None for r in expected) == sum(r[0] is None for r in rows)
+    for shards in (1, 3, None):
+        got = simulate(
+            df, params, group_cols=group_cols, shards=shards, param_cols=param_cols
+        )
+        assert collected(got) == expected, shards

@@ -114,10 +114,13 @@ def test_api_usage_all_zero(spark):
     assert {r["api_key"]: r["usage_count"] for r in out} == {"api_1": 0, "api_2": 0}
 
 
-def test_api_usage_broadcast_hint_is_honoured(spark):
+def test_api_usage_broadcast_hint_is_honoured(spark, sf_dir):
     """The counts are broadcast, the side a left outer join can build: the
     hint is not dropped (Spark logs ``build left for left outer join``
-    when it is) and the schema and rows stay as they were."""
+    when it is) and the schema and rows stay as they were.  The registered
+    zero-fill queries keep to the same rule."""
+    from queue_system_simulator_spark.plans import QUERIES
+
     rows = [sim_row(api=1), sim_row(api=1), sim_row(api=2)]
     out = api_usage_counts(make_df(spark, rows), spark, num_apis=3)
     assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema] == [
@@ -135,6 +138,11 @@ def test_api_usage_broadcast_hint_is_honoured(spark):
     assert "LeftOuter" in join and "rightHint=(strategy=broadcast)" in join
     assert "leftHint" not in join
     assert "LeftOuter, BuildRight" in qe.executedPlan().toString()
+    for name in ("api_usage_zero_fill", "time_travel_version_diff"):
+        plan = QUERIES[name].build(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        outer = [ln for ln in plan.toString().splitlines() if "LeftOuter" in ln]
+        assert outer, name
+        assert not [ln for ln in outer if "leftHint=(strategy=broadcast)" in ln], name
 
 
 def test_enqueue_totals(spark):

@@ -141,44 +141,6 @@ def test_sliding_api_load_runs(spark, sf_dir):
     assert total == n_events * 4
 
 
-def test_streaming_fifo_tws_gated_or_matches(spark, sf_dir):
-    """transformWithStateInPandas twin: runs (and must match the closed
-    form) when protobuf is available; raises a clear NotImplementedError
-    when it is not (this container ships no protobuf)."""
-    import pytest
-
-    from queue_system_simulator_spark.operators.fifo import fifo_k1_timeline
-    from queue_system_simulator_spark.streaming.stream import streaming_fifo_tws
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            streaming_fifo_tws(stream_events(spark, sf_dir))
-        return
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    streamed = run_available_now(
-        streaming_fifo_tws(stream_events(spark, sf_dir)), output_mode="append"
-    )
-    ev = load_table(spark, sf_dir, "events")
-    batch = fifo_k1_timeline(ev, ts_col="ts", proc_col="value").select(
-        F.col("group_id").cast("string").alias("user_id"),
-        "seq",
-        "arrival_s",
-        "start_s",
-        "finish_s",
-        "queuing_s",
-    )
-    assert sorted(map(tuple, streamed.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
-
-
 def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
     """Kill a stream after its first microbatch, restart from the same
     checkpoint: the parquet sink must end up with every input row exactly
