@@ -1079,8 +1079,235 @@ def _dot(a, b):
     )
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
+# One helper per embedding-search stage. Each keeps the op order and the
+# 1e-6 rounding its oracle SQL matches, so every builder below shares it.
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, label, v array<double>)``: the one load and cast. A whole-
+    array cast rather than a per-element ``transform`` lambda: float to
+    double is exact either way, and the cast measured faster in paired
+    ``bench.py`` runs at sf0.1."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
+    )
+
+
+def _dim_values(emb: DataFrame) -> DataFrame:
+    """Long form ``(vec_id, label, dim, val)``, ``dim`` 1-based."""
+    return emb.select(
+        "vec_id", "label", F.posexplode("v").alias("pos", "val")
+    ).select("vec_id", "label", (F.col("pos") + 1).alias("dim"), "val")
+
+
+def _query_vector(emb: DataFrame) -> DataFrame:
+    """The one-row ``(qv)`` frame of the query vector ``vec_id = 0``."""
+    return emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+
+
+def _query_sample(emb: DataFrame, salt: str, n: int) -> DataFrame:
+    """``(src, q_label, qv)`` of at most ``n`` every-25th vectors, ranked by
+    ``md5(salt || vec_id)`` then ``vec_id`` — the same set in both engines."""
+    return (
+        emb.filter(F.col("vec_id") % 25 == 0)
+        .orderBy(
+            F.md5(F.concat(F.lit(salt), F.col("vec_id").cast("string"))), "vec_id"
+        )
+        .limit(n)
+        .select(
+            F.col("vec_id").alias("src"),
+            F.col("label").alias("q_label"),
+            F.col("v").alias("qv"),
+        )
+    )
+
+
+def _cosine(a: str, b: str) -> Column:
+    """``round(a·b / (sqrt(a·a) * sqrt(b·b)), 6)`` — ``_COS_SQL``'s order."""
+    return F.round(
+        _dot(F.col(a), F.col(b))
+        / (F.sqrt(_dot(F.col(a), F.col(a))) * F.sqrt(_dot(F.col(b), F.col(b)))),
+        6,
+    )
+
+
+def _sq_l2(a: str, b: str) -> Column:
+    """``round(Σ (a_i - b_i)², 6)``, folded left to right from 0.0.
+    IEEE subtraction is sign-symmetric, so the argument order is free."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        6,
+    )
+
+
+def _cosine_topk(cand: DataFrame, qv: DataFrame, k: int, *cols: str) -> DataFrame:
+    """Top-``k`` of ``cand`` by cosine to the broadcast query vector, ties
+    to the smaller ``vec_id``; ``cols`` ride along beside ``cosine_sim``."""
+    return (
+        cand.crossJoin(F.broadcast(qv))
+        .select(*cols, _cosine("qv", "v").alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), "vec_id")
+        .limit(k)
+    )
+
+
+def _label_cosine_pairs(emb: DataFrame) -> DataFrame:
+    """``(vec_a, vec_b, label, cosine_sim)`` for every same-label pair with
+    ``vec_a < vec_b``.
+
+    Each vector's norm is computed once (5k rows) instead of per pair
+    (1.25M pairs): the same float expression order, a third of the work.
+    The 5k-row parquet scan is one partition and the label-blocked probe
+    is O(n²/cells), so the probe side spreads across the cluster and the
+    build side broadcasts (at 100 TB the build side is the per-cell
+    centroid shortlist, not the full corpus)."""
+    emb = emb.withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    a = spread(emb, factor=2).alias("a")
+    b = F.broadcast(emb).alias("b")
+    sim = F.round(
+        _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm")),
+        6,
+    )
+    return a.join(
+        b,
+        (F.col("a.label") == F.col("b.label"))
+        & (F.col("a.vec_id") < F.col("b.vec_id")),
+    ).select(
+        F.col("a.vec_id").alias("vec_a"),
+        F.col("b.vec_id").alias("vec_b"),
+        F.col("a.label").alias("label"),
+        sim.alias("cosine_sim"),
+    )
+
+
+def _label_dim_means(emb: DataFrame) -> DataFrame:
+    """``(label, pos, cval)``: the per-(label, dim) mean rounded to 6 (the
+    grid of ``_CENTROID_SQL``), ``pos`` 0-based. Computed once per build."""
+    return (
+        emb.select("label", F.posexplode("v").alias("pos", "val"))
+        .groupBy("label", "pos")
+        .agg(F.round(F.sum("val") / F.count(F.lit(1)), 6).alias("cval"))
+    )
+
+
+def _assemble(means: DataFrame, *keys: str) -> DataFrame:
+    """``(*keys, c)``: the means of each key group as an array ordered by
+    ``pos``."""
+    return means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
+            lambda s: s["cval"],
+        ).alias("c")
+    )
+
+
+def _centroids(means: DataFrame) -> DataFrame:
+    """``(label, c)``: one centroid array per IVF cell."""
+    return _assemble(means, "label")
+
+
+def _nearest_cells(cent: DataFrame, qv: DataFrame, n: int) -> DataFrame:
+    """``(label)`` of the ``n`` cells nearest the single query vector by
+    rounded L2, ties to the smaller label: one TakeOrdered over k rows."""
+    return (
+        cent.crossJoin(F.broadcast(qv))
+        .select("label", _sq_l2("qv", "c").alias("l2"))
+        .orderBy("l2", "label")
+        .limit(n)
+        .select("label")
+    )
+
+
+def _ranked_cells(pairs: DataFrame, n: int, *per: str) -> DataFrame:
+    """``pairs`` (query columns beside a centroid ``(label, c)``) kept where
+    the cell ranks ``rn <= n`` by rounded L2 to ``qv`` among the cells of
+    the same ``per`` key, ties to the smaller label. A window rather than
+    a limit, because it ranks per query and keeps the rank."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*per).orderBy("l2", "label")
+    return (
+        pairs.withColumn("l2", _sq_l2("qv", "c"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+    )
+
+
+#: Product quantization: 4 subspaces × 16 dims over the 64-d embeddings.
+_PQ_M, _PQ_SUB = 4, 16
+
+
+def _pq_codebooks(means: DataFrame) -> DataFrame:
+    """``(label, m, c)``: the label's sub-centroid of each subspace ``m``."""
+    return _assemble(
+        means.withColumn("m", (F.col("pos") / _PQ_SUB).cast("int")), "label", "m"
+    )
+
+
+def _pq_distances(vecs: DataFrame, cb: DataFrame) -> DataFrame:
+    """``(vec_id, m, label, l2)``: each vector's ``_PQ_M`` subvectors against
+    every codebook entry of their subspace — a bounded fan-out (M x
+    n_labels rows per vector) joined map-side to the broadcast codebook."""
+    sub = vecs.select(
+        "vec_id",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(m).alias("m"),
+                    F.slice("v", m * _PQ_SUB + 1, _PQ_SUB).alias("vs"),
+                )
+                for m in range(_PQ_M)
+            ])
+        ).alias("s"),
+    ).select("vec_id", "s.m", "s.vs")
+    return sub.join(F.broadcast(cb), "m").select(
+        "vec_id", "m", "label", _sq_l2("vs", "c").alias("l2")
+    )
+
+
+def _pq_codes(d: DataFrame) -> DataFrame:
+    """``(vec_id, m, b)``: per subspace the nearest codebook entry as the
+    struct ``b = (l2, label)``, ties to the smaller label."""
+    return d.groupBy("vec_id", "m").agg(F.min(F.struct("l2", "label")).alias("b"))
+
+
+def _pq_adc_top10(vecs: DataFrame, cb: DataFrame) -> DataFrame:
+    """``(vec_id, adc_dist)``: the 10 vectors of ``vecs`` nearest the query
+    vector (which ``vecs`` must hold) by PQ asymmetric distance — the sum
+    of its 4 code lookups in the query's broadcast L2 table."""
+    d = _pq_distances(vecs, cb).cache()
+    codes = _pq_codes(d).select("vec_id", "m", F.col("b.label").alias("code"))
+    lut = d.filter(F.col("vec_id") == 0).select(
+        "m", F.col("label").alias("code"), F.col("l2").alias("q_l2")
+    )
+    return (
+        codes.filter(F.col("vec_id") != 0)
+        .join(F.broadcast(lut), ["m", "code"])
+        .groupBy("vec_id")
+        .agg(F.round(F.sum("q_l2"), 6).alias("adc_dist"))
+        .orderBy("adc_dist", "vec_id")
+        .limit(10)
+    )
+
+
+def _sq8_codes(emb: DataFrame) -> DataFrame:
+    """``(vec_id, dim, code)``: SQ8 codes ``floor((v - lo) * 255 / range)``
+    capped at 255, from a per-dimension ``[lo, hi]`` model (a 64-row
+    broadcast) trained on the whole table."""
+    e = _dim_values(emb)
+    b = e.groupBy("dim").agg(F.min("val").alias("lo"), F.max("val").alias("hi"))
+    rng = F.when(F.col("hi") > F.col("lo"), F.col("hi") - F.col("lo")).otherwise(
+        F.lit(1.0)
+    )
+    code = F.least(
+        F.floor((F.col("val") - F.col("lo")) * 255.0 / rng).cast("long"),
+        F.lit(255).cast("long"),
+    )
+    return e.join(F.broadcast(b), "dim").select("vec_id", "dim", code.alias("code"))
 
 
 @register(
@@ -1100,22 +1327,9 @@ LIMIT 20
     "vector + a map-side top-k (TakeOrdered), no shuffle of embeddings.",
 )
 def q_embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "v", _as_double(F.col("embedding"))
-    )
-    qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    emb = _embeddings(spark, sf_dir)
     cand = emb.filter(F.col("vec_id") != 0)
-    sim = F.round(
-        _dot(F.col("qv"), F.col("v"))
-        / (F.sqrt(_dot(F.col("qv"), F.col("qv"))) * F.sqrt(_dot(F.col("v"), F.col("v")))),
-        6,
-    )
-    return (
-        cand.crossJoin(F.broadcast(qv))
-        .select("vec_id", "label", sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), "vec_id")
-        .limit(20)
-    )
+    return _cosine_topk(cand, _query_vector(emb), 20, "vec_id", "label")
 
 
 @register(
@@ -1132,13 +1346,10 @@ GROUP BY label, s.dim
     "ANN: probe only cells whose centroid is near the query.",
 )
 def q_embed_ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "label", _as_double(F.col("embedding")).alias("v")
-    )
-    exploded = emb.select("label", F.posexplode("v").alias("pos", "val"))
-    return (
-        exploded.groupBy("label", (F.col("pos") + 1).alias("dim"))
-        .agg(F.round(F.sum("val") / F.count(F.lit(1)), 6).alias("centroid_val"))
+    return _label_dim_means(_embeddings(spark, sf_dir)).select(
+        "label",
+        (F.col("pos") + 1).alias("dim"),
+        F.col("cval").alias("centroid_val"),
     )
 
 
@@ -1191,54 +1402,11 @@ LIMIT {IVF_TOPK}
     "filter — no full-corpus shuffle.",
 )
 def q_embed_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    )
-    # centroid arrays: per-dim mean rounded to 6 (same grid as the oracle),
-    # assembled back into an array ordered by dim
-    cent = (
-        emb.select("label", F.posexplode("v").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.round(F.sum("val") / F.count(F.lit(1)), 6).alias("cval"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                lambda s: s["cval"],
-            ).alias("c")
-        )
-    )
-    qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ),
-        6,
-    )
-    cells = (
-        cent.crossJoin(F.broadcast(qv))
-        .select("label", l2.alias("l2"))
-        .orderBy("l2", "label")
-        .limit(IVF_NPROBE)
-        .select("label")
-    )
+    emb = _embeddings(spark, sf_dir)
+    qv = _query_vector(emb)
+    cells = _nearest_cells(_centroids(_label_dim_means(emb)), qv, IVF_NPROBE)
     cand = emb.filter(F.col("vec_id") != 0).join(F.broadcast(cells), "label")
-    sim = F.round(
-        _dot(F.col("qv"), F.col("v"))
-        / (
-            F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            * F.sqrt(_dot(F.col("v"), F.col("v")))
-        ),
-        6,
-    )
-    return (
-        cand.crossJoin(F.broadcast(qv))
-        .select("vec_id", "label", sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), "vec_id")
-        .limit(IVF_TOPK)
-    )
+    return _cosine_topk(cand, qv, IVF_TOPK, "vec_id", "label")
 
 
 NUM_LSH_PLANES = 4  # 16 buckets — sized to the test corpus; more at scale
@@ -1287,7 +1455,8 @@ ORDER BY cosine_sim DESC, s.vec_id
 LIMIT 10
 """
     )(_lsh_planes()),
-    description="LSH-bucketed ANN: 8 random-hyperplane sign bits → bucket; "
+    description=f"LSH-bucketed ANN: {NUM_LSH_PLANES} random-hyperplane sign "
+    f"bits → one of {2 ** NUM_LSH_PLANES} buckets; "
     "search only the query's bucket, exact cosine inside it. The bucket is "
     "computed scan-side (map-only), so at 100 TB the candidate fetch is a "
     "partition-prunable equality filter — no shuffle, no index build; "
@@ -1296,9 +1465,7 @@ LIMIT 10
 )
 def q_embed_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = _lsh_planes()
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     bucket = F.concat(
         *[
             F.when(
@@ -1312,18 +1479,12 @@ def q_embed_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = sig.filter(F.col("vec_id") == 0).select(
         F.col("v").alias("qv"), F.col("bucket").alias("qb")
     )
-    sim = F.round(
-        _dot(F.col("qv"), F.col("v"))
-        / (
-            F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            * F.sqrt(_dot(F.col("v"), F.col("v")))
-        ),
-        6,
-    )
     return (
         sig.crossJoin(F.broadcast(q))
         .filter((F.col("bucket") == F.col("qb")) & (F.col("vec_id") != 0))
-        .select("vec_id", "label", "bucket", sim.alias("cosine_sim"))
+        .select(
+            "vec_id", "label", "bucket", _cosine("qv", "v").alias("cosine_sim")
+        )
         .orderBy(F.col("cosine_sim").desc(), "vec_id")
         .limit(10)
     )
@@ -1343,37 +1504,8 @@ WHERE round({_COS_SQL}, 6) >= 0.3
     "engines select the identical set.",
 )
 def q_embed_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # precompute each vector's norm once (5k rows) instead of per pair
-    # (1.25M pairs) — same float expression order, third of the work
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    )
-    emb = emb.withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    # the 5k-row parquet scan is one partition; the label-blocked pair probe
-    # is O(n²/cells) — spread the probe side across the cluster and
-    # broadcast the build side (embeddings dim table is small by design;
-    # at 100 TB the build side is the per-cell centroid shortlist, not the
-    # full corpus)
-    a = spread(emb, factor=2).alias("a")
-    b = F.broadcast(emb).alias("b")
-    sim = F.round(
-        _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm")),
-        6,
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.label").alias("label"),
-            sim.alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= 0.3)
-    )
+    pairs = _label_cosine_pairs(_embeddings(spark, sf_dir))
+    return pairs.filter(F.col("cosine_sim") >= 0.3)
 
 
 @register(
@@ -1844,37 +1976,17 @@ SELECT src, nbr, label, sim FROM (
 def q_embed_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = (
-        emb.filter(F.col("vec_id") % 25 == 0)
-        .orderBy(
-            F.md5(
-                F.concat(F.lit("knngq|"), F.col("vec_id").cast("string"))
-            ),
-            "vec_id",
-        )
-        .limit(KNN_GRAPH_QSAMPLE)
-        .select(
-            F.col("vec_id").alias("src"),
-            F.col("label").alias("q_label"),
-            F.col("v").alias("qv"),
-        )
-    )
+    emb = _embeddings(spark, sf_dir)
+    q = _query_sample(emb, "knngq|", KNN_GRAPH_QSAMPLE)
     cand = emb.join(
         F.broadcast(q),
         (F.col("label") == F.col("q_label")) & (F.col("vec_id") != F.col("src")),
-    )
-    dot = _dot(F.col("qv"), F.col("v"))
-    norm = F.sqrt(_dot(F.col("qv"), F.col("qv"))) * F.sqrt(
-        _dot(F.col("v"), F.col("v"))
     )
     scored = cand.select(
         "src",
         F.col("vec_id").alias("nbr"),
         "label",
-        F.round(dot / norm, 6).alias("sim"),
+        _cosine("qv", "v").alias("sim"),
     )
     w = Window.partitionBy("src").orderBy(F.col("sim").desc(), "nbr")
     return (
@@ -1985,33 +2097,14 @@ WHERE rn = 1
     "broadcast+map+partial-agg at any corpus size.",
 )
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    )
-    cent = (
-        emb.select("label", F.posexplode("v").alias("pos", "val"))
-        .groupBy(F.col("label").alias("cand"), F.col("pos"))
-        .agg(F.round(F.sum("val") / F.count(F.lit(1)), 6).alias("cval"))
-        .groupBy("cand")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                lambda s: s["cval"],
-            ).alias("c")
-        )
-    )
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("v"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ),
-        6,
-    )
+    emb = _embeddings(spark, sf_dir)
+    cent = _centroids(_label_dim_means(emb)).withColumnRenamed("label", "cand")
     scored = emb.crossJoin(F.broadcast(cent)).select(
         "vec_id",
         F.col("label").alias("old_label"),
-        F.struct(l2.alias("l2"), F.col("cand").alias("cand")).alias("s"),
+        F.struct(
+            _sq_l2("v", "c").alias("l2"), F.col("cand").alias("cand")
+        ).alias("s"),
     )
     best = scored.groupBy("vec_id", "old_label").agg(F.min("s").alias("b"))
     return best.select(
@@ -2112,9 +2205,7 @@ FROM e
     "leaving whole-stage codegen.",
 )
 def q_array_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     sq_sum = F.aggregate(
         F.transform(F.col("v"), lambda x: x * x),
         F.lit(0.0),
@@ -2652,9 +2743,6 @@ def q_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Product quantization: 4 subspaces × 16 dims over the 64-d embeddings.
-_PQ_M, _PQ_SUB = 4, 16
-
 @register(
     "pq_codebook_assign",
     oracle=f"""
@@ -2708,51 +2796,10 @@ FROM best GROUP BY vec_id
     "no shuffle of raw vectors beyond one groupBy keyed (vec, subspace).",
 )
 def q_pq_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double(F.col("embedding")).alias("v"))
-    # per-(label, dim) means -> per-(label, subspace) centroid arrays
-    dims = e.select(
-        "label", F.posexplode("v").alias("dim0", "x")
-    )
-    dmean = dims.groupBy("label", "dim0").agg(F.round(F.avg("x"), 6).alias("c"))
-    cb = (
-        dmean.withColumn("m", (F.col("dim0") / _PQ_SUB).cast("int"))
-        .groupBy("label", "m")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim0", "c"))),
-                lambda s: s["c"],
-            ).alias("c")
-        )
-    )
-    # bounded fan-out: M subvectors per vector x n_labels codebook rows
-    sub = e.select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(m).alias("m"),
-                    F.slice("v", m * _PQ_SUB + 1, _PQ_SUB).alias("vs"),
-                )
-                for m in range(_PQ_M)
-            ])
-        ).alias("s"),
-    ).select("vec_id", "s.m", "s.vs")
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with("vs", "c", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    d = sub.join(F.broadcast(cb), "m").select(
-        "vec_id", "m", "label", l2.alias("l2")
-    )
-    best = (
-        d.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("l2", "label")).alias("b"))
-        .select("vec_id", "m", F.col("b.label").alias("label"), F.col("b.l2").alias("l2"))
+    e = _embeddings(spark, sf_dir)
+    d = _pq_distances(e, _pq_codebooks(_label_dim_means(e)))
+    best = _pq_codes(d).select(
+        "vec_id", "m", F.col("b.label").alias("label"), F.col("b.l2").alias("l2")
     )
     code = lambda m: F.max(F.when(F.col("m") == m, F.col("label"))).cast("int")
     return best.groupBy("vec_id").agg(
@@ -2816,59 +2863,8 @@ LIMIT 10
     "a broadcast-join + sum — no full-vector math per candidate.",
 )
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double(F.col("embedding")).alias("v"))
-    dims = e.select("label", F.posexplode("v").alias("dim0", "x"))
-    dmean = dims.groupBy("label", "dim0").agg(F.round(F.avg("x"), 6).alias("c"))
-    cb = (
-        dmean.withColumn("m", (F.col("dim0") / _PQ_SUB).cast("int"))
-        .groupBy("label", "m")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim0", "c"))),
-                lambda s: s["c"],
-            ).alias("c")
-        )
-    )
-    sub = e.select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(m).alias("m"),
-                    F.slice("v", m * _PQ_SUB + 1, _PQ_SUB).alias("vs"),
-                )
-                for m in range(_PQ_M)
-            ])
-        ).alias("s"),
-    ).select("vec_id", "s.m", "s.vs")
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with("vs", "c", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    d = sub.join(F.broadcast(cb), "m").select(
-        "vec_id", "m", "label", l2.alias("l2")
-    ).cache()
-    codes = (
-        d.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("l2", "label")).alias("b"))
-        .select("vec_id", "m", F.col("b.label").alias("code"))
-    )
-    lut = d.filter(F.col("vec_id") == 0).select(
-        "m", F.col("label").alias("code"), F.col("l2").alias("q_l2")
-    )
-    return (
-        codes.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(lut), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("q_l2"), 6).alias("adc_dist"))
-        .orderBy("adc_dist", "vec_id")
-        .limit(10)
-    )
+    e = _embeddings(spark, sf_dir)
+    return _pq_adc_top10(e, _pq_codebooks(_label_dim_means(e)))
 
 
 @register(
@@ -2937,88 +2933,16 @@ LIMIT 10
     "(vec, subspace).".format(IVF_NPROBE=IVF_NPROBE),
 )
 def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _as_double(F.col("embedding")).alias("v"))
-    # --- IVF shortlist: nprobe nearest cell centroids to the query ---
-    dims = e.select("label", F.posexplode("v").alias("dim0", "x"))
-    dmean = dims.groupBy("label", "dim0").agg(F.round(F.avg("x"), 6).alias("c"))
-    cent = dmean.groupBy("label").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("dim0", "c"))),
-            lambda s: s["c"],
-        ).alias("c")
-    )
-    qv = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    cell_l2 = F.round(
-        F.aggregate(
-            F.zip_with("c", "qv", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    cells = (
-        cent.crossJoin(F.broadcast(qv))
-        .select("label", cell_l2.alias("l2"))
-        .orderBy("l2", "label")
-        .limit(IVF_NPROBE)
-        .select(F.col("label").alias("cell"))
-    )
-    # --- PQ codebooks + codes, cell-filtered corpus side ---
-    cb = (
-        dmean.withColumn("m", (F.col("dim0") / _PQ_SUB).cast("int"))
-        .groupBy("label", "m")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim0", "c"))),
-                lambda s: s["c"],
-            ).alias("c")
-        )
-    )
-    shortlisted = e.join(
-        F.broadcast(cells), e["label"] == cells["cell"], "left_semi"
-    )
-    sub = shortlisted.unionByName(
+    e = _embeddings(spark, sf_dir)
+    means = _label_dim_means(e)
+    # IVF shortlist: the nprobe cells nearest the query, then PQ codes for
+    # the shortlisted cells' vectors plus the query (it builds the LUT)
+    cells = _nearest_cells(_centroids(means), _query_vector(e), IVF_NPROBE)
+    shortlisted = e.join(F.broadcast(cells), "label", "left_semi")
+    vecs = shortlisted.unionByName(
         e.filter(F.col("vec_id") == 0), allowMissingColumns=False
-    ).dropDuplicates(["vec_id"]).select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(m).alias("m"),
-                    F.slice("v", m * _PQ_SUB + 1, _PQ_SUB).alias("vs"),
-                )
-                for m in range(_PQ_M)
-            ])
-        ).alias("s"),
-    ).select("vec_id", "s.m", "s.vs")
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with("vs", "c", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    d = sub.join(F.broadcast(cb), "m").select(
-        "vec_id", "m", "label", l2.alias("l2")
-    ).cache()
-    codes = (
-        d.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("l2", "label")).alias("b"))
-        .select("vec_id", "m", F.col("b.label").alias("code"))
-    )
-    lut = d.filter(F.col("vec_id") == 0).select(
-        "m", F.col("label").alias("code"), F.col("l2").alias("q_l2")
-    )
-    return (
-        codes.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(lut), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("q_l2"), 6).alias("adc_dist"))
-        .orderBy("adc_dist", "vec_id")
-        .limit(10)
-    )
+    ).dropDuplicates(["vec_id"])
+    return _pq_adc_top10(vecs, _pq_codebooks(means))
 
 
 # --------------------------------------------------------------------------
@@ -3044,7 +2968,7 @@ FROM e a
     "embedding space, then inside each cluster drop every item that has a "
     f"lower-id neighbour with cosine >= {SEMDEDUP_TAU} (keep one "
     "representative per semantic-duplicate ball). Cluster = `label` (the "
-    "same IVF cell the ANN queries use; kmeans_lloyd_assign builds the "
+    "same IVF cell the ANN queries use; kmeans_assign builds the "
     "equivalent assignment when labels are absent). Pairwise work is "
     "confined within a cluster, so cost is sum(c_i^2), controlled by the "
     "cluster count — at 100 TB pick k ~ sqrt(N) (the paper's regime) and "
@@ -3052,25 +2976,12 @@ FROM e a
     "volume never shuffles together.",
 )
 def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    )
-    emb = emb.withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    a = spread(emb, factor=2).alias("a")
-    b = F.broadcast(emb).alias("b")
-    sim = F.round(
-        _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm")),
-        6,
-    )
-    # a is the candidate to drop: it has a smaller-id near neighbour b
+    emb = _embeddings(spark, sf_dir)
+    # vec_b is the candidate to drop: it has a smaller-id near neighbour
     dropped = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("b.vec_id") < F.col("a.vec_id")),
-        )
-        .filter(sim >= SEMDEDUP_TAU)
-        .select(F.col("a.vec_id").alias("vec_id"))
+        _label_cosine_pairs(emb)
+        .filter(F.col("cosine_sim") >= SEMDEDUP_TAU)
+        .select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("is_dropped", F.lit(True))
     )
@@ -3642,26 +3553,7 @@ GROUP BY vec_id
     "table is what a 100 TB ANN serving tier actually stores.",
 )
 def q_embed_sq8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        .select(
-            "vec_id", F.posexplode("v").alias("pos", "val")
-        )
-        .select("vec_id", (F.col("pos") + 1).alias("dim"), "val")
-    )
-    b = e.groupBy("dim").agg(
-        F.min("val").alias("lo"), F.max("val").alias("hi")
-    )
-    rng = F.when(F.col("hi") > F.col("lo"), F.col("hi") - F.col("lo")).otherwise(
-        F.lit(1.0)
-    )
-    code = F.least(
-        F.floor((F.col("val") - F.col("lo")) * 255.0 / rng).cast("long"),
-        F.lit(255).cast("long"),
-    )
-    q = e.join(F.broadcast(b), "dim").select("vec_id", code.alias("code"))
-    return q.groupBy("vec_id").agg(
+    return _sq8_codes(_embeddings(spark, sf_dir)).groupBy("vec_id").agg(
         F.sum("code").alias("code_sum"),
         F.count(F.lit(1)).alias("n_dims"),
         F.min("code").alias("code_min"),
@@ -4099,31 +3991,10 @@ FROM d JOIN thr t ON d.label = t.label
     "identical inputs.",
 )
 def q_embed_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    )
-    cent = (
-        emb.select("label", F.posexplode("v").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.round(F.sum("val") / F.count(F.lit(1)), 6).alias("cval"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                lambda s: s["cval"],
-            ).alias("c")
-        )
-    )
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("v"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ),
-        6,
-    )
+    emb = _embeddings(spark, sf_dir)
+    cent = _centroids(_label_dim_means(emb))
     d = emb.join(F.broadcast(cent), "label").select(
-        "vec_id", "label", l2.alias("l2")
+        "vec_id", "label", _sq_l2("v", "c").alias("l2")
     )
     thr = d.groupBy("label").agg(
         F.round(F.expr("percentile(l2, 0.9)"), 6).alias("cut")
@@ -4262,30 +4133,12 @@ LIMIT {RRF_TOPK}
     "broadcast-probe top-k and fusion cost is constant.",
 )
 def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "v", _as_double(F.col("embedding"))
+    emb = _embeddings(spark, sf_dir)
+    qv = F.broadcast(_query_vector(emb))
+    cand = emb.filter(F.col("vec_id") != 0).crossJoin(qv)
+    scored = cand.select(
+        "vec_id", _cosine("qv", "v").alias("c"), _sq_l2("qv", "v").alias("d")
     )
-    qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    cand = emb.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(qv))
-    cos = F.round(
-        _dot(F.col("qv"), F.col("v"))
-        / (
-            F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            * F.sqrt(_dot(F.col("v"), F.col("v")))
-        ),
-        6,
-    )
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("qv"), F.col("v"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    scored = cand.select("vec_id", cos.alias("c"), l2.alias("d"))
     cos_top = (
         scored.orderBy(F.col("c").desc(), "vec_id")
         .limit(RRF_POOL)
@@ -4330,8 +4183,6 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from queue_system_simulator_spark.plans.registry import QUERIES as _REGISTRY
-
 _PQ_ADC_ORACLE = _REGISTRY["pq_adc_topk"].oracle
 PQ_RECALL_K = 10
 
@@ -4370,24 +4221,11 @@ FROM exact JOIN pq USING (vec_id)
 )
 def q_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq = q_pq_adc_topk(spark, sf_dir).select("vec_id")
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    )
-    qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("qv"), F.col("v"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    emb = _embeddings(spark, sf_dir)
     exact = (
         emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", l2.alias("l2"))
+        .crossJoin(F.broadcast(_query_vector(emb)))
+        .select("vec_id", _sq_l2("qv", "v").alias("l2"))
         .orderBy(F.col("l2").asc(), "vec_id")
         .limit(PQ_RECALL_K)
         .select("vec_id")
@@ -4709,66 +4547,18 @@ SELECT src, q_label, neg_id, neg_label, sim FROM (
 def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
+    emb = _embeddings(spark, sf_dir)
+    q = _query_sample(emb, "hnegq|", HARD_NEG_QSAMPLE)
+    cent = _centroids(_label_dim_means(emb))
+    other_cells = q.crossJoin(F.broadcast(cent)).filter(
+        F.col("label") != F.col("q_label")
     )
-    q = (
-        emb.filter(F.col("vec_id") % 25 == 0)
-        .orderBy(
-            F.md5(
-                F.concat(F.lit("hnegq|"), F.col("vec_id").cast("string"))
-            ),
-            "vec_id",
-        )
-        .limit(HARD_NEG_QSAMPLE)
-        .select(
-            F.col("vec_id").alias("src"),
-            F.col("label").alias("q_label"),
-            F.col("v").alias("qv"),
-        )
-    )
-    cent = (
-        emb.select("label", F.posexplode("v").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.round(F.sum("val") / F.count(F.lit(1)), 6).alias("cval"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                lambda s: s["cval"],
-            ).alias("c")
-        )
-    )
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("qv"), F.col("c"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    wc = Window.partitionBy("src").orderBy("l2", "label")
-    short = (
-        q.crossJoin(F.broadcast(cent))
-        .filter(F.col("label") != F.col("q_label"))
-        .select("src", "q_label", "qv", "label", l2.alias("l2"))
-        .withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= HARD_NEG_PROBE)
-        .select("src", "q_label", "qv", "label")
+    short = _ranked_cells(other_cells, HARD_NEG_PROBE, "src").select(
+        "src", "q_label", "qv", "label"
     )
     cand = emb.join(
         F.broadcast(short.withColumnRenamed("label", "s_label")),
         F.col("label") == F.col("s_label"),
-    )
-    sim = F.round(
-        _dot(F.col("qv"), F.col("v"))
-        / (
-            F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            * F.sqrt(_dot(F.col("v"), F.col("v")))
-        ),
-        6,
     )
     ws = Window.partitionBy("src").orderBy(F.desc("sim"), "neg_id")
     return (
@@ -4777,7 +4567,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             F.col("vec_id").alias("neg_id"),
             F.col("label").alias("neg_label"),
-            sim.alias("sim"),
+            _cosine("qv", "v").alias("sim"),
         )
         .withColumn("rn", F.row_number().over(ws))
         .filter(F.col("rn") == 1)
@@ -5555,54 +5345,18 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     max_probe = 4
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    )
-    cent = (
-        emb.select("label", F.posexplode("v").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.round(F.sum("val") / F.count(F.lit(1)), 6).alias("cval"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                lambda s: s["cval"],
-            ).alias("c")
-        )
-    )
-    qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ),
-        6,
-    )
+    emb = _embeddings(spark, sf_dir)
+    cent = _centroids(_label_dim_means(emb))
+    qv = _query_vector(emb)
     # rank the k centroids once — a k-row frame, bounded by construction
-    ranked_cells = (
-        cent.crossJoin(F.broadcast(qv))
-        .select("label", l2.alias("l2"))
-        .withColumn(
-            "rnk",
-            F.row_number().over(Window.orderBy("l2", "label")),
-        )
-        .filter(F.col("rnk") <= max_probe)
-        .select("label", "rnk")
-    )
-    sim = F.round(
-        _dot(F.col("qv"), F.col("v"))
-        / (
-            F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            * F.sqrt(_dot(F.col("v"), F.col("v")))
-        ),
-        6,
-    )
+    ranked_cells = _ranked_cells(
+        cent.crossJoin(F.broadcast(qv)), max_probe
+    ).select("label", F.col("rn").alias("rnk"))
     cand = (
         emb.filter(F.col("vec_id") != 0)
         .join(F.broadcast(ranked_cells), "label")
         .crossJoin(F.broadcast(qv))
-        .select("vec_id", "rnk", sim.alias("sim"))
+        .select("vec_id", "rnk", _cosine("qv", "v").alias("sim"))
     )
     pc = cand.withColumn(
         "nprobe",
@@ -5739,24 +5493,14 @@ FROM j GROUP BY q_id
 def q_retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < NDCG_N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
     corpus = emb.filter(F.col("vec_id") >= NDCG_N_QUERIES)
-    sim = F.round(
-        _dot(F.col("qv"), F.col("v"))
-        / (
-            F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            * F.sqrt(_dot(F.col("v"), F.col("v")))
-        ),
-        6,
-    )
     scored = (
         corpus.crossJoin(F.broadcast(q))
-        .select("q_id", "vec_id", "label", sim.alias("sim"))
+        .select("q_id", "vec_id", "label", _cosine("qv", "v").alias("sim"))
         .cache()
     )
     wq = Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
@@ -5767,36 +5511,10 @@ def q_retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id", "vec_id", (F.lit(NDCG_K + 1) - F.col("rnk")).alias("rel")
         )
     )
-    cent = (
-        emb.select("label", F.posexplode("v").alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.round(F.sum("val") / F.count(F.lit(1)), 6).alias("cval"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                lambda s: s["cval"],
-            ).alias("c")
-        )
-    )
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("qv"), F.col("c"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    wcell = Window.partitionBy("q_id").orderBy("l2", "label")
-    cellrank = (
-        q.crossJoin(F.broadcast(cent))
-        .select("q_id", "label", l2.alias("l2"))
-        .withColumn("rn", F.row_number().over(wcell))
-        .filter(F.col("rn") <= NDCG_NPROBE)
-        .select("q_id", "label")
-    )
+    cent = _centroids(_label_dim_means(emb))
+    cellrank = _ranked_cells(
+        q.crossJoin(F.broadcast(cent)), NDCG_NPROBE, "q_id"
+    ).select("q_id", "label")
     # cellrank is Q*nprobe rows and truth Q*K rows — both broadcast, so
     # the corpus-side scored frame never shuffles for either join
     retrieved = (
@@ -6194,23 +5912,8 @@ LIMIT {SQ8_K}
     "comparisons until the candidate set is O(k).",
 )
 def q_sq8_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        .select("vec_id", F.posexplode("v").alias("pos", "val"))
-        .select("vec_id", (F.col("pos") + 1).alias("dim"), "val")
-    )
-    b = e.groupBy("dim").agg(F.min("val").alias("lo"), F.max("val").alias("hi"))
-    rng = F.when(
-        F.col("hi") > F.col("lo"), F.col("hi") - F.col("lo")
-    ).otherwise(F.lit(1.0))
-    code = F.least(
-        F.floor((F.col("val") - F.col("lo")) * 255.0 / rng).cast("long"),
-        F.lit(255).cast("long"),
-    )
-    codes = e.join(F.broadcast(b), "dim").select(
-        "vec_id", "dim", code.alias("code")
-    )
+    emb = _embeddings(spark, sf_dir)
+    codes = _sq8_codes(emb)
     qc = codes.filter(F.col("vec_id") == 0).select(
         "dim", F.col("code").alias("qcode")
     )
@@ -6222,24 +5925,13 @@ def q_sq8_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("approx_score").desc(), "vec_id")
         .limit(SQ8_CAND)
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    )
-    qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    cos = F.round(
-        _dot(F.col("qv"), F.col("v"))
-        / (
-            F.sqrt(_dot(F.col("qv"), F.col("qv")))
-            * F.sqrt(_dot(F.col("v"), F.col("v")))
-        ),
-        6,
-    )
-    return (
-        emb.join(approx, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", "label", "approx_score", cos.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), "vec_id")
-        .limit(SQ8_K)
+    return _cosine_topk(
+        emb.join(approx, "vec_id"),
+        _query_vector(emb),
+        SQ8_K,
+        "vec_id",
+        "label",
+        "approx_score",
     )
 
 
@@ -6700,14 +6392,7 @@ def q_quantile_normalize_embeddings(
 ) -> DataFrame:
     from pyspark.sql import Window
 
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-        )
-        .select("vec_id", "label", F.posexplode("v").alias("pos", "val"))
-        .select("vec_id", "label", (F.col("pos") + 1).alias("dim"), "val")
-    )
+    e = _dim_values(_embeddings(spark, sf_dir))
     wd = Window.partitionBy("dim")
     w = wd.orderBy("val", "vec_id")
     r = e.withColumn("rk", F.row_number().over(w)).withColumn(

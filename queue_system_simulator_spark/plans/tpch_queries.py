@@ -620,10 +620,10 @@ WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
 """,
     description="TPC-H Q15 (top supplier): quarter revenue per supplier, "
     "then the scalar max is a one-row aggregate cross-joined back "
-    "broadcast (the tpch_q11 pattern) — no empty-partition window, so no "
-    "single task ever holds the per-supplier frame (millions of rows at "
-    "100 TB); the fact table is scanned once, and the comparison happens "
-    "on the exact decimal before the final double cast.",
+    "broadcast (the tpch_q11_important_stock pattern) — no empty-partition "
+    "window, so no single task ever holds the per-supplier frame (millions "
+    "of rows at 100 TB); the fact table is scanned once, and the comparison "
+    "happens on the exact decimal before the final double cast.",
 )
 def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(

@@ -60,3 +60,22 @@ def test_driver_window_is_exactly_fifty_and_oracled():
     for name, spec in QUERIES.items():
         if spec.oracle is None:
             assert name not in q, name
+
+
+# A snake_case token with one of these prefixes in a description names a
+# query of the registry.
+_SNAKE_TOKEN = re.compile(r"\b[a-z][a-z0-9]*(?:_[a-z0-9]+)+\b")
+_FAMILY_PREFIXES = (
+    "embed_", "kmeans_", "ivf_", "pq_", "sq8_", "lsh_", "minhash_", "dedup_",
+    "tpch_q", "streaming_", "kernel_", "fifo_",
+)
+
+
+def test_descriptions_name_only_registered_queries():
+    unknown = sorted(
+        (name, token)
+        for name, spec in QUERIES.items()
+        for token in _SNAKE_TOKEN.findall(spec.description)
+        if token.startswith(_FAMILY_PREFIXES) and token not in QUERIES
+    )
+    assert not unknown, unknown

@@ -1,6 +1,9 @@
 """Value parity with the DuckDB oracle for every query built on the shared
-near-dup stages of ``plans/llm_queries.py`` (shingle, MinHash signature,
-LSH banding, prefix filter, posting-list pairs, exact-overlap verify).
+stages of ``plans/llm_queries.py``: the near-dup stages (shingle, MinHash
+signature, LSH banding, prefix filter, posting-list pairs, exact-overlap
+verify) and the embedding-search stages (load and cast, cosine, squared
+L2, per-label means into centroids or PQ codebooks, IVF cell shortlist,
+PQ distances and codes, SQ8 codes).
 
 Each query runs through ``tools/check_oracle.py``'s own comparison (row
 count, column names, dtypes and an order-insensitive value hash), so a
@@ -43,6 +46,32 @@ PAIR_QUERIES = [
     "dedup_keep_best_quality",
 ]
 
+EMBEDDING_QUERIES = [
+    "array_functions_showcase",
+    "quantile_normalize_embeddings",
+    "embed_cosine_topk",
+    "embed_ivf_centroids",
+    "embed_ivf_probe_topk",
+    "embed_lsh_bucket_topk",
+    "embed_near_dup_pairs",
+    "embed_knn_graph",
+    "kmeans_assign",
+    "kmeans_medoid_keep",
+    "pq_codebook_assign",
+    "pq_adc_topk",
+    "ivf_pq_topk",
+    "pq_recall_at_k",
+    "semdedup_prune",
+    "embed_sq8_quantize",
+    "sq8_rerank_topk",
+    "ivf_recall_at_k",
+    "embed_outlier_flags",
+    "hybrid_rrf_topk",
+    "hard_negative_mining",
+    "ivf_nprobe_sweep",
+    "retrieval_ndcg_eval",
+]
+
 
 def _load_check_oracle():
     path = ROOT / "tools" / "check_oracle.py"
@@ -62,7 +91,7 @@ def con(sf_dir):
     c.close()
 
 
-@pytest.mark.parametrize("name", PAIR_QUERIES)
+@pytest.mark.parametrize("name", PAIR_QUERIES + EMBEDDING_QUERIES)
 def test_pair_query_matches_oracle(spark, con, sf_dir, name):
     status, detail = check_oracle.compare_query(spark, con, QUERIES[name], sf_dir)
     assert status == "PASS", f"{name}: {detail}"

@@ -269,11 +269,11 @@ def test_sq8_rerank_cosines_are_exact(spark, sf_dir):
     assert sims == sorted(sims, reverse=True)
     # brute-force cosine for every candidate id (top-k frame is a superset
     # only for high sims; recompute directly instead)
-    from queue_system_simulator_spark.plans.llm_queries import _as_double, _dot
+    from queue_system_simulator_spark.plans.llm_queries import _dot
     from queue_system_simulator_spark.schema import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     cos = F.round(

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import shutil
@@ -49,3 +50,32 @@ def test_every_tool_imports_the_package_from_its_own_checkout(tmp_path):
         assert Path(pkg_file).resolve().is_relative_to(tmp_path.resolve()), (
             tool, pkg_file,
         )
+
+
+def test_mask_plan_masks_every_process_wide_counter():
+    spec = importlib.util.spec_from_file_location(
+        "capture_plans", ROOT / "tools" / "capture_plans.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    raw = (
+        "(3) Project\n"
+        "Output [2]: [vec_id#103L, transform(embedding#104, lambdafunction("
+        "cast(lambda x_23#107 as double), lambda x_23#107, false)) AS v#106]\n"
+        "zip_with(qv#7, c#8, lambdafunction((lambda x_91#9 - lambda y_92#10)"
+        ", lambda x_91#9, lambda y_92#10, false))\n"
+        "(5) Scan ExistingRDD[id#1L]  MapPartitionsRDD[42] plan_id=357\n"
+        "vec_id, tax_1, label\n"
+    )
+    assert mod.mask_plan(raw) == (
+        "(3) Project\n"
+        "Output [2]: [vec_id#NL, transform(embedding#N, lambdafunction("
+        "cast(lambda x_N#N as double), lambda x_N#N, false)) AS v#N]\n"
+        "zip_with(qv#N, c#N, lambdafunction((lambda x_N#N - lambda y_N#N)"
+        ", lambda x_N#N, lambda y_N#N, false))\n"
+        "(5) Scan ExistingRDD[id#NL]  MapPartitionsRDD[N] plan_id=N\n"
+        "vec_id, tax_1, label\n"
+    )
+    # the two dumps of one plan taken at different counter values agree
+    shifted = raw.replace("#10", "#910").replace("x_23", "x_723")
+    assert mod.mask_plan(shifted) == mod.mask_plan(raw)
