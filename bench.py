@@ -275,15 +275,10 @@ def main() -> None:
                 samples = []
                 break
             finally:
-                # queries cache intermediates (shingle/signature frames);
-                # drop them so storage memory can't bleed pressure into later
-                # timings, and nudge the JVM so the context cleaner releases
-                # broadcast/shuffle debt before the next timed run
-                from queue_system_simulator_spark.operators.statistics import (
-                    release_pinned,
-                )
-
-                release_pinned()  # two-phase helper pins (post-materialize)
+                # some queries still cache intermediates; drop them so
+                # storage memory can't bleed pressure into later timings,
+                # and nudge the JVM so the context cleaner releases
+                # checkpoint/broadcast/shuffle debt before the next timed run
                 spark.catalog.clearCache()
                 spark.sparkContext._jvm.System.gc()
         if samples:

@@ -35,42 +35,25 @@ from queue_system_simulator_spark.operators.transforms import REJECTED_SENTINEL
 NUM_EXTERNAL_APIS = 5
 EXTERNAL_API_RPM_LIMIT = 60
 
-#: Cached range-partitioned frames pinned by the two-phase helpers
-#: (:func:`global_row_number` / :func:`global_cumsum` /
-#: :func:`global_cummax`).  The cache is LOAD-BEARING until the consuming
-#: query materializes: the offset pass collected per-partition counts
-#: under one physical execution, and a recompute may not reproduce that
-#: partitioning (AQE can coalesce the range shuffle differently under
-#: fresh runtime stats — observed as a 17th ntile bucket when an eager
-#: unpersist forced a recompute), so frames must NOT be unpersisted
-#: behind a still-lazy result.  Callers that have materialized their
-#: results release storage with :func:`release_pinned` (bench.py's
-#: per-query ``spark.catalog.clearCache()`` does the same thing
-#: wholesale); within one long session any frame not explicitly released
-#: is reclaimed by Spark's LRU block eviction — a deliberate, documented
-#: reliance, not a leak: eviction after materialization is harmless, and
-#: eviction before it falls back to recompute only for the rare consumer
-#: that never ran, where a re-collected offset pass would also re-run.
-_PINNED: list[DataFrame] = []
-
-
-def _pin(frame: DataFrame) -> None:
-    _PINNED.append(frame)
+# The two-phase helpers (:func:`global_row_number`, :func:`global_cumsum`,
+# :func:`global_cummax`) hold their range-partitioned frame as a lazy local
+# checkpoint, filled by the one job that collects the per-bucket partials.
+# The checkpoint is load-bearing: the offsets were collected from that
+# bucket membership, and a recompute may not reproduce it (AQE can
+# coalesce the range shuffle differently under fresh runtime stats —
+# observed as a 17th ntile bucket when an early unpersist forced one).
+# A checkpoint is never recomputed: Spark frees its blocks once no frame
+# reads it any more, and a block lost with an executor fails the job
+# instead of silently diverging.
 
 
 def release_pinned() -> None:
-    """Unpersist every frame pinned by the two-phase rank helpers.
+    """No-op, kept only because ``perfbench/run.py`` still imports it.
 
-    Call after the consuming queries have been materialized (tests/bench
-    teardown).  Calling earlier risks the AQE recompute divergence
-    documented above — prefer finishing the action first.
+    The helpers' frames are local checkpoints that Spark frees once the
+    result frame is unreachable, so there is nothing to release.
     """
-    while _PINNED:
-        frame = _PINNED.pop()
-        try:
-            frame.unpersist(blocking=False)
-        except Exception:
-            pass
+
 
 PERCENTILES = (0.5, 0.75, 0.9, 0.99)
 
@@ -351,11 +334,10 @@ def global_row_number(
     two-phase range-partition scheme:
 
     1. ``repartitionByRange`` on the order columns — Spark's distributed
-       sort machinery (sampled bounds, ordered buckets); the frame is
-       cached so the bucket membership seen by the offset pass is the
-       membership the rank pass reads (recomputation would reuse the same
-       sampled bounds — the partitioner seed is derived from the RDD —
-       but the cache makes it airtight and pays for the second pass);
+       sort machinery (sampled bounds, ordered buckets); the frame is a
+       local checkpoint, so the bucket membership seen by the offset pass
+       is the membership the rank pass reads (see the note above
+       :func:`release_pinned`);
     2. a per-bucket count aggregate → cumulative offsets.  Only
        O(parallelism) rows reach the driver and go back broadcast;
     3. per-bucket ``row_number`` (every bucket ranks in parallel) plus the
@@ -378,9 +360,8 @@ def global_row_number(
     parts = (
         df.repartitionByRange(slots, *order_by)
         .withColumn("__gr_pid", F.spark_partition_id())
-        .cache()
+        .localCheckpoint(eager=False)
     )
-    _pin(parts)
     counts = {
         r["__gr_pid"]: r["c"]
         for r in parts.groupBy("__gr_pid")
@@ -453,8 +434,8 @@ def global_cumsum(
     Spark plans ``Window.orderBy(...)`` with no partition as one task
     holding every row.  This computes the identical prefix sum two-phase:
 
-    1. ``repartitionByRange`` on (group + order) columns, cached so both
-       passes see one bucket membership;
+    1. ``repartitionByRange`` on (group + order) columns, checkpointed
+       so both passes see one bucket membership;
     2. per (bucket, group) partial sums → driver (O(parallelism × groups)
        rows — callers must keep ``group_by`` low-cardinality, which is the
        regime where the hazard exists at all; high-cardinality groups
@@ -479,9 +460,8 @@ def global_cumsum(
         df.withColumn("__cs_v", v.cast("long"))
         .repartitionByRange(slots, *group_by, *order_by)
         .withColumn("__cs_pid", F.spark_partition_id())
-        .cache()
+        .localCheckpoint(eager=False)
     )
-    _pin(parts)
     partials = (
         parts.groupBy("__cs_pid", *group_by)
         .agg(F.sum("__cs_v").alias("s"))
@@ -529,9 +509,8 @@ def global_cummax(
     global prefix sum; max is associative and prefix-decomposable the same
     way, so the identical two-phase scheme applies:
 
-    1. ``repartitionByRange`` on the order columns (cached; recompute is
-       deterministic under the total-order contract — see
-       :func:`global_row_number`);
+    1. ``repartitionByRange`` on the order columns, checkpointed as in
+       :func:`global_row_number`;
     2. per-bucket max → driver (O(parallelism) rows) → EXCLUSIVE running
        max per bucket (null for the first bucket), broadcast back;
     3. in-bucket running max window (every bucket in parallel) combined
@@ -550,9 +529,8 @@ def global_cummax(
         df.withColumn("__cm_v", v.cast("long"))
         .repartitionByRange(slots, *order_by)
         .withColumn("__cm_pid", F.spark_partition_id())
-        .cache()
+        .localCheckpoint(eager=False)
     )
-    _pin(parts)
     partials = (
         parts.groupBy("__cm_pid").agg(F.max("__cm_v").alias("m")).collect()
     )

@@ -121,51 +121,6 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     return df.repartition(slots)
 
 
-def materialize(df: DataFrame) -> DataFrame:
-    """Cache ``df`` and eagerly fill the cache with one cheap action.
-
-    A ``.cache()`` alone is lazy: when a plan's independent subtrees all
-    consume the cached frame, Spark schedules them concurrently and each
-    racing stage recomputes the same partitions before any of them finishes
-    populating the cache (stage-level profile of minhash_verified_pairs:
-    three concurrent stages each re-ran the full tokenize+hash pipeline;
-    the BlockManager's "block already exists; not re-adding" warnings are
-    this race).  One ``count()`` barrier up front makes every consumer a
-    cache *read*.  The action itself is O(1) driver-side — the data stays
-    distributed — so the pattern holds at any scale; it trades one extra
-    scheduling round-trip for never duplicating the expensive lineage.
-    """
-    df = df.cache()
-    df.count()
-    return df
-
-
-def materialize_many(*dfs: DataFrame) -> list[DataFrame]:
-    """``materialize`` several INDEPENDENT frames with overlapping fills.
-
-    ``materialize`` is a serial driver barrier; a query that needs two
-    cached frames with no dependency between them would pay the two fill
-    jobs back to back, leaving the cluster idle through each job's tail.
-    Submitting the fill actions from a small driver thread pool lets the
-    second job's tasks back-fill executors freed by the first job's
-    stragglers (guide §2.6 — actions are only sequential because driver
-    code calls them sequentially; the scheduler happily runs several jobs
-    at once).  Callers must only pass frames that do NOT consume each
-    other — a dependent frame would race the fill it reads (the exact
-    race ``materialize`` exists to prevent).
-    """
-    dfs = [df.cache() for df in dfs]
-    if len(dfs) <= 1:
-        for df in dfs:
-            df.count()
-        return list(dfs)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        list(pool.map(lambda d: d.count(), dfs))
-    return list(dfs)
-
-
 def sliding_index_sql(arr: str, width: int) -> str:
     """SQL snippet: 1-based start positions of ``width``-token sliding
     windows over array column ``arr`` — EMPTY when the array is shorter

@@ -30,11 +30,18 @@ from queue_system_simulator_spark.plans.registry import (
 )
 from queue_system_simulator_spark.schema import load_table
 from queue_system_simulator_spark.operators.transforms import (
-    materialize,
-    materialize_many,
     sliding_index_sql,
     spread,
 )
+
+# Frames that several independent subtrees of one plan read are eager
+# local checkpoints (``localCheckpoint()``).  A lazy ``.cache()`` is not
+# enough: Spark runs the consumers' stages concurrently, and each
+# recomputes the partitions before any has filled the cache (BlockManager's
+# "block already exists" warnings; profiled on minhash_verified_pairs as
+# three stages re-running tokenize + hash).  The one fill job makes every
+# consumer a block read; Spark frees the blocks once no frame reads them,
+# and a block lost with an executor fails the job instead of recomputing.
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _STOP_SQL = "('" + "','".join(STOPWORDS) + "')"
@@ -294,7 +301,7 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlined — the whole tokenize+distinct pipeline re-evaluates 3× per row
     on the UN-spread scan partitions (measured 0.14 s → 3.2 s at sf0.1).
     Callers that need the array form use :func:`_shingle_arrays` and must
-    materialize it before fanning out."""
+    checkpoint it before fanning out."""
     return _doc_tokens(spark, sf_dir, None).select(
         "doc_id",
         "source",
@@ -395,7 +402,7 @@ WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.05
     "join-on-shingle, never all-pairs. Integer set sizes → exact.",
 )
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    arrs = materialize(_shingle_arrays(spark, sf_dir))
+    arrs = _shingle_arrays(spark, sf_dir).localCheckpoint()
     # distinct-shingle counts straight off the per-doc array — no groupBy
     # pass over the exploded frame
     sizes = arrs.select("doc_id", F.size("shings").alias("n_sh"))
@@ -1279,7 +1286,7 @@ def _pq_adc_top10(vecs: DataFrame, cb: DataFrame) -> DataFrame:
     """``(vec_id, adc_dist)``: the 10 vectors of ``vecs`` nearest the query
     vector (which ``vecs`` must hold) by PQ asymmetric distance — the sum
     of its 4 code lookups in the query's broadcast L2 table."""
-    d = _pq_distances(vecs, cb).cache()
+    d = _pq_distances(vecs, cb).localCheckpoint()
     codes = _pq_codes(d).select("vec_id", "m", F.col("b.label").alias("code"))
     lut = d.filter(F.col("vec_id") == 0).select(
         "m", F.col("label").alias("code"), F.col("l2").alias("q_l2")
@@ -2042,7 +2049,7 @@ JOIN sizes sb ON c.doc_b = sb.doc_id
 def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize pass serves both stages, held as the per-doc ARRAY frame
     # (one row per doc, map-side-distinct — no shingle-string shuffle at
-    # all).  LAZILY cached, not materialized: the signature fill right
+    # all).  LAZILY cached, not checkpointed: the signature fill right
     # below consumes arrs EXACTLY ONCE (explode → one groupBy), so that
     # single job populates the arrs cache as a side effect — one driver
     # barrier instead of two.  The multi-consumer race the eager fill
@@ -2052,10 +2059,10 @@ def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run in the FINAL action, after wide's fill has populated the cache.
     arrs = _shingle_arrays(spark, sf_dir).cache()
     sh_full = arrs.select("doc_id", F.explode("shings").alias("shingle"))
-    # wide feeds the band self-join's two sides: materialize, or the
-    # consumers race to recompute it (profiled: three ~3 s band-join
+    # wide feeds the band self-join's two sides: checkpoint it eagerly, or
+    # the consumers race to recompute it (profiled: three ~3 s band-join
     # stages for one logical build).  This fill also fills arrs (above).
-    wide = materialize(_minhash_wide(spark, sf_dir, sh=sh_full))
+    wide = _minhash_wide(spark, sf_dir, sh=sh_full).localCheckpoint()
     cand = _lsh_candidates(wide)
     # verify: |A ∩ B| and both set sizes straight off the per-doc arrays
     # (zero-overlap band false positives keep n_inter = 0)
@@ -2159,13 +2166,13 @@ def q_bigram_lm_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"transform({sliding_index_sql('toks', 2)}, "
         "i -> struct(element_at(toks, i) AS a, element_at(toks, i + 1) AS b))"
     )
-    # materialized: big feeds THREE independent exchanges (c_ab, c_a, and
+    # checkpointed: big feeds THREE independent exchanges (c_ab, c_a, and
     # the scoring join) — left lazy, each subtree re-ran the tokenize +
     # bigram explode (profiled: three ~6–12 s stages for one logical pass)
-    big = materialize(
-        toked.select("doc_id", F.explode(pairs).alias("p")).select(
-            "doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b")
-        )
+    big = (
+        toked.select("doc_id", F.explode(pairs).alias("p"))
+        .select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .localCheckpoint()
     )
     cab = big.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab"))
     ca = big.groupBy("a").agg(F.count(F.lit(1)).alias("c_a"))
@@ -2722,11 +2729,13 @@ def q_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i -> md5(concat_ws(' ', slice(toks, i, 8))))"
     )
     w = toked.select("doc_id", F.explode(wins).alias("whash"))
-    # materialized: per feeds both the corpus total and the scoring join —
+    # checkpointed: per feeds both the corpus total and the scoring join —
     # left lazy, the two subtrees each re-ran the window-hash explode +
     # groupBy (profiled: two near-identical 9 MB-shuffle stages)
-    per = materialize(
-        w.groupBy("doc_id", "whash").agg(F.count(F.lit(1)).alias("k"))
+    per = (
+        w.groupBy("doc_id", "whash")
+        .agg(F.count(F.lit(1)).alias("k"))
+        .localCheckpoint()
     )
     tot = per.groupBy("whash").agg(F.sum("k").alias("total"))
     dup_k = F.when(F.col("total") > 1, F.col("k")).otherwise(0)
@@ -3330,11 +3339,13 @@ FROM score s, thr t
 )
 def q_ppl_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scored once, read twice (threshold scalar + keep flags): eagerly
-    # materialized — lazily cached, the two consumers raced and each
+    # checkpointed — lazily cached, the two consumers raced and each
     # re-ran the full bigram-LM scoring (profiled: three ~6–11 s stages
     # re-deriving the bigram joins for one logical score pass)
-    score = materialize(
-        q_bigram_lm_doc_score(spark, sf_dir).select("doc_id", "avg_logprob")
+    score = (
+        q_bigram_lm_doc_score(spark, sf_dir)
+        .select("doc_id", "avg_logprob")
+        .localCheckpoint()
     )
     thr = score.agg(
         F.round(
@@ -4609,7 +4620,7 @@ WHERE greatest(CAST(i.n_inter AS DOUBLE) / sa.n_sh,
     "containment-heavy pairs usually keep the superset document.",
 )
 def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    arrs = materialize(_shingle_arrays(spark, sf_dir))
+    arrs = _shingle_arrays(spark, sf_dir).localCheckpoint()
     sizes = arrs.select("doc_id", F.size("shings").alias("n_sh"))
     inter = _posting_pairs(arrs)
     sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
@@ -4816,16 +4827,18 @@ def q_quality_dup_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact ntile(10) via the two-phase range-partition rank — identical
     # to the global ntile window but with no single-partition sort, so
     # the whole corpus never funnels through one task.  The joined input
-    # is materialized first: repartitionByRange executes its child TWICE
+    # is checkpointed first: repartitionByRange executes its child TWICE
     # (range-bound sampling pass + the real shuffle), and this child is
     # the expensive quality ⋈ dup-span join (profiled: two near-identical
     # 11–14 s stages for one logical build).
-    joined = materialize(
-        q.join(d, "doc_id", "left").select(
+    joined = (
+        q.join(d, "doc_id", "left")
+        .select(
             "doc_id",
             "quality_score",
             F.coalesce(F.col("dup_ppm"), F.lit(0)).alias("dup_ppm"),
         )
+        .localCheckpoint()
     )
     j = exact_ntile(
         joined,
@@ -5726,7 +5739,7 @@ WHERE CAST(i.n_inter AS DOUBLE) / (na.n + nb.n - i.n_inter) >= {PF_TAU}
 def q_prefix_filter_jaccard_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    arrs = materialize(_shingle_arrays(spark, sf_dir))
+    arrs = _shingle_arrays(spark, sf_dir).localCheckpoint()
     # per-doc size comes off the array map-side; the exploded frame then
     # carries it along, so the doc-partitioned window only computes the
     # rarest-first rank
@@ -5735,13 +5748,13 @@ def q_prefix_filter_jaccard_pairs(
     )
     # one shuffle on doc_id produces the rarest-first rank; the size rides
     # along through the candidate join so the verify stage needs no re-join
-    # with a doc-size frame.  Materialized: the candidate pass below and
+    # with a doc-size frame.  Checkpointed: the candidate pass below and
     # the downstream lineage would otherwise each recompute the df-join +
     # window (profiled: two identical 7 MB → 4 MB stages, 17.7 + 11.1 s
     # executor, for one logical pref build).
-    pref = materialize(_prefix_tokens(tok))
-    # candidate generation: equi-join of the MATERIALIZED pref with itself
-    # on the prefix shingle (doc_a < doc_b) — both sides read the cache, so
+    pref = _prefix_tokens(tok).localCheckpoint()
+    # candidate generation: equi-join of the CHECKPOINTED pref with itself
+    # on the prefix shingle (doc_a < doc_b) — both sides read the blocks, so
     # the old duplicated-lineage cost of the self-join is gone, and the
     # pair emission runs inside whole-stage codegen.  (A posting-list
     # variant — collect_list per shingle + a nested transform/slice pair
@@ -6111,29 +6124,23 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(MH_DOC_SAMPLE)
     )
-    # materialized ARRAY frame: feeds the exploded tok (dfreq + pref +
+    # checkpointed ARRAY frame: feeds the exploded tok (dfreq + pref +
     # signature build) and the array-intersect verify — lazily-cached
     # frames with that many independent consumers get recomputed
-    # concurrently before the cache fills (transforms.materialize)
-    arrs_s = materialize(
-        _shingle_arrays(spark, sf_dir, only_docs=sdocs).select(
-            "doc_id", "shings"
-        )
+    # concurrently before the cache fills (see the note at the imports)
+    arrs_s = (
+        _shingle_arrays(spark, sf_dir, only_docs=sdocs)
+        .select("doc_id", "shings")
+        .localCheckpoint()
     )
     tok = arrs_s.select(
         "doc_id", F.size("shings").alias("n"), F.explode("shings").alias("shingle")
     )
-    # materialized: the candidate self-join reads pref TWICE and the
+    # checkpointed: the candidate self-join reads pref TWICE and the
     # sampled / verify lineage a third time — without the eager fill the
     # df-join + window re-execute per consumer (sample-bounded, tiny).
-    # pref and the minhash signature frame below both derive from the
-    # cached tok and are independent of EACH OTHER, so their fill jobs run
-    # concurrently from a driver thread pool (guide §2.6): the signature
-    # job's tasks back-fill executors freed by the pref job's tail instead
-    # of waiting behind a serial barrier.
-    pref, mh_wide = materialize_many(
-        _prefix_tokens(tok), _minhash_wide(spark, sf_dir, sh=tok)
-    )
+    pref = _prefix_tokens(tok).localCheckpoint()
+    mh_wide = _minhash_wide(spark, sf_dir, sh=tok).localCheckpoint()
     cand = (
         pref.alias("a")
         .join(
@@ -6171,16 +6178,16 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = inter.filter(jacc >= PF_TAU).select(
         "doc_a", "doc_b", F.round(jacc, 6).alias("jaccard")
     )
-    # signatures from the SAME cached sampled-doc shingle frame: a doc's
+    # signatures from the SAME checkpointed sampled-doc shingle frame: a doc's
     # signature depends only on its own shingles, and only sampled-doc
     # pairs are consulted, so restricting the 16-min aggregate to the
     # sample is value-identical to the full-corpus pass (the oracle keeps
     # the full-corpus mh CTE — the pair join filters it to the same rows)
     # while skipping a second corpus-wide tokenize+explode.
-    # materialized (fill overlapped with pref above): the a/b pair sides
+    # checkpointed (mh_wide above): the a/b pair sides
     # below both consume mh — lazily the 16-md5 signature groupBy re-ran
     # once per side (profiled: three near-identical 11–18 s stages over
-    # the cached tok frame)
+    # the checkpointed tok frame)
     mh = _minhash_long(mh_wide)
     a = mh.select(
         F.col("doc_id").alias("doc_a"),
@@ -6538,12 +6545,12 @@ def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(BSE_DOC_SAMPLE)
     )
-    # materialized ARRAY frame: the truth self-join, the prefix filter and
+    # checkpointed ARRAY frame: the truth self-join, the prefix filter and
     # the signature build all read it (see q_minhash_estimate_error)
-    arrs_s = materialize(
-        _shingle_arrays(spark, sf_dir, only_docs=sdocs).select(
-            "doc_id", "shings"
-        )
+    arrs_s = (
+        _shingle_arrays(spark, sf_dir, only_docs=sdocs)
+        .select("doc_id", "shings")
+        .localCheckpoint()
     )
     tok = arrs_s.select(
         "doc_id", F.size("shings").alias("n"), F.explode("shings").alias("shingle")
@@ -6585,7 +6592,7 @@ def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # signatures from the SAME cached sampled shingle frame (a doc's
+    # signatures from the SAME checkpointed sampled shingle frame (a doc's
     # signature depends only on its own shingles)
     cand_lsh = _lsh_candidates(
         _minhash_wide(spark, sf_dir, sh=tok)

@@ -15,14 +15,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("engine-tests", shuffle_partitions=8)
-    yield s
-    # Release frames pinned by the two-phase rank helpers AFTER every
-    # test has materialized its results (the safe point per
-    # operators/statistics.py's AQE-recompute note).
-    from queue_system_simulator_spark.operators.statistics import release_pinned
-
-    release_pinned()
+    return get_spark("engine-tests", shuffle_partitions=8)
 
 
 @pytest.fixture(scope="session")

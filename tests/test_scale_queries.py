@@ -35,10 +35,14 @@ def test_global_cumsum_matches_window_ungrouped(spark):
     df = spark.range(1000).select(
         F.col("id").alias("k"), (F.col("id") % 7 + 1).alias("v")
     ).repartition(16)
-    got = global_cumsum(df, ["k"], "v", out_col="got", inclusive=True)
     ref = _window_cumsum(df, ["k"], "v", inclusive=True)
-    joined = got.join(ref.select("k", "expected"), "k")
-    assert joined.filter(F.col("got") != F.col("expected")).count() == 0
+    # a cache cleared between build and collect must not change the sums
+    for clear_cache in (False, True):
+        got = global_cumsum(df, ["k"], "v", out_col="got", inclusive=True)
+        if clear_cache:
+            spark.catalog.clearCache()
+        joined = got.join(ref.select("k", "expected"), "k")
+        assert joined.filter(F.col("got") != F.col("expected")).count() == 0
 
 
 def test_global_cumsum_exclusive_and_grouped(spark):
@@ -47,13 +51,16 @@ def test_global_cumsum_exclusive_and_grouped(spark):
         F.col("id").alias("k"),
         F.lit(1).alias("v"),
     ).repartition(16)
-    got = global_cumsum(
-        df, ["k"], "v", out_col="got", group_by=["g"], inclusive=False
-    )
     ref = _window_cumsum(df, ["k"], "v", group=["g"], inclusive=False)
-    joined = got.join(ref.select("g", "k", "expected"), ["g", "k"])
-    assert joined.count() == 600
-    assert joined.filter(F.col("got") != F.col("expected")).count() == 0
+    for clear_cache in (False, True):
+        got = global_cumsum(
+            df, ["k"], "v", out_col="got", group_by=["g"], inclusive=False
+        )
+        if clear_cache:
+            spark.catalog.clearCache()
+        joined = got.join(ref.select("g", "k", "expected"), ["g", "k"])
+        assert joined.count() == 600
+        assert joined.filter(F.col("got") != F.col("expected")).count() == 0
 
 
 # ------------------------------------------------------- range shard layout
@@ -159,10 +166,13 @@ def test_global_cummax_matches_window(spark):
 
     rows = [(i, (i * 37) % 19) for i in range(200)]
     df = spark.createDataFrame(rows, "k long, v long")
-    for inclusive in (True, False):
+    # the last case clears the cache between build and collect
+    for inclusive, clear_cache in ((True, False), (False, False), (True, True)):
         got = global_cummax(
             df, [F.asc("k")], "v", out_col="got", inclusive=inclusive
         )
+        if clear_cache:
+            spark.catalog.clearCache()
         w = Window.orderBy("k").rowsBetween(
             Window.unboundedPreceding, 0 if inclusive else -1
         )
@@ -171,7 +181,7 @@ def test_global_cummax_matches_window(spark):
         bad = j.filter(
             ~F.col("got").eqNullSafe(F.col("expected"))
         ).count()
-        assert bad == 0, f"inclusive={inclusive}"
+        assert bad == 0, f"inclusive={inclusive} clear_cache={clear_cache}"
 
 
 def test_zorder_bounds_both_dimensions(spark, sf_dir):

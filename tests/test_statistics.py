@@ -254,18 +254,23 @@ class TestGlobalRank:
 
         df = self._sample(spark)
         order = [F.desc("v"), F.col("s"), F.col("id")]
-        got, n = global_row_number(df, order, out_col="rn")
-        assert n == df.count()
         truth = df.withColumn(
             "rn", F.row_number().over(Window.orderBy(*order))
         )
-        assert (
-            got.select("id", "rn")
-            .exceptAll(truth.select("id", "rn"))
-            .count()
-            == 0
-        )
-        assert got.count() == n
+        # clearing the cache between build and collect must not change the
+        # ranks: the offsets stay tied to the bucket membership they came from
+        for clear_cache in (False, True):
+            got, n = global_row_number(df, order, out_col="rn")
+            if clear_cache:
+                spark.catalog.clearCache()
+            assert n == df.count()
+            assert (
+                got.select("id", "rn")
+                .exceptAll(truth.select("id", "rn"))
+                .count()
+                == 0
+            ), clear_cache
+            assert got.count() == n
 
     def test_exact_ntile_matches_window(self, spark):
         from pyspark.sql import Window
@@ -275,10 +280,17 @@ class TestGlobalRank:
             exact_ntile,
         )
 
-        for n_rows, k in [(523, 10), (520, 4), (7, 10), (1, 3)]:
+        # the last case clears the cache between build and collect, which
+        # must not move a bucket
+        for n_rows, k, clear_cache in [
+            (523, 10, False), (520, 4, False), (7, 10, False), (1, 3, False),
+            (523, 10, True),
+        ]:
             df = self._sample(spark, n=n_rows)
             order = [F.col("v"), F.col("id")]
             got = exact_ntile(df, k, order, out_col="b")
+            if clear_cache:
+                spark.catalog.clearCache()
             truth = df.withColumn(
                 "b", F.ntile(k).over(Window.orderBy(*order))
             )
@@ -287,7 +299,7 @@ class TestGlobalRank:
                 .exceptAll(truth.select("id", "b"))
                 .count()
                 == 0
-            ), (n_rows, k)
+            ), (n_rows, k, clear_cache)
 
     def test_global_row_number_empty(self, spark):
         from pyspark.sql import functions as F

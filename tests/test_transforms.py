@@ -104,29 +104,3 @@ def test_sliding_index_sql_matches_python_for_all_widths(spark):
         for n in range(0, 13):
             want = list(range(1, n - width + 2))
             assert got[n] == want, (width, n, got[n])
-
-
-def test_materialize_many_overlapped_fills_match_serial(spark):
-    """materialize_many must be value-identical to serial materialize and
-    leave every frame cached (each consumer reads the cache, not the
-    lineage) — the §2.6 overlap changes scheduling only."""
-    from queue_system_simulator_spark.operators.transforms import (
-        materialize_many,
-    )
-
-    a = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 7).alias("m")
-    )
-    b = spark.range(0, 500).select(
-        F.col("id"), (F.col("id") * 3).alias("t")
-    )
-    ma, mb = materialize_many(a, b)
-    assert ma.storageLevel.useMemory and mb.storageLevel.useMemory
-    assert ma.count() == 1000 and mb.count() == 500
-    assert ma.agg(F.sum("m")).first()[0] == sum(i % 7 for i in range(1000))
-    assert mb.agg(F.sum("t")).first()[0] == sum(i * 3 for i in range(500))
-    # single-frame path degrades to plain materialize
-    (mc,) = materialize_many(spark.range(0, 10))
-    assert mc.storageLevel.useMemory and mc.count() == 10
-    for df in (ma, mb, mc):
-        df.unpersist()

@@ -2,8 +2,8 @@
 
 Usage: python tools/capture_plans.py <outdir> <suffix> <query> [query ...]
 
-Writes ``<outdir>/<query>_<suffix>.txt`` — the before/after plan evidence
-the optimization rounds commit under ``plans/r12/``. The text is masked
+Writes ``<outdir>/<query>_<suffix>.txt``: before/after plan evidence for a
+change, regenerated on demand rather than committed. The text is masked
 (``mask_plan``) before it is written, so two checkouts' dumps taken with
 the same suffix compare with a plain ``diff -r``.
 """

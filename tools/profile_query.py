@@ -52,9 +52,6 @@ def main() -> None:
 
     # warmup (codegen, parquet footers, Python worker pool)
     spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    from queue_system_simulator_spark.operators.statistics import release_pinned
-
-    release_pinned()
     spark.catalog.clearCache()
 
     walls = []
@@ -65,7 +62,6 @@ def main() -> None:
         df = spec.build(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         walls.append(time.time() - t0)
-        release_pinned()
         spark.catalog.clearCache()
     print(f"query={name} sf_dir={sf_dir} walls={[round(w, 3) for w in walls]}")
 
