@@ -1868,8 +1868,8 @@ def q_k_anon_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n")
     )
     # the finest histogram (<=120 rows) feeds four level branches plus the
-    # min/choose path: cache it so the events scan runs once
-    c0 = c0.select("event_type", "bucket", "n").cache()
+    # min/choose path: checkpoint it so the events scan runs once
+    c0 = c0.select("event_type", "bucket", "n").localCheckpoint()
 
     def lift(lvl: int, bucket_expr: str) -> DataFrame:
         return (
@@ -3037,7 +3037,7 @@ def q_hll_precision_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(conv(substr(md5(concat('hll|', CAST(user_id AS STRING))), "
         f"1, {_HLL_HEX}), 16, 10) AS BIGINT)"
     )
-    h = ev.select(F.expr(hv_sql).alias("hv")).cache()
+    h = ev.select(F.expr(hv_sql).alias("hv")).localCheckpoint()
     parts = []
     for p in HLL_SWEEP_PS:
         m = 1 << p

@@ -34,20 +34,26 @@ from queue_system_simulator_spark.operators.transforms import (
     spread,
 )
 
-# Frames that several independent subtrees of one plan read are eager
-# local checkpoints (``localCheckpoint()``).  A lazy ``.cache()`` is not
-# enough: Spark runs the consumers' stages concurrently, and each
-# recomputes the partitions before any has filled the cache (BlockManager's
-# "block already exists" warnings; profiled on minhash_verified_pairs as
-# three stages re-running tokenize + hash).  The one fill job makes every
-# consumer a block read; Spark frees the blocks once no frame reads them,
-# and a block lost with an executor fails the job instead of recomputing.
+# How every query in ``plans/`` holds a frame it reads more than once: as a
+# local checkpoint, never a bare ``.cache()`` or ``.persist()``
+# (tests/test_plans.py rejects both).  A lazy cache races its consumers:
+# Spark runs their stages concurrently, and each recomputes the partitions
+# before any has filled the cache (BlockManager's "block already exists"
+# warnings; profiled on minhash_verified_pairs as three stages re-running
+# tokenize + hash), and nothing frees it.  So a frame that several stages
+# of one job read is an eager ``localCheckpoint()``: one fill job, then
+# every consumer is a block read.  A frame that the first job reading it
+# reads once is ``localCheckpoint(eager=False)``: that job fills it on the
+# way.  Spark frees the blocks once no frame reads them, and a block lost
+# with an executor fails the job instead of recomputing.
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _STOP_SQL = "('" + "','".join(STOPWORDS) + "')"
 
 NUM_MINHASH = 16
 BAND_SIZE = 4
+NEAR_DUP_TAU = 0.5  # "true near-dup" = exact shingle Jaccard >= this
+EVAL_DOC_SAMPLE = 2000  # md5-ranked doc sample of the near-dup evaluators
 
 
 # --------------------------------------------------------------------------
@@ -540,6 +546,28 @@ def _n_match(a: str, b: str) -> Column:
     return sum(
         F.when(F.col(f"{a}{s}") == F.col(f"{b}{s}"), 1).otherwise(0)
         for s in range(NUM_MINHASH)
+    )
+
+
+def _signature_agreement(
+    pairs: DataFrame, wide: DataFrame, a: str, b: str
+) -> DataFrame:
+    """``pairs`` plus ``n_match`` (:func:`_n_match`) of the two docs named
+    by its columns ``a`` and ``b``, whose signatures come from the wide
+    frame by broadcast joins."""
+
+    def side(key: str, prefix: str) -> DataFrame:
+        return F.broadcast(
+            wide.select(
+                F.col("doc_id").alias(key),
+                *[F.col(f"mh_{s}").alias(f"{prefix}{s}") for s in range(NUM_MINHASH)],
+            )
+        )
+
+    return (
+        pairs.join(side(a, "a_"), a)
+        .join(side(b, "b_"), b)
+        .select(*pairs.columns, _n_match("a_", "b_").cast("long").alias("n_match"))
     )
 
 
@@ -2049,15 +2077,10 @@ JOIN sizes sb ON c.doc_b = sb.doc_id
 def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize pass serves both stages, held as the per-doc ARRAY frame
     # (one row per doc, map-side-distinct — no shingle-string shuffle at
-    # all).  LAZILY cached, not checkpointed: the signature fill right
-    # below consumes arrs EXACTLY ONCE (explode → one groupBy), so that
-    # single job populates the arrs cache as a side effect — one driver
-    # barrier instead of two.  The multi-consumer race the eager fill
-    # guards against (profiled in session 2: a lazy cache filled 3×
-    # concurrently, ~30 s duplicated executor time) cannot occur here
-    # because the racing consumers (the verify join's two array sides) only
-    # run in the FINAL action, after wide's fill has populated the cache.
-    arrs = _shingle_arrays(spark, sf_dir).cache()
+    # all).  Lazy: the signature fill right below reads arrs once (explode
+    # → one groupBy) and fills it, before the verify join's two array
+    # sides read it in the final job — one driver barrier instead of two.
+    arrs = _shingle_arrays(spark, sf_dir).localCheckpoint(eager=False)
     sh_full = arrs.select("doc_id", F.explode("shings").alias("shingle"))
     # wide feeds the band self-join's two sides: checkpoint it eagerly, or
     # the consumers race to recompute it (profiled: three ~3 s band-join
@@ -2317,10 +2340,11 @@ FROM tri
     "and the edge list shuffles on its join key like any fact table.",
 )
 def q_pair_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wide = _minhash_wide(spark, sf_dir).cache()
+    # wide feeds the band join's two sides; e is read four times below
+    wide = _minhash_wide(spark, sf_dir).localCheckpoint()
     e = _lsh_candidates(wide).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).cache()
+    ).localCheckpoint()
     e2 = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = e.select(F.col("u").alias("a2"), F.col("v").alias("c2"))
     wedges = e.join(e2, e.v == e2.b)
@@ -2571,17 +2595,23 @@ FROM r{_PR_ITERS}
     "absorb engine summation-order ulps.",
 )
 def q_pagerank_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wide = _minhash_wide(spark, sf_dir).cache()
+    # wide feeds the band join's two sides, and deg is read twice per
+    # iteration; edges is filled by deg's fill and docs by the count
+    wide = _minhash_wide(spark, sf_dir).localCheckpoint()
     pairs = _lsh_candidates(wide)
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
-        .cache()
+        .localCheckpoint(eager=False)
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).cache()
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").cache()
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).localCheckpoint()
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .localCheckpoint(eager=False)
+    )
     n_docs = docs.count()  # plan-time scalar: teleport denominator
     rank = docs.select("doc_id", (F.lit(1.0) / n_docs).alias("rank"))
     src_deg = edges.join(deg, "src")
@@ -3194,7 +3224,7 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.conv(F.substring(F.md5("g"), 1, 2), 16, 10).cast("long").alias("b"),
-    ).cache()  # reused 5x (tgt/bg/totals/bucket-universe/probe): one tokenize pass
+    ).localCheckpoint()  # read 5x (tgt/bg/totals/bucket-universe/probe)
     tgt = feats.filter(F.col("lang") == "en").groupBy("b").agg(
         F.count(F.lit(1)).alias("ct")
     )
@@ -3681,7 +3711,7 @@ def q_incremental_minhash_candidates(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    wide = _minhash_wide(spark, sf_dir).join(src, "doc_id").cache()
+    wide = _minhash_wide(spark, sf_dir).join(src, "doc_id").localCheckpoint()
     bands = _lsh_bands(wide, _minhash_band_keys(), carry=("source",))
     new_b = bands.filter(F.col("source") == "src0")
     corp_b = bands.filter(F.col("source") != "src0")
@@ -3698,26 +3728,9 @@ def q_incremental_minhash_candidates(
         )
         .distinct()
     )
-    sa = wide.select(
-        F.col("doc_id").alias("new_doc"),
-        *[F.col(f"mh_{s}").alias(f"a_{s}") for s in range(NUM_MINHASH)],
-    )
-    sb = wide.select(
-        F.col("doc_id").alias("corpus_doc"),
-        *[F.col(f"mh_{s}").alias(f"b_{s}") for s in range(NUM_MINHASH)],
-    )
-    n_match = _n_match("a_", "b_").cast("long")
-    return (
-        cand.join(F.broadcast(sa), "new_doc")
-        .join(F.broadcast(sb), "corpus_doc")
-        .select(
-            "new_doc",
-            "corpus_doc",
-            n_match.alias("n_match"),
-            F.round(n_match.cast("double") / NUM_MINHASH, 6).alias(
-                "jaccard_est"
-            ),
-        )
+    est = F.col("n_match").cast("double") / NUM_MINHASH
+    return _signature_agreement(cand, wide, "new_doc", "corpus_doc").select(
+        "new_doc", "corpus_doc", "n_match", F.round(est, 6).alias("jaccard_est")
     )
 
 
@@ -3842,7 +3855,54 @@ def q_vocab_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Dedup-sketch evaluation: LSH candidate recall/precision vs exact Jaccard
 # --------------------------------------------------------------------------
 
-LSH_EVAL_TAU = 0.5  # "true near-dup" = exact shingle Jaccard >= this
+
+def _scorecard(
+    cand: DataFrame, truth: DataFrame, by: Sequence[str] = ()
+) -> DataFrame:
+    """Candidate-vs-truth scorecard of two pair frames ``(*keys, doc_a,
+    doc_b)``: per key of ``by``, ``n_candidates``, ``n_true``, ``n_hit``
+    (candidate pairs that are true), ``recall`` = hit / true and
+    ``precision`` = hit / candidates (6 dp, 0.0 when a count is 0).
+
+    The keys live on one side; the other side's count is global and
+    scores every key.  There is one row per key value of the keyed side
+    (one row without keys), and a row whose pair is null lists its key
+    without counting as a pair.
+
+    The count and the hit join both read each frame, so both are held as
+    ONE eager local checkpoint of their tagged union: its one fill job
+    computes the two lineages side by side, where a fill per frame would
+    run them one after the other.
+    """
+    side = F.col("__truth")
+    both = cand.withColumn("__truth", F.lit(False)).unionByName(
+        truth.withColumn("__truth", F.lit(True)), allowMissingColumns=True
+    ).localCheckpoint()
+    cand = both.filter(~side).select(*cand.columns)
+    truth = both.filter(side).select(*truth.columns)
+
+    def count(df: DataFrame, name: str) -> DataFrame:
+        keys = [k for k in by if k in df.columns]
+        return df.groupBy(*keys).agg(F.count("doc_a").alias(name))
+
+    nc, nt = count(cand, "n_candidates"), count(truth, "n_true")
+    nh = count(cand.join(truth, ["doc_a", "doc_b"]), "n_hit")
+    keyed, other = (nt, nc) if len(nt.columns) > 1 else (nc, nt)
+    out = keyed.crossJoin(F.broadcast(other))
+    out = out.join(F.broadcast(nh), list(by), "left") if by else out.crossJoin(nh)
+    hit = F.coalesce(F.col("n_hit"), F.lit(0))
+
+    def ratio(n: str) -> Column:
+        return F.round(hit.cast("double") / F.greatest(F.col(n), F.lit(1)), 6)
+
+    return out.select(
+        *by,
+        "n_candidates",
+        "n_true",
+        hit.alias("n_hit"),
+        ratio("n_true").alias("recall"),
+        ratio("n_candidates").alias("precision"),
+    )
 
 
 @register(
@@ -3851,7 +3911,7 @@ LSH_EVAL_TAU = 0.5  # "true near-dup" = exact shingle Jaccard >= this
 WITH truth AS (
   SELECT doc_a, doc_b
   FROM ({_REGISTRY["ngram_jaccard_pairs"].oracle}) t
-  WHERE jaccard >= {LSH_EVAL_TAU}
+  WHERE jaccard >= {NEAR_DUP_TAU}
 ),
 cand AS (
   SELECT doc_a, doc_b FROM ({_REGISTRY["minhash_lsh_pairs"].oracle}) c
@@ -3867,7 +3927,7 @@ SELECT (SELECT count(*) FROM truth) AS n_true,
 """,
     description="Dedup-sketch quality evaluation: recall and precision of "
     "the MinHash-LSH candidate set against exact shingle-Jaccard truth at "
-    f"tau={LSH_EVAL_TAU} — the measured tradeoff (16 hashes, 4 bands x 4 "
+    f"tau={NEAR_DUP_TAU} — the measured tradeoff (16 hashes, 4 bands x 4 "
     "rows: theory gives P(candidate)=1-(1-s^4)^4) that sizes bands/rows "
     "before running dedup on 100 TB. Truth is the engine's own "
     "ngram_jaccard_pairs plan; candidates are the same MinHash band "
@@ -3877,38 +3937,13 @@ SELECT (SELECT count(*) FROM truth) AS n_true,
     "re-runs per (bands, rows) configuration to pick the operating point.",
 )
 def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # each pair frame feeds two branches (its count + the intersection):
-    # cache so the expensive posting-list / band-join lineage runs once
-    truth = (
-        q_ngram_jaccard_pairs(spark, sf_dir)
-        .filter(F.col("jaccard") >= LSH_EVAL_TAU)
-        .select("doc_a", "doc_b")
-        .cache()
+    truth = q_ngram_jaccard_pairs(spark, sf_dir).filter(
+        F.col("jaccard") >= NEAR_DUP_TAU
     )
     # pairs-only: the candidate set without the carried signature columns
-    cand = _lsh_candidates(_minhash_wide(spark, sf_dir)).cache()
-    hit = truth.intersect(cand)
-    n_true = truth.agg(F.count(F.lit(1)).alias("n_true"))
-    n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-    n_hit = hit.agg(F.count(F.lit(1)).alias("n_hit"))
-    return (
-        n_true.crossJoin(F.broadcast(n_cand))
-        .crossJoin(F.broadcast(n_hit))
-        .select(
-            "n_true",
-            "n_candidates",
-            "n_hit",
-            F.round(
-                F.col("n_hit").cast("double")
-                / F.greatest(F.col("n_true"), F.lit(1)),
-                6,
-            ).alias("recall"),
-            F.round(
-                F.col("n_hit").cast("double")
-                / F.greatest(F.col("n_candidates"), F.lit(1)),
-                6,
-            ).alias("precision"),
-        )
+    cand = _lsh_candidates(_minhash_wide(spark, sf_dir))
+    return _scorecard(cand, truth.select("doc_a", "doc_b")).select(
+        "n_true", "n_candidates", "n_hit", "recall", "precision"
     )
 
 
@@ -5186,46 +5221,22 @@ FROM sweep s CROSS JOIN nc
     "tau/100 double expressions on both engines.",
 )
 def q_lsh_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # one truth row per (tau, pair), the pair nulled below tau: every tau
+    # keeps its row even when no pair reaches it
+    taus = F.array(*[F.lit(t) for t in (30, 40, 50, 60, 70, 80)])
+    keep = F.col("jaccard") >= (
+        F.col("tau_pct").cast("double") / F.lit(100).cast("double")
+    )
     truth = q_ngram_jaccard_pairs(spark, sf_dir).select(
-        "doc_a", "doc_b", "jaccard"
+        F.explode(taus).alias("tau_pct"), "doc_a", "doc_b", "jaccard"
+    )
+    truth = truth.select(
+        "tau_pct", *[F.when(keep, F.col(c)).alias(c) for c in ("doc_a", "doc_b")]
     )
     # pairs-only: the candidate set without the carried signature columns
-    cand = (
-        _lsh_candidates(_minhash_wide(spark, sf_dir))
-        .select("doc_a", "doc_b", F.lit(True).alias("is_cand_raw"))
-        .cache()
-    )
-    flagged = (
-        truth.join(cand, ["doc_a", "doc_b"], "left")
-        .select(
-            "jaccard",
-            F.coalesce(F.col("is_cand_raw"), F.lit(False)).alias("is_cand"),
-        )
-        .withColumn(
-            "tau_pct", F.explode(F.array(*[F.lit(t) for t in (30, 40, 50, 60, 70, 80)]))
-        )
-    )
-    thr = F.col("tau_pct").cast("double") / F.lit(100).cast("double")
-    keep = F.col("jaccard") >= thr
-    sweep = flagged.groupBy("tau_pct").agg(
-        F.sum(F.when(keep, 1).otherwise(0)).alias("n_true"),
-        F.sum(F.when(keep & F.col("is_cand"), 1).otherwise(0)).alias("n_hit"),
-    )
-    nc = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-    return sweep.join(F.broadcast(nc)).select(
-        "tau_pct",
-        "n_true",
-        "n_hit",
-        "n_candidates",
-        F.round(
-            F.col("n_hit").cast("double") / F.greatest(F.col("n_true"), F.lit(1)),
-            6,
-        ).alias("recall"),
-        F.round(
-            F.col("n_hit").cast("double")
-            / F.greatest(F.col("n_candidates"), F.lit(1)),
-            6,
-        ).alias("precision"),
+    cand = _lsh_candidates(_minhash_wide(spark, sf_dir))
+    return _scorecard(cand, truth, ["tau_pct"]).select(
+        "tau_pct", "n_true", "n_hit", "n_candidates", "recall", "precision"
     )
 
 
@@ -5514,7 +5525,7 @@ def q_retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         corpus.crossJoin(F.broadcast(q))
         .select("q_id", "vec_id", "label", _cosine("qv", "v").alias("sim"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
     wq = Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
     truth = (
@@ -5576,7 +5587,7 @@ cand AS (
 truth AS (
   SELECT doc_a, doc_b
   FROM ({{jaccard}}) t
-  WHERE jaccard >= {LSH_EVAL_TAU}
+  WHERE jaccard >= {NEAR_DUP_TAU}
 ),
 nt AS (SELECT count(*) AS n_true FROM truth)
 SELECT c.n_bands,
@@ -5622,47 +5633,23 @@ def q_lsh_bands_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.doc_id").alias("doc_b"),
         )
         .distinct()
-        .cache()
     )
-    truth = (
-        q_ngram_jaccard_pairs(spark, sf_dir)
-        .filter(F.col("jaccard") >= LSH_EVAL_TAU)
-        .select("doc_a", "doc_b")
-        .cache()
+    truth = q_ngram_jaccard_pairs(spark, sf_dir).filter(
+        F.col("jaccard") >= NEAR_DUP_TAU
     )
-    nt = truth.agg(F.count(F.lit(1)).alias("n_true"))
-    n_cand = cand.groupBy("n_bands").agg(
-        F.count(F.lit(1)).alias("n_candidates")
-    )
-    n_hit = (
-        cand.join(truth, ["doc_a", "doc_b"])
-        .groupBy("n_bands")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return (
-        n_cand.join(n_hit, "n_bands", "left")
-        .join(F.broadcast(nt))
-        .select(
-            "n_bands",
-            (F.lit(NUM_MINHASH) / F.col("n_bands"))
-            .cast("long")
-            .alias("rows_per_band"),
-            "n_candidates",
-            "n_true",
-            F.coalesce(F.col("n_hit"), F.lit(0)).alias("n_hit"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0))
-                / F.greatest(F.col("n_true"), F.lit(1)).cast("double"),
-                6,
-            ).alias("recall"),
-        )
+    return _scorecard(cand, truth.select("doc_a", "doc_b"), ["n_bands"]).select(
+        "n_bands",
+        (F.lit(NUM_MINHASH) / F.col("n_bands")).cast("long").alias("rows_per_band"),
+        "n_candidates",
+        "n_true",
+        "n_hit",
+        "recall",
     )
 
 
 # --------------------------------------------------------------------------
 # Prefix-filtered exact similarity join (AllPairs / PPJoin family)
 # --------------------------------------------------------------------------
-PF_TAU = 0.5  # same near-dup bar as LSH_EVAL_TAU — the two paths compare
 
 
 def _prefix_tokens(tok: DataFrame) -> DataFrame:
@@ -5671,7 +5658,7 @@ def _prefix_tokens(tok: DataFrame) -> DataFrame:
 
     Each doc's shingles are ordered by (corpus document frequency,
     shingle) — one doc-partitioned window, no global rank — and the first
-    n − ⌈τ·n⌉ + 1 are kept: two docs can reach Jaccard ≥ ``PF_TAU`` only
+    n − ⌈τ·n⌉ + 1 are kept: two docs can reach Jaccard ≥ ``NEAR_DUP_TAU`` only
     if their prefixes share a shingle.
     """
     from pyspark.sql import Window
@@ -5683,9 +5670,39 @@ def _prefix_tokens(tok: DataFrame) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(
             F.col("rn")
-            <= F.col("n") - F.ceil(F.lit(PF_TAU) * F.col("n")) + 1
+            <= F.col("n") - F.ceil(F.lit(NEAR_DUP_TAU) * F.col("n")) + 1
         )
         .select("doc_id", "shingle", "n")
+    )
+
+
+def _prefix_candidates(pref: DataFrame) -> DataFrame:
+    """Candidate pairs ``(doc_a, doc_b, na, nb)`` of a :func:`_prefix_tokens`
+    frame: every two docs (``doc_a < doc_b``) whose prefixes share a
+    shingle, once, with both docs' sizes.
+
+    An equi-join of ``pref`` with itself on the prefix shingle, so the pair
+    emission runs inside whole-stage codegen.  (A posting-list variant —
+    collect_list per shingle + a nested transform/slice pair expression —
+    measured 6.7 s isolated but a consistent 19-22 s inside the full
+    161-query bench session: higher-order lambdas evaluate interpreted, and
+    that stage degraded ~3x under long-session JVM state while the
+    codegen'd join shape stays flat.)
+    """
+    a, b = pref.alias("a"), pref.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n").alias("na"),
+            F.col("b.n").alias("nb"),
+        )
+        .distinct()
     )
 
 
@@ -5702,7 +5719,7 @@ pref AS (
                               ORDER BY df.df, t.shingle) AS rn,
            n.n
     FROM tok t JOIN df USING (shingle) JOIN n USING (doc_id))
-  WHERE rn <= n - CAST(ceil({PF_TAU} * n) AS BIGINT) + 1
+  WHERE rn <= n - CAST(ceil({NEAR_DUP_TAU} * n) AS BIGINT) + 1
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -5722,13 +5739,13 @@ SELECT i.doc_a, i.doc_b,
          AS jaccard
 FROM inter i JOIN n na ON na.doc_id = i.doc_a
              JOIN n nb ON nb.doc_id = i.doc_b
-WHERE CAST(i.n_inter AS DOUBLE) / (na.n + nb.n - i.n_inter) >= {PF_TAU}
+WHERE CAST(i.n_inter AS DOUBLE) / (na.n + nb.n - i.n_inter) >= {NEAR_DUP_TAU}
 """,
     description="Exact similarity join via prefix filtering (the AllPairs/"
     "PPJoin family): order each doc's shingles globally-rarest-first (the "
     "order is (df, shingle) — consistent per doc via a doc-partitioned "
     "window, no global rank), keep only the first n−⌈τ·n⌉+1 as the "
-    f"'prefix', and two docs can reach Jaccard ≥ {PF_TAU} ONLY if their "
+    f"'prefix', and two docs can reach Jaccard ≥ {NEAR_DUP_TAU} ONLY if their "
     "prefixes share a shingle — a zero-false-negative candidate set, the "
     "deterministic complement to MinHash-LSH's probabilistic one (measured "
     "here: ~1% of all pairs survive the prefix join). Candidates are then "
@@ -5748,46 +5765,15 @@ def q_prefix_filter_jaccard_pairs(
     )
     # one shuffle on doc_id produces the rarest-first rank; the size rides
     # along through the candidate join so the verify stage needs no re-join
-    # with a doc-size frame.  Checkpointed: the candidate pass below and
-    # the downstream lineage would otherwise each recompute the df-join +
-    # window (profiled: two identical 7 MB → 4 MB stages, 17.7 + 11.1 s
-    # executor, for one logical pref build).
+    # with a doc-size frame.  Checkpointed: both sides of the candidate
+    # self-join read it (profiled lazily: two identical 7 MB → 4 MB stages,
+    # 17.7 + 11.1 s executor, for one logical pref build).
     pref = _prefix_tokens(tok).localCheckpoint()
-    # candidate generation: equi-join of the CHECKPOINTED pref with itself
-    # on the prefix shingle (doc_a < doc_b) — both sides read the blocks, so
-    # the old duplicated-lineage cost of the self-join is gone, and the
-    # pair emission runs inside whole-stage codegen.  (A posting-list
-    # variant — collect_list per shingle + a nested transform/slice pair
-    # expression — measured 6.7 s isolated but a consistent 19-22 s inside
-    # the full 161-query bench session: higher-order lambdas evaluate
-    # interpreted, and that stage degraded ~3x under long-session JVM
-    # state while the codegen'd join shape stays flat.  Reverted to the
-    # join; guide §1.1 — trust the paired measurement, not the prettier
-    # plan.)  The dedup exchange is PINNED to the session's parallelism on
-    # (doc_a, doc_b): hashpartitioning on a subset of the grouping keys
-    # satisfies the aggregate's clustering, so no extra exchange appears,
-    # and AQE's byte-based coalescing cannot pack the compute-bound
-    # verify stage onto a handful of tasks (guide §2.5, the round's
-    # central finding).
-    slots = max(int(spark.sparkContext.defaultParallelism), 1)
-    pa = pref.select(
-        F.col("doc_id").alias("doc_a"), "shingle", F.col("n").alias("na")
-    )
-    pb = pref.select(
-        F.col("doc_id").alias("doc_b"), "shingle", F.col("n").alias("nb")
-    )
-    cand = (
-        pa.join(pb, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "na", "nb")
-        .repartition(slots, "doc_a", "doc_b")
-        .dropDuplicates()
-    )
-    inter = _exact_overlap(cand, arrs)
+    inter = _exact_overlap(_prefix_candidates(pref), arrs)
     uni = F.col("na") + F.col("nb") - F.col("n_inter")
     jac = F.col("n_inter").cast("double") / uni
     return (
-        inter.filter(jac >= PF_TAU)
+        inter.filter(jac >= NEAR_DUP_TAU)
         .select(
             "doc_a",
             "doc_b",
@@ -6013,19 +5999,28 @@ def q_source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # #3): a ±1/√k agreement band over a k=16 signature is resolved by ~10³
 # verified pairs; 10× more pairs only inflated the exact-verify join.
 MH_EVAL_PAIRS = 2_000
-# document-level sample applied BEFORE candidate generation: a pair
-# survives iff both endpoints are sampled (probability f² — uniform over
-# pairs, so the truth sample stays unbiased), which bounds the candidate
-# join + distinct themselves, not just the verify stage.  Measured need:
-# at 100× rows on the densified probe the UNsampled candidate distinct
-# spilled past local disk (~10⁹ candidate mentions).  Below the cap the
-# sample keeps every doc, so driver-gate (sf0.01, 500 docs) results are
-# unaffected.  2000 (was 4000, VERDICT_r6 #3): the ±1/√k error band
-# needs ~10³ verified pairs, not a 4000-doc truth join — the shingle
-# pass over the sample dominated the query's wall time, and halving the
-# sample quarters nothing the statistic needs (pair survival is f²,
-# still uniform/unbiased at any cap).
-MH_DOC_SAMPLE = 2000
+
+
+def _doc_sample(spark: SparkSession, sf_dir: str, salt: str) -> DataFrame:
+    """``(doc_id)`` of the first ``EVAL_DOC_SAMPLE`` documents ranked by
+    ``md5(salt || doc_id)``, then ``doc_id``.
+
+    The near-dup evaluators sample documents BEFORE truth and candidate
+    generation: a pair survives iff both endpoints do (probability f²,
+    uniform over pairs, so the sample's recall / precision / error are
+    unbiased estimates of the full corpus's), which bounds the candidate
+    join + distinct themselves, not just the verify stage.  Measured need:
+    at 100× rows on the densified probe the unsampled candidate distinct
+    spilled past local disk (~10⁹ candidate mentions).  Below the cap
+    (sf0.01, 500 docs) every doc is kept.
+    """
+    order = F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .orderBy(order, "doc_id")
+        .limit(EVAL_DOC_SAMPLE)
+    )
 
 
 @register(
@@ -6034,7 +6029,7 @@ MH_DOC_SAMPLE = 2000
 WITH sdocs AS (
   SELECT doc_id FROM documents
   ORDER BY md5('mhdoc|' || CAST(doc_id AS VARCHAR)), doc_id
-  LIMIT {MH_DOC_SAMPLE}
+  LIMIT {EVAL_DOC_SAMPLE}
 ),
 tok AS MATERIALIZED (
   SELECT * FROM ({_SHINGLES_SQL})
@@ -6049,7 +6044,7 @@ pref AS (
                               ORDER BY df.df, t.shingle) AS rn,
            n.n
     FROM tok t JOIN df USING (shingle) JOIN n USING (doc_id))
-  WHERE rn <= n - CAST(ceil({PF_TAU} * n) AS BIGINT) + 1
+  WHERE rn <= n - CAST(ceil({NEAR_DUP_TAU} * n) AS BIGINT) + 1
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -6073,7 +6068,7 @@ pairs AS (
          round(CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i), 6) AS jaccard
   FROM inter i JOIN n na ON na.doc_id = i.doc_a
                JOIN n nb ON nb.doc_id = i.doc_b
-  WHERE CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i) >= {PF_TAU}
+  WHERE CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i) >= {NEAR_DUP_TAU}
 ),
 mh AS ({_MINHASH_SQL}),
 m AS (
@@ -6094,7 +6089,7 @@ FROM m
 """,
     description="MinHash estimator accuracy — the sketch-accuracy axis for "
     "similarity (the pair to hll_precision_sweep for counts): on every "
-    f"TRUE near-dup pair (exact shingle Jaccard ≥ {PF_TAU}), the fraction "
+    f"TRUE near-dup pair (exact shingle Jaccard ≥ {NEAR_DUP_TAU}), the fraction "
     f"of agreeing components across the {NUM_MINHASH}-hash signature vs "
     "the exact Jaccard it estimates, with per-pair |error| — the measured "
     "±1/√k band an operator consults before sizing signatures for a "
@@ -6104,7 +6099,7 @@ FROM m
     "of recomputing them differently. An accuracy evaluator doesn't need "
     "the full pair population — it is DOUBLY sampled, both levels "
     "md5-deterministic and unbiased: first a document sample of ≤"
-    f"{MH_DOC_SAMPLE} (a pair survives iff both endpoints do — f² uniform "
+    f"{EVAL_DOC_SAMPLE} (a pair survives iff both endpoints do — f² uniform "
     "over pairs), which bounds candidate GENERATION itself (measured: the "
     "unsampled candidate distinct spilled past local disk at 100× on the "
     "densified probe); then an md5-ranked sample of ≤"
@@ -6115,15 +6110,7 @@ FROM m
     "funnel; below the caps (sf0.01) every doc and pair is kept.",
 )
 def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sdocs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .orderBy(
-            F.md5(F.concat(F.lit("mhdoc|"), F.col("doc_id").cast("string"))),
-            "doc_id",
-        )
-        .limit(MH_DOC_SAMPLE)
-    )
+    sdocs = _doc_sample(spark, sf_dir, "mhdoc|")
     # checkpointed ARRAY frame: feeds the exploded tok (dfreq + pref +
     # signature build) and the array-intersect verify — lazily-cached
     # frames with that many independent consumers get recomputed
@@ -6141,21 +6128,7 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df-join + window re-execute per consumer (sample-bounded, tiny).
     pref = _prefix_tokens(tok).localCheckpoint()
     mh_wide = _minhash_wide(spark, sf_dir, sh=tok).localCheckpoint()
-    cand = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .distinct()
-    )
+    cand = _prefix_candidates(pref)
     # deterministic candidate sample (pre-verify): per-partition top-N by
     # md5 of the id pair, merged on the driver — the cap that decouples
     # everything downstream from the corpus's pair mass
@@ -6175,7 +6148,7 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = _exact_overlap(F.broadcast(sampled), arrs_s)
     uni = F.col("na") + F.col("nb") - F.col("n_inter")
     jacc = F.col("n_inter").cast("double") / uni
-    pairs = inter.filter(jacc >= PF_TAU).select(
+    pairs = inter.filter(jacc >= NEAR_DUP_TAU).select(
         "doc_a", "doc_b", F.round(jacc, 6).alias("jaccard")
     )
     # signatures from the SAME checkpointed sampled-doc shingle frame: a doc's
@@ -6184,39 +6157,18 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sample is value-identical to the full-corpus pass (the oracle keeps
     # the full-corpus mh CTE — the pair join filters it to the same rows)
     # while skipping a second corpus-wide tokenize+explode.
-    # checkpointed (mh_wide above): the a/b pair sides
-    # below both consume mh — lazily the 16-md5 signature groupBy re-ran
-    # once per side (profiled: three near-identical 11–18 s stages over
-    # the checkpointed tok frame)
-    mh = _minhash_long(mh_wide)
-    a = mh.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("seed").alias("seed"),
-        F.col("minhash").alias("mh_a"),
-    )
-    b = mh.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("seed").alias("seed"),
-        F.col("minhash").alias("mh_b"),
-    )
+    # checkpointed (mh_wide above): the a/b pair sides below both read
+    # it — lazily the 16-md5 signature groupBy re-ran once per side
+    # (profiled: three near-identical 11–18 s stages over the checkpointed
+    # tok frame)
     est = F.col("n_match").cast("double") / NUM_MINHASH
-    return (
-        pairs.join(a, "doc_a")
-        .join(b, ["doc_b", "seed"])
-        .groupBy("doc_a", "doc_b", "jaccard")
-        .agg(
-            F.sum((F.col("mh_a") == F.col("mh_b")).cast("long")).alias(
-                "n_match"
-            )
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_match",
-            F.round(est, 6).alias("mh_estimate"),
-            "jaccard",
-            F.round(F.abs(est - F.col("jaccard")), 6).alias("abs_err"),
-        )
+    return _signature_agreement(pairs, mh_wide, "doc_a", "doc_b").select(
+        "doc_a",
+        "doc_b",
+        "n_match",
+        F.round(est, 6).alias("mh_estimate"),
+        "jaccard",
+        F.round(F.abs(est - F.col("jaccard")), 6).alias("abs_err"),
     )
 
 
@@ -6419,18 +6371,6 @@ def q_quantile_normalize_embeddings(
 # --------------------------------------------------------------------------
 # Blocking-strategy evaluation: prefix filter vs LSH bands vs exact truth
 # --------------------------------------------------------------------------
-# document-level sample applied BEFORE truth and candidate generation,
-# the same bound minhash_estimate_error carries: the exact-truth shingle
-# self-join is the one unbounded-generation stage left in the evaluator
-# family (measured 10.9× wall at 10× rows on the densified probe, where
-# minhash's unsampled variant exhausted local disk at 100×).  Recall /
-# precision measured on a uniform doc sample estimate the full-corpus
-# operating point (pair survival f², uniform), and BOTH truth and the
-# two candidate strategies are restricted to the SAME sample, so the
-# prefix filter's recall=1.0-by-construction claim is preserved.  Below
-# the cap (sf0.01, 500 docs) every doc is kept — driver-gate results
-# unchanged.
-BSE_DOC_SAMPLE = 2000
 
 
 @register(
@@ -6439,7 +6379,7 @@ BSE_DOC_SAMPLE = 2000
 WITH sdocs AS (
   SELECT doc_id FROM documents
   ORDER BY md5('bsedoc|' || CAST(doc_id AS VARCHAR)), doc_id
-  LIMIT {BSE_DOC_SAMPLE}
+  LIMIT {EVAL_DOC_SAMPLE}
 ),
 tok AS MATERIALIZED (
   SELECT * FROM ({_SHINGLES_SQL})
@@ -6455,7 +6395,7 @@ truth AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b
   FROM inter i JOIN n na ON na.doc_id = i.doc_a
                JOIN n nb ON nb.doc_id = i.doc_b
-  WHERE CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i) >= {PF_TAU}
+  WHERE CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i) >= {NEAR_DUP_TAU}
 ),
 pref AS (
   SELECT doc_id, shingle FROM (
@@ -6466,7 +6406,7 @@ pref AS (
     JOIN (SELECT shingle, count(*) AS df FROM tok GROUP BY shingle) df
       USING (shingle)
     JOIN n USING (doc_id))
-  WHERE rn <= n - CAST(ceil({PF_TAU} * n) AS BIGINT) + 1
+  WHERE rn <= n - CAST(ceil({NEAR_DUP_TAU} * n) AS BIGINT) + 1
 ),
 cand_prefix AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -6524,27 +6464,19 @@ SELECT 'lsh_bands',
     "rollout runs before burning 100 TB of compute: the deterministic "
     "prefix filter vs probabilistic LSH banding, both scored as "
     "(candidates, recall, precision) against the exact-Jaccard truth at "
-    f"tau={PF_TAU}. Prefix filtering grades recall = 1.0 BY CONSTRUCTION "
+    f"tau={NEAR_DUP_TAU}. Prefix filtering grades recall = 1.0 BY CONSTRUCTION "
     "(its zero-false-negative guarantee, now measured, not asserted); "
     "LSH trades recall for a candidate set that doesn't need the "
     "rarest-first global ordering. Truth/candidate frames are each one "
     "keyed self-join; the scorecard is six counts. Truth generation is "
-    f"bounded by a deterministic md5-ranked ≤{BSE_DOC_SAMPLE}-doc sample "
+    f"bounded by a deterministic md5-ranked ≤{EVAL_DOC_SAMPLE}-doc sample "
     "(pair survival f² — the measured operating point is an unbiased "
     "estimate of the full corpus's, and all three frames see the same "
     "sample so recall-by-construction properties survive); below the "
     "cap every doc is kept.",
 )
 def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sdocs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .orderBy(
-            F.md5(F.concat(F.lit("bsedoc|"), F.col("doc_id").cast("string"))),
-            "doc_id",
-        )
-        .limit(BSE_DOC_SAMPLE)
-    )
+    sdocs = _doc_sample(spark, sf_dir, "bsedoc|")
     # checkpointed ARRAY frame: the truth self-join, the prefix filter and
     # the signature build all read it (see q_minhash_estimate_error)
     arrs_s = (
@@ -6570,65 +6502,26 @@ def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("i"))
     )
-    truth = (
-        inter.filter(
-            F.col("i").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("i"))
-            >= PF_TAU
-        )
-        .select("doc_a", "doc_b")
-        .cache()
+    truth = inter.filter(
+        F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
+        >= NEAR_DUP_TAU
     )
-    pref = _prefix_tokens(tok)
-    cand_prefix = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
+    pair = ("doc_a", "doc_b")
+    # the LSH signatures come from the SAME checkpointed sampled shingle
+    # frame (a doc's signature depends only on its own shingles)
+    strategies = {
+        "prefix_filter": _prefix_candidates(_prefix_tokens(tok)),
+        "lsh_bands": _lsh_candidates(_minhash_wide(spark, sf_dir, sh=tok)),
+    }
+    # a null pair per strategy keeps the row of one without candidates
+    cand = local_df(
+        spark,
+        [(name, None, None) for name in strategies],
+        "strategy string, doc_a long, doc_b long",
     )
-    # signatures from the SAME checkpointed sampled shingle frame (a doc's
-    # signature depends only on its own shingles)
-    cand_lsh = _lsh_candidates(
-        _minhash_wide(spark, sf_dir, sh=tok)
-    ).select("doc_a", "doc_b")
-
-    def scorecard(name: str, cand: DataFrame) -> DataFrame:
-        c = cand.cache()
-        nc = c.agg(F.count(F.lit(1)).alias("n_candidates"))
-        nt = truth.agg(F.count(F.lit(1)).alias("n_true"))
-        nh = c.join(truth, ["doc_a", "doc_b"]).agg(
-            F.count(F.lit(1)).alias("n_hit")
-        )
-        return (
-            nc.crossJoin(F.broadcast(nt))
-            .crossJoin(F.broadcast(nh))
-            .select(
-                F.lit(name).alias("strategy"),
-                "n_candidates",
-                "n_true",
-                "n_hit",
-                F.round(
-                    F.col("n_hit").cast("double")
-                    / F.greatest(F.col("n_true"), F.lit(1)),
-                    6,
-                ).alias("recall"),
-                F.round(
-                    F.col("n_hit").cast("double")
-                    / F.greatest(F.col("n_candidates"), F.lit(1)),
-                    6,
-                ).alias("precision"),
-            )
-        )
-
-    return scorecard("prefix_filter", cand_prefix).unionAll(
-        scorecard("lsh_bands", cand_lsh)
-    )
+    for name, c in strategies.items():
+        cand = cand.unionByName(c.select(F.lit(name).alias("strategy"), *pair))
+    return _scorecard(cand, truth.select(*pair), ["strategy"])
 
 
 # --------------------------------------------------------------------------
@@ -6714,14 +6607,16 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer micro-unit weights: the one float op (ln) happens per
     # (doc, term) row and is rounded immediately; every sum below is
     # exact integer arithmetic (decimal here ≡ HUGEINT in the oracle),
-    # so partition/fold order can never flip a 6dp rounding boundary
+    # so partition/fold order can never flip a 6dp rounding boundary.
+    # Held lazily although three stages read it: an eager fill runs before
+    # the candidate lineage instead of beside it (slower, paired bench).
     w = tf.join(df, "shingle").select(
         "doc_id",
         "shingle",
         F.round(F.col("tf") * F.log(F.lit(float(nd)) / F.col("df")) * 1e6)
         .cast("long")
         .alias("wm"),
-    ).cache()
+    ).localCheckpoint(eager=False)
     dec = "decimal(19,0)"
     nrm = w.groupBy("doc_id").agg(
         F.sum(F.col("wm").cast(dec) * F.col("wm").cast(dec)).alias("nsq")

@@ -245,7 +245,10 @@ def q_fifo_stats_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_percentiles_distributed,
     )
 
-    tl = q_fifo_timeline(spark, sf_dir).select("queuing_us").cache()
+    # filled by the range-bound sample job, the first to read it
+    tl = q_fifo_timeline(spark, sf_dir).select("queuing_us").localCheckpoint(
+        eager=False
+    )
     pcts = exact_percentiles_distributed(
         tl, "queuing_us", ps=(0.5, 0.75, 0.9, 0.99), divisor=1_000_000.0
     )

@@ -319,7 +319,7 @@ def q_column_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "half",
         F.when(F.col("ts") < F.lit(_DRIFT_SPLIT).cast("timestamp"), "w1")
         .otherwise("w2"),
-    ).cache()
+    ).localCheckpoint()
 
     def profile(col: str) -> DataFrame:
         return ev.groupBy("half").agg(
@@ -470,7 +470,7 @@ def q_event_rate_autocorrelation(
         .select(F.explode(F.sequence("lo", "hi")).alias("h"))
         .join(hours, "h", "left")
         .select("h", F.coalesce("c", F.lit(0)).alias("c"))
-        .cache()
+        .localCheckpoint()
     )
     lags = spark.range(1, ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
     a = spine.select(F.col("h").alias("ha"), F.col("c").alias("x"))

@@ -633,7 +633,7 @@ def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         F.sum(_disc_price()).alias("total_revenue_dec")
-    ).cache()  # tiny (one row per active supplier); read twice below
+    ).localCheckpoint()  # tiny (one row per active supplier); read twice below
     # scalar max via agg + broadcast crossJoin: both sides of the filter
     # stay partition-parallel, unlike max().over(Window.partitionBy())
     # which funnels every supplier row through one window task

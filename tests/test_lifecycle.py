@@ -2,10 +2,12 @@
 them.
 
 The queries below hold intermediates as local checkpoints: the two-phase
-rank helpers in ``operators/statistics.py`` and the eager fills in
-``plans/llm_queries.py``.  Once the result has been collected and dropped,
-Spark's ContextCleaner must free every block the query added.  No release
-call and no ``clearCache()`` is needed.
+rank helpers in ``operators/statistics.py`` and every frame a query in
+``plans/`` reads more than once (no query there may call ``.cache()`` or
+``.persist()``; ``tests/test_plans.py`` scans for them).  Once the result
+has been collected and dropped, Spark's ContextCleaner must free every
+block the query added.  No release call and no ``clearCache()`` is
+needed.
 """
 
 from __future__ import annotations
@@ -43,6 +45,26 @@ LIFECYCLE_QUERIES = [
     "ivf_pq_topk",
     "pq_adc_topk",
     "pq_recall_at_k",
+    "retrieval_ndcg_eval",
+    # near-dup graph, signature and weight frames
+    "dsir_importance_weights",
+    "incremental_minhash_candidates",
+    "minhash_verified_pairs",
+    "pagerank_near_dup",
+    "pair_graph_triangles",
+    "tfidf_cosine_pairs",
+    # the candidate-vs-truth scorecard
+    "blocking_strategy_eval",
+    "lsh_bands_sweep",
+    "lsh_recall_eval",
+    "lsh_threshold_sweep",
+    # frames read twice outside plans/llm_queries.py
+    "column_profile_drift",
+    "event_rate_autocorrelation",
+    "fifo_stats_distributed",
+    "hll_precision_sweep",
+    "k_anon_generalize",
+    "tpch_q15_top_supplier",
 ]
 
 

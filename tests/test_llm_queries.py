@@ -562,6 +562,54 @@ def test_lsh_recall_eval_metrics_are_consistent(spark, sf_dir):
     assert 0.0 <= row.recall <= 1.0 and 0.0 <= row.precision <= 1.0
 
 
+def _scores(df, *by):
+    return {
+        tuple(r[k] for k in by): (
+            r.n_candidates, r.n_true, r.n_hit, r.recall, r.precision
+        )
+        for r in df.collect()
+    }
+
+
+def test_scorecard_of_empty_candidates_is_zero_not_null(spark):
+    from queue_system_simulator_spark.plans.llm_queries import _scorecard
+
+    cand = spark.createDataFrame([], "doc_a long, doc_b long")
+    truth = spark.createDataFrame([(1, 2), (3, 4)], "doc_a long, doc_b long")
+    assert _scores(_scorecard(cand, truth)) == {(): (0, 2, 0, 0.0, 0.0)}
+
+
+def test_scorecard_key_only_on_candidate_side(spark):
+    from queue_system_simulator_spark.plans.llm_queries import _scorecard
+
+    cand = spark.createDataFrame(
+        [("hit", 1, 2), ("miss", 5, 6), ("none", None, None)],
+        "k string, doc_a long, doc_b long",
+    )
+    truth = spark.createDataFrame([(1, 2), (3, 4)], "doc_a long, doc_b long")
+    # "miss" has a candidate but no hit; "none" lists its key with a null
+    # pair and has no candidate at all
+    assert _scores(_scorecard(cand, truth, ["k"]), "k") == {
+        ("hit",): (1, 2, 1, 0.5, 1.0),
+        ("miss",): (1, 2, 0, 0.0, 0.0),
+        ("none",): (0, 2, 0, 0.0, 0.0),
+    }
+
+
+def test_scorecard_key_only_on_truth_side(spark):
+    from queue_system_simulator_spark.plans.llm_queries import _scorecard
+
+    cand = spark.createDataFrame([(1, 2), (7, 8)], "doc_a long, doc_b long")
+    truth = spark.createDataFrame(
+        [(30, 1, 2), (30, 3, 4), (80, None, None)],
+        "tau int, doc_a long, doc_b long",
+    )
+    assert _scores(_scorecard(cand, truth, ["tau"]), "tau") == {
+        (30,): (2, 2, 1, 0.5, 0.5),
+        (80,): (2, 0, 0, 0.0, 0.0),
+    }
+
+
 def test_forecast_eval_floor_division_is_sign_robust(spark):
     """The model's floor division must match Python floor semantics for
     negative sums too (testdata regenerates each round; value sign is not

@@ -214,7 +214,7 @@ def test_prefix_filter_matches_brute_force(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from queue_system_simulator_spark.plans.llm_queries import (
-        PF_TAU,
+        NEAR_DUP_TAU,
         _shingles,
         q_prefix_filter_jaccard_pairs,
     )
@@ -245,7 +245,7 @@ def test_prefix_filter_matches_brute_force(spark, sf_dir):
         (r["doc_a"], r["doc_b"]): (r["i"], r["u"])
         for r in inter.join(na, "doc_a")
         .join(nb, "doc_b")
-        .filter(F.col("i").cast("double") / uni >= PF_TAU)
+        .filter(F.col("i").cast("double") / uni >= NEAR_DUP_TAU)
         .select("doc_a", "doc_b", "i", uni.alias("u"))
         .collect()
     }
