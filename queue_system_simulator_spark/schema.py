@@ -22,6 +22,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from queue_system_simulator_spark.fixtures import file_stats
+from queue_system_simulator_spark.session import (
+    CHECKPOINT_FILE_MANAGER,
+    CHECKPOINT_FILE_MANAGER_KEY,
+)
 
 #: Simulation epoch: the reference derives relative arrival seconds against a
 #: fixed epoch 2023-01-01T00:00:00Z (``/root/reference/main.py:13``).  The
@@ -76,7 +80,7 @@ def tune_foreign_session(spark: SparkSession) -> None:
     """Pin runtime-settable confs this engine's semantics depend on.
 
     Callers like the driver harness build their own SparkSession without
-    ``session.get_spark``'s configs.  Two of them matter and are safely
+    ``session.get_spark``'s configs.  Three of them matter and are safely
     settable at runtime:
 
     * ``spark.sql.session.timeZone=UTC`` — correctness: every time
@@ -88,6 +92,12 @@ def tune_foreign_session(spark: SparkSession) -> None:
       shuffle pay ~6× scheduling overhead; a deliberate caller setting is
       left alone.  (At 100 TB this knob is per-deployment / AQE-coalesced;
       32 matches the local[32] harness.)
+    * ``spark.sql.streaming.checkpointFileManagerClass`` — performance:
+      ``session.CHECKPOINT_FILE_MANAGER`` commits checkpoint and state
+      files without forking ``readlink``; only set when the caller has
+      set no manager.  Stream starts read it through the session's
+      ``newHadoopConf``, so the runtime value reaches the driver's
+      checkpoint logs and the executors' state stores alike.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Required to read TIMESTAMP(NANOS) parquet at all (round-1 testdata
@@ -98,6 +108,8 @@ def tune_foreign_session(spark: SparkSession) -> None:
             spark.conf.set("spark.sql.shuffle.partitions", "32")
     except Exception:
         pass
+    if spark.conf.get(CHECKPOINT_FILE_MANAGER_KEY, None) is None:
+        spark.conf.set(CHECKPOINT_FILE_MANAGER_KEY, CHECKPOINT_FILE_MANAGER)
 
 
 #: session confs whose values change the schema Spark infers from a

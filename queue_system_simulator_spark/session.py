@@ -6,8 +6,31 @@ timezone (the reference normalizes ``Z``-suffixed ISO-8601 to UTC,
 ``/root/reference/src/csv_parser.py:50-59``), Arrow enabled for the
 pandas-UDF kernel path.
 
+Streaming checkpoint and state-store files are committed by
+:data:`CHECKPOINT_FILE_MANAGER`, Spark's ``FileSystem``-based manager, not
+the default ``FileContext``-based one.  Both write a temp file and rename
+it to the file's name, and a checkpoint log entry (a batch's offsets or
+commit) must not overwrite one already there.  The default renames
+through ``FileContext``, which asks ``getFileLinkStatus`` of the source,
+the destination and their ``.crc`` files; Hadoop's local file system
+answers each ask by forking ``readlink``.  This manager renames through
+``FileSystem.rename``, which forks nothing, and keeps the no-overwrite
+commit by checking that the destination is absent before the rename.  On
+a local disk that check-then-rename is as safe as the default: a query's
+checkpoint has one writer, and every drain in this engine checkpoints
+under the local temp directory or a local fixture directory.
+
 At 100 TB the same settings hold; only ``shuffle.partitions`` (set
 per-deployment, or left to AQE's coalescing) and executor sizing change.
+The checkpoint manager is the exception.  On HDFS the ``FileContext``
+rename is one atomic no-overwrite call, while this manager's check and
+rename are two, so a stale writer of the same batch (a zombie task or a
+restarted query) can slip between them; and HDFS forks no ``readlink``,
+so there is nothing to gain.  On S3 neither manager's rename is atomic:
+both copy and delete.  A deployment on either sets
+``spark.sql.streaming.checkpointFileManagerClass`` itself (the
+FileContext manager on HDFS, a store-specific one on S3), and
+``schema.tune_foreign_session`` leaves a caller's value alone.
 """
 
 from __future__ import annotations
@@ -19,6 +42,13 @@ from pyspark.sql import SparkSession
 #: local-mode cores and shuffle partitions: ``SPARK_GRAFT_CPUS``, else this
 #: machine's core count
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+#: the session conf that picks the class committing streaming checkpoint
+#: and state-store files, and the class this engine runs (module docstring)
+CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -41,6 +71,7 @@ def get_spark(
         # driver testdata stores event timestamps as parquet TIMESTAMP(NANOS);
         # Spark 4 has no ns timestamp type — read as long, convert in load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(CHECKPOINT_FILE_MANAGER_KEY, CHECKPOINT_FILE_MANAGER)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # A long-lived session executing hundreds of DISTINCT codegen'd
