@@ -43,15 +43,6 @@ def with_sim_arrival_time(
     )
 
 
-def with_queuing_time(df: DataFrame) -> DataFrame:
-    """B2: ``queuing_time = start − arrival-in-queue``
-    (``/root/reference/src/statistics.py:34-36``)."""
-    return df.withColumn(
-        "queuing_time",
-        F.col("start_processing_time_by_worker") - F.col("arrival_time_in_queue"),
-    )
-
-
 def priority_class(
     proc: Column | str, threshold: float = PRIORITY_THRESHOLD_SECONDS
 ) -> Column:
@@ -73,24 +64,6 @@ def hms(seconds: Column | str) -> Column:
         ((total % 3600) / 60).cast("long"),
         (total % 60).cast("long"),
     )
-
-
-def split_processed_rejected(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """C1: partition completed rows into processed vs rejected on the −1
-    sentinel (``/root/reference/src/statistics.py:104-105``)."""
-    fin = F.col("finish_processing_time_by_worker")
-    return df.filter(fin != REJECTED_SENTINEL), df.filter(fin == REJECTED_SENTINEL)
-
-
-def valid_queuing_rows(df: DataFrame) -> DataFrame:
-    """C2: the silent-drop predicate for queuing-time statistics — keep rows
-    with ``start ≥ 0 ∧ arrival ≥ 0 ∧ start ≥ arrival``
-    (``/root/reference/src/statistics.py:28-42``).  The drop changes the
-    mean/percentile denominators but NOT processed counts — callers must
-    apply it only to the queuing-time aggregate inputs."""
-    start = F.col("start_processing_time_by_worker")
-    arr = F.col("arrival_time_in_queue")
-    return df.filter((start >= 0) & (arr >= 0) & (start >= arr))
 
 
 def result_order(df: DataFrame) -> DataFrame:

@@ -1037,22 +1037,25 @@ def q_events_calendar_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "snapshot_diff_user_state",
-    oracle="""
-WITH t1 AS (
+# opens each user's state (latest event_type): the rows follow, then the
+# cut ``WHERE rn = 1``
+_USER_STATE_RANK_SQL = """\
   SELECT user_id, event_type AS state FROM (
     SELECT user_id, event_type,
            row_number() OVER (PARTITION BY user_id
-                              ORDER BY ts DESC, event_id DESC) AS rn
+                              ORDER BY ts DESC, event_id DESC) AS rn"""
+
+
+@register(
+    "snapshot_diff_user_state",
+    oracle=f"""
+WITH t1 AS (
+{_USER_STATE_RANK_SQL}
     FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00'
   ) WHERE rn = 1
 ),
 t2 AS (
-  SELECT user_id, event_type AS state FROM (
-    SELECT user_id, event_type,
-           row_number() OVER (PARTITION BY user_id
-                              ORDER BY ts DESC, event_id DESC) AS rn
+{_USER_STATE_RANK_SQL}
     FROM events
   ) WHERE rn = 1
 )
@@ -1402,16 +1405,16 @@ def q_udtf_event_run_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.unix_micros("ts").alias("tus"),
     )
-    ev.createOrReplaceTempView("udtf_rle_events")
     spark.udtf.register("qss_rle_runs", RunLengthEncode)
     return spark.sql(
         """
         SELECT * FROM qss_rle_runs(
           TABLE(SELECT user_id, event_type, tus, event_id
-                FROM udtf_rle_events)
+                FROM {events})
           PARTITION BY user_id ORDER BY (tus, event_id)
         )
-        """
+        """,
+        events=ev,
     )
 
 
@@ -1648,6 +1651,12 @@ _HLL_ALPHA_M2 = (
     f"CAST(0.7213 AS DOUBLE) / (1 + CAST(1.079 AS DOUBLE) / {HLL_M})"
     f" * {HLL_M * HLL_M}"
 )
+# each event type's HLL registers over the hashes ``h``: the max rank
+# per bucket
+_HLL_REGISTERS_SQL = f"""\
+  SELECT event_type, hv % {HLL_M} AS bucket,
+         max({_hll_rho_case(f"hv >> {HLL_P}")}) AS r
+  FROM h GROUP BY event_type, hv % {HLL_M}"""
 
 
 @register(
@@ -1659,9 +1668,7 @@ WITH h AS (
   FROM events
 ),
 reg AS (
-  SELECT event_type, hv % {HLL_M} AS bucket,
-         max({_hll_rho_case(f"hv >> {HLL_P}")}) AS r
-  FROM h GROUP BY event_type, hv % {HLL_M}
+{_HLL_REGISTERS_SQL}
 ),
 agg AS (
   SELECT event_type,
@@ -2213,9 +2220,7 @@ merged AS (
   FROM reg_part GROUP BY event_type, bucket
 ),
 full_reg AS (
-  SELECT event_type, hv % {HLL_M} AS bucket,
-         max({_hll_rho_case(f"hv >> {HLL_P}")}) AS r
-  FROM h GROUP BY event_type, hv % {HLL_M}
+{_HLL_REGISTERS_SQL}
 ),
 est AS (
   SELECT m.event_type,
@@ -3152,6 +3157,14 @@ def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Least-squares daily trend per event type (integer-exact moments)
 # ---------------------------------------------------------------------------
+#: the integer moment sums of ``(x, y)`` rows, as select items
+XY_SUMS_SQL = """\
+       CAST(sum(x) AS BIGINT) AS sum_x,
+       CAST(sum(y) AS BIGINT) AS sum_y,
+       CAST(sum(x * y) AS BIGINT) AS sum_xy,
+       CAST(sum(x * x) AS BIGINT) AS sum_x2,"""
+
+
 @register(
     "regression_slope_daily",
     oracle=f"""
@@ -3166,10 +3179,7 @@ ix AS (
 )
 SELECT event_type,
        count(*) AS n_days,
-       CAST(sum(x) AS BIGINT) AS sum_x,
-       CAST(sum(y) AS BIGINT) AS sum_y,
-       CAST(sum(x * y) AS BIGINT) AS sum_xy,
-       CAST(sum(x * x) AS BIGINT) AS sum_x2,
+{XY_SUMS_SQL}
        CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS BIGINT) AS slope_num,
        CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS BIGINT) AS slope_den,
        round(CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS DOUBLE)

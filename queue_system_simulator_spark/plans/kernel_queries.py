@@ -72,6 +72,40 @@ def q_kernel_fifo_k1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The recursive DES oracles' text.  _KERNEL_REQ_SQL opens the request
+# rows ``req``, one per event in integer microseconds (arrival ``a_us``,
+# processing ``p_us`` clamped at 0), and each kernel adds its own
+# columns.  _SIM_SEED_SQL is the seed row's empty request, and
+# _SIM_TIMES_SQL the first output columns, in seconds.  _FIFO_SIM_SQL
+# opens the oracles that serve requests in arrival order ``rn``, one per
+# step, up to the seed row's kernel state.
+_KERNEL_REQ_SQL = """\
+WITH RECURSIVE req AS (
+  SELECT CAST(user_id AS VARCHAR) AS user_id,
+         event_id AS seq,
+         epoch_us(ts) AS a_us,
+         greatest(CAST(round(value * 100) AS BIGINT) * 10000, 0) AS p_us,"""
+_SIM_SEED_SQL = """\
+         CAST(NULL AS BIGINT) AS seq,
+         CAST(NULL AS BIGINT) AS a_us,
+         CAST(NULL AS BIGINT) AS s_us,
+         CAST(NULL AS BIGINT) AS f_us,"""
+_SIM_TIMES_SQL = """\
+SELECT user_id, seq,
+       a_us / 1000000 AS arrival_s,
+       s_us / 1000000 AS start_s,"""
+_FIFO_SIM_SQL = f"""\
+{_KERNEL_REQ_SQL}
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY epoch_us(ts), event_id) AS rn
+  FROM events
+),
+sim AS (
+  SELECT user_id,
+         CAST(0 AS BIGINT) AS rn,
+{_SIM_SEED_SQL}"""
+
+
 #: Exact DuckDB twin of the k=1 bounded-FIFO kernel (E1 admission control).
 #: Sequential state per group = (finish of last admitted job, start times of
 #: jobs still waiting).  An arrival at t sees queue depth = #{starts >= t}
@@ -86,22 +120,7 @@ def q_kernel_fifo_k1(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BOUNDED_Q = 3
 
 _KERNEL_BOUNDED_ORACLE = f"""
-WITH RECURSIVE req AS (
-  SELECT CAST(user_id AS VARCHAR) AS user_id,
-         event_id AS seq,
-         epoch_us(ts) AS a_us,
-         greatest(CAST(round(value * 100) AS BIGINT) * 10000, 0) AS p_us,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY epoch_us(ts), event_id) AS rn
-  FROM events
-),
-sim AS (
-  SELECT user_id,
-         CAST(0 AS BIGINT) AS rn,
-         CAST(NULL AS BIGINT) AS seq,
-         CAST(NULL AS BIGINT) AS a_us,
-         CAST(NULL AS BIGINT) AS s_us,
-         CAST(NULL AS BIGINT) AS f_us,
+{_FIFO_SIM_SQL}
          FALSE AS rejected,
          CAST(0 AS BIGINT) AS f_last,
          CAST([] AS BIGINT[]) AS waiting_starts
@@ -125,9 +144,7 @@ sim AS (
                                greatest(r.a_us, s.f_last)) END
   FROM sim s JOIN req r ON r.user_id = s.user_id AND r.rn = s.rn + 1
 )
-SELECT user_id, seq,
-       a_us / 1000000 AS arrival_s,
-       s_us / 1000000 AS start_s,
+{_SIM_TIMES_SQL}
        CASE WHEN rejected THEN -1.0 ELSE f_us / 1000000 END AS finish_s,
        CASE WHEN rejected THEN 'rejected' ELSE 'success' END AS status
 FROM sim WHERE rn > 0
@@ -310,12 +327,8 @@ def q_kernel_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: finish, pending list of (cls, a_us, seq, p_us) structs); the next
 #: service instant is max(last_finish, earliest pending arrival), the
 #: served job is the lexicographic min struct among those arrived by then.
-_KERNEL_PRIORITY_ORACLE = """
-WITH RECURSIVE req AS (
-  SELECT CAST(user_id AS VARCHAR) AS user_id,
-         event_id AS seq,
-         epoch_us(ts) AS a_us,
-         greatest(CAST(round(value * 100) AS BIGINT) * 10000, 0) AS p_us,
+_KERNEL_PRIORITY_ORACLE = f"""
+{_KERNEL_REQ_SQL}
          CASE WHEN greatest(CAST(round(value * 100) AS BIGINT) * 10000, 0) < 20000000
               THEN 0 ELSE 1 END AS cls
   FROM events
@@ -323,10 +336,7 @@ WITH RECURSIVE req AS (
 sim AS (
   SELECT user_id,
          CAST(0 AS BIGINT) AS step,
-         CAST(NULL AS BIGINT) AS seq,
-         CAST(NULL AS BIGINT) AS a_us,
-         CAST(NULL AS BIGINT) AS s_us,
-         CAST(NULL AS BIGINT) AS f_us,
+{_SIM_SEED_SQL}
          CAST(NULL AS BIGINT) AS cls,
          CAST(0 AS BIGINT) AS f_last,
          pending
@@ -353,9 +363,7 @@ sim AS (
     )
   )
 )
-SELECT user_id, seq,
-       a_us / 1000000 AS arrival_s,
-       s_us / 1000000 AS start_s,
+{_SIM_TIMES_SQL}
        f_us / 1000000 AS finish_s,
        (s_us - a_us) / 1000000 AS queuing_s,
        CAST(cls = 0 AS BOOLEAN) AS is_priority,
@@ -425,23 +433,8 @@ def q_kernel_priority_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: ascending scan (quirk 4) decides WHICH slot when both are free, which
 #: affects ids only, not times, so the timing recurrence replaces the
 #: freed min slot.  Limiter disabled to isolate E3.
-_KERNEL_K2_ORACLE = """
-WITH RECURSIVE req AS (
-  SELECT CAST(user_id AS VARCHAR) AS user_id,
-         event_id AS seq,
-         epoch_us(ts) AS a_us,
-         greatest(CAST(round(value * 100) AS BIGINT) * 10000, 0) AS p_us,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY epoch_us(ts), event_id) AS rn
-  FROM events
-),
-sim AS (
-  SELECT user_id,
-         CAST(0 AS BIGINT) AS rn,
-         CAST(NULL AS BIGINT) AS seq,
-         CAST(NULL AS BIGINT) AS a_us,
-         CAST(NULL AS BIGINT) AS s_us,
-         CAST(NULL AS BIGINT) AS f_us,
+_KERNEL_K2_ORACLE = f"""
+{_FIFO_SIM_SQL}
          CAST(0 AS BIGINT) AS busy1,
          CAST(0 AS BIGINT) AS busy2
   FROM (SELECT DISTINCT user_id FROM req)
@@ -455,9 +448,7 @@ sim AS (
                   greatest(s.busy1, s.busy2))
   FROM sim s JOIN req r ON r.user_id = s.user_id AND r.rn = s.rn + 1
 )
-SELECT user_id, seq,
-       a_us / 1000000 AS arrival_s,
-       s_us / 1000000 AS start_s,
+{_SIM_TIMES_SQL}
        f_us / 1000000 AS finish_s,
        (s_us - a_us) / 1000000 AS queuing_s
 FROM sim WHERE rn > 0

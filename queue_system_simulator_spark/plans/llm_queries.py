@@ -233,16 +233,31 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Shingle-based near-dup (n-gram Jaccard + MinHash/LSH)
 # --------------------------------------------------------------------------
-_SHINGLES_SQL = """
-SELECT DISTINCT doc_id, source, shingle
-FROM (
-  SELECT d.doc_id, d.source,
+# Every 3-gram word shingle of ``documents d`` (repeats kept): the last
+# select item and the FROM clause of a select over token positions ``i``.
+_SHINGLE_GRAMS_SQL = """\
          t.tokens[i] || ' ' || t.tokens[i+1] || ' ' || t.tokens[i+2] AS shingle
   FROM documents d,
        LATERAL (SELECT string_split(d.text, ' ') AS tokens) t,
-       LATERAL (SELECT unnest(generate_series(1, greatest(len(t.tokens) - 2, 0))) AS i) s
+       LATERAL (SELECT unnest(generate_series(1, greatest(len(t.tokens) - 2, 0))) AS i) s"""
+_SHINGLES_SQL = f"""
+SELECT DISTINCT doc_id, source, shingle
+FROM (
+  SELECT d.doc_id, d.source,
+{_SHINGLE_GRAMS_SQL}
 ) x
 """
+# The WITH head of a shingle-overlap query: the shingles ``sh``, each
+# doc's shingle-set size, and each same-source pair's overlap.
+_SHINGLE_OVERLAP_SQL = f"""\
+WITH sh AS ({_SHINGLES_SQL}),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
+  FROM sh a JOIN sh b
+    ON a.shingle = b.shingle AND a.source = b.source AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+)"""
 
 
 def _shingle_expr() -> Column:
@@ -386,14 +401,7 @@ def _exact_overlap(pairs: DataFrame, arrs: DataFrame) -> DataFrame:
 @register(
     "ngram_jaccard_pairs",
     oracle=f"""
-WITH sh AS ({_SHINGLES_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM sh a JOIN sh b
-    ON a.shingle = b.shingle AND a.source = b.source AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
+{_SHINGLE_OVERLAP_SQL}
 SELECT i.doc_a, i.doc_b, i.n_inter,
        sa.n_sh + sb.n_sh - i.n_inter AS n_union,
        round(CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter), 6)
@@ -435,6 +443,23 @@ FROM ({_SHINGLES_SQL}) sh,
      LATERAL (SELECT unnest(generate_series(0, {NUM_MINHASH - 1})) AS seed) s
 GROUP BY sh.doc_id, s.seed
 """
+
+# The LSH stages over a ``sig`` CTE of _MINHASH_SQL rows: ``bands`` keys
+# each doc's 4-row bands, and ``cand`` adds the band-pair join, one row
+# per colliding ``(doc_a, doc_b)``.
+_LSH_BANDS_SQL = f"""\
+bands AS (
+  SELECT doc_id, seed // {BAND_SIZE} AS band,
+         md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
+  FROM sig GROUP BY doc_id, seed // {BAND_SIZE}
+)"""
+_LSH_CAND_SQL = f"""\
+{_LSH_BANDS_SQL},
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+)"""
 
 
 @register(
@@ -585,16 +610,7 @@ def _lsh_candidates(wide: DataFrame) -> DataFrame:
     "minhash_lsh_pairs",
     oracle=f"""
 WITH sig AS ({_MINHASH_SQL}),
-bands AS (
-  SELECT doc_id, seed // {BAND_SIZE} AS band,
-         md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-  FROM sig GROUP BY doc_id, seed // {BAND_SIZE}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
+{_LSH_CAND_SQL},
 est AS (
   SELECT c.doc_a, c.doc_b,
          sum(CASE WHEN sa.minhash = sb.minhash THEN 1 ELSE 0 END) AS n_match
@@ -961,20 +977,15 @@ def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LSH_PAIRS_SQL = f"""
 WITH sig AS ({_MINHASH_SQL}),
-bands AS (
-  SELECT doc_id, seed // {BAND_SIZE} AS band,
-         md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-  FROM sig GROUP BY doc_id, seed // {BAND_SIZE}
-)
+{_LSH_BANDS_SQL}
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM bands a JOIN bands b
   ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
 """
 
-
-@register(
-    "dedup_clusters",
-    oracle=f"""
+# Connected components of the LSH pair graph by recursive reachability:
+# ``lbl`` labels every document with the least doc_id it reaches.
+_LSH_COMPONENTS_SQL = f"""\
 WITH RECURSIVE pairs AS ({_LSH_PAIRS_SQL}),
 sym AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
@@ -990,7 +1001,13 @@ lbl AS (
          least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS cluster_id
   FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
   GROUP BY d.doc_id
-)
+)"""
+
+
+@register(
+    "dedup_clusters",
+    oracle=f"""
+{_LSH_COMPONENTS_SQL}
 SELECT l.doc_id, l.cluster_id,
        count(*) OVER (PARTITION BY l.cluster_id) AS cluster_size,
        CAST(l.doc_id = l.cluster_id AS BOOLEAN) AS is_canonical
@@ -1403,13 +1420,9 @@ FROM (
 ) cl
 GROUP BY label
 """
-
-
-@register(
-    "embed_ivf_probe_topk",
-    oracle=f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+# The IVF shortlist over ``e`` (the embeddings) and ``q`` (the query
+# vector ``qv``): the IVF_NPROBE cells whose centroid is nearest by L2.
+_IVF_CELLS_SQL = f"""\
 cent AS ({_CENTROID_SQL}),
 cells AS (
   SELECT label,
@@ -1419,7 +1432,27 @@ cells AS (
   FROM cent, q
   ORDER BY l2, label
   LIMIT {IVF_NPROBE}
-)
+)"""
+# The WITH head of a recall query: ``e``, the query vector ``q``, and the
+# IVF_TOPK exact cosine neighbours of the query.
+_EXACT_TOPK_SQL = f"""\
+WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+exact AS (
+  SELECT b.vec_id
+  FROM (SELECT v FROM e WHERE vec_id = 0) a, e b
+  WHERE b.vec_id != 0
+  ORDER BY round({_COS_SQL}, 6) DESC, b.vec_id
+  LIMIT {IVF_TOPK}
+)"""
+
+
+@register(
+    "embed_ivf_probe_topk",
+    oracle=f"""
+WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+{_IVF_CELLS_SQL}
 SELECT b.vec_id, b.label,
        round(list_dot_product(q.qv, b.v)
              / (sqrt(list_dot_product(q.qv, q.qv))
@@ -1988,14 +2021,14 @@ q AS (SELECT * FROM e WHERE vec_id % 25 = 0
       LIMIT {KNN_GRAPH_QSAMPLE}),
 scored AS (
   SELECT a.vec_id AS src, b.vec_id AS nbr, a.label,
-         round({{cos}}, 6) AS sim
+         round({_COS_SQL}, 6) AS sim
   FROM q a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id
 )
 SELECT src, nbr, label, sim FROM (
   SELECT *, row_number() OVER (PARTITION BY src ORDER BY sim DESC, nbr) AS rn
   FROM scored
 ) WHERE rn <= 3
-""".replace("{cos}", _COS_SQL),
+""",
     description="k-NN graph construction (the backbone of graph-based ANN "
     f"indexes and embedding-cluster analysis): an md5-ranked sample of "
     f"≤{KNN_GRAPH_QSAMPLE} of the every-25th vectors are query nodes, "
@@ -2035,16 +2068,7 @@ def q_embed_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     "minhash_verified_pairs",
     oracle=f"""
 WITH sig AS ({_MINHASH_SQL}),
-bands AS (
-  SELECT doc_id, seed // {BAND_SIZE} AS band,
-         md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-  FROM sig GROUP BY doc_id, seed // {BAND_SIZE}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
+{_LSH_CAND_SQL},
 sh AS ({_SHINGLES_SQL}),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
@@ -2099,9 +2123,9 @@ def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "kmeans_assign",
-    oracle=f"""
+# The WITH head of a k-means assignment step: ``d`` holds the squared L2
+# distance (rounded) of every vector to every cell centroid.
+_CENTROID_L2_SQL = f"""\
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
 cent AS ({_CENTROID_SQL}),
 d AS (
@@ -2110,7 +2134,13 @@ d AS (
                d -> (e.v[CAST(d AS INT)] - cent.c[CAST(d AS INT)])
                   * (e.v[CAST(d AS INT)] - cent.c[CAST(d AS INT)])), 'sum'), 6) AS l2
   FROM e CROSS JOIN cent
-)
+)"""
+
+
+@register(
+    "kmeans_assign",
+    oracle=f"""
+{_CENTROID_L2_SQL}
 SELECT vec_id, old_label, cand AS new_label, l2 AS dist,
        cand <> old_label AS moved
 FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY l2, cand) AS rn
@@ -2146,10 +2176,10 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "bigram_lm_doc_score",
-    oracle="""
-WITH toks AS (
+# The Laplace-smoothed bigram model of the corpus: token bigrams ``big``,
+# bigram and prefix counts, and the vocabulary size.
+_BIGRAM_MODEL_SQL = """\
+toks AS (
   SELECT doc_id, t.tokens AS tokens FROM documents d,
        LATERAL (SELECT string_split(d.text, ' ') AS tokens) t
 ),
@@ -2159,7 +2189,13 @@ big AS (
 ),
 cab AS (SELECT a, b, count(*) AS c_ab FROM big GROUP BY a, b),
 ca AS (SELECT a, count(*) AS c_a FROM big GROUP BY a),
-v AS (SELECT count(DISTINCT a) AS vocab FROM ca)
+v AS (SELECT count(DISTINCT a) AS vocab FROM ca)"""
+
+
+@register(
+    "bigram_lm_doc_score",
+    oracle=f"""
+WITH {_BIGRAM_MODEL_SQL}
 SELECT g.doc_id,
        count(*) AS n_bigrams,
        round(sum(ln((cab.c_ab + 1.0) / (ca.c_a + v.vocab))) / count(*), 6)
@@ -2312,11 +2348,7 @@ def q_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pair_graph_triangles",
     oracle=f"""
 WITH sig AS ({_MINHASH_SQL}),
-bands AS (
-  SELECT doc_id, seed // {BAND_SIZE} AS band,
-         md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-  FROM sig GROUP BY doc_id, seed // {BAND_SIZE}
-),
+{_LSH_BANDS_SQL},
 e AS (
   SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
   FROM bands a JOIN bands b
@@ -2360,22 +2392,7 @@ def q_pair_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "cluster_aware_split",
     oracle=f"""
-WITH RECURSIVE pairs AS ({_LSH_PAIRS_SQL}),
-sym AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL SELECT doc_b, doc_a FROM pairs
-),
-reach(a, b) AS (
-  SELECT a, b FROM sym
-  UNION
-  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-),
-lbl AS (
-  SELECT d.doc_id,
-         least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS cluster_id
-  FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-  GROUP BY d.doc_id
-)
+{_LSH_COMPONENTS_SQL}
 SELECT doc_id, cluster_id,
        CASE WHEN nib < 13 THEN 'train'
             WHEN nib < 14 THEN 'val'
@@ -2657,15 +2674,7 @@ def q_pagerank_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KMEANS_ASSIGN_SQL = f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS ({_CENTROID_SQL}),
-d AS (
-  SELECT e.vec_id, e.label AS old_label, cent.label AS cand,
-         round(list_aggregate(list_transform(generate_series(1, CAST(len(cent.c) AS INT)),
-               d -> (e.v[CAST(d AS INT)] - cent.c[CAST(d AS INT)])
-                  * (e.v[CAST(d AS INT)] - cent.c[CAST(d AS INT)])), 'sum'), 6) AS l2
-  FROM e CROSS JOIN cent
-)
+{_CENTROID_L2_SQL}
 SELECT vec_id, old_label, cand AS new_label, l2 AS dist
 FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY l2, cand) AS rn
       FROM d)
@@ -2782,10 +2791,13 @@ def q_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pq_codebook_assign",
-    oracle=f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+def _pq_dists_sql(sub_keys: str, d_keys: str) -> str:
+    """The PQ oracles' stages over ``e``.  ``dmean``/``cb``: each label's
+    sub-centroid per subspace (the codebooks); ``sub``: each vector's _PQ_M
+    subvectors; ``d``: the rounded squared L2 of each subvector to each
+    codebook entry.  ``sub_keys`` and ``d_keys`` are the leading columns
+    ``sub`` and ``d`` keep."""
+    return f"""\
 dmean AS (
   SELECT label, s.dim AS dim,
          round(CAST(sum(e.v[CAST(s.dim AS INT)]) AS DOUBLE) / count(*), 6) AS c
@@ -2798,19 +2810,47 @@ cb AS (
   FROM dmean GROUP BY label, CAST((dim - 1) // {_PQ_SUB} AS INT)
 ),
 sub AS (
-  SELECT e.vec_id, mm.m AS m,
+  SELECT {sub_keys}, mm.m AS m,
          e.v[mm.m * {_PQ_SUB} + 1 : mm.m * {_PQ_SUB} + {_PQ_SUB}] AS vs
   FROM e, LATERAL (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m) mm
 ),
 d AS (
-  SELECT sub.vec_id, sub.m, cb.label,
+  SELECT {d_keys}, sub.m, cb.label,
          round(list_aggregate(list_transform(
                generate_series(1, {_PQ_SUB}),
                i -> (sub.vs[CAST(i AS INT)] - cb.c[CAST(i AS INT)])
                   * (sub.vs[CAST(i AS INT)] - cb.c[CAST(i AS INT)])), 'sum'),
                6) AS l2
   FROM sub JOIN cb ON cb.m = sub.m
+)"""
+
+
+def _pq_adc_sql(keys: str, scan: str) -> str:
+    """The ADC top 10 over ``d``: each vector's nearest code per subspace
+    (``codes`` keeps ``keys``), the query's lookup table ``lut``, and the
+    10 vectors whose summed lookups are least.  ``scan`` is the FROM clause
+    that joins ``codes c`` to ``lut``."""
+    return f"""\
+codes AS (
+  SELECT {keys}, m, label AS code
+  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, m
+                                     ORDER BY l2, label) AS rn FROM d)
+  WHERE rn = 1
 ),
+lut AS (SELECT m, label, l2 FROM d WHERE vec_id = 0)
+SELECT c.vec_id, round(sum(lut.l2), 6) AS adc_dist
+{scan}
+WHERE c.vec_id != 0
+GROUP BY c.vec_id
+ORDER BY adc_dist, vec_id
+LIMIT 10"""
+
+
+@register(
+    "pq_codebook_assign",
+    oracle=f"""
+WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+{_pq_dists_sql("e.vec_id", "sub.vec_id")},
 best AS (
   SELECT vec_id, m, label, l2
   FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, m
@@ -2854,44 +2894,8 @@ def q_pq_codebook_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pq_adc_topk",
     oracle=f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-dmean AS (
-  SELECT label, s.dim AS dim,
-         round(CAST(sum(e.v[CAST(s.dim AS INT)]) AS DOUBLE) / count(*), 6) AS c
-  FROM e, LATERAL (SELECT unnest(generate_series(1, len(e.v))) AS dim) s
-  GROUP BY label, s.dim
-),
-cb AS (
-  SELECT label, CAST((dim - 1) // {_PQ_SUB} AS INT) AS m,
-         list(c ORDER BY dim) AS c
-  FROM dmean GROUP BY label, CAST((dim - 1) // {_PQ_SUB} AS INT)
-),
-sub AS (
-  SELECT e.vec_id, mm.m AS m,
-         e.v[mm.m * {_PQ_SUB} + 1 : mm.m * {_PQ_SUB} + {_PQ_SUB}] AS vs
-  FROM e, LATERAL (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m) mm
-),
-d AS (
-  SELECT sub.vec_id, sub.m, cb.label,
-         round(list_aggregate(list_transform(
-               generate_series(1, {_PQ_SUB}),
-               i -> (sub.vs[CAST(i AS INT)] - cb.c[CAST(i AS INT)])
-                  * (sub.vs[CAST(i AS INT)] - cb.c[CAST(i AS INT)])), 'sum'),
-               6) AS l2
-  FROM sub JOIN cb ON cb.m = sub.m
-),
-codes AS (
-  SELECT vec_id, m, label AS code
-  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, m
-                                     ORDER BY l2, label) AS rn FROM d)
-  WHERE rn = 1
-),
-lut AS (SELECT m, label, l2 FROM d WHERE vec_id = 0)
-SELECT c.vec_id, round(sum(lut.l2), 6) AS adc_dist
-FROM codes c JOIN lut ON lut.m = c.m AND lut.label = c.code
-WHERE c.vec_id != 0
-GROUP BY c.vec_id
-ORDER BY adc_dist, vec_id
-LIMIT 10
+{_pq_dists_sql("e.vec_id", "sub.vec_id")},
+{_pq_adc_sql("vec_id", "FROM codes c JOIN lut ON lut.m = c.m AND lut.label = c.code")}
 """,
     description="PQ asymmetric-distance search (the compressed-ANN query "
     "path): the query vector precomputes a (subspace x codebook-entry) L2 "
@@ -2906,61 +2910,21 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_adc_top10(e, _pq_codebooks(_label_dim_means(e)))
 
 
+# ivf_pq_topk's ADC scan: only the shortlisted cells' codes
+_IVF_PQ_SCAN_SQL = """\
+FROM codes c
+JOIN cells ON cells.label = c.cell
+JOIN lut ON lut.m = c.m AND lut.label = c.code"""
+
+
 @register(
     "ivf_pq_topk",
     oracle=f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-cent AS ({_CENTROID_SQL}),
-cells AS (
-  SELECT label,
-         round(list_aggregate(list_transform(generate_series(1, CAST(len(c) AS INT)),
-               d -> (qv[CAST(d AS INT)] - c[CAST(d AS INT)])
-                  * (qv[CAST(d AS INT)] - c[CAST(d AS INT)])), 'sum'), 6) AS l2
-  FROM cent, q
-  ORDER BY l2, label
-  LIMIT {IVF_NPROBE}
-),
-dmean AS (
-  SELECT label, s.dim AS dim,
-         round(CAST(sum(e.v[CAST(s.dim AS INT)]) AS DOUBLE) / count(*), 6) AS c
-  FROM e, LATERAL (SELECT unnest(generate_series(1, len(e.v))) AS dim) s
-  GROUP BY label, s.dim
-),
-cb AS (
-  SELECT label, CAST((dim - 1) // {_PQ_SUB} AS INT) AS m,
-         list(c ORDER BY dim) AS c
-  FROM dmean GROUP BY label, CAST((dim - 1) // {_PQ_SUB} AS INT)
-),
-sub AS (
-  SELECT e.vec_id, e.label AS cell, mm.m AS m,
-         e.v[mm.m * {_PQ_SUB} + 1 : mm.m * {_PQ_SUB} + {_PQ_SUB}] AS vs
-  FROM e, LATERAL (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m) mm
-),
-d AS (
-  SELECT sub.vec_id, sub.cell, sub.m, cb.label,
-         round(list_aggregate(list_transform(
-               generate_series(1, {_PQ_SUB}),
-               i -> (sub.vs[CAST(i AS INT)] - cb.c[CAST(i AS INT)])
-                  * (sub.vs[CAST(i AS INT)] - cb.c[CAST(i AS INT)])), 'sum'),
-               6) AS l2
-  FROM sub JOIN cb ON cb.m = sub.m
-),
-codes AS (
-  SELECT vec_id, cell, m, label AS code
-  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, m
-                                     ORDER BY l2, label) AS rn FROM d)
-  WHERE rn = 1
-),
-lut AS (SELECT m, label, l2 FROM d WHERE vec_id = 0)
-SELECT c.vec_id, round(sum(lut.l2), 6) AS adc_dist
-FROM codes c
-JOIN cells ON cells.label = c.cell
-JOIN lut ON lut.m = c.m AND lut.label = c.code
-WHERE c.vec_id != 0
-GROUP BY c.vec_id
-ORDER BY adc_dist, vec_id
-LIMIT 10
+{_IVF_CELLS_SQL},
+{_pq_dists_sql("e.vec_id, e.label AS cell", "sub.vec_id, sub.cell")},
+{_pq_adc_sql("vec_id, cell", _IVF_PQ_SCAN_SQL)}
 """,
     description="IVF-PQ search (the production large-scale ANN stack): the "
     "query shortlists {IVF_NPROBE} inverted-file cells by centroid "
@@ -3319,18 +3283,8 @@ def q_fuzzy_edit_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PPL_KEEP_QUANTILE = 0.3  # drop the worst-scoring 30% of the corpus
 
-_BIGRAM_SCORE_SQL = """
-toks AS (
-  SELECT doc_id, t.tokens AS tokens FROM documents d,
-       LATERAL (SELECT string_split(d.text, ' ') AS tokens) t
-),
-big AS (
-  SELECT doc_id, tokens[i] AS a, tokens[i+1] AS b
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(tokens) - 1, 0))) AS i) s
-),
-cab AS (SELECT a, b, count(*) AS c_ab FROM big GROUP BY a, b),
-ca AS (SELECT a, count(*) AS c_a FROM big GROUP BY a),
-v AS (SELECT count(DISTINCT a) AS vocab FROM ca),
+_BIGRAM_SCORE_SQL = f"""
+{_BIGRAM_MODEL_SQL},
 score AS (
   SELECT g.doc_id,
          round(sum(ln((cab.c_ab + 1.0) / (ca.c_a + v.vocab))) / count(*), 6)
@@ -3610,25 +3564,8 @@ def q_embed_sq8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ivf_recall_at_k",
     oracle=f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-exact AS (
-  SELECT b.vec_id
-  FROM (SELECT v FROM e WHERE vec_id = 0) a, e b
-  WHERE b.vec_id != 0
-  ORDER BY round({_COS_SQL}, 6) DESC, b.vec_id
-  LIMIT {IVF_TOPK}
-),
-cent AS ({_CENTROID_SQL}),
-cells AS (
-  SELECT label,
-         round(list_aggregate(list_transform(generate_series(1, CAST(len(c) AS INT)),
-               d -> (qv[CAST(d AS INT)] - c[CAST(d AS INT)])
-                  * (qv[CAST(d AS INT)] - c[CAST(d AS INT)])), 'sum'), 6) AS l2
-  FROM cent, q
-  ORDER BY l2, label
-  LIMIT {IVF_NPROBE}
-),
+{_EXACT_TOPK_SQL},
+{_IVF_CELLS_SQL},
 ivf AS (
   SELECT b.vec_id
   FROM e b JOIN cells ON b.label = cells.label, q
@@ -3803,10 +3740,10 @@ def _vocab_with_ids(tok: DataFrame) -> DataFrame:
     return ranked.select("g", F.col("id").cast("int").alias("id"))
 
 
-@register(
-    "vocab_encode_ids",
-    oracle="""
-WITH tok AS (
+# Every token position ``tok`` and the corpus vocabulary ``vocab``: ids
+# by descending count, ties by token.
+_VOCAB_SQL = """\
+tok AS (
   SELECT d.doc_id, s.i AS i, t.tokens[s.i] AS g
   FROM documents d,
        LATERAL (SELECT string_split(d.text, ' ') AS tokens) t,
@@ -3815,7 +3752,13 @@ WITH tok AS (
 vocab AS (
   SELECT g, row_number() OVER (ORDER BY c DESC, g) AS id
   FROM (SELECT g, count(*) AS c FROM tok GROUP BY g)
-)
+)"""
+
+
+@register(
+    "vocab_encode_ids",
+    oracle=f"""
+WITH {_VOCAB_SQL}
 SELECT tok.doc_id,
        CAST(count(*) AS BIGINT) AS n_tokens,
        string_agg(CAST(v.id AS VARCHAR), ' ' ORDER BY tok.i) AS ids_str
@@ -3905,6 +3848,13 @@ def _scorecard(
     )
 
 
+# The near-dup evaluators' candidates: every minhash_lsh_pairs pair.
+_LSH_EVAL_CAND_SQL = f"""\
+cand AS (
+  SELECT doc_a, doc_b FROM ({_REGISTRY["minhash_lsh_pairs"].oracle}) c
+)"""
+
+
 @register(
     "lsh_recall_eval",
     oracle=f"""
@@ -3913,9 +3863,7 @@ WITH truth AS (
   FROM ({_REGISTRY["ngram_jaccard_pairs"].oracle}) t
   WHERE jaccard >= {NEAR_DUP_TAU}
 ),
-cand AS (
-  SELECT doc_a, doc_b FROM ({_REGISTRY["minhash_lsh_pairs"].oracle}) c
-),
+{_LSH_EVAL_CAND_SQL},
 hit AS (SELECT * FROM truth INTERSECT SELECT * FROM cand)
 SELECT (SELECT count(*) FROM truth) AS n_true,
        (SELECT count(*) FROM cand) AS n_candidates,
@@ -3952,17 +3900,23 @@ def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
-    "stratified_exact_split",
-    oracle="""
-WITH r AS (
-  SELECT doc_id, source,
+# Each document's md5 rank ``rn`` within its source and the source's
+# size ``n``: the select items after the keys, and the FROM clause.
+_XSPLIT_RANK_SQL = """\
          row_number() OVER (
            PARTITION BY source
            ORDER BY md5('xsplit|' || CAST(doc_id AS VARCHAR)), doc_id
          ) AS rn,
          count(*) OVER (PARTITION BY source) AS n
-  FROM documents
+  FROM documents"""
+
+
+@register(
+    "stratified_exact_split",
+    oracle=f"""
+WITH r AS (
+  SELECT doc_id, source,
+{_XSPLIT_RANK_SQL}
 )
 SELECT doc_id, source,
        CASE WHEN rn * 100 <= n * 80 THEN 'train'
@@ -4363,17 +4317,8 @@ def q_corpus_drift_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vocab_roundtrip_check",
-    oracle="""
-WITH tok AS (
-  SELECT d.doc_id, s.i AS i, t.tokens[s.i] AS g
-  FROM documents d,
-       LATERAL (SELECT string_split(d.text, ' ') AS tokens) t,
-       LATERAL (SELECT unnest(generate_series(1, len(t.tokens))) AS i) s
-),
-vocab AS (
-  SELECT g, row_number() OVER (ORDER BY c DESC, g) AS id
-  FROM (SELECT g, count(*) AS c FROM tok GROUP BY g)
-),
+    oracle=f"""
+WITH {_VOCAB_SQL},
 enc AS (
   SELECT tok.doc_id, tok.i, v.id
   FROM tok JOIN vocab v ON tok.g = v.g
@@ -4627,14 +4572,7 @@ CONTAINMENT_TAU = 0.5  # max-side containment threshold
 @register(
     "ngram_containment_pairs",
     oracle=f"""
-WITH sh AS ({{shingles}}),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM sh a JOIN sh b
-    ON a.shingle = b.shingle AND a.source = b.source AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
+{_SHINGLE_OVERLAP_SQL}
 SELECT i.doc_a, i.doc_b, i.n_inter,
        round(CAST(i.n_inter AS DOUBLE) / sa.n_sh, 6) AS containment_a,
        round(CAST(i.n_inter AS DOUBLE) / sb.n_sh, 6) AS containment_b
@@ -4643,7 +4581,7 @@ JOIN sizes sa ON i.doc_a = sa.doc_id
 JOIN sizes sb ON i.doc_b = sb.doc_id
 WHERE greatest(CAST(i.n_inter AS DOUBLE) / sa.n_sh,
                CAST(i.n_inter AS DOUBLE) / sb.n_sh) >= {CONTAINMENT_TAU}
-""".replace("{shingles}", _SHINGLES_SQL),
+""",
     description="N-gram CONTAINMENT near-dup (asymmetric overlap |A∩B|/|A|"
     "): flags a short document quoted or embedded inside a longer one — "
     "the subset relationships symmetric Jaccard dilutes below any "
@@ -5184,9 +5122,7 @@ WITH truth AS (
   SELECT doc_a, doc_b, jaccard
   FROM ({_REGISTRY["ngram_jaccard_pairs"].oracle}) t
 ),
-cand AS (
-  SELECT doc_a, doc_b FROM ({_REGISTRY["minhash_lsh_pairs"].oracle}) c
-),
+{_LSH_EVAL_CAND_SQL},
 flagged AS (
   SELECT t.jaccard, (c.doc_a IS NOT NULL) AS is_cand
   FROM truth t LEFT JOIN cand c
@@ -5306,16 +5242,8 @@ def q_tokenizer_fertility_by_lang(
 @register(
     "ivf_nprobe_sweep",
     oracle=f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-exact AS (
-  SELECT b.vec_id
-  FROM (SELECT v FROM e WHERE vec_id = 0) a, e b
-  WHERE b.vec_id != 0
-  ORDER BY round({{cos}}, 6) DESC, b.vec_id
-  LIMIT {IVF_TOPK}
-),
-cent AS ({{centroid}}),
+{_EXACT_TOPK_SQL},
+cent AS ({_CENTROID_SQL}),
 ranked_cells AS (
   SELECT label,
          row_number() OVER (ORDER BY
@@ -5354,7 +5282,7 @@ SELECT p.nprobe,
        round((SELECT count(*) FROM topk t JOIN exact x USING (vec_id)
          WHERE t.nprobe = p.nprobe) / {IVF_TOPK}.0, 6) AS recall_at_k
 FROM probes p
-""".replace("{cos}", _COS_SQL).replace("{centroid}", _CENTROID_SQL),
+""",
     description="IVF nprobe sweep — the probe-budget curve (cost = "
     "candidates scanned, quality = recall@20) for nprobe 1..4 from ONE "
     "index build and ONE corpus pass: cells are ranked once by centroid "
@@ -5460,7 +5388,7 @@ truth AS (
     FROM scored)
   WHERE rnk <= {NDCG_K}
 ),
-cent AS ({{centroid}}),
+cent AS ({_CENTROID_SQL}),
 cellrank AS (
   SELECT q_id, label FROM (
     SELECT q.q_id, c.label,
@@ -5498,7 +5426,7 @@ SELECT q_id,
        round(CAST(sum(term_micro) AS DOUBLE) / {_NDCG_IDCG_MICRO}, 6)
          AS ndcg_at_k
 FROM j GROUP BY q_id
-""".replace("{centroid}", _CENTROID_SQL),
+""",
     description="RAG-shaped retrieval eval — nDCG@k beside the recall@k "
     "the sweep queries already grade: a deterministic query set "
     f"(vec_id < {NDCG_N_QUERIES}) is scored against the corpus, graded "
@@ -5706,16 +5634,20 @@ def _prefix_candidates(pref: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "prefix_filter_jaccard_pairs",
-    oracle=f"""
-WITH tok AS ({_SHINGLES_SQL}),
-n AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-df AS (SELECT shingle, count(*) AS df FROM tok GROUP BY shingle),
+# The prefix filter over a ``tok`` CTE of shingle rows: ``pref`` keeps
+# each doc's rarest shingles (by document frequency ``df``), as many as
+# any pair at Jaccard >= NEAR_DUP_TAU must share one of, and ``cand``
+# pairs the docs that share a prefix shingle.  _PREFIX_RANK_SQL opens the
+# ``pref`` CTE; the rank order and the cut follow it.
+_PREFIX_RANK_SQL = """\
 pref AS (
   SELECT doc_id, shingle FROM (
     SELECT t.doc_id, t.shingle,
-           row_number() OVER (PARTITION BY t.doc_id
+           row_number() OVER (PARTITION BY t.doc_id"""
+_PREFIX_CAND_SQL = f"""\
+n AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
+df AS (SELECT shingle, count(*) AS df FROM tok GROUP BY shingle),
+{_PREFIX_RANK_SQL}
                               ORDER BY df.df, t.shingle) AS rn,
            n.n
     FROM tok t JOIN df USING (shingle) JOIN n USING (doc_id))
@@ -5724,7 +5656,14 @@ pref AS (
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM pref a JOIN pref b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-),
+)"""
+
+
+@register(
+    "prefix_filter_jaccard_pairs",
+    oracle=f"""
+WITH tok AS ({_SHINGLES_SQL}),
+{_PREFIX_CAND_SQL},
 inter AS (
   SELECT c.doc_a, c.doc_b, count(*) AS n_inter
   FROM cand c
@@ -6023,6 +5962,20 @@ def _doc_sample(spark: SparkSession, sf_dir: str, salt: str) -> DataFrame:
     )
 
 
+# The shingles ``tok`` of the docs in an ``sdocs`` sample, and the FROM
+# and WHERE of the sampled pairs of ``inter`` (overlap ``i``, sizes ``n``)
+# at exact Jaccard >= NEAR_DUP_TAU.
+_SAMPLED_SHINGLES_SQL = f"""\
+tok AS MATERIALIZED (
+  SELECT * FROM ({_SHINGLES_SQL})
+  WHERE doc_id IN (SELECT doc_id FROM sdocs)
+)"""
+_NEAR_DUP_JOIN_SQL = f"""\
+  FROM inter i JOIN n na ON na.doc_id = i.doc_a
+               JOIN n nb ON nb.doc_id = i.doc_b
+  WHERE CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i) >= {NEAR_DUP_TAU}"""
+
+
 @register(
     "minhash_estimate_error",
     oracle=f"""
@@ -6031,25 +5984,8 @@ WITH sdocs AS (
   ORDER BY md5('mhdoc|' || CAST(doc_id AS VARCHAR)), doc_id
   LIMIT {EVAL_DOC_SAMPLE}
 ),
-tok AS MATERIALIZED (
-  SELECT * FROM ({_SHINGLES_SQL})
-  WHERE doc_id IN (SELECT doc_id FROM sdocs)
-),
-n AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-df AS (SELECT shingle, count(*) AS df FROM tok GROUP BY shingle),
-pref AS (
-  SELECT doc_id, shingle FROM (
-    SELECT t.doc_id, t.shingle,
-           row_number() OVER (PARTITION BY t.doc_id
-                              ORDER BY df.df, t.shingle) AS rn,
-           n.n
-    FROM tok t JOIN df USING (shingle) JOIN n USING (doc_id))
-  WHERE rn <= n - CAST(ceil({NEAR_DUP_TAU} * n) AS BIGINT) + 1
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM pref a JOIN pref b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-),
+{_SAMPLED_SHINGLES_SQL},
+{_PREFIX_CAND_SQL},
 sampled AS (
   SELECT doc_a, doc_b FROM cand
   ORDER BY md5(CAST(doc_a AS VARCHAR) || ',' || CAST(doc_b AS VARCHAR)),
@@ -6066,9 +6002,7 @@ inter AS (
 pairs AS (
   SELECT i.doc_a, i.doc_b,
          round(CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i), 6) AS jaccard
-  FROM inter i JOIN n na ON na.doc_id = i.doc_a
-               JOIN n nb ON nb.doc_id = i.doc_b
-  WHERE CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i) >= {NEAR_DUP_TAU}
+{_NEAR_DUP_JOIN_SQL}
 ),
 mh AS ({_MINHASH_SQL}),
 m AS (
@@ -6381,10 +6315,7 @@ WITH sdocs AS (
   ORDER BY md5('bsedoc|' || CAST(doc_id AS VARCHAR)), doc_id
   LIMIT {EVAL_DOC_SAMPLE}
 ),
-tok AS MATERIALIZED (
-  SELECT * FROM ({_SHINGLES_SQL})
-  WHERE doc_id IN (SELECT doc_id FROM sdocs)
-),
+{_SAMPLED_SHINGLES_SQL},
 n AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
 inter AS MATERIALIZED (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
@@ -6393,14 +6324,9 @@ inter AS MATERIALIZED (
 ),
 truth AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b
-  FROM inter i JOIN n na ON na.doc_id = i.doc_a
-               JOIN n nb ON nb.doc_id = i.doc_b
-  WHERE CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i) >= {NEAR_DUP_TAU}
+{_NEAR_DUP_JOIN_SQL}
 ),
-pref AS (
-  SELECT doc_id, shingle FROM (
-    SELECT t.doc_id, t.shingle,
-           row_number() OVER (PARTITION BY t.doc_id
+{_PREFIX_RANK_SQL}
                               ORDER BY df.df, t.shingle) AS rn, n.n
     FROM tok t
     JOIN (SELECT shingle, count(*) AS df FROM tok GROUP BY shingle) df
@@ -6419,11 +6345,7 @@ sig AS MATERIALIZED (
        LATERAL (SELECT unnest(generate_series(0, {NUM_MINHASH - 1})) AS seed) s
   GROUP BY tok.doc_id, s.seed
 ),
-bands AS (
-  SELECT doc_id, seed // {BAND_SIZE} AS band,
-         md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-  FROM sig GROUP BY doc_id, seed // {BAND_SIZE}
-),
+{_LSH_BANDS_SQL},
 cand_lsh AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b
@@ -6527,13 +6449,10 @@ def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # TF-IDF cosine scoring of candidate pairs (IR-weighted verify stage)
 # --------------------------------------------------------------------------
-_SHINGLES_MULTI_SQL = """
+_SHINGLES_MULTI_SQL = f"""
 SELECT doc_id, shingle FROM (
   SELECT d.doc_id,
-         t.tokens[i] || ' ' || t.tokens[i+1] || ' ' || t.tokens[i+2] AS shingle
-  FROM documents d,
-       LATERAL (SELECT string_split(d.text, ' ') AS tokens) t,
-       LATERAL (SELECT unnest(generate_series(1, greatest(len(t.tokens) - 2, 0))) AS i) s
+{_SHINGLE_GRAMS_SQL}
 ) x
 """
 
@@ -6555,16 +6474,7 @@ nrm AS (
   SELECT doc_id, sum(CAST(wm AS HUGEINT) * wm) AS nsq FROM w GROUP BY doc_id
 ),
 sig AS MATERIALIZED ({_MINHASH_SQL}),
-bands AS (
-  SELECT doc_id, seed // {BAND_SIZE} AS band,
-         md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-  FROM sig GROUP BY doc_id, seed // {BAND_SIZE}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
+{_LSH_CAND_SQL},
 dots AS (
   SELECT c.doc_a, c.doc_b,
          sum(CAST(wa.wm AS HUGEINT) * wb.wm) AS dot,
@@ -6776,12 +6686,7 @@ WITH h AS (
 ),
 r AS (
   SELECT source,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY md5('xsplit|' || CAST(doc_id AS VARCHAR)), doc_id
-         ) AS rn,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM documents
+{_XSPLIT_RANK_SQL}
 ),
 e AS (
   SELECT source,

@@ -27,12 +27,16 @@ _HEXBLOB = " || ".join(
     + [f"md5(text || '|{i}')" for i in range(1, NUM_BLOB_CHUNKS)]
 )
 
-#: bytes list re-derived from the hex string: byte i = 16*hi + lo nibble
-_MEDIA_BYTES_SQL = f"""
+#: the media rows' head: each document is one medium of a kind by doc_id
+_MEDIA_KIND_SQL = """\
 WITH m AS (
   SELECT doc_id AS media_id,
          CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
-              WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+              WHEN 1 THEN 'audio' ELSE 'video' END AS kind,"""
+
+#: bytes list re-derived from the hex string: byte i = 16*hi + lo nibble
+_MEDIA_BYTES_SQL = f"""
+{_MEDIA_KIND_SQL}
          substr({_HEXBLOB}, 1, CAST(2 * (64 + (doc_id % 4) * 16) AS INT)) AS hexblob
   FROM documents
 ),
@@ -47,11 +51,9 @@ b AS (
 )
 """
 
-
-@register(
-    "multimodal_features",
-    oracle=_MEDIA_BYTES_SQL
-    + """
+#: byte statistics and a 4-bin histogram per medium, graded twice (pandas
+#: and Arrow UDF boundaries)
+_MEDIA_FEATURES_SQL = _MEDIA_BYTES_SQL + """
 SELECT media_id, kind,
        CAST(len(bytes) AS BIGINT) AS n_bytes,
        CAST(list_aggregate(bytes, 'sum') AS BIGINT) AS sum_bytes,
@@ -64,7 +66,12 @@ SELECT media_id, kind,
        CAST(len(list_filter(bytes, x -> x // 64 = 2)) AS BIGINT) AS hist_2,
        CAST(len(list_filter(bytes, x -> x // 64 = 3)) AS BIGINT) AS hist_3
 FROM b
-""",
+"""
+
+
+@register(
+    "multimodal_features",
+    oracle=_MEDIA_FEATURES_SQL,
     description="Multimodal feature extraction: opaque binary blobs + typed "
     "metadata, byte stats + 4-bin histogram computed vectorized (numpy over "
     "Arrow batches) in mapInPandas — the codec-adjacent stage of an image/"
@@ -77,21 +84,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_features_arrow",
-    oracle=_MEDIA_BYTES_SQL
-    + """
-SELECT media_id, kind,
-       CAST(len(bytes) AS BIGINT) AS n_bytes,
-       CAST(list_aggregate(bytes, 'sum') AS BIGINT) AS sum_bytes,
-       round(CAST(list_aggregate(bytes, 'sum') AS DOUBLE) / len(bytes), 6)
-         AS mean_byte,
-       CAST(list_aggregate(bytes, 'min') AS BIGINT) AS min_byte,
-       CAST(list_aggregate(bytes, 'max') AS BIGINT) AS max_byte,
-       CAST(len(list_filter(bytes, x -> x // 64 = 0)) AS BIGINT) AS hist_0,
-       CAST(len(list_filter(bytes, x -> x // 64 = 1)) AS BIGINT) AS hist_1,
-       CAST(len(list_filter(bytes, x -> x // 64 = 2)) AS BIGINT) AS hist_2,
-       CAST(len(list_filter(bytes, x -> x // 64 = 3)) AS BIGINT) AS hist_3
-FROM b
-""",
+    oracle=_MEDIA_FEATURES_SQL,
     description="mapInArrow twin of multimodal_features: identical byte "
     "statistics computed on raw pyarrow RecordBatches — skips the "
     "Arrow->pandas conversion entirely, the lowest-overhead Python hop "
@@ -269,10 +262,7 @@ MEDIA_SHARD_BUDGET = 1024  # bytes per shard (fixture-scaled; prod: ~1 GB)
 @register(
     "multimodal_shard_packing",
     oracle=f"""
-WITH m AS (
-  SELECT doc_id AS media_id,
-         CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
-              WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+{_MEDIA_KIND_SQL}
          CAST(64 + (doc_id % 4) * 16 AS BIGINT) AS n_bytes
   FROM documents
 ),

@@ -544,9 +544,9 @@ def q_result_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # E5/E7 analysis-mode queries (pure SQL analogs of the kernel state machines)
 # --------------------------------------------------------------------------
-@register(
-    "rate_limit_sliding",
-    oracle="""
+#: E5's per-API sliding 60 s call count, graded for the batch window and
+#: the online limiter (streaming_rate_limit)
+RATE_LIMIT_SQL = """
 SELECT event_id,
        CAST(event_id % 5 + 1 AS INTEGER) AS api_id,
        CAST(count(*) OVER (
@@ -559,7 +559,12 @@ SELECT event_id,
          ORDER BY epoch_us(ts)
          RANGE BETWEEN 60000000 PRECEDING AND CURRENT ROW) <= 60 AS allowed
 FROM events
-""",
+"""
+
+
+@register(
+    "rate_limit_sliding",
+    oracle=RATE_LIMIT_SQL,
     description="E5 analysis mode: per-API sliding 60 s call count (range "
     "window frame ≙ the limiter's deque eviction, now − ts > 60 evicted; "
     "reference /root/reference/src/api_client.py:17-24). Range frames are "
@@ -627,12 +632,17 @@ def q_queue_depth_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "json_props_extract",
-    oracle="""
+#: the JSON props queries' head: the sum of the props payload's ``k``
+_PROPS_SUM_K_SQL = """\
 SELECT event_type,
        CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT)
-         AS sum_k,
+         AS sum_k,"""
+
+
+@register(
+    "json_props_extract",
+    oracle=f"""
+{_PROPS_SUM_K_SQL}
        CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT)
          AS min_k,
        CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT)
@@ -666,10 +676,8 @@ def q_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "variant_props_extract",
-    oracle="""
-SELECT event_type,
-       CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT)
-         AS sum_k,
+    oracle=f"""
+{_PROPS_SUM_K_SQL}
        CAST(count(CAST(json_extract_string(props, '$.missing') AS BIGINT))
             AS BIGINT) AS n_missing_key,
        count(*) AS n
@@ -979,9 +987,9 @@ def _pyds_u32(tag: str) -> str:
     return u32_hash_sql(key, pos_fn="strpos")
 
 
-@register(
-    "pyds_request_log",
-    oracle=f"""
+#: the request log's arrivals as epoch-ms offsets, graded for the batch
+#: and the streaming reader of the same source
+_REQUEST_LOG_SQL = f"""
 WITH ids AS (
   SELECT u.u AS u, i.i AS i
   FROM (SELECT unnest(generate_series(0, 49)) AS u) u,
@@ -998,7 +1006,12 @@ SELECT concat('user_', CAST(u AS VARCHAR)) AS user_id,
          AS offset_ms,
        proc_ds / 10.0 AS processing_time
 FROM base
-""",
+"""
+
+
+@register(
+    "pyds_request_log",
+    oracle=_REQUEST_LOG_SQL,
     description="§2 A source-extension surface, hash-graded: the custom "
     "Python DataSource (Spark 4 pyspark.sql.datasource, one task per "
     "user partition) read as spark.read.format('request_log'), arrivals "
@@ -1008,16 +1021,11 @@ FROM base
     "end to end, not just in pytest.",
 )
 def q_pyds_request_log(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from queue_system_simulator_spark.shipping import ensure_shipped
     from queue_system_simulator_spark.sources.pyds_request_log import (
-        RequestLogDataSource,
+        register_request_log,
     )
 
-    ensure_shipped(spark)  # the reader class must unpickle on workers
-    try:
-        spark.dataSource.register(RequestLogDataSource)
-    except Exception:
-        pass  # already registered in this session
+    register_request_log(spark)
     df = (
         spark.read.format("request_log")
         .option("users", 50)
@@ -1033,18 +1041,24 @@ def q_pyds_request_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "orc_roundtrip",
-    oracle="""
-SELECT o_orderstatus,
+def _orders_roundtrip_sql(key: str) -> str:
+    """The round-trip queries' oracle: the ORIGINAL orders, aggregated by
+    ``key`` with exact integer centi-money."""
+    return f"""
+SELECT {key},
        count(*) AS n,
        CAST(min(o_orderkey) AS BIGINT) AS min_key,
        CAST(max(o_orderkey) AS BIGINT) AS max_key,
        CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
          AS sum_centi
 FROM orders
-GROUP BY o_orderstatus
-""",
+GROUP BY {key}
+"""
+
+
+@register(
+    "orc_roundtrip",
+    oracle=_orders_roundtrip_sql("o_orderstatus"),
     description="ORC sink/source round-trip as a graded query (the second "
     "columnar format Spark ships natively): orders written as "
     "zlib-compressed ORC partitioned by order status, read back through "
@@ -1077,24 +1091,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pyds_request_log_stream",
-    oracle=f"""
-WITH ids AS (
-  SELECT u.u AS u, i.i AS i
-  FROM (SELECT unnest(generate_series(0, 49)) AS u) u,
-       (SELECT unnest(generate_series(0, 19)) AS i) i
-), base AS (
-  SELECT u, i,
-         {_pyds_u32("gap")} % 901 + 100 AS gap_ms,
-         {_pyds_u32("proc")} % 91 + 10 AS proc_ds
-  FROM ids
-)
-SELECT concat('user_', CAST(u AS VARCHAR)) AS user_id,
-       CAST(SUM(gap_ms) OVER (PARTITION BY u ORDER BY i
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS offset_ms,
-       proc_ds / 10.0 AS processing_time
-FROM base
-""",
+    oracle=_REQUEST_LOG_SQL,
     description="§2 A source-extension surface, STREAMING twin: the same "
     "custom Python data source consumed as readStream (Spark 4 "
     "DataSourceStreamReader — row-index offsets, per-user partitions per "
@@ -1108,17 +1105,12 @@ FROM base
     "into Structured Streaming.",
 )
 def q_pyds_request_log_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from queue_system_simulator_spark.shipping import ensure_shipped
     from queue_system_simulator_spark.sources.pyds_request_log import (
-        RequestLogDataSource,
+        register_request_log,
     )
     from queue_system_simulator_spark.streaming.stream import run_available_now
 
-    ensure_shipped(spark)
-    try:
-        spark.dataSource.register(RequestLogDataSource)
-    except Exception:
-        pass
+    register_request_log(spark)
     stream = (
         spark.readStream.format("request_log")
         .option("users", 50)
@@ -1139,16 +1131,7 @@ def q_pyds_request_log_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "jsonl_roundtrip",
-    oracle="""
-SELECT o_orderstatus,
-       count(*) AS n,
-       CAST(min(o_orderkey) AS BIGINT) AS min_key,
-       CAST(max(o_orderkey) AS BIGINT) AS max_key,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-         AS sum_centi
-FROM orders
-GROUP BY o_orderstatus
-""",
+    oracle=_orders_roundtrip_sql("o_orderstatus"),
     description="A5 sink/source surface, third format: orders written as "
     "partitioned gzip JSON-lines (the interchange format the reference's "
     "JSONL request source reads), read back with an explicit schema, and "
@@ -1442,16 +1425,7 @@ def q_compressed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "xml_roundtrip",
-    oracle="""
-SELECT o_orderpriority,
-       count(*) AS n,
-       CAST(min(o_orderkey) AS BIGINT) AS min_key,
-       CAST(max(o_orderkey) AS BIGINT) AS max_key,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-         AS sum_centi
-FROM orders
-GROUP BY o_orderpriority
-""",
+    oracle=_orders_roundtrip_sql("o_orderpriority"),
     description="A5 sink/source surface, XML: orders written as XML "
     "(Spark 4's built-in XML source — rowTag records, one file per "
     "partition, fully parallel on both sides), read back with an "

@@ -19,6 +19,7 @@ sums, bit-identical across engines).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,6 +33,12 @@ from queue_system_simulator_spark.schema import load_table
 _DISC_PRICE_SQL = (
     "CAST(l_extendedprice AS DECIMAL(18,6)) * CAST(1 - l_discount AS DECIMAL(18,6))"
 )
+# every line item ``l`` with its order's customer's nation ``n``
+_NATION_LINES_SQL = """\
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey"""
 
 
 def _execution_memory_bytes(spark: SparkSession) -> int:
@@ -189,10 +196,7 @@ SELECT coalesce(n_name, 'ALL') AS nation,
 FROM (
   SELECT n.n_name, CAST(year(o.o_orderdate) AS INT) AS yr,
          sum({_DISC_PRICE_SQL}) AS rev, count(*) AS cnt
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
+{_NATION_LINES_SQL}
   GROUP BY 1, 2
 ) base
 GROUP BY ROLLUP (n_name, yr)
@@ -441,10 +445,7 @@ def q_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle=f"""
 WITH rev AS (
   SELECT n.n_name, sum({_DISC_PRICE_SQL}) AS r
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
+{_NATION_LINES_SQL}
   GROUP BY n.n_name
 )
 SELECT n_name,
@@ -832,23 +833,23 @@ LIMIT 500
     "decorrelation. Deterministic top-500 by key.",
 )
 def q_subquery_rewrites_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sq_orders")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sq_lineitem")
     return spark.sql(
         """
         SELECT o.o_orderkey, o.o_totalprice,
                (SELECT round(CAST(sum(CAST(o2.o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
                                   / count(*), 6)
-                FROM sq_orders o2 WHERE o2.o_custkey = o.o_custkey)
+                FROM {orders} o2 WHERE o2.o_custkey = o.o_custkey)
                  AS cust_avg_price
-        FROM sq_orders o
+        FROM {orders} o
         WHERE NOT EXISTS (
-          SELECT 1 FROM sq_lineitem l
+          SELECT 1 FROM {lineitem} l
           WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R'
         )
         ORDER BY o.o_orderkey
         LIMIT 500
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -1399,6 +1400,49 @@ TT_TOMBSTONE = "error"
 TT_ASOF_NUM = 5
 TT_ASOF_DEN = 8
 
+# The time-travel oracles' text: ``b`` holds the log's time bounds, and
+# version k is the state at cut b.tmin + (b.span * k) // TT_N_VERSIONS.
+_TT_BOUNDS_SQL = """\
+WITH b AS (
+  SELECT min(epoch_us(ts)) AS tmin,
+         max(epoch_us(ts)) - min(epoch_us(ts)) + 1 AS span
+  FROM events
+)"""
+
+
+def _latest_live_sql(src: str, cut: str) -> str:
+    """Each user's latest event before ``cut`` (an expression over the
+    FROM item ``src``), unless it is a tombstone, in integer cents."""
+    return f"""\
+  SELECT user_id, event_id,
+         CAST(round(value * 100) AS BIGINT) AS value_centi
+  FROM (
+    SELECT e.user_id, e.event_id, e.event_type, e.value,
+           row_number() OVER (PARTITION BY e.user_id
+                              ORDER BY epoch_us(e.ts) DESC,
+                                       e.event_id DESC) AS rn
+    FROM events e, {src}
+    WHERE epoch_us(e.ts) < {cut})
+  WHERE rn = 1 AND event_type != '{TT_TOMBSTONE}'"""
+
+
+def _cdc_state_cte(k: int) -> str:
+    """DuckDB CTE deriving stored version k from the raw log (same
+    definition the sink's incremental MERGE chain must satisfy)."""
+    cut = f"b.tmin + (b.span * {k}) // {TT_N_VERSIONS}"
+    return f"s{k} AS (\n{_latest_live_sql('b', cut)}\n)"
+
+
+def _versions_sql(row_sql: Callable[[int], str], n_rows: int) -> str:
+    """A versioned-lake oracle: ``b`` and every stored version ``s1`` ..
+    ``sN``, then ``row_sql(k)`` for k = 1 .. n_rows, UNION ALL."""
+    return (
+        f"{_TT_BOUNDS_SQL},\n"
+        + ",\n".join(_cdc_state_cte(k) for k in range(1, TT_N_VERSIONS + 1))
+        + "\n"
+        + "\nUNION ALL\n".join(row_sql(k) for k in range(1, n_rows + 1))
+    )
+
 
 def _tt_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The versioned-lake input projection shared by every time-travel /
@@ -1447,35 +1491,9 @@ def ensure_versioned_table(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "time_travel_version_diff",
     oracle=f"""
-WITH b AS (
-  SELECT min(epoch_us(ts)) AS tmin,
-         max(epoch_us(ts)) - min(epoch_us(ts)) + 1 AS span
-  FROM events
-),
-s2 AS (
-  SELECT user_id, event_id,
-         CAST(round(value * 100) AS BIGINT) AS value_centi
-  FROM (
-    SELECT e.user_id, e.event_id, e.event_type, e.value,
-           row_number() OVER (PARTITION BY e.user_id
-                              ORDER BY epoch_us(e.ts) DESC,
-                                       e.event_id DESC) AS rn
-    FROM events e, b
-    WHERE epoch_us(e.ts) < b.tmin + (b.span * {TT_DIFF_FROM}) // {TT_N_VERSIONS})
-  WHERE rn = 1 AND event_type != '{TT_TOMBSTONE}'
-),
-s4 AS (
-  SELECT user_id, event_id,
-         CAST(round(value * 100) AS BIGINT) AS value_centi
-  FROM (
-    SELECT e.user_id, e.event_id, e.event_type, e.value,
-           row_number() OVER (PARTITION BY e.user_id
-                              ORDER BY epoch_us(e.ts) DESC,
-                                       e.event_id DESC) AS rn
-    FROM events e, b
-    WHERE epoch_us(e.ts) < b.tmin + (b.span * {TT_DIFF_TO}) // {TT_N_VERSIONS})
-  WHERE rn = 1 AND event_type != '{TT_TOMBSTONE}'
-),
+{_TT_BOUNDS_SQL},
+{_cdc_state_cte(TT_DIFF_FROM)},
+{_cdc_state_cte(TT_DIFF_TO)},
 d AS (
   SELECT CASE WHEN s2.user_id IS NULL THEN 'added'
               WHEN s4.user_id IS NULL THEN 'removed'
@@ -1563,23 +1581,6 @@ def q_time_travel_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CDC change feed read of the versioned sink (the commit log as a stream
 # of row-level changes)
 # --------------------------------------------------------------------------
-def _cdc_state_cte(k: int) -> str:
-    """DuckDB CTE deriving stored version k from the raw log (same
-    definition the sink's incremental MERGE chain must satisfy)."""
-    return f"""s{k} AS (
-  SELECT user_id, event_id,
-         CAST(round(value * 100) AS BIGINT) AS value_centi
-  FROM (
-    SELECT e.user_id, e.event_id, e.event_type, e.value,
-           row_number() OVER (PARTITION BY e.user_id
-                              ORDER BY epoch_us(e.ts) DESC,
-                                       e.event_id DESC) AS rn
-    FROM events e, b
-    WHERE epoch_us(e.ts) < b.tmin + (b.span * {k}) // {TT_N_VERSIONS})
-  WHERE rn = 1 AND event_type != '{TT_TOMBSTONE}'
-)"""
-
-
 def _cdc_commit_sql(k: int) -> str:
     if k == 1:
         return (
@@ -1598,17 +1599,7 @@ FROM s{k - 1} a FULL OUTER JOIN s{k} c ON a.user_id = c.user_id
 WHERE a.user_id IS NULL OR c.user_id IS NULL OR a.event_id != c.event_id"""
 
 
-_CDC_FEED_ORACLE = (
-    """WITH b AS (
-  SELECT min(epoch_us(ts)) AS tmin,
-         max(epoch_us(ts)) - min(epoch_us(ts)) + 1 AS span
-  FROM events
-),
-"""
-    + ",\n".join(_cdc_state_cte(k) for k in range(1, TT_N_VERSIONS + 1))
-    + "\n"
-    + "\nUNION ALL\n".join(_cdc_commit_sql(k) for k in range(1, TT_N_VERSIONS + 1))
-)
+_CDC_FEED_ORACLE = _versions_sql(_cdc_commit_sql, TT_N_VERSIONS)
 
 
 @register(
@@ -1699,11 +1690,7 @@ _ASOF_VERSION_VALUES = ", ".join(f"({k})" for k in range(1, TT_N_VERSIONS + 1))
 @register(
     "time_travel_as_of_timestamp",
     oracle=f"""
-WITH b AS (
-  SELECT min(epoch_us(ts)) AS tmin,
-         max(epoch_us(ts)) - min(epoch_us(ts)) + 1 AS span
-  FROM events
-),
+{_TT_BOUNDS_SQL},
 r AS (
   SELECT max(k.k) AS v
   FROM b, (VALUES {_ASOF_VERSION_VALUES}) AS k(k)
@@ -1716,16 +1703,7 @@ c AS (
 )
 SELECT CAST(c.v AS BIGINT) AS version, s.user_id, s.event_id, s.value_centi
 FROM (
-  SELECT user_id, event_id,
-         CAST(round(value * 100) AS BIGINT) AS value_centi
-  FROM (
-    SELECT e.user_id, e.event_id, e.event_type, e.value,
-           row_number() OVER (PARTITION BY e.user_id
-                              ORDER BY epoch_us(e.ts) DESC,
-                                       e.event_id DESC) AS rn
-    FROM events e, c
-    WHERE epoch_us(e.ts) < c.cut)
-  WHERE rn = 1 AND event_type != '{TT_TOMBSTONE}'
+{_latest_live_sql("c", "c.cut")}
 ) s, c
 """,
     description="TIMESTAMP AS OF over the versioned lake table — the "
@@ -1828,19 +1806,7 @@ def _vac_commit_sql(k: int) -> str:
     )
 
 
-_VACUUM_ORACLE = (
-    """WITH b AS (
-  SELECT min(epoch_us(ts)) AS tmin,
-         max(epoch_us(ts)) - min(epoch_us(ts)) + 1 AS span
-  FROM events
-),
-"""
-    + ",\n".join(_cdc_state_cte(k) for k in range(1, TT_N_VERSIONS + 1))
-    + "\n"
-    + "\nUNION ALL\n".join(
-        _vac_commit_sql(k) for k in range(1, TT_N_VERSIONS + 1)
-    )
-)
+_VACUUM_ORACLE = _versions_sql(_vac_commit_sql, TT_N_VERSIONS)
 
 
 @register(
@@ -1965,19 +1931,7 @@ def _opt_commit_sql(k: int) -> str:
     )
 
 
-_OPTIMIZE_ORACLE = (
-    """WITH b AS (
-  SELECT min(epoch_us(ts)) AS tmin,
-         max(epoch_us(ts)) - min(epoch_us(ts)) + 1 AS span
-  FROM events
-),
-"""
-    + ",\n".join(_cdc_state_cte(k) for k in range(1, TT_N_VERSIONS + 1))
-    + "\n"
-    + "\nUNION ALL\n".join(
-        _opt_commit_sql(k) for k in range(1, TT_N_VERSIONS + 2)
-    )
-)
+_OPTIMIZE_ORACLE = _versions_sql(_opt_commit_sql, TT_N_VERSIONS + 1)
 
 
 @register(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from queue_system_simulator_spark.plans.analytics_queries import XY_SUMS_SQL
 from queue_system_simulator_spark.plans.registry import register
 from queue_system_simulator_spark.schema import load_table
 from queue_system_simulator_spark.operators.statistics import (
@@ -436,10 +437,7 @@ pairs AS (
 )
 SELECT CAST(lag AS BIGINT) AS lag,
        count(*) AS n_pairs,
-       CAST(sum(x) AS BIGINT) AS sum_x,
-       CAST(sum(y) AS BIGINT) AS sum_y,
-       CAST(sum(x * y) AS BIGINT) AS sum_xy,
-       CAST(sum(x * x) AS BIGINT) AS sum_x2,
+{XY_SUMS_SQL}
        CAST(sum(y * y) AS BIGINT) AS sum_y2,
        round((count(*) * sum(x * y) - sum(x) * sum(y)) /
              (sqrt(CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS DOUBLE))

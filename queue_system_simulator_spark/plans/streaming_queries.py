@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from queue_system_simulator_spark.fixtures import build_once
 from queue_system_simulator_spark.operators.fifo import fifo_k1_timeline_sql
+from queue_system_simulator_spark.plans.reference_queries import RATE_LIMIT_SQL
 from queue_system_simulator_spark.plans.registry import register
 from queue_system_simulator_spark.streaming.stream import (
     interval_join_purchase_clicks,
@@ -344,20 +345,7 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "streaming_rate_limit",
-    oracle="""
-SELECT event_id,
-       CAST(event_id % 5 + 1 AS INTEGER) AS api_id,
-       CAST(count(*) OVER (
-         PARTITION BY event_id % 5
-         ORDER BY epoch_us(ts)
-         RANGE BETWEEN 60000000 PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS calls_in_window,
-       count(*) OVER (
-         PARTITION BY event_id % 5
-         ORDER BY epoch_us(ts)
-         RANGE BETWEEN 60000000 PRECEDING AND CURRENT ROW) <= 60 AS allowed
-FROM events
-""",
+    oracle=RATE_LIMIT_SQL,
     description="ONLINE E5 rate limiter: per-API sliding 60 s admission "
     "via applyInPandasWithState — group state is the deque of in-window "
     "call timestamps (evict now-ts>60 s, the reference limiter's own "
@@ -584,9 +572,9 @@ def q_watermark_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "streaming_compacted_latest",
-    oracle="""
+#: each user's latest event on the (event time, event_id) order, graded
+#: for the online upsert and the foreachBatch merge
+_LATEST_PER_USER_SQL = """
 WITH r AS (
   SELECT user_id, epoch_us(ts) AS tus, event_id, event_type,
          CAST(round(value * 100) AS BIGINT) AS value_centi,
@@ -597,7 +585,12 @@ WITH r AS (
 SELECT user_id, tus AS last_tus, event_id AS last_event_id,
        event_type AS last_event_type, value_centi AS last_value_centi
 FROM r WHERE rn = 1
-""",
+"""
+
+
+@register(
+    "streaming_compacted_latest",
+    oracle=_LATEST_PER_USER_SQL,
     description="Streaming keyed upsert — Kafka-compaction semantics "
     "online: applyInPandasWithState keeps the per-user latest event on "
     "the (event-time, event_id) total order across microbatches, each "
@@ -641,18 +634,7 @@ def q_streaming_compacted_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_foreachbatch_merge",
-    oracle="""
-WITH r AS (
-  SELECT user_id, epoch_us(ts) AS tus, event_id, event_type,
-         CAST(round(value * 100) AS BIGINT) AS value_centi,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-  FROM events
-)
-SELECT user_id, tus AS last_tus, event_id AS last_event_id,
-       event_type AS last_event_type, value_centi AS last_value_centi
-FROM r WHERE rn = 1
-""",
+    oracle=_LATEST_PER_USER_SQL,
     description="foreachBatch MERGE into a merge-on-read lake table — the "
     "canonical streaming-upsert-to-lakehouse sink (Delta/Iceberg MERGE "
     "inside foreachBatch), against plain parquet here: the events stream "
@@ -816,22 +798,10 @@ def _svs_version_sql(k: int) -> str:
 def _svs_oracle() -> str:
     from queue_system_simulator_spark.plans.relational_queries import (
         TT_N_VERSIONS,
-        _cdc_state_cte,
+        _versions_sql,
     )
 
-    return (
-        """WITH b AS (
-  SELECT min(epoch_us(ts)) AS tmin,
-         max(epoch_us(ts)) - min(epoch_us(ts)) + 1 AS span
-  FROM events
-),
-"""
-        + ",\n".join(_cdc_state_cte(k) for k in range(1, TT_N_VERSIONS + 1))
-        + "\n"
-        + "\nUNION ALL\n".join(
-            _svs_version_sql(k) for k in range(1, TT_N_VERSIONS + 1)
-        )
-    )
+    return _versions_sql(_svs_version_sql, TT_N_VERSIONS)
 
 
 @register(

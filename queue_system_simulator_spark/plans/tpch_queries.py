@@ -40,6 +40,11 @@ _CHARGE_SQL = (
     "CAST(1 - l_discount AS DECIMAL(18,6)), 6) AS DECIMAL(18,6)) * "
     "CAST(1 + l_tax AS DECIMAL(18,6))"
 )
+# every line item ``l`` with its order ``o`` and customer ``c``
+_CUSTOMER_LINES_SQL = """\
+FROM lineitem l
+JOIN orders o   ON l.l_orderkey = o.o_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey"""
 
 
 @register(
@@ -146,9 +151,7 @@ SELECT o.o_orderkey,
        CAST(round(sum({_DISC_PRICE_SQL}), 2) AS DOUBLE) AS revenue,
        strftime(o.o_orderdate, '%Y-%m-%d') AS order_date,
        o.o_orderpriority
-FROM lineitem l
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
+{_CUSTOMER_LINES_SQL}
 WHERE c.c_mktsegment = 'BUILDING'
 GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
 ORDER BY revenue DESC, o.o_orderkey
@@ -477,9 +480,7 @@ def q_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
        CAST(year(l.l_shipdate) AS INT) AS ship_year,
        CAST(round(sum({_DISC_PRICE_SQL}), 2) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
+{_CUSTOMER_LINES_SQL}
 JOIN supplier s ON l.l_suppkey = s.s_suppkey
 JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
 JOIN nation cn  ON c.c_nationkey = cn.n_nationkey
@@ -531,9 +532,7 @@ def q_tpch_q7_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT c.c_custkey, c.c_name, n.n_name, c.c_acctbal,
        CAST(round(sum({_DISC_PRICE_SQL}), 2) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
+{_CUSTOMER_LINES_SQL}
 JOIN nation n   ON c.c_nationkey = n.n_nationkey
 WHERE l.l_returnflag = 'R'
   AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -918,10 +917,9 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
     "single shuffle, same engine machinery as the CUBE/ROLLUP queries.",
 )
 def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("gs_lineitem")
     # groupingSets is SQL-surface in Spark: express it there, money math
-    # follows the module's decimal convention
+    # follows the module's decimal convention; the frame is a keyword
+    # argument, so its view is dropped once the query is analysed
     return spark.sql(
         f"""
         SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
@@ -929,9 +927,10 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT)
                  AS grp_id,
                CAST(round(sum({_DISC_PRICE_SQL}), 2) AS DOUBLE) AS revenue
-        FROM gs_lineitem
+        FROM {{lineitem}}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -31,29 +31,6 @@ from queue_system_simulator_spark.shipping import ensure_shipped
 REQUIRED_COLUMNS = ("user_id", "request_time", "processing_time")
 
 
-def read_requests_json(
-    spark: SparkSession, path: str, mode: str = "FAILFAST"
-) -> DataFrame:
-    """JSON-lines variant of the request-log reader (engine extension —
-    the reference is CSV-only): same explicit schema, same required-column
-    contract, same FAILFAST/PERMISSIVE choice.  Timestamps parse from
-    ISO-8601 strings; schema-on-read keeps the scan JVM-side."""
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.StringType()),
-            T.StructField("request_time", T.TimestampType()),
-            T.StructField("processing_time", T.DoubleType()),
-        ]
-    )
-    df = (
-        spark.read.schema(schema)
-        .option("mode", mode)
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]XXX")
-        .json(path)
-    )
-    return df
-
-
 class MissingColumnError(KeyError):
     """Required CSV column absent (reference: KeyError, csv_parser.py:37-40)."""
 

@@ -205,3 +205,16 @@ class RequestLogDataSource(DataSource):
 
     def streamReader(self, schema) -> RequestLogStreamReader:
         return RequestLogStreamReader(self.options)
+
+
+def register_request_log(spark) -> None:
+    """Make ``spark.read.format("request_log")`` available in ``spark``'s
+    session: ship the package, then register the source unless the
+    session already has it (registering again replaces it, and Spark
+    logs the replacement)."""
+    from queue_system_simulator_spark.shipping import ensure_shipped
+
+    ensure_shipped(spark)  # the reader class must unpickle on workers
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(RequestLogDataSource.name()):
+        spark.dataSource.register(RequestLogDataSource)

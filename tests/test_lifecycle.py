@@ -98,3 +98,19 @@ def test_query_frees_its_intermediates(spark, sf_dir, name):
             break
     assert not left, f"{name} left persistent RDDs {sorted(left)}"
     assert cache_manager.numCachedEntries() == cached_before
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["grouping_sets_revenue", "subquery_rewrites_demo", "udtf_event_run_lengths"],
+)
+def test_sql_builder_leaves_no_catalog_name(spark, sf_dir, name):
+    # these builders hand their frames to spark.sql as keyword arguments,
+    # whose views Spark drops once the query is analysed: the session's
+    # catalog ends as it began
+    def names():
+        return {t.name for t in spark.catalog.listTables()}
+
+    before = names()
+    QUERIES[name].build(spark, sf_dir).collect()
+    assert names() - before == set()

@@ -414,6 +414,102 @@ def _helper(df):
     assert _bare_caches(source) == [(4, "q_name"), (8, "_helper")]
 
 
+# Copies of oracle text allowed to stay, as {"<module>:<line>": reason},
+# keyed by the first line of the copied run.  Every oracle stage is one
+# named SQL fragment that the oracles compose, so this stays empty unless
+# a copy cannot become a fragment without changing the rendered oracle.
+COPIED_STAGE_ALLOWED: dict[str, str] = {}
+
+
+def _copied_runs(
+    sources: dict[str, str], width: int = 4, min_chars: int = 60
+) -> dict[tuple[str, ...], list[str]]:
+    """Runs of ``width`` consecutive raw source lines, together holding at
+    least ``min_chars`` characters once each line is stripped, that appear
+    at two or more sites among the string literals of ``sources``
+    (``{module: source}``).  The first argument of a ``.sql(`` call is left
+    out: it is Spark-side SQL, not oracle text.  Maps each run to its
+    ``"<module>:<line>"`` sites."""
+    import ast
+    from collections import defaultdict
+
+    sites = defaultdict(set)
+    for module, source in sources.items():
+        tree = ast.parse(source)
+        spark_sql = {
+            id(node.args[0])
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "sql"
+            and node.args
+        }
+        lines = source.splitlines()
+        literals = []
+
+        def visit(node):
+            if id(node) in spark_sql:
+                return
+            if isinstance(node, ast.JoinedStr) or (
+                isinstance(node, ast.Constant) and isinstance(node.value, str)
+            ):
+                literals.append((node.lineno, node.end_lineno))
+                return
+            for child in ast.iter_child_nodes(node):
+                visit(child)
+
+        visit(tree)
+        for first, last in literals:
+            for start in range(first, last - width + 2):
+                run = tuple(lines[start - 1 : start - 1 + width])
+                if sum(len(line.strip()) for line in run) >= min_chars:
+                    sites[run].add(f"{module}:{start}")
+    return {run: sorted(s) for run, s in sites.items() if len(s) > 1}
+
+
+def test_no_oracle_stage_is_copied():
+    # one SQL fragment per oracle stage: a copied run of oracle text means
+    # a stage is stated twice, and a fix to one copy misses the other
+    import pathlib
+
+    plans = pathlib.Path(__file__).resolve().parent.parent / (
+        "queue_system_simulator_spark/plans"
+    )
+    sources = {f.name: f.read_text() for f in sorted(plans.glob("*.py"))}
+    assert sources, plans
+    copies = {
+        run[0].strip(): sites
+        for run, sites in _copied_runs(sources).items()
+        if len([s for s in sites if s not in COPIED_STAGE_ALLOWED]) > 1
+    }
+    assert not copies, copies
+
+
+def test_copy_scan_sees_oracle_literals():
+    # the scan above must find a run copied between two oracle literals,
+    # skip Spark-side .sql( text and runs too short to be a stage, and
+    # compare raw lines, so that a reindented copy is not one
+    block = (
+        "SELECT doc_id, seed // 4 AS band,\n"
+        "       md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key\n"
+        "FROM sig\n"
+        "GROUP BY doc_id, seed // 4\n"
+    )
+    short = "SELECT a\nFROM b\nWHERE c\nGROUP BY d\n"
+    source = (
+        f'A = f"""\n{block}"""\n'
+        f'B = """\n{block}"""\n'
+        f'C = spark.sql("""\n{block}""")\n'
+        f'D = """\n{block.replace(chr(10), chr(10) + "  ")}"""\n'
+        f'E = """\n{short}"""\nF = """\n{short}"""\n'
+    )
+    runs = _copied_runs({"m.py": source})
+    # A's and B's block, with and without their closing line
+    assert sorted(runs.values()) == [
+        ["m.py:2", "m.py:8"], ["m.py:3", "m.py:9"]
+    ], runs
+
+
 def test_bloom_dedup_broadcasts_bitmap_no_cartesian(spark, sf_dir):
     # the m/32-word bitmap and the survivor id list must ride broadcast
     # joins; the corpus side must never cross-join or sort-merge

@@ -137,27 +137,6 @@ class TestSinks:
         assert set(back.columns) >= {"user_id", "request_time", "processing_time"}
 
 
-class TestJsonSource:
-    def test_json_lines_roundtrip(self, spark, tmp_path):
-        from queue_system_simulator_spark.sources.csv_source import (
-            read_requests_json,
-        )
-
-        p = tmp_path / "req.jsonl"
-        p.write_text(
-            '{"user_id": "u1", "request_time": "2023-01-01T00:00:01.500000Z",'
-            ' "processing_time": 2.5}\n'
-            '{"user_id": "u2", "request_time": "2023-01-01T00:00:02Z",'
-            ' "processing_time": 4.0}\n'
-        )
-        df = read_requests_json(spark, str(p))
-        rows = df.orderBy("user_id").collect()
-        assert len(rows) == 2
-        assert rows[0].user_id == "u1"
-        assert rows[0].processing_time == 2.5
-        assert rows[0].request_time.microsecond == 500000
-
-
 class TestDynamicPartitionOverwrite:
     def test_backfill_replaces_only_target_partition(self, spark, sf_dir, tmp_path):
         """Idempotent backfill: dynamic partitionOverwriteMode rewrites only
@@ -218,6 +197,30 @@ class TestSchemaEvolution:
         assert rows[3].quality == 0.9
 
 
+def test_request_log_registers_once_per_session(spark, monkeypatch):
+    # a second registration would replace the first (Spark logs it), so
+    # the helper registers only in a session that lacks the source
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from queue_system_simulator_spark.sources.pyds_request_log import (
+        register_request_log,
+    )
+
+    registered = []
+    register = DataSourceRegistration.register
+
+    def counting(self, data_source):
+        registered.append(data_source.name())
+        register(self, data_source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    fresh = spark.newSession()  # a session with no Python data source yet
+    register_request_log(fresh)
+    register_request_log(fresh)
+    assert registered == ["request_log"]
+    assert fresh.read.format("request_log").option("users", 1).load().count() > 0
+
+
 def test_python_datasource_request_log(spark):
     # Spark 4 custom Python DataSource: registrable, partitioned per user,
     # deterministic under re-read (retry-determinism contract)
@@ -251,52 +254,6 @@ def test_python_datasource_request_log(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     # rows feed the standard request-log pipeline schema unchanged
     assert dict(a.dtypes)["processing_time"] == "double"
-
-
-class TestJsonlSource:
-    def test_jsonl_roundtrip_documents(self, spark, sf_dir, tmp_path):
-        from queue_system_simulator_spark.schema import load_table
-        from queue_system_simulator_spark.sources.jsonl_source import (
-            read_documents_jsonl,
-            write_documents_jsonl,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        out = str(tmp_path / "corpus_jsonl")
-        write_documents_jsonl(docs, out)
-        good, bad, release = read_documents_jsonl(spark, out)
-        assert bad.count() == 0
-        assert good.schema == docs.schema
-        assert sorted(map(tuple, good.collect())) == sorted(
-            map(tuple, docs.collect())
-        )
-        release()
-
-    def test_jsonl_corrupt_lines_quarantined(self, spark, tmp_path):
-        from queue_system_simulator_spark.sources.jsonl_source import (
-            read_documents_jsonl,
-        )
-
-        p = tmp_path / "c.jsonl"
-        p.write_text(
-            '{"doc_id": 1, "text": "ok", "lang": "en", "source": "s", "n_chars": 2}\n'
-            "this is not json\n"
-            '{"doc_id": 2, "text": "ok2", "lang": "en", "source": "s", "n_chars": 3}\n'
-            '{"doc_id": "NOT_A_NUMBER", "text": "bad type"}\n'
-        )
-        good, bad, release = read_documents_jsonl(spark, str(p))
-        assert good.count() == 2
-        assert sorted(r["doc_id"] for r in good.collect()) == [1, 2]
-        assert bad.count() == 2
-        raws = [r["raw"] for r in bad.collect()]
-        assert any("not json" in r for r in raws)
-        assert any("NOT_A_NUMBER" in r for r in raws)
-        # release() drops the shared cached scan so long-lived sessions
-        # doing many reads don't accumulate cached blocks
-        release()
-        assert not any(
-            "c.jsonl" in str(r) for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        )
 
 
 def test_pyds_stream_slices_are_batching_invariant():
@@ -341,16 +298,11 @@ def test_pyds_stream_throttled_live_run_multi_batch(spark, tmp_path):
     off and capture the full stream in one pass)."""
     import time
 
-    from queue_system_simulator_spark.shipping import ensure_shipped
     from queue_system_simulator_spark.sources.pyds_request_log import (
-        RequestLogDataSource,
+        register_request_log,
     )
 
-    ensure_shipped(spark)
-    try:
-        spark.dataSource.register(RequestLogDataSource)
-    except Exception:
-        pass
+    register_request_log(spark)
     stream = (
         spark.readStream.format("request_log")
         .option("users", 3)

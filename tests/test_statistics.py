@@ -78,14 +78,16 @@ def test_nan_on_empty(spark):
 
 
 def test_silent_drop_of_inverted_rows(spark):
-    # C2: a start < arrival row is dropped from the mean denominator but
-    # still counts as processed (reference statistics.py:28-42)
+    # C2: a start < arrival row and an arrival < 0 row are dropped from the
+    # mean denominator but still count as processed (reference
+    # statistics.py:28-42)
     rows = [
         sim_row(qt=1.0),
         ("u", None, 2.0, 1.0, 5.0, 2.0, 10.0, 1),  # start 2.0 < arrival 5.0
+        ("u", None, 2.0, -1.0, -1.0, 1.0, 10.0, 1),  # arrival -1.0 < 0
     ]
     out = queuing_time_stats(make_df(spark, rows)).collect()[0]
-    assert out["processed"] == 2
+    assert out["processed"] == 3
     assert abs(out["avg_queuing_time"] - 1.0) < 1e-12
 
 

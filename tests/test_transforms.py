@@ -10,9 +10,6 @@ from queue_system_simulator_spark.operators.transforms import (
     hms,
     priority_class,
     result_order,
-    split_processed_rejected,
-    valid_queuing_rows,
-    with_queuing_time,
     with_sim_arrival_time,
 )
 from queue_system_simulator_spark.schema import REFERENCE_EPOCH, REQUEST_SCHEMA
@@ -34,13 +31,6 @@ def test_sim_arrival_time_fractional_seconds(spark):
     assert vals["v"] == -1.0  # pre-epoch → negative
 
 
-def test_queuing_time_column(spark):
-    df = spark.createDataFrame(
-        [(1.0, 3.5)], "arrival_time_in_queue double, start_processing_time_by_worker double"
-    )
-    assert with_queuing_time(df).collect()[0]["queuing_time"] == 2.5
-
-
 def test_priority_class_null_safe(spark):
     df = spark.createDataFrame(
         [(10.0,), (19.9,), (20.0,), (30.0,), (None,)], "processing_time double"
@@ -53,22 +43,6 @@ def test_hms(spark):
     df = spark.createDataFrame([(0.0,), (59.9,), (3661.2,), (86399.0,)], "s double")
     out = [r[0] for r in df.select(hms("s")).collect()]
     assert out == ["00:00:00", "00:00:59", "01:01:01", "23:59:59"]
-
-
-def test_split_and_validity(spark):
-    df = spark.createDataFrame(
-        [
-            (0.0, 1.0, 2.0),    # valid
-            (-1.0, 1.0, 2.0),   # arrival < 0 → invalid for qt stats
-            (5.0, 1.0, 2.0),    # start 1.0 < arrival 5.0 → invalid
-            (0.0, 1.0, -1.0),   # rejected
-        ],
-        "arrival_time_in_queue double, start_processing_time_by_worker double, "
-        "finish_processing_time_by_worker double",
-    )
-    proc, rej = split_processed_rejected(df)
-    assert proc.count() == 3 and rej.count() == 1
-    assert valid_queuing_rows(proc).count() == 1
 
 
 def test_result_order_sentinel(spark):
